@@ -1,7 +1,5 @@
 package graft.kv
 
-import org.apache.spark.sql.expressions.Aggregator
-
 /** Per-file rowkey Bloom filter riding the snapshot range manifest —
   * the HBase StoreFile BloomFilter (BloomType.ROW) analog: an HBase
   * Get consults the HFile's bloom BEFORE touching its block index, so
@@ -10,30 +8,30 @@ import org.apache.spark.sql.expressions.Aggregator
   * key that falls inside a file's [lo,hi] range but was never written
   * skips the file entirely (DriverRead.bloomSkipCount pins it).
   *
-  * Construction is DISTRIBUTIVE and rides the same one-pass columnar
-  * scan that derives the range manifest (Catalog.scanRanges): rows are
-  * pre-hashed with Spark's own `xxhash64(keyCol)` (seed 42), and the
-  * aggregator folds the k bit positions per file — merge is a bitwise
-  * OR, so any partitioning works. The DRIVER recomputes the identical
-  * base hash through Catalyst's XxHash64Function (same object the
-  * expression evaluates), and both sides derive the k positions from
+  * Construction rides the job that WRITES the file
+  * ([[ManifestCapture]]): each write task hashes its rows' keys with
+  * Spark's own xxhash64 (seed 42, the `xxhash64(keyCol)` value) and
+  * sets the k bit positions in its file's filter — no extra scan. The
+  * heal path for a missing manifest folds the same way over a read of
+  * the snapshot. The DRIVER recomputes the identical
+  * base hash through Catalyst's XxHash64Function (the function both
+  * sides call), and both sides derive the k positions from
   * one base hash via the Kirsch–Mitzenmacher double-hash recipe with a
   * splitmix64-finalizer second hash — ONE cross-engine hash to keep in
   * agreement, everything after it is shared code in this object.
   *
-  * Sizing is PER-KEY, like HBase's io.storefile.bloom sizing: the
-  * aggregation builds every file's filter at a power-of-two cap
-  * (conf `spark.graft.manifest.bloomMaxBits`, default 2^23) and the
-  * aggregator's `finish` folds each file's bitset down EXECUTOR-SIDE
+  * Sizing is PER-KEY, like HBase's io.storefile.bloom sizing: each
+  * task builds its file's filter at a power-of-two cap
+  * (conf `spark.graft.manifest.bloomMaxBits`, default 2^23) and
+  * [[BloomSizing.finish]] folds it down EXECUTOR-SIDE
   * ([[BloomBits.foldTo]] — lossless for the double-hash positions) to
   * the smallest power of two ≥ rows × bits-per-key (conf
   * `spark.graft.manifest.bloomBitsPerKey`, default 10 ⇒ ~1% FPR with
   * k = 7), so the gate corpus and a 100-TB corpus get the same
-  * false-positive rate, and the aggregation OUTPUT (the shuffle to
-  * the final agg and the driver collect) carries only the folded
-  * filter — never the 1 MiB cap per file; at the cap (≥ ~800k
-  * rows/file) the FPR degrades gracefully instead of the filter
-  * growing unboundedly. Setting the legacy flat knob
+  * false-positive rate, and the task result shipped to the driver
+  * carries only the folded filter — never the 1 MiB cap per file; at
+  * the cap (≥ ~800k rows/file) the FPR degrades gracefully instead of
+  * the filter growing unboundedly. Setting the legacy flat knob
   * `spark.graft.manifest.bloomBits` overrides all of this with a
   * fixed per-file size.
   *
@@ -95,7 +93,7 @@ private[graft] object BloomBits {
     * (h mod 2^a) mod 2^b = h mod 2^b for b ≤ a — so a probe against
     * the folded filter (whose m comes from its array length) agrees
     * with building at the small size directly. This is what lets ONE
-    * aggregation pass build every file's filter at the size cap and
+    * pass over a file's rows build its filter at the size cap and
     * size each file's PERSISTED filter from its own row count
     * afterwards (bits-per-key sizing, scale-invariant FPR). */
   def foldTo(bits: Array[Byte], targetBits: Int): Array[Byte] = {
@@ -119,40 +117,57 @@ private[graft] object BloomBits {
     if (x <= 1L) 1L else java.lang.Long.highestOneBit(x - 1L) << 1
 }
 
-/** Bitset-OR aggregator over pre-hashed keys (input = `xxhash64(key)`
-  * column values), one filter per group — used per part-file by the
-  * manifest scan. Buffers carry (rowCount, bits of mBits/8); merge
-  * sums counts and ORs bits. With `foldBitsPerKey` set (per-key
-  * sizing, the default path), `finish` folds the cap-sized bitset
-  * down to nextPow2(rows × bitsPerKey) EXECUTOR-SIDE — the final
-  * aggregation output, shuffle-to-driver transfer and the manifest
-  * collect carry the small folded filter, never the 1 MiB cap, at
-  * any file count. None (the legacy flat knob) emits the raw bits. */
-private[kv] class BloomAgg(mBits: Int, foldBitsPerKey: Option[Int] = None)
-    extends Aggregator[Long, (Long, Array[Byte]), Array[Byte]] {
-  require(mBits >= 8 && (mBits & 7) == 0, s"mBits must be a multiple of 8: $mBits")
-  override def zero: (Long, Array[Byte]) = (0L, new Array[Byte](mBits / 8))
-  override def reduce(b: (Long, Array[Byte]), h: Long): (Long, Array[Byte]) = {
-    BloomBits.set(b._2, h); (b._1 + 1, b._2)
-  }
-  override def merge(a: (Long, Array[Byte]),
-                     b: (Long, Array[Byte])): (Long, Array[Byte]) = {
-    var i = 0
-    while (i < a._2.length) { a._2(i) = (a._2(i) | b._2(i)).toByte; i += 1 }
-    (a._1 + b._1, a._2)
-  }
-  override def finish(r: (Long, Array[Byte])): Array[Byte] =
-    foldBitsPerKey match {
+/** The per-file bloom sizing policy, read once on the driver and
+  * shipped with the fold ([[FileStatsFold]]): every file's filter is
+  * built at `maxBits` (a power of two) and [[finish]] folds it down to
+  * nextPow2(rows × bitsPerKey), floored at 2^10 and capped at
+  * `maxBits` — EXECUTOR-SIDE, before the bitset leaves the task, so
+  * the task result and the manifest carry the small folded filter,
+  * never the cap. `bitsPerKey` None (the legacy flat knob
+  * `spark.graft.manifest.bloomBits`) keeps the raw `maxBits` bitset. */
+private[kv] final case class BloomSizing(maxBits: Int, bitsPerKey: Option[Int]) {
+  require(maxBits >= 8 && (maxBits & 7) == 0, s"maxBits must be a multiple of 8: $maxBits")
+
+  def finish(rows: Long, bits: Array[Byte]): Array[Byte] =
+    bitsPerKey match {
       case Some(bpk) =>
-        val target = math.min(mBits.toLong,
-          math.max(1L << 10, BloomBits.nextPow2(r._1 * bpk)))
-        BloomBits.foldTo(r._2, target.toInt)
-      case None => r._2
+        val target = math.min(maxBits.toLong,
+          math.max(1L << 10, BloomBits.nextPow2(rows * bpk)))
+        BloomBits.foldTo(bits, target.toInt)
+      case None => bits
     }
-  override def bufferEncoder: org.apache.spark.sql.Encoder[(Long, Array[Byte])] =
-    org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.BINARY)
-  override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
+}
+
+private[kv] object BloomSizing {
+  /** Key types that carry a manifest bloom — the ones the driver get
+    * can re-hash ([[DriverRead]]'s bloomBaseHash). */
+  def bloomable(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | StringType => true
+      case _ => false
+    }
+  }
+
+  /** The sizing for a manifest over keys of `keyType`, None when the
+    * type carries no bloom. */
+  def forKey(spark: org.apache.spark.sql.SparkSession,
+             keyType: org.apache.spark.sql.types.DataType): Option[BloomSizing] =
+    if (bloomable(keyType)) Some(fromConf(spark)) else None
+
+  def fromConf(spark: org.apache.spark.sql.SparkSession): BloomSizing = {
+    val flatBits = spark.conf.getOption("spark.graft.manifest.bloomBits")
+      .map(_.toInt)
+    val bitsPerKey = spark.conf
+      .getOption("spark.graft.manifest.bloomBitsPerKey")
+      .map(_.toInt).getOrElse(10)
+    val maxBits = flatBits.getOrElse {
+      val m = spark.conf.getOption("spark.graft.manifest.bloomMaxBits")
+        .map(_.toInt).getOrElse(1 << 23)
+      require(m >= 1024 && Integer.bitCount(m) == 1,
+        s"spark.graft.manifest.bloomMaxBits must be a power of two >= 1024: $m")
+      m
+    }
+    BloomSizing(maxBits, if (flatBits.isDefined) None else Some(bitsPerKey))
+  }
 }

@@ -34,6 +34,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
 
   private val mapper = new ObjectMapper()
 
+  import ManifestCapture.canonKey
+
   /** Every write lock (bulk writers, transaction commits, DDL)
     * resolves through this seam — see [[LockProvider]] for the
     * multi-process / object-store story. Default: file locks under
@@ -355,10 +357,17 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // materialize an empty rowkey-sorted layout; if this write fails
     // (disk, interrupted job), unwind the meta file too — a table that
     // "exists" without a v0 snapshot can neither be read nor recreated
-    try KvLayout.writeSorted(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-      canonicalPk, dataDir(name))
-    catch {
+    try {
+      val v0 = Paths.get(dataDir(name))
+      KvLayout.writeSorted(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+        canonicalPk, v0.toString)
+      // every part file of an empty snapshot is a zero-row file: its
+      // manifest needs no statistics
+      if (manifestPersistable(schema(canonicalPk.head).dataType))
+        writeRangeManifest(v0,
+          ManifestCapture.partFiles(v0).map(FileRange(_, null, null)))
+    } catch {
       case e: Throwable =>
         try deleteRecursively(tableDir(name))
         catch { case _: Exception => () }
@@ -373,13 +382,59 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     readMeta(name).path("layout").asText("sorted")
 
   /** Layout-dispatching snapshot writer: every write path persists
-    * through the table's declared layout. */
+    * through the table's declared layout. Returns the new files' range
+    * manifest entries, folded by the write job itself
+    * ([[ManifestCapture]]); None when the key type keeps no persisted
+    * manifest ([[manifestKeys]]). */
   private def writeData(name: String, df: DataFrame, path: String,
-                        partitions: Int = 0): Unit = {
+                        partitions: Int = 0): Option[Seq[FileRange]] = {
     val pk = primaryKeyOf(name)
-    if (layoutOf(name) == "zorder" && pk.size == 2)
-      KvLayout.writeZOrdered(df, pk.head, pk(1), path, partitions)
-    else KvLayout.writeSorted(df, pk, path, partitions)
+    def write(capture: Option[ManifestCapture]): Unit =
+      if (layoutOf(name) == "zorder" && pk.size == 2)
+        KvLayout.writeZOrdered(df, pk.head, pk(1), path, partitions, capture)
+      else KvLayout.writeSorted(df, pk, path, partitions, capture)
+    manifestKeys(name) match {
+      case None => write(None); None
+      case Some((keyCol, secondCol)) =>
+        Some(writeCaptured(Paths.get(path), df.schema, keyCol, secondCol)(
+          c => write(Some(c))))
+    }
+  }
+
+  /** Write a snapshot into its staging dir together with its range
+    * manifest: a snapshot is published complete and never annotated
+    * after publish (only [[ensureRangeManifest]]'s heal writes into a
+    * published dir). */
+  private def stageSnapshot(name: String, df: DataFrame, stage: Path,
+                            partitions: Int = 0): Unit =
+    writeData(name, df, stage.toString, partitions)
+      .foreach(writeRangeManifest(stage, _))
+
+  /** The columns a table's range manifest records: the leading key,
+    * plus the second key on z tables (so a driver range scan on that
+    * dimension serves from the manifest instead of opening every
+    * footer cold). None when the leading key's type has no persisted
+    * manifest — merges of such tables scan instead. */
+  private def manifestKeys(name: String): Option[(String, Option[String])] = {
+    val pk = primaryKeyOf(name)
+    val schema = schemaOf(name)
+    if (!manifestPersistable(schema(pk.head).dataType)) None
+    else Some((pk.head,
+      if (layoutOf(name) == "zorder" && pk.size == 2 &&
+          manifestPersistable(schema(pk(1)).dataType)) Some(pk(1))
+      else None))
+  }
+
+  /** Run `write` with a fresh [[ManifestCapture]] over `keyCol` (and
+    * `secondCol`) of a frame of `schema`, and return the manifest
+    * entries of the files it left in `dir`. Scans the dir only when
+    * the capture cannot attribute a task's statistics to its file. */
+  private def writeCaptured(dir: Path, schema: StructType, keyCol: String,
+                            secondCol: Option[String])
+                           (write: ManifestCapture => Unit): Seq[FileRange] = {
+    val capture = new ManifestCapture(spark, schema, keyCol, secondCol)
+    write(capture)
+    capture.entries(dir).getOrElse(scanRanges(dir, keyCol, secondCol, Some(schema)))
   }
 
   /** Bulk load rows (the "Bulk read/write" path): stage the next
@@ -395,7 +450,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       val next = cur + 1
       val nextDir = tableDir(name).resolve(s"data_v$next")
       val stage = newSnapshotStaging(name)
-      writeData(name, rows, stage.toString, partitions)
+      stageSnapshot(name, rows, stage, partitions)
       val maint = maintainIndexes(name, next, stage, pre = None, post = None)
       publishGuardingIndexAsOf(name, next, Seq(stage -> nextDir), maint)
     }
@@ -411,9 +466,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * recipe). The `.staging_` prefix keeps a crashed attempt inside
     * vacuum's existing sweep; the grant epoch in the name is operator
     * forensics, uniqueness comes from the UUID. Reads that target a
-    * staged dir (index rebuild's post-image scan, the merge's
-    * scanRanges) work — Spark's hidden-path filter applies to
-    * DIRECTORY CHILDREN during listing, not to an explicitly given
+    * staged dir (index rebuild's post-image scan, a manifest capture's
+    * fallback scanRanges) work — Spark's hidden-path filter applies
+    * to DIRECTORY CHILDREN during listing, not to an explicitly given
     * root (verified against the DSv2 stagingPath precedent; the
     * "All paths were ignored" DataSource log line is cosmetic). */
   private def newSnapshotStaging(name: String,
@@ -488,6 +543,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * 800k-entry example). */
   private val mergeTargetRowsPerFile: Int = 1000000
 
+  /** Target bytes per output file when a merge rewrites kv-index files
+    * — the same 128 MB as [[compact]]'s default. */
+  private val mergeTargetFileBytes: Long = 128L * 1024 * 1024
+
   /** Bare acquire — for [[commitTxn]], which holds locks on SEVERAL
     * tables at once (always acquired in sorted table order, so two
     * concurrent transactions can't deadlock). Everything else uses the
@@ -496,21 +555,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
                                timeoutMs: Long = 600000L): LockProvider.Handle =
     lockProvider.acquire(lockResource(name), timeoutMs)
 
-  /** File-granular incremental COW merge — the CDC-ingest path. A
-    * whole-table rewrite per micro-batch would rewrite 100 TB for a
-    * trickle of mutations; instead only the files whose rowkey range
-    * intersects the patch are decoded, merged and rewritten, and every
-    * untouched file carries over into the next snapshot as a hard link
-    * (byte-identical, no data I/O — on an object store this would be a
-    * manifest reference, same idea).
-    *
-    * File→keyrange pruning uses a per-snapshot range manifest on the
-    * LEADING primary-key column (computed lazily, one key-column scan
-    * per snapshot, then carried forward incrementally) — a conservative
-    * superset of the touched files, exactly how parquet row-group
-    * min/max pruning reasons. Patch keys are collected to the driver:
-    * micro-batches are bounded by the trigger, so this is a small set
-    * by construction. */
   /** Streaming-sink merge entry: ONE bounded job collects the patch's
     * distinct keys, decides emptiness (an empty patch commits NOTHING
     * — the replay-idempotence contract a foreachBatch sink needs) and
@@ -520,17 +564,31 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * exposed for sinks). Returns whether a merge was committed. */
   def incrementalMergeIfNonEmpty(name: String, patch: DataFrame,
                                  maxIncrementalKeys: Int = 100000): Boolean = {
-    val keyCol = primaryKeyOf(name).head
-    // BOUNDED collect (round-20 advice — mirror upsertStaged): a
-    // misconfigured trigger or a backfill replay can hand a sink a
-    // patch with millions of keys, and an unbounded collect would
-    // blow up driver memory and merge pruning. Past the bound the
-    // statement falls back to the full snapshot rewrite, exactly
-    // upsertStaged's bulk branch (same final content: the merge is a
-    // PK upsert either way; analytic indexes go stale under a bulk
-    // write by the documented staleness rule).
+    import org.apache.spark.sql.functions.col
+    val pk = primaryKeyOf(name)
+    val keyCol = pk.head
+    // BOUNDED collect (mirrors upsertStaged): a misconfigured trigger
+    // or a backfill replay can hand a sink a patch with millions of
+    // keys, and an unbounded collect would blow up driver memory and
+    // merge pruning. Past the bound the statement falls back to the
+    // full snapshot rewrite, exactly upsertStaged's bulk branch (same
+    // final content: the merge is a PK upsert either way; analytic
+    // indexes go stale under a bulk write by the documented staleness
+    // rule).
     val keys = patch.select(keyCol).distinct()
       .limit(maxIncrementalKeys + 1).collect().map(r => canonKey(r.get(0)))
+    // rowkeys are non-null (HBase rowkey semantics) on BOTH branches,
+    // refused before any manifest, data or lock work: the collected
+    // keys decide it under the bound; over it a null may sit past the
+    // limit, so the bounded probe upsertStaged runs checks every key
+    // column (one limit-1 job)
+    require(!keys.contains(null),
+      s"primary key $keyCol may not be null in a merge batch")
+    if (keys.length > maxIncrementalKeys &&
+        !patch.select(pk.map(col): _*)
+          .where(pk.map(col(_).isNull).reduce(_ || _)).isEmpty)
+      throw new IllegalArgumentException(
+        s"primary key (${pk.mkString(",")}) of $name may not be null in a merge batch")
     if (keys.isEmpty) false
     else if (keys.length <= maxIncrementalKeys) {
       incrementalMerge(name, patch, precollectedKeys = Some(keys))
@@ -540,7 +598,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         val next = dataVersionOf(name) + 1
         val nextDir = tableDir(name).resolve(s"data_v$next")
         val stage = newSnapshotStaging(name)
-        writeData(name, table(name).upsert(patch).df, stage.toString)
+        stageSnapshot(name, table(name).upsert(patch).df, stage)
         val maint = maintainIndexes(name, next, stage, pre = None, post = None)
         publishGuardingIndexAsOf(name, next, Seq(stage -> nextDir), maint)
       }
@@ -553,7 +611,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * the patch becomes a LocalRelation, so the merge's key pruning and
     * the rewrite's anti-join build side need NO re-execution of the
     * batch lineage and no extra collect — the whole per-batch commit
-    * schedules only the rewrite write + range scan. Same semantics as
+    * schedules only the rewrite write. Same semantics as
     * [[incrementalMerge]] on the equivalent distributed frame (the
     * rows ARE the patch); returns false for an empty batch, committing
     * nothing — the replay-idempotence contract a foreachBatch sink
@@ -569,32 +627,43 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     true
   }
 
+  /** File-granular incremental COW merge — the CDC-ingest path. A
+    * whole-table rewrite per micro-batch would rewrite 100 TB for a
+    * trickle of mutations; instead only the files whose rowkey range
+    * intersects the patch are decoded, merged and rewritten, and every
+    * untouched file carries over into the next snapshot as a hard link
+    * (byte-identical, no data I/O — on an object store this would be a
+    * manifest reference, same idea).
+    *
+    * File→keyrange pruning reads the current snapshot's range manifest
+    * on the LEADING primary-key column — a conservative superset of the
+    * touched files, exactly how parquet row-group min/max pruning
+    * reasons. Every snapshot is published WITH its manifest: the
+    * rewrite job folds the new files' entries as it writes them
+    * ([[ManifestCapture]]) and the untouched files' entries carry over
+    * unchanged, so a merge reads one JSON and schedules no key scan
+    * (only a legacy or corrupt manifest is rebuilt, by
+    * [[ensureRangeManifest]]). Patch keys are collected to the driver:
+    * micro-batches are bounded by the trigger, so this is a small set
+    * by construction. */
   def incrementalMerge(name: String, patch: DataFrame,
                        precollectedKeys: Option[Array[Any]] = None): Unit = {
     withRecoveredWriteLock(name) {
+    import org.apache.spark.sql.functions.col
     val pk = primaryKeyOf(name)
     val keyCol = pk.head
-    val cur = dataVersionOf(name)
-    val curDir = tableDir(name).resolve(s"data_v$cur")
-    // z tables record the SECOND key's per-file bounds too, so the
-    // driver range scan on that dimension serves from the manifest
-    // instead of opening every footer cold (one extra min/max pair in
-    // the same columnar scan — no additional pass)
-    val tableSchema = schemaOf(name)
-    val secondCol =
-      if (layoutOf(name) == "zorder" && pk.size == 2 &&
-          manifestPersistable(tableSchema(pk(1)).dataType))
-        Some(pk(1))
-      else None
-    val manifest = ensureRangeManifest(curDir, keyCol,
-      manifestPersistable(tableSchema(keyCol).dataType), secondCol,
-      schema = Some(tableSchema))
     val patchKeys = precollectedKeys.getOrElse(
       patch.select(keyCol).distinct().collect().map(r => canonKey(r.get(0))))
     // rowkeys are non-null (HBase rowkey semantics); a null here would
     // also poison the ordered key search below
     require(!patchKeys.contains(null),
       s"primary key $keyCol may not be null in a merge batch")
+    val cur = dataVersionOf(name)
+    val curDir = tableDir(name).resolve(s"data_v$cur")
+    val tableSchema = schemaOf(name)
+    val keys = manifestKeys(name)
+    val manifest = ensureRangeManifest(curDir, keyCol, keys.isDefined,
+      keys.flatMap(_._2), schema = Some(tableSchema))
     val (touched, untouched) = splitByKeyIntersect(manifest, patchKeys)
     val nextDir = tableDir(name).resolve(s"data_v${cur + 1}")
     val stage = newSnapshotStaging(name)
@@ -604,10 +673,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tableSchema)
       else spark.read.schema(tableSchema)
         .parquet(touched.map(e => curDir.resolve(e.file).toString): _*)
+    val post = patch.select(tableCols.map(col): _*)
     // upsert keeps new keys too: patch rows outside every file range
     // simply don't anti-join away anything
-    val merged = KvTable(touchedDf, pk)
-      .upsert(patch.select(tableCols.map(org.apache.spark.sql.functions.col): _*))
+    val merged = KvTable(touchedDf, pk).upsert(post)
     // explicit partition count = touched-file count: the rewrite
     // replaces exactly those files, so sizing output files to match
     // preserves file granularity at any scale AND skips
@@ -621,29 +690,38 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // semantics), so they stand in for the row estimate.
     val patchParts =
       ((patchKeys.length + mergeTargetRowsPerFile - 1) / mergeTargetRowsPerFile).toInt
-    writeData(name, merged.df, stage.toString,
+    val newEntries = writeData(name, merged.df, stage.toString,
       partitions = math.max(math.max(1, touched.size), patchParts))
-    val newEntries = scanRanges(stage, keyCol, secondCol,
-      schema = Some(tableSchema))
     // carry untouched files into the new snapshot without touching data
     untouched.foreach(e => linkOrCopy(curDir.resolve(e.file), stage.resolve(e.file)))
-    writeRangeManifest(stage, newEntries ++ untouched)
+    newEntries.foreach(e => writeRangeManifest(stage, e ++ untouched))
+    // the pre-image of exactly the patched keys, read from the touched
+    // files the rewrite reads anyway: with the patch as post-image,
+    // index maintenance is patch-sized, never touched-file-sized
+    val pre = touchedDf.join(patch.select(pk.map(col): _*).distinct(), pk, "left_semi")
+    // a kv-index entry is (ik..., rk = LEADING key): on a composite key,
+    // rows sharing the lead key and the indexed value share one entry
+    // tuple, and removing a patched row's entry removes its siblings'
+    // too — so the kv images there are every row at the patched lead
+    // keys, before and after the merge
+    val (kvPre, kvPost) =
+      if (pk.size == 1) (pre, post)
+      else {
+        val leads = patch.select(keyCol).distinct()
+        (touchedDf.join(leads, Seq(keyCol), "left_semi"),
+          merged.df.join(leads, Seq(keyCol), "left_semi"))
+      }
     // synchronous KV-index maintenance (reference KVIndexTable.kt:
     // every base Put deletes the stale index row and writes the new
     // one): incremental when the touched entry set is bounded, else a
     // rebuild from the complete next snapshot
-    val maint = maintainIndexes(name, cur + 1, stage,
-      pre = Some(touchedDf), post = Some(merged.df))
+    val maint = maintainIndexes(name, cur + 1, stage, pre = Some(kvPre), post = Some(kvPost))
     // analytic flavors (fulltext/bitmap) stay fresh through CDC via
     // patch-sized segments + tombstones — the Lucene segment model
     // (reference index/lucene/LuceneIndexTable.kt: the Lucene writer
     // appends segments per commit; HBaseDirectory.kt persists them) —
     // never re-reading untouched corpus files
-    maintainAnalyticIndexes(name, cur + 1,
-      patch.select(tableCols.map(org.apache.spark.sql.functions.col): _*),
-      touchedDf.join(
-        patch.select(pk.map(org.apache.spark.sql.functions.col): _*).distinct(),
-        pk, "left_semi"))
+    maintainAnalyticIndexes(name, cur + 1, post, pre)
     publishGuardingIndexAsOf(name, cur + 1, Seq(stage -> nextDir), maint)
   }
   }
@@ -691,91 +769,32 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     entries.partition(e => e.lo == null || e.hi == null || hasKeyIn(e.lo, e.hi))
   }
 
-  /** Canonical comparable form: every integral → Long, every floating
-    * → Double, so a JSON-round-tripped bound compares against a typed
-    * patch key without a ClassCastException. Other key types (decimal,
-    * timestamp) pass through — they never persist to the manifest
-    * (see [[ensureRangeManifest]]), so both sides stay same-typed. */
-  private def canonKey(x: Any): Any = x match {
-    case null => null
-    case n: java.lang.Long    => n
-    case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue())
-    case n: java.lang.Short   => java.lang.Long.valueOf(n.longValue())
-    case n: java.lang.Byte    => java.lang.Long.valueOf(n.longValue())
-    case n: java.lang.Float   => java.lang.Double.valueOf(n.doubleValue())
-    case other => other
-  }
-
   /** Per-file (min,max) of the leading key column — and of the second
-    * key when asked (z tables) — scanning ONLY those columns
-    * (columnar read) of the given snapshot, one pass for both. The
-    * SAME pass folds the per-file rowkey Bloom bitset ([[BloomBits]])
-    * for long/int/string keys: rows pre-hash with Spark's xxhash64
-    * and the distributive [[BloomAgg]] ORs bit positions per file —
-    * no extra scan, one more agg column. */
-  private def scanRanges(dir: Path, keyCol: String,
-                         secondCol: Option[String] = None,
-                         schema: Option[StructType] = None): Seq[FileRange] = {
-    import org.apache.spark.sql.functions.{input_file_name, udaf, xxhash64, min => fmin, max => fmax}
-    val fcol = org.apache.spark.sql.functions.col _
+    * key when asked (z tables) — plus the rowkey bloom
+    * ([[BloomBits]], long/int/string keys), folded over one read of
+    * ONLY those columns of the given dir: the heal path for a dir
+    * without a usable manifest ([[ManifestCapture.scan]]; the same fold
+    * the write path runs inside its write job). Zero-row files yield no
+    * fold and are recorded with null bounds (always "touched",
+    * contribute nothing), so the result covers exactly the part files
+    * present. */
+  private[kv] def scanRanges(dir: Path, keyCol: String,
+                             secondCol: Option[String] = None,
+                             schema: Option[StructType] = None): Seq[FileRange] = {
     // callers that know the files' schema (table meta, a just-written
-    // index layout) pass it: schema inference re-reads every footer,
-    // and the merge path runs this once per micro-batch
-    val df0 = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet(dir.toString)
-    val bloomable = df0.schema.fields.find(_.name == keyCol)
-      .map(_.dataType).exists {
-        case LongType | IntegerType | StringType => true
-        case _ => false
-      }
-    // bloom sizing (see BloomBits' scaladoc): build every file's
-    // filter at the power-of-two cap in the ONE aggregation pass; the
-    // aggregator's finish folds it down to the file's own row count ×
-    // bits-per-key EXECUTOR-SIDE, so the agg output and the collect
-    // carry only the small folded filter — per-key sizing keeps the
-    // false-positive rate scale-invariant where a flat constant is
-    // all-pass at the 1M-row design point. The legacy flat knob, when
-    // set, disables per-key sizing (no fold).
-    val flatBits = spark.conf.getOption("spark.graft.manifest.bloomBits")
-      .map(_.toInt)
-    val bitsPerKey = spark.conf
-      .getOption("spark.graft.manifest.bloomBitsPerKey")
-      .map(_.toInt).getOrElse(10)
-    val maxBits = flatBits.getOrElse {
-      val m = spark.conf.getOption("spark.graft.manifest.bloomMaxBits")
-        .map(_.toInt).getOrElse(1 << 23)
-      require(m >= 1024 && Integer.bitCount(m) == 1,
-        s"spark.graft.manifest.bloomMaxBits must be a power of two >= 1024: $m")
-      m
-    }
-    val foldBpk = if (flatBits.isDefined) None else Some(bitsPerKey)
-    val keyCols = fcol(keyCol).as("k") +: secondCol.map(c => fcol(c).as("k2")).toSeq
-    val hashCols = if (bloomable) Seq(xxhash64(fcol(keyCol)).as("kh")) else Nil
-    val aggs = Seq(fmin("k").as("lo"), fmax("k").as("hi")) ++
-      secondCol.toSeq.flatMap(_ => Seq(fmin("k2").as("lo2"), fmax("k2").as("hi2"))) ++
-      (if (bloomable)
-        Seq(udaf(new BloomAgg(maxBits, foldBpk),
-          org.apache.spark.sql.Encoders.scalaLong)(fcol("kh")).as("kbloom"))
-      else Nil)
-    df0.select(keyCols ++ hashCols :+ input_file_name().as("f"): _*)
-      .groupBy("f").agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq.map { r =>
-        val fname = r.getString(0).split("/").last
-        val second = secondCol.map(_ =>
-          (canonKey(r.getAs[Any]("lo2")), canonKey(r.getAs[Any]("hi2"))))
-        val bloom =
-          if (!bloomable) None
-          else Option(r.getAs[Array[Byte]]("kbloom"))
-        FileRange(fname, canonKey(r.getAs[Any]("lo")),
-          canonKey(r.getAs[Any]("hi")), second, bloom)
-      }
+    // index layout) pass it: schema inference re-reads every footer
+    val scanned = ManifestCapture.scan(spark,
+      schema.map(spark.read.schema(_)).getOrElse(spark.read).parquet(dir.toString),
+      keyCol, secondCol)
+    scanned ++ (ManifestCapture.partFiles(dir).toSet -- scanned.map(_.file)).toSeq.sorted
+      .map(f => FileRange(f, null, null))
   }
 
   private def manifestFile(dir: Path): Path = dir.resolve("_graft_ranges.json")
 
-  /** JSON-persistable key types: the manifest survives restarts for
-    * these; anything else recomputes per merge (correct, one extra
-    * key-column scan). */
+  /** JSON-persistable key types: every snapshot of such a table is
+    * published with its manifest; anything else recomputes per merge
+    * (correct, one extra key-column scan). */
   private def manifestPersistable(dt: DataType): Boolean =
     dt match {
       case LongType | IntegerType | ShortType | ByteType |
@@ -788,14 +807,14 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * output. Shared by the merge path and the driver-side get — pure
     * JSON, no Spark.
     *
-    * A corrupt manifest reads as ABSENT, never as an error: the file
-    * is bookkeeping written without an atomic rename, so a crash (or
-    * a lock-free reader racing the writer) can observe a truncated
-    * byte stream — both consumers fall back to re-deriving ranges
-    * (scanRanges here, footer statistics on the driver-get path) and
-    * the next merge rewrites the file. Failing instead would wedge
-    * every subsequent merge of the table on a scrap of bookkeeping. */
-  private def readManifestJson(dir: Path): Option[Seq[FileRange]] =
+    * A corrupt manifest reads as ABSENT, never as an error: a damaged
+    * or truncated file (disk trouble, a legacy writer without the
+    * atomic rename) makes both consumers fall back to re-deriving
+    * ranges (scanRanges here, footer statistics on the driver-get
+    * path) and the next merge heals the file. Failing instead would
+    * wedge every subsequent merge of the table on a scrap of
+    * bookkeeping. */
+  private[kv] def readManifestJson(dir: Path): Option[Seq[FileRange]] =
     try {
       if (!Files.exists(manifestFile(dir))) None
       else ManifestCache.cached(manifestFile(dir)) {
@@ -849,6 +868,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       case _: java.io.IOException => None
     }
 
+  /** The range manifest of a PUBLISHED dir. Every write path publishes
+    * a snapshot (and a kv-index version) together with its manifest, so
+    * this is a JSON read; the scan below is the HEAL path only — a
+    * legacy dir from before write-time manifests, a corrupt file, or a
+    * manifest that no longer covers the dir's files — and the one place
+    * that writes into an already-published dir. */
   private def ensureRangeManifest(dir: Path, keyCol: String,
                                   persistable: Boolean,
                                   secondCol: Option[String] = None,
@@ -856,13 +881,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     if (!persistable) return scanRanges(dir, keyCol, secondCol, schema)
     val cached: Option[Seq[FileRange]] = readManifestJson(dir)
     // a manifest is only trustworthy if it covers exactly the part
-    // files present: SQL INSERT INTO appends files into the live
-    // snapshot after the manifest was written, and pruning against a
-    // stale manifest would silently DROP those files from the next
-    // snapshot
-    val present = withList(dir) { it =>
-      it.map(_.getFileName.toString).filter(_.startsWith("part-")).toSet
-    }
+    // files present: pruning against a stale manifest would silently
+    // DROP the uncovered files from the next snapshot
+    val present = ManifestCapture.partFiles(dir).toSet
     cached match {
       case Some(entries) if entries.map(_.file).toSet == present &&
           // a z table needs SECOND-key bounds on every data-bearing
@@ -871,13 +892,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
             entries.forall(e => e.second.isDefined || e.lo == null)) =>
         entries
       case _ =>
-        val scanned = scanRanges(dir, keyCol, secondCol, schema)
-        // zero-row part files yield no agg group; record them with null
-        // bounds (always "touched", contribute nothing) so the manifest
-        // still covers exactly the present files
-        val entries = scanned ++
-          (present -- scanned.map(_.file).toSet).toSeq.sorted
-            .map(f => FileRange(f, null, null))
+        val entries = scanRanges(dir, keyCol, secondCol, schema)
         writeRangeManifest(dir, entries)
         entries
     }
@@ -1023,10 +1038,19 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         val totalBytes = small.map(Files.size(_)).sum
         val parts = math.max(1,
           math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-        writeData(name,
+        // the big files' manifest entries carry over with their links
+        val bigNames = big.map(_.getFileName.toString).toSet
+        val carried =
+          if (big.isEmpty) Nil
+          else manifestKeys(name).toSeq.flatMap { case (keyCol, secondCol) =>
+            ensureRangeManifest(curDir, keyCol, persistable = true, secondCol,
+              Some(schemaOf(name))).filter(e => bigNames(e.file))
+          }
+        val written = writeData(name,
           spark.read.schema(schemaOf(name)).parquet(small.map(_.toString): _*),
           stage.toString, parts)
         big.foreach(src => linkOrCopy(src, stage.resolve(src.getFileName.toString)))
+        written.foreach(w => writeRangeManifest(stage, w ++ carried))
         // compaction changes layout, not content: every index that was
         // fresh at cur stays valid — carry its as-of forward. An index
         // data_v(cur+1) dir left by a CRASHED earlier writer (which
@@ -2986,7 +3010,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         val next = dataVersionOf(name) + 1
         val nextDir = tableDir(name).resolve(s"data_v$next")
         val stage = newSnapshotStaging(name)
-        writeData(name, table(name).upsert(batch).df, stage.toString)
+        stageSnapshot(name, table(name).upsert(batch).df, stage)
         val maint = maintainIndexes(name, next, stage, pre = None, post = None)
         publishGuardingIndexAsOf(name, next, Seq(stage -> nextDir), maint)
         }
@@ -3031,7 +3055,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // garbage the publish-time rename clears behind the fence
     val staged = spark.read.schema(schemaOf(name)).parquet(stagedDir)
     val stage = newSnapshotStaging(name)
-    writeData(name, staged, stage.toString)
+    stageSnapshot(name, staged, stage)
     deleteRecursively(Paths.get(stagedDir))
     val maint = maintainIndexes(name, next, stage, pre = None, post = None)
     publishGuardingIndexAsOf(name, next, Seq(stage -> target), maint)
@@ -3134,7 +3158,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         val next = pinned + 1
         val dst = tableDir(t).resolve(s"data_v$next")
         val stage = newSnapshotStaging(t, lockFor.get(t))
-        writeData(t, post, stage.toString)
+        stageSnapshot(t, post, stage)
         stagedDirs += stage
         // index maintenance stages index data_v(next) dirs AND persists
         // asOfVersion=next — both must unwind on a pre-journal abort,
@@ -3481,13 +3505,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     try {
       Files.createDirectories(dir)
       indexType.toLowerCase match {
-        case "kv" if cols.size == 1 =>
-          KvLayout.writeSorted(graft.index.KvIndex.build(t.df, pk, cols.head),
-            Seq("ik"), dir.resolve("data").toString)
         case "kv" =>
-          val idx = graft.index.KvIndex.buildComposite(t.df, pk, cols)
-          KvLayout.writeSorted(idx,
-            cols.indices.map(i => s"ik$i"), dir.resolve("data").toString)
+          writeKvIndex(kvEntriesOf(table, t.df, cols), cols, dir.resolve("data"))
+            .foreach(writeRangeManifest(dir.resolve("data"), _))
         case "bitmap" =>
           require(cols.size == 1, "bitmap indexes are single-column")
           graft.index.BitmapIndex.build(t.df, pk, cols.head)
@@ -3983,6 +4003,20 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private def ikColsOf(n: Int): Seq[String] =
     if (n == 1) Seq("ik") else (0 until n).map(i => s"ik$i")
 
+  /** Persist kv-index entries over `cols` at `dir`, sorted by their
+    * index key, and return the range manifest of the lead index column
+    * folded by the same write job — None when the indexed column's type
+    * keeps no persisted manifest. */
+  private def writeKvIndex(entries: DataFrame, cols: Seq[String], dir: Path,
+                           partitions: Int = 0): Option[Seq[FileRange]] = {
+    val ikCols = ikColsOf(cols.size)
+    if (!manifestPersistable(entries.schema(ikCols.head).dataType)) {
+      KvLayout.writeSorted(entries, ikCols, dir.toString, partitions)
+      None
+    } else Some(writeCaptured(dir, entries.schema, ikCols.head, None)(c =>
+      KvLayout.writeSorted(entries, ikCols, dir.toString, partitions, Some(c))))
+  }
+
   /** Highest versioned index dir at or below the PUBLISHED table
     * version, falling back to the original backfill dir. Bounding by
     * the published version is what makes maintenance crash-safe for
@@ -4093,15 +4127,17 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           else {
             val curIdx = resolveIndexDataDir(dir, name)
             // the index range map goes through the SAME persisted
-            // manifest machinery as the table's: computed once, then
-            // carried forward incrementally below — without it every
-            // CDC trigger paid a full index lead-column scan just to
-            // find the touched files, index-wide I/O the manifest
-            // exists to avoid. Persistability follows the indexed
-            // column's type (ik1 = first indexed column).
+            // manifest machinery as the table's: written with every
+            // index version, carried forward incrementally below —
+            // without it every CDC trigger paid a full index
+            // lead-column scan just to find the touched files,
+            // index-wide I/O the manifest exists to avoid.
+            // Persistability follows the indexed column's type (ik1 =
+            // first indexed column). The entry frame's own schema IS
+            // the index files' schema — no footer read to learn it.
             val leadPersistable = manifestPersistable(
               schemaOf(name).apply(cols.head).dataType)
-            val idxSchema = spark.read.parquet(curIdx.toString).schema
+            val idxSchema = remove.schema
             val ranges = ensureRangeManifest(curIdx, lead, leadPersistable,
               schema = Some(idxSchema))
             val (touched, untouched) = splitByKeyIntersect(ranges, keys)
@@ -4117,23 +4153,28 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
               touchedIdx(c) <=> remove(c)).reduce(_ && _)
             val patched = touchedIdx.join(remove, cond, "left_anti")
               .unionByName(add)
-            KvLayout.writeSorted(patched, ikCols, nextIdxDir.toString)
-            // scan only the freshly-written files (untouched not yet
-            // linked in), then record new + carried entries — the
-            // table merge's carry-forward pattern
-            val newIdxEntries = scanRanges(nextIdxDir, lead,
-              schema = Some(idxSchema))
+            // output files = touched files (file granularity kept, no
+            // range-sampling job for the usual single touched file), and
+            // enough more that none exceeds the target size: merges that
+            // keep adding entries inside one file's range (a
+            // low-cardinality indexed column) split it instead of
+            // growing it without bound
+            val touchedBytes = touched.map(e => Files.size(curIdx.resolve(e.file))).sum
+            val newIdxEntries = writeKvIndex(patched, cols, nextIdxDir,
+              partitions = math.max(math.max(1, touched.size),
+                math.ceil(touchedBytes.toDouble / mergeTargetFileBytes).toInt))
+            // record new + carried entries — the table merge's
+            // carry-forward pattern
             untouched.foreach(e =>
               linkOrCopy(curIdx.resolve(e.file), nextIdxDir.resolve(e.file)))
-            if (leadPersistable)
-              writeRangeManifest(nextIdxDir, newIdxEntries ++ untouched)
+            newIdxEntries.foreach(e => writeRangeManifest(nextIdxDir, e ++ untouched))
             true
           }
         case _ => false
       }
       if (!incremental)
-        KvLayout.writeSorted(kvEntriesOf(name, fullPost, cols), ikCols,
-          nextIdxDir.toString)
+        writeKvIndex(kvEntriesOf(name, fullPost, cols), cols, nextIdxDir)
+          .foreach(writeRangeManifest(nextIdxDir, _))
       setIndexAsOf(name, iname, ty, next)
       nextIdxDir -> finalIdxDir
     }
@@ -4191,8 +4232,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       ty.toUpperCase match {
         case "KV" =>
           writeIndexDirAtomic(dir, s"data_v$cur") { p =>
-            KvLayout.writeSorted(kvEntriesOf(table, t, cols),
-              ikColsOf(cols.size), p)
+            writeKvIndex(kvEntriesOf(table, t, cols), cols, Paths.get(p))
+              .foreach(writeRangeManifest(Paths.get(p), _))
           }
         case "BITMAP" =>
           writeIndexDirAtomic(dir, s"data_v$cur") { p =>
@@ -4318,11 +4359,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
 
   /** Flip the version pointer AND record the publish wall-clock in the
     * same meta write. `TIMESTAMP AS OF` resolves from this map, not
-    * directory mtimes — lazy per-snapshot bookkeeping (e.g.
-    * [[ensureRangeManifest]] dropping `_graft_ranges.json` into a
-    * PREVIOUS snapshot dir when the next merge starts) bumps mtimes
-    * long after publish, which would otherwise shift a snapshot's
-    * apparent publish time forward. */
+    * directory mtimes.
+    *
+    * Invariant: a table snapshot or kv-index version is published
+    * together with its range manifest (`_graft_ranges.json`, written
+    * into the staged dir by the write job's capture before this
+    * rename) and nothing writes into it after publish — except the
+    * heal path ([[ensureRangeManifest]] rebuilding a legacy or corrupt
+    * manifest), whose mtime bump the recorded publish time keeps from
+    * shifting the snapshot's apparent publish time. */
   private[graft] def publishVersion(table: String, version: Int,
                                     handle: Option[LockProvider.Handle] = None,
                                     staged: Seq[(Path, Path)] = Nil): Unit = {

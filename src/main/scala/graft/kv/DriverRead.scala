@@ -31,7 +31,7 @@ import scala.collection.JavaConverters._
   * an HBase Get descends (region → block index → block):
   *
   *   1. file-level: the snapshot's range manifest (`_graft_ranges
-  *      .json`, maintained by the CDC merge path) keyed on the
+  *      .json`, written with every snapshot) keyed on the
   *      leading primary-key column — zero data I/O. When the
   *      manifest is missing or stale, per-file parquet FOOTER
   *      min/max statistics stand in (one footer read per file,
@@ -229,6 +229,16 @@ private[kv] object DriverRead {
     lo == null || hi == null ||
       keys.exists(k => cmpPrep(k, lo) >= 0 && cmpPrep(k, hi) <= 0)
 
+  /** OR of `ps` as a BALANCED tree, depth ⌈log2 n⌉: parquet-hadoop
+    * visits and rewrites filter trees recursively, and a left-deep
+    * fold of a few thousand keys or doc ranges overflows the stack. */
+  private def orAll(ps: IndexedSeq[FilterPredicate]): FilterPredicate =
+    if (ps.length == 1) ps.head
+    else {
+      val (l, r) = ps.splitAt(ps.length / 2)
+      FilterApi.or(orAll(l), orAll(r))
+    }
+
   /** The filter handed to parquet-hadoop: OR over keys of AND over
     * the key columns — row-group stats, dictionaries and column
     * indexes all evaluate it before record assembly. */
@@ -252,10 +262,10 @@ private[kv] object DriverRead {
           s"driver get supports long/int/string/double/float keys; $colName is $other")
       }
     }
-    keys.map { k =>
+    orAll(keys.toIndexedSeq.map { k =>
       pk.zip(k).map { case (c, v) => eqPred(c, v) }
         .reduce(FilterApi.and)
-    }.reduce(FilterApi.or)
+    })
   }
 
   /** Bounded range scan over one snapshot directory — the HBase
@@ -431,14 +441,14 @@ private[kv] object DriverRead {
                           terms: Seq[String], ranges: Seq[(Long, Long)],
                           fileRanges: Seq[(String, Any, Any)]): Seq[Row] = {
     require(terms.nonEmpty, "empty term list")
-    val termPred = terms.map(t =>
+    val termPred = orAll(terms.toIndexedSeq.map(t =>
       FilterApi.eq(FilterApi.binaryColumn("term"),
-        Binary.fromString(t)): FilterPredicate).reduce(FilterApi.or)
+        Binary.fromString(t)): FilterPredicate))
     val pred =
       if (ranges.isEmpty) termPred
       else FilterApi.and(termPred,
-        ranges.map { case (lo, hi) =>
-          rangePredicate(schema, "doc_id", lo, hi) }.reduce(FilterApi.or))
+        orAll(ranges.toIndexedSeq.map { case (lo, hi) =>
+          rangePredicate(schema, "doc_id", lo, hi) }))
     val filter = FilterCompat.get(pred)
     val leadKeys = terms.map(t => prepare(t))
     val parts = listParts(snapshotDir)

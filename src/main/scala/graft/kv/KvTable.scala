@@ -174,13 +174,17 @@ object KvLayout {
     * key so parquet min/max stats give HBase-region-like pruning for
     * pointGet/rangeScan at scale. Partition count scales with input
     * (AQE coalesces small ones); at 100 TB this is the bulk-load path.
+    * A `capture` folds each output file's range-manifest entry inside
+    * this same write job (see [[ManifestCapture]]).
     */
-  def writeSorted(df: DataFrame, keyCols: Seq[String], path: String, partitions: Int = 0): Unit = {
+  def writeSorted(df: DataFrame, keyCols: Seq[String], path: String, partitions: Int = 0,
+                  capture: Option[ManifestCapture] = None): Unit = {
     val cols = keyCols.map(col)
     val ranged =
       if (partitions > 0) df.repartitionByRange(partitions, cols: _*)
       else df.repartitionByRange(cols: _*)
-    ranged.sortWithinPartitions(cols: _*)
+    val sorted = ranged.sortWithinPartitions(cols: _*)
+    capture.fold(sorted)(_.instrument(sorted))
       .write.mode("overwrite").parquet(path)
   }
 
@@ -199,7 +203,8 @@ object KvLayout {
     * the same range-partition + sort-within-partitions as writeSorted,
     * keyed by z. */
   def writeZOrdered(df: DataFrame, colA: String, colB: String,
-                    path: String, partitions: Int = 0): Unit = {
+                    path: String, partitions: Int = 0,
+                    capture: Option[ManifestCapture] = None): Unit = {
     import org.apache.spark.sql.functions.{min => fmin, max => fmax}
     // the bounds pass re-runs the input plan but over ONLY the two key
     // columns (column-pruned down to the scan) — cheaper than caching
@@ -210,7 +215,7 @@ object KvLayout {
     if (b.isNullAt(0) || b.isNullAt(2)) {
       // empty (or all-null-key) input: no bounds to scale by — degrade
       // to the plain sorted layout instead of NPEing on the null aggs
-      writeSorted(df, Seq(colA, colB), path, partitions)
+      writeSorted(df, Seq(colA, colB), path, partitions, capture)
       return
     }
     def scaled(c: String, lo: Double, hi: Double) = {
@@ -228,8 +233,8 @@ object KvLayout {
     val ranged =
       if (partitions > 0) withZ.repartitionByRange(partitions, col("__graft_z"))
       else withZ.repartitionByRange(col("__graft_z"))
-    ranged.sortWithinPartitions(col("__graft_z"))
-      .drop("__graft_z")
+    val sorted = ranged.sortWithinPartitions(col("__graft_z")).drop("__graft_z")
+    capture.fold(sorted)(_.instrument(sorted))
       .write.mode("overwrite").parquet(path)
   }
 }

@@ -33,9 +33,8 @@ object StackSample {
         val all = Thread.getAllStackTraces
         all.forEach { (t, st) =>
           val nm = t.getName
-          if (interesting.exists(nm.startsWith) && st.nonEmpty &&
-              t.getState == Thread.State.RUNNABLE ||
-              (interesting.exists(nm.startsWith) && st.nonEmpty)) {
+          // every state is sampled: the bucket key below records it
+          if (interesting.exists(nm.startsWith) && st.nonEmpty) {
             // bucket: topmost frame in graft/spark-sql space, else top frame
             val frames = st.map(f => f.getClassName + "." + f.getMethodName)
             val own = frames.find(f => f.startsWith("graft."))
