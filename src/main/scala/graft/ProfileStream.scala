@@ -34,22 +34,31 @@ object ProfileStream {
     spark.sparkContext.setLogLevel("ERROR")
     val selected = SparkEntry.select(Some(names))
 
-    case class Batch(durations: Map[String, Long], stateRows: Long,
-                     updateMs: Long, commitMs: Long, removalMs: Long,
-                     inputRows: Long)
+    case class Batch(runId: java.util.UUID, durations: Map[String, Long],
+                     stateRows: Long, updateMs: Long, commitMs: Long,
+                     removalMs: Long, inputRows: Long)
+    // Only the timed rep's runs count. onQueryStarted runs on the
+    // thread that starts the query, so the timed runs are all known
+    // when the rep returns; a run's QueryTerminatedEvent follows all
+    // of its progress events on the listener bus (one FIFO queue).
+    @volatile var timing = false
+    val timedRuns = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[Batch]()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (timing) timedRuns.add(e.runId): Unit
       override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.add(e.runId): Unit
       override def onQueryProgress(
         e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
         val durs = scala.collection.mutable.Map[String, Long]()
         p.durationMs.forEach((k, v) => { durs(k) = v.toLong; () })
         val so = p.stateOperators
-        batches.add(Batch(durs.toMap,
+        batches.add(Batch(p.runId, durs.toMap,
           so.map(_.numRowsTotal).sum,
           so.map(_.allUpdatesTimeMs).sum,
           so.map(_.commitTimeMs).sum,
@@ -70,13 +79,21 @@ object ProfileStream {
       spark.sparkContext.setJobDescription(s"$name warmup")
       fn(spark, sfDir).count()
       batches.clear()
+      timedRuns.clear()
       spark.sparkContext.setJobDescription(s"$name timed")
+      timing = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val timed = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // let listener events drain
+      timing = false
+      val deadline = System.nanoTime() + 30000000000L
+      while (!ended.containsAll(timedRuns) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      if (!ended.containsAll(timedRuns))
+        System.err.println(s"$name: a timed run did not end within 30 s — " +
+          "its later batches are missing below")
       val bs = new scala.collection.mutable.ArrayBuffer[Batch]()
-      batches.forEach(b => { bs += b; () })
+      batches.forEach(b => { if (timedRuns.contains(b.runId)) bs += b; () })
       val sums = scala.collection.mutable.Map[String, Long]()
         .withDefaultValue(0L)
       bs.foreach(_.durations.foreach { case (k, v) => sums(k) += v })

@@ -180,17 +180,21 @@ object QueryCaches {
       override def apply(k: String): java.lang.Long = Tables.documents(s, d).count()
     })
 
-  /** A base table's scan split count, memoized per (table, dir) — the
-    * cheap proxy the conditional map fan-outs compare against
-    * mapFanout (StreamQueries.fanned). Planning the BARE scan once
-    * per JVM costs microseconds; planning every derived consumer
-    * frame per call (df.rdd on the union/filter lineage) measured as
-    * a 10-25% tax on the fanned dedup keys. The count is a property
-    * of the dir's file layout and the session's split conf, both
-    * fixed for a session. No job runs — partition enumeration is
-    * driver-side. */
+  /** A base table's scan split count — the cheap proxy the
+    * conditional map fan-outs compare against mapFanout
+    * (StreamQueries.fanned). Planning the BARE scan once costs
+    * microseconds; planning every derived consumer frame per call
+    * (df.rdd on the union/filter lineage) measured as a 10-25% tax on
+    * the fanned dedup keys. The count is a function of the dir's file
+    * layout and of the split conf (maxPartitionBytes, openCostInBytes,
+    * the default parallelism), so it is memoized per (table, dir,
+    * split conf): a session with another split conf reads its own
+    * width. No job runs — partition enumeration is driver-side. */
   def scanParallelism(s: SparkSession, d: String, table: String): Int =
-    counts.computeIfAbsent(s"scanparts:$table:$d",
+    counts.computeIfAbsent(Seq("scanparts", table, d,
+        s.conf.get("spark.sql.files.maxPartitionBytes"),
+        s.conf.get("spark.sql.files.openCostInBytes"),
+        s.sparkContext.defaultParallelism).mkString(":"),
       new Function[String, java.lang.Long] {
         override def apply(k: String): java.lang.Long =
           Tables.load(s, d, table).rdd.getNumPartitions.toLong

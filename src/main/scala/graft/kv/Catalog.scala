@@ -3,6 +3,7 @@ package graft.kv
 import com.fasterxml.jackson.databind.{ObjectMapper, JsonNode}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths, Path}
 import java.util.Comparator
@@ -1056,7 +1057,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         // data_v(cur+1) dir left by a CRASHED earlier writer (which
         // never published cur+1) is orphan garbage holding
         // never-committed content; publishing cur+1 here without
-        // clearing it would make resolveIndexVersioned serve it —
+        // clearing it would make every reader resolve it —
         // delete orphans before the pointer bump
         // fence BEFORE deleting "orphans": a lapsed compactor's
         // cur+1 may be the new owner's PUBLISHED version, and these
@@ -1130,27 +1131,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     indexesOf(name).foreach { case (iname, ty, _) =>
       val dir = indexDir(name, iname, ty)
       if (Files.exists(dir)) {
-        val baseData = resolveIndexDataDir(dir, name)
-        val baseVer = indexBaseVersion(baseData)
-        val keep = Set(baseData.getFileName.toString,
-          resolveIndexVersioned(dir, "dict", liveV).getFileName.toString,
-          // the fuzzy sidecar folds with the dict stack — keep the one
-          // the live version resolves (deltas above it still apply)
-          resolveIndexVersioned(dir, "fz", liveV).getFileName.toString,
-          // vector artifacts pair at the DATA base's version
-          // (vectorArtifacts), so retention keys off baseVer, not liveV
-          resolveIndexVersioned(dir, "cent", baseVer).getFileName.toString,
-          resolveIndexVersioned(dir, "vmeta", baseVer).getFileName.toString,
-          // positional postings are written by the same backfill/fold
-          // as the postings base — pair at the data base's version
-          resolveIndexVersioned(dir, "pos", baseVer).getFileName.toString,
-          // the navigable graph folds forward with the data base
-          // (foldIndexStack's graph-era branch) — pair at baseVer
-          resolveIndexVersioned(dir, "graph", baseVer).getFileName.toString,
-          // the ranked-serving pair (norms + block stats) is written
-          // by the same backfill/fold as the postings — pair at baseVer
-          resolveIndexVersioned(dir, "norms", baseVer).getFileName.toString,
-          resolveIndexVersioned(dir, "bmx", baseVer).getFileName.toString)
+        // exactly what a reader at the live version resolves (the
+        // IndexStack pairing rules)
+        val st = IndexStack.at(dir, liveV)
+        val baseVer = st.baseVer
+        val keep = (Seq(st.base, st.folded("dict")._1, st.folded("fz")._1) ++
+          Seq("cent", "vmeta", "pos", "graph", "norms", "bmx").map(st.paired))
+          .map(_.getFileName.toString).toSet
         withList(dir) { it =>
           it.filter { p =>
             val n = p.getFileName.toString
@@ -1238,40 +1225,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       case p if dirName.startsWith(p) =>
         scala.util.Try(dirName.stripPrefix(p).toInt).toOption
     }.flatten
-
-  /** Version a resolved base index dir was built at (`data` backfill
-    * dirs predate versioning and count as version of the backfill —
-    * every segment applies on top of them). */
-  /** The version of a `<prefix>_v<n>` artifact dir name, −1 for the
-    * unversioned creation artifact (plain `<prefix>`) or anything
-    * unparsable. ONE parser for every artifact family (data bases,
-    * the fz fuzzy sidecar, …): the fold logic keys patch application
-    * on these numbers, and two hand-rolled parsers only have to
-    * drift once for a fold to silently re-apply or skip a delta. */
-  private def versionOf(prefix: String, dirName: String): Int =
-    if (dirName.startsWith(s"${prefix}_v"))
-      scala.util.Try(dirName.stripPrefix(s"${prefix}_v").toInt).getOrElse(-1)
-    else -1
-
-  private def indexBaseVersion(baseData: Path): Int =
-    versionOf("data", baseData.getFileName.toString)
-
-  /** Versioned dirs `<prefix><v>` with loExcl < v <= hiIncl, ascending
-    * — the segments/tombstones/deltas contributing to a base built at
-    * loExcl, bounded by the PUBLISHED table version (a segment written
-    * mid-merge is invisible until the pointer bump, same crash-safety
-    * rule as resolveIndexVersioned). */
-  private def versionedDirs(dir: Path, prefix: String,
-                            loExcl: Int, hiIncl: Int): Seq[(Int, Path)] =
-    if (!Files.exists(dir)) Nil
-    else withList(dir) { it =>
-      it.flatMap { p =>
-        val n = p.getFileName.toString
-        if (!n.startsWith(prefix)) None
-        else scala.util.Try(n.stripPrefix(prefix).toInt).toOption
-          .filter(v => v > loExcl && v <= hiIncl).map(v => (v, p))
-      }.toList
-    }.sortBy(_._1)
 
   // ------------------------------------------------------------------
   // Segment + tombstone incremental maintenance for analytic indexes
@@ -1439,7 +1392,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           // encode against the EXISTING codebooks (cheap write-path
           // maintenance; compact_index re-trains) — cost ∝ patch ×
           // (|centroids| + m·k), never a corpus re-fit
-          val (cent, vmeta) = vectorArtifacts(dir, next)
+          val (cent, vmeta) = vectorArtifacts(IndexStack.at(dir, next))
           // one file per patch segment, same bounded-patch reasoning
           // as the fulltext branch
           KvLayout.writeSorted(
@@ -1475,9 +1428,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       // amortized over autoFold merges.
       val autoFold = spark.conf.getOption("spark.graft.index.autoFoldSegments")
         .map(_.toInt).getOrElse(8)
-      val baseNow = resolveIndexVersioned(dir, "data", next)
-      if (versionedDirs(dir, "seg_v", indexBaseVersion(baseNow), next)
-            .size >= autoFold)
+      if (IndexStack.at(dir, next).segments("seg_v").size >= autoFold)
         foldIndexStack(name, iname, ty, next): Unit
       setIndexAsOf(name, iname, ty, next)
     }
@@ -1533,11 +1484,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private def foldIndexStack(table: String, indexName: String,
                              indexType: String, upTo: Int): Boolean = {
     val dir = indexDir(table, indexName, indexType)
-    val base = resolveIndexVersioned(dir, "data", upTo)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, upTo)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, upTo)
-    if (segs.isEmpty && tombs.isEmpty) return false
+    val st = IndexStack.at(dir, upTo)
+    if (!st.hasDelta) return false
     // fence BEFORE the healing deletes below (the maintainAnalytic-
     // Indexes preamble rule): their "these artifacts are orphans"
     // premise is only provable for the CURRENT grant
@@ -1559,17 +1507,19 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         // crashed-fold healing: a prior fold may have renamed
         // dict_v(upTo) and died before data_v(upTo) — reaching here
         // proves the data base is older (else segs would be empty), so
-        // that dict is an orphan. It must go BEFORE dictSegView runs:
-        // the view would resolve it as its own base and the write
-        // below would read from its own output path (Spark refuses, so
-        // every retry would fail and wedge CDC on this table).
+        // that dict is an orphan. It must go, and the stack be listed
+        // again, BEFORE dictSegView runs: the view would resolve it as
+        // its own base and the write below would read from its own
+        // output path (Spark refuses, so every retry would fail and
+        // wedge CDC on this table).
         Seq(s"dict_v$upTo", s"pos_v$upTo", s"norms_v$upTo", s"bmx_v$upTo",
             s"fz_v$upTo")
           .foreach { n =>
             val orphan = dir.resolve(n)
             if (Files.exists(orphan)) deleteRecursively(orphan)
           }
-        val foldedDict = dictSegView(dir, upTo)
+        val healed = IndexStack.at(dir, upTo)
+        val foldedDict = dictSegView(healed)
         stageArtifact(s"dict_v$upTo") { p =>
           KvLayout.writeSorted(foldedDict, Seq("term"), p)
         }
@@ -1586,9 +1536,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         // wedge every subsequent merge at the auto-fold threshold);
         // skip the family and let refresh_index backfill it. Orphaned
         // posseg dirs below the advanced base are vacuum-reclaimed.
-        if (Files.exists(resolveIndexVersioned(dir, "pos", baseVer)))
+        if (Files.exists(healed.paired("pos")))
           stageArtifact(s"pos_v$upTo") { p =>
-            KvLayout.writeSorted(posSegView(dir, upTo), Seq("term"), p)
+            KvLayout.writeSorted(positionsView(healed), Seq("term"), p)
           }
         // the folded postings feed data + norms + block stats — cache
         // across the three writes. Norms/bmx land BEFORE data (the
@@ -1597,9 +1547,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         // leaves the OLD quadruple live and these as healed orphans.
         // A pre-norms index gains the ranked artifacts at its first
         // fold (the metas derive from the folded frame, complete).
-        val foldedPost = fulltextSegView(base, baseVer, segs, tombs).cache()
+        val foldedPost = postingsView(healed).cache()
         try {
-          val rkT = schemaOf(table)(primaryKeyOf(table).head).dataType
+          val rkT = rowkeyType(table)
           val doclens = graft.index.FullText.buildDocLens(foldedPost).cache()
           try {
             val (nd, td) = aggDoclens(doclens)
@@ -1626,8 +1576,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         true
       case "BITMAP" =>
         stageArtifact(s"data_v$upTo") { p =>
-          bitmapSegView(base, baseVer, segs, tombs)
-            .write.mode("overwrite").parquet(p)
+          bitmapSegView(st).write.mode("overwrite").parquet(p)
         }
         true
       case "VECTOR" =>
@@ -1635,13 +1584,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         // cent_v/vmeta_v/graph_v at upTo with an OLDER data base are
         // artifacts of a fold that died before its data rename —
         // readers never resolved them (artifacts pair at the data
-        // base's version, see vectorArtifacts), but the writes below
-        // must not read their own output paths
+        // base's version), but the writes below must not read their
+        // own output paths
         Seq(s"cent_v$upTo", s"vmeta_v$upTo", s"graph_v$upTo").foreach { n =>
           val orphan = dir.resolve(n)
           if (Files.exists(orphan)) deleteRecursively(orphan)
         }
-        val graphBase = resolveIndexVersioned(dir, "graph", baseVer)
+        val graphBase = st.paired("graph")
         if (Files.exists(graphBase)) {
           // GRAPH-ERA fold: the coarse structure is FIXED between
           // refreshes (the DiskANN trade — re-fitting the quantizer
@@ -1652,7 +1601,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           // encodings, and the fresh-delta rows fold into only the
           // TOUCHED per-list graphs (Hnsw.foldDelta — untouched lists
           // carry over row-identical, HnswSpec pins it).
-          val folded = vectorSegView(base, baseVer, segs, tombs).cache()
+          val folded = vectorView(st).cache()
           try {
             import org.apache.spark.sql.functions.col
             val entries = folded.select(col("cluster"), col("rk"), col("v"))
@@ -1663,10 +1612,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
             val newGraph = graft.similarity.Hnsw.foldDelta(
               spark.read.parquet(graphBase.toString), entries, graphM)
             stageArtifact(s"vmeta_v$upTo") { p =>
-              copyArtifactDir(resolveIndexVersioned(dir, "vmeta", baseVer), p)
+              copyArtifactDir(st.paired("vmeta"), p)
             }
             stageArtifact(s"cent_v$upTo") { p =>
-              copyArtifactDir(resolveIndexVersioned(dir, "cent", baseVer), p)
+              copyArtifactDir(st.paired("cent"), p)
             }
             stageArtifact(s"graph_v$upTo") { p =>
               newGraph.write.mode("overwrite").parquet(p)
@@ -1682,8 +1631,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         // fold refits coarse quantizer + codebooks from the folded
         // entries — reading ONLY index frames (the vectors live in the
         // index), never the corpus.
-        val folded = vectorSegView(base, baseVer, segs, tombs)
-          .select("rk", "v").cache()
+        val folded = vectorView(st).select("rk", "v").cache()
         try {
           val b = graft.similarity.VectorIndex.build(folded, "rk", "v")
           try {
@@ -1739,47 +1687,24 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     true
   }
 
-  /** Centroids + codebook meta paired at the resolved DATA base's
-    * version — never at the live table version: a fold writes
-    * cent/vmeta before its data base, so resolving them independently
-    * at `live` could pair re-trained centroids with pre-fold cluster
-    * ids after a mid-fold crash. Pairing at the data base version
-    * makes the triple consistent by construction (the same fold/
-    * backfill/refresh wrote all three). */
-  private def vectorArtifacts(dir: Path, upTo: Int): (DataFrame,
-      graft.similarity.VectorIndex.VMeta) = {
-    val bv = indexBaseVersion(resolveIndexVersioned(dir, "data", upTo))
-    val cent = spark.read.parquet(
-      resolveIndexVersioned(dir, "cent", bv).toString)
-    val meta = graft.similarity.VectorIndex.metaOf(spark.read.parquet(
-      resolveIndexVersioned(dir, "vmeta", bv).toString))
-    (cent, meta)
-  }
+  /** Centroids + codebook meta of a vector stack, paired at its data
+    * base's version. */
+  private def vectorArtifacts(st: IndexStack): (DataFrame,
+      graft.similarity.VectorIndex.VMeta) =
+    (spark.read.parquet(st.paired("cent").toString),
+      graft.similarity.VectorIndex.metaOf(
+        spark.read.parquet(st.paired("vmeta").toString)))
 
-  /** Encoded entries across base+segments, minus rows tombstoned at a
-    * later version (same mask as the fulltext view; tombstones are
-    * CDC-patch-sized — broadcast). Last-writer-wins per rk: a re-
-    * patched vector's older entry is masked by the newer tombstone. */
-  private def vectorSegView(base: Path, baseVer: Int,
-                            segs: Seq[(Int, Path)],
-                            tombs: Seq[(Int, Path)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val parts = ((baseVer, base) +: segs).map { case (v, p) =>
-      spark.read.parquet(p.toString)
-        .select(col("rk"), col("cluster"), col("v"), col("codes"),
-          col("rcodes")).withColumn("__v", lit(v))
-    }.reduce(_ unionByName _)
-    if (tombs.isEmpty) parts.drop("__v")
-    else {
-      val t = tombs.map { case (v, p) =>
-        spark.read.parquet(p.toString)
-          .select(col("rk").as("__trk"), lit(v).as("__tv"))
-      }.reduce(_ unionByName _)
-      parts.join(broadcast(t),
-          parts("rk") === t("__trk") && t("__tv") > parts("__v"), "left_anti")
-        .drop("__v")
-    }
-  }
+  /** The masked Spark views of a stack's postings, positions and
+    * vector entries. */
+  private def postingsView(st: IndexStack): DataFrame =
+    st.masked(spark, st.layers, Seq("term", "doc_id", "tf"), "doc_id")
+
+  private def positionsView(st: IndexStack): DataFrame =
+    st.masked(spark, st.posLayers, Seq("doc_id", "term", "pos"), "doc_id")
+
+  private def vectorView(st: IndexStack): DataFrame =
+    st.masked(spark, st.layers, Seq("rk", "cluster", "v", "codes", "rcodes"), "rk")
 
   /** Read a specific historical snapshot (time travel). */
   def tableAt(name: String, version: Int): KvTable =
@@ -1796,6 +1721,31 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // declared columns), so inference adds I/O, not information.
     KvTable(spark.read.schema(schemaOf(name)).parquet(dataDir(name)),
       primaryKeyOf(name))
+
+  /** The published stack of a registered index, for the driver
+    * serving paths. */
+  private def servingStack(table: String, indexName: String,
+                           indexType: String): IndexStack = {
+    val dir = indexDir(table, indexName, indexType)
+    require(Files.exists(dir), s"$table $indexName $indexType not exists")
+    IndexStack.at(dir, dataVersionOf(table))
+  }
+
+  /** The one column a fulltext, bitmap or vector index covers. */
+  private def indexedColumn(table: String, indexName: String,
+                            indexType: String): String =
+    indexesOf(table)
+      .find(i => i._1 == indexName && i._2.equalsIgnoreCase(indexType))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$table $indexName $indexType not registered"))._3.head
+
+  private def rowkeyType(table: String): DataType =
+    schemaOf(table)(primaryKeyOf(table).head).dataType
+
+  /** (file, lo, hi) per file of a dir's range manifest, Nil without
+    * one — the pruning input of a DriverRead seek. */
+  private def manifestRanges(dir: Path): Seq[(String, Any, Any)] =
+    readManifestJson(dir).getOrElse(Nil).map(r => (r.file, r.lo, r.hi))
 
   /** Millisecond point read served on the calling thread — NO Spark
     * job (the reference's HBase `Get` path: HBaseEnumerator.kt reads
@@ -1872,8 +1822,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // dimensions (ZOrderSpec pins the claim). No manifest at all →
     // footer path for every file, as before.
     val ranges =
-      if (c == pk.head)
-        readManifestJson(dir).getOrElse(Nil).map(r => (r.file, r.lo, r.hi))
+      if (c == pk.head) manifestRanges(dir)
       else
         readManifestJson(dir).getOrElse(Nil).map(r =>
           (r.file, r.second.map(_._1).orNull, r.second.map(_._2).orNull))
@@ -1888,7 +1837,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * row-group statistics prune like the reference's index-region
     * seek; `values` may bind a PREFIX of a composite index), then the
     * base multi-Get for the matched rowkeys. The index snapshot is
-    * resolved at the published table version (resolveIndexVersioned),
+    * resolved at the published table version ([[IndexStack]]),
     * so the pair is consistent: kv indexes are maintained
     * synchronously on every write path. Bounded-selectivity lookups
     * only — a value matching a large slice of the base table belongs
@@ -1919,16 +1868,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // a post-merge base table (a lookup by an old indexed value would
     // return the row with its new value)
     val v = dataVersionOf(table)
-    val idxData = resolveIndexVersioned(
-      indexDir(table, indexName, "kv"), "data", v)
+    val idxData = IndexStack.at(indexDir(table, indexName, "kv"), v).base
     // index snapshots carry the same range manifest the base table
     // does (maintenance reuses the manifest machinery) — consume it
     // like driverMultiGet does; an absent/corrupt one degrades to
     // footer statistics
-    val idxRanges = readManifestJson(idxData).getOrElse(Nil)
-      .map(r => (r.file, r.lo, r.hi))
     val hits = DriverRead.get(idxData, idxSchema,
-      ikNames.take(values.length), Seq(values), idxRanges)
+      ikNames.take(values.length), Seq(values), manifestRanges(idxData))
     val rkIdx = idxSchema.fieldNames.indexOf("rk")
     val rks = hits.map(_.get(rkIdx)).distinct.filter(_ != null)
     if (rks.isEmpty) Nil
@@ -1943,8 +1889,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * contract), then each term seeks the term-sorted postings of the
     * SEGMENTED view: the resolved base at or below the published
     * version plus every seg_v appended since, with tomb_v rk sets
-    * masking older artifacts' rows (the same base+segment−tombstone
-    * semantics fulltextSegView plans for Spark). Postings reads go
+    * masking older artifacts' rows (the [[IndexStack]] mask, the
+    * same one the Spark view plans). Postings reads go
     * through DriverRead's three pruning layers (manifest / footer
     * stats / pushed term predicate); tombstones and dictionary
     * deltas are PATCH-SIZED by the CDC contract, so reading them
@@ -1970,13 +1916,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private def driverFtBoolean(table: String, indexName: String,
                               terms: Seq[String], requireAll: Boolean,
                               maxPostings: Int): Seq[Any] = {
-    val dir = indexDir(table, indexName, "fulltext")
-    require(Files.exists(dir), s"$table $indexName fulltext not exists")
+    val st = servingStack(table, indexName, "fulltext")
     val analyzed = graft.index.FullText
       .analyzeTerms(terms, indexAnalyzer(table, indexName)).distinct
     require(analyzed.nonEmpty,
       "every query term is a stopword under this analyzer")
-    val perDoc = driverFtPerDoc(table, dir, analyzed, maxPostings)
+    val perDoc = driverFtPerDoc(table, st, analyzed, maxPostings)
     perDoc.collect { case (id, ts)
       if (if (requireAll) ts.size == analyzed.size else ts.nonEmpty) => id }
       .toSeq.sorted(Catalog.rowkeyOrd)
@@ -1984,46 +1929,53 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
 
   /** The shared boolean-serving core: per-doc matched-term sets for a
     * list of ALREADY-ANALYZED terms, seeked from the segmented
-    * postings stack (base + seg_v − tomb_v masks) on the calling
-    * thread — [[driverFtSearch]]/[[driverFtSearchAny]]/[[driverFtFuzzy]]
+    * postings stack on the calling thread —
+    * [[driverFtSearch]]/[[driverFtSearchAny]]/[[driverFtFuzzy]]
     * differ only in how they combine these sets. */
-  private def driverFtPerDoc(table: String, dir: Path, terms: Seq[String],
+  private def driverFtPerDoc(table: String, st: IndexStack, terms: Seq[String],
                              maxPostings: Int)
       : scala.collection.Map[Any, scala.collection.Set[String]] = {
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
-    val rkType = schemaOf(table)(primaryKeyOf(table).head).dataType
-    val postSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("doc_id", rkType, nullable = true),
-      StructField("tf", LongType, nullable = true)))
-    val tombSchema = StructType(Seq(StructField("rk", rkType, nullable = true)))
-    val tombSets: Seq[(Int, Set[Any])] = tombs.map { case (v, p) =>
-      (v, DriverRead.readAll(p, tombSchema, maxPostings).map(_.get(0)).toSet)
-    }
-    def maskedAt(v: Int, docId: Any): Boolean =
-      tombSets.exists { case (tv, s) => tv > v && s.contains(docId) }
-    val keys = terms.map(t => Seq(t: Any))
+    val rkType = rowkeyType(table)
     val perDoc = scala.collection.mutable.Map[Any, scala.collection.mutable.Set[String]]()
-    var n = 0
-    ((baseVer, base) +: segs).foreach { case (v, p) =>
-      val ranges = readManifestJson(p).getOrElse(Nil).map(r => (r.file, r.lo, r.hi))
-      DriverRead.get(p, postSchema, Seq("term"), keys, ranges).foreach { r =>
-        n += 1
-        require(n <= maxPostings,
-          s"query matched more than $maxPostings postings — " +
-            "use the Spark search path")
-        val docId = r.get(1)
-        if (!maskedAt(v, docId))
-          perDoc.getOrElseUpdate(docId,
-            scala.collection.mutable.Set[String]()) += r.getString(0)
-      }
+    seekTerms(st.layers, postingsSchema(rkType), terms,
+        st.driverMask(rkType, maxPostings), maxPostings, "query", "postings") { r =>
+      perDoc.getOrElseUpdate(r.get(1),
+        scala.collection.mutable.Set[String]()) += r.getString(0): Unit
     }
     perDoc
   }
+
+  /** Seek `terms` in every layer of a driver-served stack (term-sorted
+    * artifacts), counting each row read against `maxPostings`, and hand
+    * `live` every row the stack's mask leaves visible. */
+  private def seekTerms(layers: Seq[(Int, Path)], schema: StructType,
+                        terms: Seq[String], mask: IndexStack.Mask,
+                        maxPostings: Int, what: String, unit: String)
+                       (live: Row => Unit): Unit = {
+    val keys = terms.map(t => Seq(t: Any))
+    var n = 0
+    layers.foreach { case (v, p) =>
+      DriverRead.get(p, schema, Seq("term"), keys, manifestRanges(p)).foreach { r =>
+        n += 1
+        require(n <= maxPostings,
+          s"$what matched more than $maxPostings $unit — " +
+            "use the Spark search path")
+        if (!mask(v, r.get(1))) live(r)
+      }
+    }
+  }
+
+  /** (term, doc_id, tf) postings and (term, doc_id, pos) positions, as
+    * the driver reads them. */
+  private def postingsSchema(rkType: DataType): StructType = StructType(Seq(
+    StructField("term", StringType, nullable = true),
+    StructField("doc_id", rkType, nullable = true),
+    StructField("tf", LongType, nullable = true)))
+
+  private def positionsSchema(rkType: DataType): StructType = StructType(Seq(
+    StructField("term", StringType, nullable = true),
+    StructField("doc_id", rkType, nullable = true),
+    StructField("pos", IntegerType, nullable = true)))
 
   /** Driver-side PREFIX serving — the Lucene PrefixQuery analog
     * beside [[driverFtSearch]]'s TermQuery: docs containing ANY term
@@ -2038,8 +1990,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * belongs on the Spark path (FullText.searchPrefix). */
   def driverFtPrefix(table: String, indexName: String, prefix: String,
                      maxPostings: Int = 100000): Seq[Any] = {
-    val dir = indexDir(table, indexName, "fulltext")
-    require(Files.exists(dir), s"$table $indexName fulltext not exists")
+    val st = servingStack(table, indexName, "fulltext")
     val toks = graft.index.FullText.normTokens(prefix)
     require(toks.length == 1,
       s"prefix search takes ONE non-empty alnum prefix, got '$prefix'")
@@ -2048,32 +1999,14 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // exact for the tokenizer's [a-z0-9] term charset; the final
     // startsWith keeps the boundary term out of an inclusive range
     val hi = q.init + (q.last + 1).toChar
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
-    val rkType = schemaOf(table)(primaryKeyOf(table).head).dataType
-    val postSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("doc_id", rkType, nullable = true),
-      StructField("tf", LongType, nullable = true)))
-    val tombSchema = StructType(Seq(StructField("rk", rkType, nullable = true)))
-    val tombSets: Seq[(Int, Set[Any])] = tombs.map { case (v, p) =>
-      (v, DriverRead.readAll(p, tombSchema, maxPostings).map(_.get(0)).toSet)
-    }
-    def maskedAt(v: Int, docId: Any): Boolean =
-      tombSets.exists { case (tv, s) => tv > v && s.contains(docId) }
+    val rkType = rowkeyType(table)
+    val schema = postingsSchema(rkType)
+    val mask = st.driverMask(rkType, maxPostings)
     val out = scala.collection.mutable.Set[Any]()
-    ((baseVer, base) +: segs).foreach { case (v, p) =>
-      val ranges = readManifestJson(p).getOrElse(Nil)
-        .map(r => (r.file, r.lo, r.hi))
-      DriverRead.range(p, postSchema, "term", q, hi, maxPostings, ranges)
+    st.layers.foreach { case (v, p) =>
+      DriverRead.range(p, schema, "term", q, hi, maxPostings, manifestRanges(p))
         .foreach { r =>
-          if (r.getString(0).startsWith(q)) {
-            val id = r.get(1)
-            if (!maskedAt(v, id)) out += id: Unit
-          }
+          if (r.getString(0).startsWith(q) && !mask(v, r.get(1))) out += r.get(1): Unit
         }
     }
     out.toSeq.sorted(Catalog.rowkeyOrd)
@@ -2109,20 +2042,17 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
                                         term: String, maxEdits: Int,
                                         maxPostings: Int)
       : (Seq[Any], Int) = {
-    val dir = indexDir(table, indexName, "fulltext")
-    require(Files.exists(dir), s"$table $indexName fulltext not exists")
+    val st = servingStack(table, indexName, "fulltext")
     val toks = graft.index.FullText.normTokens(term)
     require(toks.length == 1,
       s"fuzzy search takes ONE non-empty alnum term, got '$term'")
     require(maxEdits >= 0 && maxEdits <= 2,
       s"maxEdits must be 0..2 (the Lucene FuzzyQuery bound), got $maxEdits")
     val q = toks.head
-    val live = dataVersionOf(table)
-    val fzBase = resolveIndexVersioned(dir, "fz", live)
+    val (fzBase, deltas) = st.folded("fz")
     require(Files.exists(fzBase),
-      s"no fuzzy dictionary sidecar under $dir — the index predates " +
+      s"no fuzzy dictionary sidecar under ${st.dir} — the index predates " +
         "fuzzy serving; CALL system.refresh_index to rebuild")
-    val fzBaseVer = versionOf("fz", fzBase.getFileName.toString)
     val fzSchema = StructType(Seq(
       StructField("tlen", IntegerType, nullable = true),
       StructField("term", StringType, nullable = true),
@@ -2140,11 +2070,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // ddf — merge-inserted docs' new vocabulary) and terms dying
     // (negative ddf — a term's every doc rewritten away reads as
     // live df ≤ 0 and must not match)
-    val deltaSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("ddf", LongType, nullable = true)))
-    versionedDirs(dir, "dictdelta_v", fzBaseVer, live).foreach { case (_, p) =>
-      DriverRead.readAll(p, deltaSchema, maxPostings).foreach { r =>
+    deltas.foreach { case (_, p) =>
+      DriverRead.readAll(p, DeltaSchema, maxPostings).foreach { r =>
         val t = r.getString(0)
         if (math.abs(t.length - q.length) <= maxEdits &&
             graft.index.FullText.editDistance(t, q) <= maxEdits)
@@ -2154,24 +2081,27 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val matched = dfAcc.collect { case (t, d) if d > 0 => t }.toSeq
     val ids =
       if (matched.isEmpty) Nil
-      else driverFtPerDoc(table, dir, matched, maxPostings)
+      else driverFtPerDoc(table, st, matched, maxPostings)
         .collect { case (id, ts) if ts.nonEmpty => id }
         .toSeq.sorted(Catalog.rowkeyOrd)
     (ids, band.size)
   }
+
+  /** A `dictdelta_v` row: (term, df change). */
+  private val DeltaSchema = StructType(Seq(
+    StructField("term", StringType, nullable = true),
+    StructField("ddf", LongType, nullable = true)))
 
   /** Driver-side PHRASE search — [[driverFtSearch]]'s positional
     * counterpart (the Lucene PhraseQuery serving path): query terms
     * through the index's analyzer with Lucene's position-increment
     * contract (stopwords drop but keep their offsets, the
     * searchPhraseAnalyzed rule), each surviving term a pruned seek of
-    * the POSITIONAL postings (pos base paired at the data base's
-    * version + posseg_v segments − tomb_v masks), adjacency verified
-    * in memory per candidate doc. Zero Spark jobs. */
+    * the POSITIONAL stack, adjacency verified in memory per candidate
+    * doc. Zero Spark jobs. */
   def driverFtPhrase(table: String, indexName: String, phrase: String,
                      maxPostings: Int = 100000): Seq[Any] = {
-    val dir = indexDir(table, indexName, "fulltext")
-    require(Files.exists(dir), s"$table $indexName fulltext not exists")
+    val st = servingStack(table, indexName, "fulltext")
     val an = indexAnalyzer(table, indexName)
     val raw = graft.index.FullText.normTokens(phrase)
     require(raw.nonEmpty, "empty phrase")
@@ -2185,43 +2115,16 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           "every phrase term is a stopword under this analyzer")
         t
       }
-    val live = dataVersionOf(table)
-    val dataBaseVer = indexBaseVersion(resolveIndexVersioned(dir, "data", live))
-    val posBase = resolveIndexVersioned(dir, "pos", dataBaseVer)
-    require(Files.exists(posBase),
-      s"no positional postings under $dir — the index predates " +
-        "positional support; CALL system.refresh_index to rebuild")
-    val segs = versionedDirs(dir, "posseg_v", dataBaseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", dataBaseVer, live)
-    val rkType = schemaOf(table)(primaryKeyOf(table).head).dataType
-    val posSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("doc_id", rkType, nullable = true),
-      StructField("pos", IntegerType, nullable = true)))
-    val tombSchema = StructType(Seq(StructField("rk", rkType, nullable = true)))
-    val tombSets: Seq[(Int, Set[Any])] = tombs.map { case (v, p) =>
-      (v, DriverRead.readAll(p, tombSchema, maxPostings).map(_.get(0)).toSet)
-    }
-    def maskedAt(v: Int, docId: Any): Boolean =
-      tombSets.exists { case (tv, s) => tv > v && s.contains(docId) }
-    val keys = terms.map(_._1).distinct.map(t => Seq(t: Any))
+    val rkType = rowkeyType(table)
     // per-doc, per-term position sets across the whole artifact stack
     val perDoc = scala.collection.mutable.Map[Any,
       scala.collection.mutable.Map[String, scala.collection.mutable.Set[Int]]]()
-    var n = 0
-    ((dataBaseVer, posBase) +: segs).foreach { case (v, p) =>
-      val ranges = readManifestJson(p).getOrElse(Nil).map(r => (r.file, r.lo, r.hi))
-      DriverRead.get(p, posSchema, Seq("term"), keys, ranges).foreach { r =>
-        n += 1
-        require(n <= maxPostings,
-          s"phrase matched more than $maxPostings positional postings — " +
-            "use the Spark search path")
-        val docId = r.get(1)
-        if (!maskedAt(v, docId))
-          perDoc.getOrElseUpdate(docId, scala.collection.mutable.Map())
-            .getOrElseUpdate(r.getString(0), scala.collection.mutable.Set[Int]())
-            .add(r.getInt(2)): Unit
-      }
+    seekTerms(st.posLayers, positionsSchema(rkType), terms.map(_._1).distinct,
+        st.driverMask(rkType, maxPostings), maxPostings, "phrase",
+        "positional postings") { r =>
+      perDoc.getOrElseUpdate(r.get(1), scala.collection.mutable.Map())
+        .getOrElseUpdate(r.getString(0), scala.collection.mutable.Set[Int]())
+        .add(r.getInt(2)): Unit
     }
     val (t0, o0) = terms.head
     perDoc.collect { case (id, byTerm)
@@ -2236,68 +2139,33 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * containing `term`, the first occurrence position (1-based), the
     * occurrence count, and a ±-token window around the first hit,
     * entirely on the calling thread. First position and count come
-    * from a pruned seek of the POSITIONAL stack (pos base + posseg_v
-    * − tomb_v masks — never a corpus scan); only the MATCHED docs'
-    * text is then fetched, through the driver multi-get path (bounded
-    * by the hit set), and tokenized with the index tokenizer for the
-    * window slice — the FullText.snippets contract, served without a
-    * Spark job. Results sort ascending by doc id. */
+    * from a pruned seek of the POSITIONAL stack (never a corpus
+    * scan); only the MATCHED docs' text is then fetched, through the
+    * driver multi-get path (bounded by the hit set), and tokenized
+    * with the index tokenizer for the window slice — the
+    * FullText.snippets contract, served without a Spark job. Results
+    * sort ascending by doc id. */
   def driverFtSnippet(table: String, indexName: String, term: String,
                       before: Int = 3, after: Int = 4,
                       maxPostings: Int = 100000): Seq[(Any, Int, Long, String)] = {
-    val dir = indexDir(table, indexName, "fulltext")
-    require(Files.exists(dir), s"$table $indexName fulltext not exists")
+    val st = servingStack(table, indexName, "fulltext")
     val toks = graft.index.FullText.normTokens(term)
     require(toks.length == 1, s"snippets take ONE term, got '$term'")
-    val t = toks.head
-    val live = dataVersionOf(table)
-    val dataBaseVer = indexBaseVersion(resolveIndexVersioned(dir, "data", live))
-    val posBase = resolveIndexVersioned(dir, "pos", dataBaseVer)
-    require(Files.exists(posBase),
-      s"no positional postings under $dir — the index predates " +
-        "positional support; CALL system.refresh_index to rebuild")
-    val segs = versionedDirs(dir, "posseg_v", dataBaseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", dataBaseVer, live)
-    val rkType = schemaOf(table)(primaryKeyOf(table).head).dataType
-    val posSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("doc_id", rkType, nullable = true),
-      StructField("pos", IntegerType, nullable = true)))
-    val tombSchema = StructType(Seq(StructField("rk", rkType, nullable = true)))
-    val tombSets: Seq[(Int, Set[Any])] = tombs.map { case (v, p) =>
-      (v, DriverRead.readAll(p, tombSchema, maxPostings).map(_.get(0)).toSet)
-    }
-    def maskedAt(v: Int, docId: Any): Boolean =
-      tombSets.exists { case (tv, s) => tv > v && s.contains(docId) }
+    val rkType = rowkeyType(table)
     // per live doc: (min position, occurrence count) across the stack
     val perDoc = scala.collection.mutable.Map[Any, (Int, Long)]()
-    var n = 0
-    ((dataBaseVer, posBase) +: segs).foreach { case (v, p) =>
-      val ranges = readManifestJson(p).getOrElse(Nil).map(r => (r.file, r.lo, r.hi))
-      DriverRead.get(p, posSchema, Seq("term"), Seq(Seq(t: Any)), ranges)
-        .foreach { r =>
-          n += 1
-          require(n <= maxPostings,
-            s"term matched more than $maxPostings positional postings — " +
-              "use the Spark search path")
-          val id = r.get(1)
-          if (!maskedAt(v, id)) {
-            val pos = r.getInt(2)
-            val (mn, c) = perDoc.getOrElse(id, (Int.MaxValue, 0L))
-            perDoc(id) = (math.min(mn, pos), c + 1)
-          }
-        }
+    seekTerms(st.posLayers, positionsSchema(rkType), toks.take(1),
+        st.driverMask(rkType, maxPostings), maxPostings, "term",
+        "positional postings") { r =>
+      val (mn, c) = perDoc.getOrElse(r.get(1), (Int.MaxValue, 0L))
+      perDoc(r.get(1)) = (math.min(mn, r.getInt(2)), c + 1)
     }
     if (perDoc.isEmpty) return Nil
     // only matched docs' text is fetched — the driver get path prunes
     // by manifest/bloom/footer like every serving read
     val schema = schemaOf(table)
     val pkIdx = schema.fieldNames.indexOf(primaryKeyOf(table).head)
-    val textCol = indexesOf(table)
-      .find(i => i._1 == indexName && i._2.equalsIgnoreCase("fulltext"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table $indexName fulltext not registered"))._3.head
-    val textIdx = schema.fieldNames.indexOf(textCol)
+    val textIdx = schema.fieldNames.indexOf(indexedColumn(table, indexName, "fulltext"))
     driverMultiGet(table, perDoc.keys.toSeq.map(Seq(_))).flatMap { row =>
       val id = row.get(pkIdx)
       perDoc.get(id).map { case (mn, c) =>
@@ -2325,50 +2193,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * jobs; `maxIds` is the serving contract (a hotter value belongs
     * on the Spark path, BitmapIndex.lookupIds). */
   def driverBitmapIds(table: String, indexName: String, value: Any,
-                      maxIds: Int = 100000): Seq[Long] = {
-    val dir = indexDir(table, indexName, "bitmap")
-    require(Files.exists(dir), s"$table $indexName bitmap not exists")
-    val ivType = schemaOf(table)(indexesOf(table)
-      .find(i => i._1 == indexName && i._2.equalsIgnoreCase("bitmap"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table $indexName bitmap not registered"))._3.head).dataType
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
-    val rowSchema = StructType(Seq(
-      StructField("iv", ivType, nullable = true),
-      StructField("shard", LongType, nullable = true),
-      StructField("bm", BinaryType, nullable = true)))
-    val parts = scala.collection.mutable.Map[Long,
-      scala.collection.mutable.ListBuffer[(Int, Array[Byte])]]()
-    ((baseVer, base) +: segs).foreach { case (v, p) =>
-      DriverRead.get(p, rowSchema, Seq("iv"), Seq(Seq(value)), Nil)
-        .foreach { r =>
-          parts.getOrElseUpdate(r.getLong(1),
-            scala.collection.mutable.ListBuffer()) += ((v, r.getAs[Array[Byte]](2)))
-        }
+                      maxIds: Int = 100000): Seq[Long] =
+    driverBitmapCore(table, indexName, maxIds, "value") { (p, schema) =>
+      DriverRead.get(p, schema, Seq("iv"), Seq(Seq(value)), Nil)
     }
-    val tombSchema = StructType(Seq(
-      StructField("shard", LongType, nullable = true),
-      StructField("bm", BinaryType, nullable = true)))
-    val tombsByShard = scala.collection.mutable.Map[Long,
-      scala.collection.mutable.ListBuffer[(Int, Array[Byte])]]()
-    tombs.foreach { case (v, p) =>
-      DriverRead.readAll(p, tombSchema, maxIds).foreach { r =>
-        tombsByShard.getOrElseUpdate(r.getLong(0),
-          scala.collection.mutable.ListBuffer()) += ((v, r.getAs[Array[Byte]](1)))
-      }
-    }
-    val out = parts.iterator.flatMap { case (shard, ps) =>
-      graft.index.Bitmap.ids(graft.index.Bitmap.foldVersions(ps.toSeq,
-        tombsByShard.get(shard).map(_.toSeq).getOrElse(Nil)))
-    }.toSeq
-    require(out.size <= maxIds,
-      s"value matched more than $maxIds rowkeys — use the Spark path")
-    out.sorted
-  }
 
   /** Driver-side BITMAP RANGE serving — [[driverBitmapIds]]'s range
     * form (the Pinot/Druid-style range scan idx_bitmap_range serves
@@ -2384,18 +2212,21 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * over-wide ranges loudly onto the Spark path. */
   def driverBitmapRangeIds(table: String, indexName: String,
                            lo: Any, hi: Any,
-                           maxIds: Int = 100000): Seq[Long] = {
-    val dir = indexDir(table, indexName, "bitmap")
-    require(Files.exists(dir), s"$table $indexName bitmap not exists")
-    val ivType = schemaOf(table)(indexesOf(table)
-      .find(i => i._1 == indexName && i._2.equalsIgnoreCase("bitmap"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table $indexName bitmap not registered"))._3.head).dataType
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
+                           maxIds: Int = 100000): Seq[Long] =
+    driverBitmapCore(table, indexName, maxIds, "range") { (p, schema) =>
+      DriverRead.range(p, schema, "iv", lo, hi, maxIds, Nil)
+    }
+
+  /** The bitmap serving core: `seek` selects (iv, shard, bm) rows from
+    * one layer of the stack; each (value, shard) part stack folds under
+    * the versioned tombstone bitmaps of its shard (Bitmap.foldVersions
+    * masks part by part, so any grouping of the parts gives the same
+    * ids), and the ids of every fold OR together. */
+  private def driverBitmapCore(table: String, indexName: String, maxIds: Int,
+                               what: String)
+                              (seek: (Path, StructType) => Seq[Row]): Seq[Long] = {
+    val st = servingStack(table, indexName, "bitmap")
+    val ivType = schemaOf(table)(indexedColumn(table, indexName, "bitmap")).dataType
     val rowSchema = StructType(Seq(
       StructField("iv", ivType, nullable = true),
       StructField("shard", LongType, nullable = true),
@@ -2404,31 +2235,32 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // per version whatever the value, so the fold keys on the pair
     val parts = scala.collection.mutable.Map[(Any, Long),
       scala.collection.mutable.ListBuffer[(Int, Array[Byte])]]()
-    ((baseVer, base) +: segs).foreach { case (v, p) =>
-      DriverRead.range(p, rowSchema, "iv", lo, hi, maxIds, Nil)
-        .foreach { r =>
-          parts.getOrElseUpdate((r.get(0), r.getLong(1)),
-            scala.collection.mutable.ListBuffer()) += ((v, r.getAs[Array[Byte]](2)))
-        }
+    st.layers.foreach { case (v, p) =>
+      seek(p, rowSchema).foreach { r =>
+        parts.getOrElseUpdate((r.get(0), r.getLong(1)),
+          scala.collection.mutable.ListBuffer()) += ((v, r.getAs[Array[Byte]](2)))
+      }
     }
     val tombSchema = StructType(Seq(
       StructField("shard", LongType, nullable = true),
       StructField("bm", BinaryType, nullable = true)))
     val tombsByShard = scala.collection.mutable.Map[Long,
       scala.collection.mutable.ListBuffer[(Int, Array[Byte])]]()
-    tombs.foreach { case (v, p) =>
+    st.tombs.foreach { case (v, p) =>
       DriverRead.readAll(p, tombSchema, maxIds).foreach { r =>
         tombsByShard.getOrElseUpdate(r.getLong(0),
           scala.collection.mutable.ListBuffer()) += ((v, r.getAs[Array[Byte]](1)))
       }
     }
-    val out = parts.iterator.flatMap { case ((_, shard), ps) =>
-      graft.index.Bitmap.ids(graft.index.Bitmap.foldVersions(ps.toSeq,
+    val ids = Array.newBuilder[Long]
+    parts.foreach { case ((_, shard), ps) =>
+      ids ++= graft.index.Bitmap.ids(graft.index.Bitmap.foldVersions(ps.toSeq,
         tombsByShard.get(shard).map(_.toSeq).getOrElse(Nil)))
-    }.toSet
-    require(out.size <= maxIds,
-      s"range matched more than $maxIds rowkeys — use the Spark path")
-    out.toSeq.sorted
+    }
+    val out = ids.result().distinct.sorted
+    require(out.length <= maxIds,
+      s"$what matched more than $maxIds rowkeys — use the Spark path")
+    out.toSeq
   }
 
   /** Driver-side VECTOR top-k serving — the LAST index flavor to join
@@ -2441,8 +2273,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * artifacts, zero Spark jobs:
     *
     *   1. centroids: the `cent` artifact read whole (~√N rows —
-    *      kilobytes; paired at the data base's version exactly like
-    *      [[vectorArtifacts]]);
+    *      kilobytes);
     *   2. coarse probe: the SAME negL2 metric every Spark-side search
     *      uses (Ann.coarseProbes), ties on the lower cluster id → the
     *      `nprobe` nearest lists;
@@ -2451,14 +2282,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     *      probed-lists-sized, ≪ corpus: the stats variant returns the
     *      rows actually read so DriverGetSpec can pin it); CDC
     *      segments read WHOLE (patch-sized by the merge contract) and
-    *      filtered to the probed lists; versioned tombstones mask
-    *      exactly like [[vectorSegView]] (a later tombstone kills an
-    *      earlier entry, last-writer-wins per rk);
-    *   4. exact cosine re-rank on the calling thread — the same
-    *      kernel arithmetic as the codegen'd expression (double
-    *      accumulation, zero-norm → 0, 3-dp HALF_UP), ties on the
-    *      rowkey ascending — rank-identical to `Ann.ivfSearch` over
-    *      the segmented view with the same query/nprobe.
+    *      filtered to the probed lists; the stack's tombstones mask
+    *      them (last-writer-wins per rk);
+    *   4. exact cosine re-rank on the calling thread — the codegen'd
+    *      expression's own kernel (HashOps.cosine), 3-dp HALF_UP,
+    *      ties on the rowkey ascending — rank-identical to
+    *      `Ann.ivfSearch` over the segmented view with the same
+    *      query/nprobe.
     *
     * `query` is the query vector (float/double values); `exclude`
     * drops a rowkey from the shortlist (the nn =!= qid self-exclusion
@@ -2514,31 +2344,21 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     require(k > 0, "k must be positive")
     require(nprobe > 0, "nprobe must be positive")
     require(queries.nonEmpty, "empty query batch")
-    val dir = indexDir(table, indexName, "vector")
-    require(Files.exists(dir), s"$table $indexName vector not exists")
-    val vecCol = indexesOf(table)
-      .find(i => i._1 == indexName && i._2.equalsIgnoreCase("vector"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table $indexName vector not registered"))._3.head
-    val rkType = schemaOf(table)(primaryKeyOf(table).head).dataType
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
-    val qvs = queries.map(_._1.toArray)
-    // 1+2: ONE centroid read + per-query coarse probe. cent pairs at
-    // the data base's version (vectorArtifacts' crash-consistency
-    // rule).
+    val st = servingStack(table, indexName, "vector")
+    val vecCol = indexedColumn(table, indexName, "vector")
+    val rkType = rowkeyType(table)
+    val qvs = queries.map(q => vectorData(q._1))
+    // 1+2: ONE centroid read + per-query coarse probe, with the
+    // codegen'd kernels' own metric (HashOps)
     val centSchema = StructType(Seq(
       StructField("cluster", IntegerType, nullable = true),
       StructField("centroid", ArrayType(DoubleType), nullable = true)))
-    val cents = DriverRead.readAll(
-      resolveIndexVersioned(dir, "cent", baseVer), centSchema, maxEntries)
+    val cents = DriverRead.readAll(st.paired("cent"), centSchema, maxEntries)
     require(cents.nonEmpty, s"$table $indexName vector has no centroids")
-    val centVecs = cents.map(r => (r.getInt(0), anySeqToDoubles(r.getSeq[Any](1))))
+    val centVecs = cents.map(r => (r.getInt(0), vectorData(r.getSeq[Any](1))))
     val probedPer: Seq[Seq[Int]] = qvs.map { qv =>
-      centVecs.iterator.map { case (c, cv) => (negL2Driver(qv, cv), c) }
+      centVecs.iterator
+        .map { case (c, cv) => (graft.plans.HashOps.negL2(qv, cv, false, false), c) }
         .toSeq.sortBy { case (d, c) => (-d, c) }.take(nprobe).map(_._2)
     }
     val union: Seq[Int] = probedPer.flatten.distinct.sorted
@@ -2552,11 +2372,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         case ArrayType(et, _) => et
         case other => other
       }), nullable = true)))
-    val cand = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Int, Array[Double])]
+    val cand = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Int, ArrayData)]
     val probeKeys = union.map(c => Seq(c: Any))
-    ((baseVer, base) +: segs).foreach { case (v, p) =>
+    st.layers.foreach { case (v, p) =>
       val rows =
-        if (v == baseVer)
+        if (v == st.baseVer)
           DriverRead.get(p, entrySchema, Seq("cluster"), probeKeys, Nil)
         else
           // a segment is patch-sized: read whole, then keep only the
@@ -2565,15 +2385,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           DriverRead.readAll(p, entrySchema, maxEntries)
             .filter(r => union.contains(r.getInt(1)))
       rows.foreach { r =>
-        cand += ((v, r.get(0), r.getInt(1), anySeqToDoubles(r.getSeq[Any](2))))
+        cand += ((v, r.get(0), r.getInt(1), vectorData(r.getSeq[Any](2))))
       }
     }
-    // tombstone masks: (version, rk), a mask kills any entry from an
-    // EARLIER artifact version (vectorSegView's last-writer-wins)
-    val tombSchema = StructType(Seq(StructField("rk", rkType, nullable = true)))
-    val masks: Seq[(Int, Set[Any])] = tombs.map { case (tv, p) =>
-      (tv, DriverRead.readAll(p, tombSchema, maxEntries).map(_.get(0)).toSet)
-    }
+    // last-writer-wins per rk: a later tombstone kills an earlier entry
+    val mask = st.driverMask(rkType, maxEntries)
     implicit val rkOrd: Ordering[Any] = Catalog.rowkeyOrd
     // 4: per-query candidate cut + exact re-rank (identical to the
     // single-query path over its own probed lists)
@@ -2584,36 +2400,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       require(mine.size <= maxEntries,
         s"probed lists hold more than $maxEntries entries — use the Spark path")
       val scored = mine.iterator
-        .filter { case (v, rk, _, _) =>
-          !masks.exists { case (tv, s) => tv > v && s.contains(rk) } }
-        .filter { case (_, rk, _, _) => !exclude.contains(rk) }
-        .map { case (_, rk, _, vec) => (rk, round3(cosineDriver(qv, vec))) }
+        .filter { case (v, rk, _, _) => !mask(v, rk) && !exclude.contains(rk) }
+        .map { case (_, rk, _, vec) =>
+          (rk, round3(graft.plans.HashOps.cosine(qv, vec, false, false))) }
         .toSeq
       (scored.sortBy { case (rk, s) => (-s, rk) }.take(k), mine.size)
     }
-  }
-
-  /** The coarse-probe metric on the calling thread — same arithmetic
-    * as the codegen'd kernel (graft.plans.HashOps.negL2: sequential
-    * double accumulation, nulls→0 handled upstream). */
-  private def negL2Driver(a: Array[Double], b: Array[Double]): Double = {
-    require(a.length == b.length,
-      s"negL2 over ragged vectors: ${a.length} vs ${b.length} dims")
-    var s = 0.0; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    -s
-  }
-
-  /** Exact cosine, matching HashOps.cosine (zero-norm → 0). */
-  private def cosineDriver(a: Array[Double], b: Array[Double]): Double = {
-    require(a.length == b.length,
-      s"cosine over ragged vectors: ${a.length} vs ${b.length} dims")
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else dot / denom
   }
 
   /** Spark Round's HALF_UP at 3 dp — the score rounding every ANN
@@ -2622,16 +2414,17 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     java.math.BigDecimal.valueOf(x)
       .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Float/double array column values → double[] (float widening is
-    * exact — the same coercion the codegen kernels apply); a null
-    * element reads as 0.0 like HashOps. */
-  private def anySeqToDoubles(xs: Seq[Any]): Array[Double] =
-    xs.iterator.map {
-      case null => 0.0
-      case n: java.lang.Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"non-numeric vector element $other")
-    }.toArray
+  /** A vector value (float/double elements; a null element reads as
+    * 0.0) as the double ArrayData the HashOps kernels take — float
+    * widening is exact, the coercion the codegen'd kernels apply. */
+  private def vectorData(xs: Seq[Any]): ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
+      xs.iterator.map {
+        case null => 0.0
+        case n: java.lang.Number => n.doubleValue()
+        case other => throw new IllegalArgumentException(
+          s"non-numeric vector element $other")
+      }.toArray)
 
   /** Driver-side RANKED BM25 top-k — the Lucene TopScoreDocCollector
     * analog completing the serving family (driverFtSearch serves
@@ -2685,54 +2478,31 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
                                        seedBlocks: Int, maxPostings: Int)
       : (Seq[(Any, Double)], Int, Int) = {
     require(k > 0, "k must be positive")
-    val dir = indexDir(table, indexName, "fulltext")
-    require(Files.exists(dir), s"$table $indexName fulltext not exists")
+    val st = servingStack(table, indexName, "fulltext")
     val analyzed = graft.index.FullText
       .analyzeTerms(terms, indexAnalyzer(table, indexName)).distinct
     require(analyzed.nonEmpty,
       "every query term is a stopword under this analyzer")
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
-    val normBase = resolveIndexVersioned(dir, "norms", baseVer)
+    val (base, baseVer) = (st.base, st.baseVer)
+    val normBase = st.paired("norms")
     require(Files.exists(normBase),
-      s"no norms artifact under $dir — the index predates ranked " +
+      s"no norms artifact under ${st.dir} — the index predates ranked " +
         "serving; CALL system.refresh_index to rebuild")
-    val normStack: Seq[(Int, Path)] =
-      (baseVer, normBase) +: versionedDirs(dir, "normseg_v", baseVer, live)
-    val rkType = schemaOf(table)(primaryKeyOf(table).head).dataType
-    def manifest(p: Path): Seq[(String, Any, Any)] =
-      readManifestJson(p).getOrElse(Nil).map(r => (r.file, r.lo, r.hi))
-
-    val tombSchema = StructType(Seq(StructField("rk", rkType, nullable = true)))
-    val tombSets: Seq[(Int, Set[Any])] = tombs.map { case (v, p) =>
-      (v, DriverRead.readAll(p, tombSchema, maxPostings).map(_.get(0)).toSet)
-    }
-    def maskedAt(v: Int, docId: Any): Boolean =
-      tombSets.exists { case (tv, s) => tv > v && s.contains(docId) }
+    val normStack: Seq[(Int, Path)] = (baseVer, normBase) +: st.segments("normseg_v")
+    val rkType = rowkeyType(table)
+    val mask = st.driverMask(rkType, maxPostings)
 
     // 1. live df per query term (the dictSegView fold, driver-side)
-    val dictBase = resolveIndexVersioned(dir, "dict", live)
-    val dictBaseVer = {
-      val n = dictBase.getFileName.toString
-      if (n.startsWith("dict_v"))
-        scala.util.Try(n.stripPrefix("dict_v").toInt).getOrElse(-1)
-      else -1
-    }
+    val (dictBase, deltas) = st.folded("dict")
     val dictSchema = StructType(Seq(
       StructField("term", StringType, nullable = true),
       StructField("df", LongType, nullable = true)))
     val dfAcc = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     DriverRead.get(dictBase, dictSchema, Seq("term"),
-        analyzed.map(t => Seq(t: Any)), manifest(dictBase))
+        analyzed.map(t => Seq(t: Any)), manifestRanges(dictBase))
       .foreach(r => dfAcc(r.getString(0)) += r.getLong(1))
-    val deltaSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("ddf", LongType, nullable = true)))
-    versionedDirs(dir, "dictdelta_v", dictBaseVer, live).foreach { case (_, p) =>
-      DriverRead.readAll(p, deltaSchema, maxPostings).foreach { r =>
+    deltas.foreach { case (_, p) =>
+      DriverRead.readAll(p, DeltaSchema, maxPostings).foreach { r =>
         val t = r.getString(0)
         if (analyzed.contains(t)) dfAcc(t) += r.getLong(1)
       }
@@ -2747,12 +2517,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val normSchema = StructType(Seq(
       StructField("doc_id", rkType, nullable = true),
       StructField("dl", LongType, nullable = true)))
-    val allTombRks: Seq[Any] = tombSets.flatMap(_._2).distinct
+    val allTombRks: Seq[Any] = mask.rowkeys
     if (allTombRks.nonEmpty) normStack.foreach { case (v, p) =>
       DriverRead.get(p, normSchema, Seq("doc_id"),
-          allTombRks.map(x => Seq(x)), manifest(p))
+          allTombRks.map(x => Seq(x)), manifestRanges(p))
         .foreach { r =>
-          if (maskedAt(v, r.get(0))) { nLive -= 1; dlLive -= r.getLong(1) }
+          if (mask(v, r.get(0))) { nLive -= 1; dlLive -= r.getLong(1) }
         }
     }
     require(nLive > 0, "BM25 needs a non-empty corpus")
@@ -2770,19 +2540,16 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       val need = docIds.filterNot(dlCache.contains).distinct
       if (need.nonEmpty) normStack.foreach { case (v, p) =>
         DriverRead.get(p, normSchema, Seq("doc_id"),
-            need.map(x => Seq(x)), manifest(p))
+            need.map(x => Seq(x)), manifestRanges(p))
           .foreach { r =>
             val id = r.get(0)
-            if (!maskedAt(v, id)) dlCache(id) = r.getLong(1)
+            if (!mask(v, id)) dlCache(id) = r.getLong(1)
           }
       }
     }
 
     // 3.+4. postings: segments whole, base by surviving blocks
-    val postSchema = StructType(Seq(
-      StructField("term", StringType, nullable = true),
-      StructField("doc_id", rkType, nullable = true),
-      StructField("tf", LongType, nullable = true)))
+    val postSchema = postingsSchema(rkType)
     var nRead = 0
     val acc = scala.collection.mutable.Map[Any,
       scala.collection.mutable.Map[String, Long]]()
@@ -2800,7 +2567,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           s"query matched more than $maxPostings postings — " +
             "use the Spark search path")
       }
-      if (!maskedAt(v, id))
+      if (!mask(v, id))
         acc.getOrElseUpdate(id,
           scala.collection.mutable.Map[String, Long]())(t) = r.getLong(2)
     }
@@ -2820,14 +2587,14 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           idf(t) * impact(tf.toDouble, dl.toDouble) }.sum)
       }.toSeq
     }
-    segs.foreach { case (v, p) =>
+    st.segments("seg_v").foreach { case (v, p) =>
       ingest(v, DriverRead.get(p, postSchema, Seq("term"),
-        analyzed.map(t => Seq(t: Any)), manifest(p)))
+        analyzed.map(t => Seq(t: Any)), manifestRanges(p)))
     }
     // ONE shared constant with the summary builders — a build/read
     // divergence would reconstruct wrong doc ranges and mis-prune
     val blockBits = graft.index.FullText.BlockBits
-    val bmxPath = resolveIndexVersioned(dir, "bmx", baseVer)
+    val bmxPath = st.paired("bmx")
     val integral = rkType == LongType || rkType == IntegerType
     var blocksTotal = 0
     var blocksRead = 0
@@ -2835,7 +2602,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       // no block space (string rowkeys) / pre-upgrade index: exact
       // scoring of every matching base posting — correct, unpruned
       ingest(baseVer, DriverRead.get(base, postSchema, Seq("term"),
-        analyzed.map(t => Seq(t: Any)), manifest(base)))
+        analyzed.map(t => Seq(t: Any)), manifestRanges(base)))
     } else {
       val bmxSchema = StructType(Seq(
         StructField("term", StringType, nullable = true),
@@ -2844,7 +2611,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         StructField("min_dl", LongType, nullable = true)))
       val ub = scala.collection.mutable.Map[Long, Double]().withDefaultValue(0.0)
       DriverRead.get(bmxPath, bmxSchema, Seq("term"),
-          analyzed.map(t => Seq(t: Any)), manifest(bmxPath))
+          analyzed.map(t => Seq(t: Any)), manifestRanges(bmxPath))
         .foreach { r =>
           ub(r.getLong(1)) +=
             idf(r.getString(0)) *
@@ -2873,7 +2640,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           // — degrade to the plain multi-term seek past a bound
           val ranges = if (merged.size > 32) Nil else merged
           DriverRead.getTermsInDocRanges(base, postSchema, analyzed,
-            ranges, manifest(base))
+            ranges, manifestRanges(base))
         }
       val seeds = ub.toSeq.sortBy { case (bk, u) => (-u, bk) }
         .take(math.max(seedBlocks, 1)).map(_._1)
@@ -2890,14 +2657,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       ingest(baseVer, readBlocks(survivors))
       blocksRead += survivors.size
     }
-    def idLt(a: Any, bId: Any): Boolean = (a, bId) match {
-      case (x: Number, y: Number) => x.longValue() < y.longValue()
-      case (x: String, y: String) => x.compareTo(y) < 0
-      case _ => a.toString < bId.toString
-    }
     val top = scoreAll()
       .sortWith { case ((ida, sa), (idb, sb)) =>
-        if (sa != sb) sa > sb else idLt(ida, idb) }
+        if (sa != sb) sa > sb else Catalog.rowkeyOrd.lt(ida, idb) }
       .take(k)
     (top, blocksTotal, blocksRead)
   }
@@ -3725,18 +3487,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * plus any df deltas appended by segment maintenance since. The
     * fold aggregates |vocab| + |deltas| rows — never the corpus. */
   def indexDictionary(table: String, indexName: String, indexType: String): DataFrame =
-    dictSegView(indexDir(table, indexName, indexType), dataVersionOf(table))
+    dictSegView(IndexStack.at(indexDir(table, indexName, indexType),
+      dataVersionOf(table)))
 
-  private def dictSegView(dir: Path, upTo: Int): DataFrame = {
+  private def dictSegView(st: IndexStack): DataFrame = {
     import org.apache.spark.sql.functions._
-    val baseDict = resolveIndexVersioned(dir, "dict", upTo)
-    val baseVer = {
-      val n = baseDict.getFileName.toString
-      if (n.startsWith("dict_v"))
-        scala.util.Try(n.stripPrefix("dict_v").toInt).getOrElse(-1)
-      else -1
-    }
-    val deltas = versionedDirs(dir, "dictdelta_v", baseVer, upTo)
+    val (baseDict, deltas) = st.folded("dict")
     val base = spark.read.parquet(baseDict.toString)
     if (deltas.isEmpty) base
     else base.select(col("term"), col("df").cast("long").as("df"))
@@ -3761,25 +3517,21 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     writeMeta(table, meta)
   }
 
-  /** Live index data: the highest maintained base at or below the
-    * published table version, overlaid with any segments/tombstones
-    * appended since (fulltext/bitmap) — the segmented read view. Base
-    * with no segments reads exactly as before. */
-  def indexData(table: String, indexName: String, indexType: String): DataFrame = {
-    val dir = indexDir(table, indexName, indexType)
-    val live = dataVersionOf(table)
-    val base = resolveIndexVersioned(dir, "data", live)
-    val baseVer = indexBaseVersion(base)
-    val segs = versionedDirs(dir, "seg_v", baseVer, live)
-    val tombs = versionedDirs(dir, "tomb_v", baseVer, live)
-    if (segs.isEmpty && tombs.isEmpty) spark.read.parquet(base.toString)
+  /** Live index data: the index's [[IndexStack]] at the published
+    * table version as one segmented read view. A base with no
+    * segments reads as the plain base. */
+  def indexData(table: String, indexName: String, indexType: String): DataFrame =
+    segmentedView(IndexStack.at(indexDir(table, indexName, indexType),
+      dataVersionOf(table)), indexType)
+
+  private def segmentedView(st: IndexStack, indexType: String): DataFrame =
+    if (!st.hasDelta) spark.read.parquet(st.base.toString)
     else indexType.toUpperCase match {
-      case "FULLTEXT" => fulltextSegView(base, baseVer, segs, tombs)
-      case "BITMAP"   => bitmapSegView(base, baseVer, segs, tombs)
-      case "VECTOR"   => vectorSegView(base, baseVer, segs, tombs)
-      case _          => spark.read.parquet(base.toString) // kv maintains in place
+      case "FULLTEXT" => postingsView(st)
+      case "BITMAP"   => bitmapSegView(st)
+      case "VECTOR"   => vectorView(st)
+      case _          => spark.read.parquet(st.base.toString) // kv maintains in place
     }
-  }
 
   /** The live vector-index triple: (entries view, centroids, meta) —
     * what every ANN search consumes. Entries come through the
@@ -3789,9 +3541,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * [[graft.similarity.VectorIndex.ivfOf]]/pqOf/ivfPqOf. */
   def vectorIndexView(table: String, indexName: String): (DataFrame,
       DataFrame, graft.similarity.VectorIndex.VMeta) = {
-    val dir = indexDir(table, indexName, "vector")
-    val (cent, meta) = vectorArtifacts(dir, dataVersionOf(table))
-    (indexData(table, indexName, "vector"), cent, meta)
+    val st = IndexStack.at(indexDir(table, indexName, "vector"),
+      dataVersionOf(table))
+    val (cent, meta) = vectorArtifacts(st)
+    (segmentedView(st, "vector"), cent, meta)
   }
 
   /** Build (or same-version rebuild) the NAVIGABLE-GRAPH artifact of a
@@ -3808,7 +3561,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       val dir = indexDir(table, indexName, "vector")
       require(Files.exists(dir), s"$table $indexName vector not exists")
       import org.apache.spark.sql.functions.col
-      val bv = indexBaseVersion(resolveIndexDataDir(dir, table))
+      val bv = IndexStack.at(dir, dataVersionOf(table)).baseVer
       val view = indexData(table, indexName, "vector")
       writeIndexDirAtomic(dir, s"graph_v$bv") { p =>
         graft.similarity.Hnsw.buildGraph(
@@ -3849,12 +3602,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * out of the shortlist; foldDelta's content keys fold it away). */
   def vectorGraphView(table: String, indexName: String): (DataFrame, DataFrame) = {
     val dir = indexDir(table, indexName, "vector")
-    // paired at the DATA BASE's version like cent/vmeta
-    // (vectorArtifacts): a graph_v orphaned above the data base by a
-    // crashed fold/refresh must not resolve — its lists key by a
-    // coarse structure the live artifacts don't carry
-    val bv = indexBaseVersion(resolveIndexDataDir(dir, table))
-    val g = resolveIndexVersioned(dir, "graph", bv)
+    // paired at the DATA BASE's version like cent/vmeta: a graph_v
+    // orphaned above the data base by a crashed fold/refresh must not
+    // resolve — its lists key by a coarse structure the live artifacts
+    // don't carry
+    val g = IndexStack.at(dir, dataVersionOf(table)).paired("graph")
     require(Files.exists(g),
       s"$table $indexName vector has no graph artifact — " +
         "call buildVectorGraph first")
@@ -3867,59 +3619,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     (graph, delta)
   }
 
-  /** Live positional postings (term, doc_id, pos) — the frame phrase
-    * search consumes. Base pairs at the resolved data base's version
-    * (written by the same backfill/refresh/fold as the postings);
-    * positional segments and the shared tombstones overlay it exactly
-    * like the postings view. */
+  /** Live positional postings (doc_id, term, pos) — the frame phrase
+    * search consumes: the positional base and `posseg_v` layers under
+    * the tombstones the postings share. */
   def indexPositional(table: String, indexName: String,
                       indexType: String): DataFrame =
-    posSegView(indexDir(table, indexName, indexType), dataVersionOf(table))
-
-  private def posSegView(dir: Path, upTo: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dataBaseVer = indexBaseVersion(resolveIndexVersioned(dir, "data", upTo))
-    val posBase = resolveIndexVersioned(dir, "pos", dataBaseVer)
-    require(Files.exists(posBase),
-      s"no positional postings under $dir — the index predates " +
-        "positional support; CALL system.refresh_index to rebuild")
-    val segs = versionedDirs(dir, "posseg_v", dataBaseVer, upTo)
-    val tombs = versionedDirs(dir, "tomb_v", dataBaseVer, upTo)
-    val parts = ((dataBaseVer, posBase) +: segs).map { case (v, p) =>
-      spark.read.parquet(p.toString)
-        .select(col("doc_id"), col("term"), col("pos")).withColumn("__v", lit(v))
-    }.reduce(_ unionByName _)
-    if (tombs.isEmpty) parts.drop("__v")
-    else {
-      val t = tombs.map { case (v, p) =>
-        spark.read.parquet(p.toString).select(col("rk"), lit(v).as("__tv"))
-      }.reduce(_ unionByName _)
-      parts.join(broadcast(t),
-          parts("doc_id") === t("rk") && t("__tv") > parts("__v"), "left_anti")
-        .drop("__v")
-    }
-  }
-
-  /** Postings across base+segments, minus postings of docs tombstoned
-    * at a later version. Tombstones are CDC-patch-sized — broadcast. */
-  private def fulltextSegView(base: Path, baseVer: Int,
-                              segs: Seq[(Int, Path)],
-                              tombs: Seq[(Int, Path)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val parts = ((baseVer, base) +: segs).map { case (v, p) =>
-      spark.read.parquet(p.toString)
-        .select(col("term"), col("doc_id"), col("tf")).withColumn("__v", lit(v))
-    }.reduce(_ unionByName _)
-    if (tombs.isEmpty) parts.drop("__v")
-    else {
-      val t = tombs.map { case (v, p) =>
-        spark.read.parquet(p.toString).select(col("rk"), lit(v).as("__tv"))
-      }.reduce(_ unionByName _)
-      parts.join(broadcast(t),
-          parts("doc_id") === t("rk") && t("__tv") > parts("__v"), "left_anti")
-        .drop("__v")
-    }
-  }
+    positionsView(IndexStack.at(indexDir(table, indexName, indexType),
+      dataVersionOf(table)))
 
   /** Bitmap rows folded per (value, shard): each part's bitmap loses
     * ids tombstoned at a later version, survivors OR together
@@ -3928,22 +3634,20 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * inside the projection's codegen span, no UDF boxing). Work
     * spreads across (value, shard) rows like every other bitmap op;
     * tombstone lists are patch-sized and broadcast. */
-  private def bitmapSegView(base: Path, baseVer: Int,
-                            segs: Seq[(Int, Path)],
-                            tombs: Seq[(Int, Path)]): DataFrame = {
+  private def bitmapSegView(st: IndexStack): DataFrame = {
     import org.apache.spark.sql.functions._
     val emptyVersioned =
       array().cast("array<struct<__tv:int,bm:binary>>")
-    val parts = ((baseVer, base) +: segs).map { case (v, p) =>
+    val parts = st.layers.map { case (v, p) =>
       spark.read.parquet(p.toString)
         .select(col("iv"), col("shard"), col("bm")).withColumn("__v", lit(v))
     }.reduce(_ unionByName _)
     val partAgg = parts.groupBy("iv", "shard")
       .agg(collect_list(struct(col("__v"), col("bm"))).as("pbs"))
     val withTombs =
-      if (tombs.isEmpty) partAgg.withColumn("tbs", emptyVersioned)
+      if (st.tombs.isEmpty) partAgg.withColumn("tbs", emptyVersioned)
       else partAgg.join(
-        broadcast(tombs.map { case (v, p) =>
+        broadcast(st.tombs.map { case (v, p) =>
           spark.read.parquet(p.toString)
             .select(col("shard"), struct(lit(v).as("__tv"), col("bm")).as("tb"))
         }.reduce(_ unionByName _).groupBy("shard")
@@ -4017,53 +3721,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       KvLayout.writeSorted(entries, ikCols, dir.toString, partitions, Some(c))))
   }
 
-  /** Highest versioned index dir at or below the PUBLISHED table
-    * version, falling back to the original backfill dir. Bounding by
-    * the published version is what makes maintenance crash-safe for
-    * lock-free readers: a data_v(next) written mid-merge (or orphaned
-    * by a failed publish) is invisible until the table pointer
-    * actually reaches `next`, so readers never pair a post-image
-    * index with a pre-image table. */
-  private def resolveIndexVersioned(dir: Path, prefix: String,
-                                    maxVersion: Int): Path = {
-    // second element: evidence a rebuild could be racing this
-    // resolution — a versioned candidate was listed (and may vanish
-    // mid-swap) or a .staging_ dir is in flight. Without it a miss is
-    // a genuine absence (artifact never built) and must return
-    // immediately, not burn three sleeps on every legitimate miss.
-    def once(): (Path, Boolean) = {
-      if (!Files.exists(dir)) return (dir.resolve(prefix), false)
-      val (versions, staging) = withList(dir) { it =>
-        val names = it.map(_.getFileName.toString).toList
-        (names.filter(_.startsWith(s"${prefix}_v"))
-           .flatMap(n => scala.util.Try(n.stripPrefix(s"${prefix}_v").toInt).toOption)
-           .filter(_ <= maxVersion),
-         names.exists(_.startsWith(".staging_")))
-      }
-      val p = if (versions.isEmpty) dir.resolve(prefix)
-        else dir.resolve(s"${prefix}_v${versions.max}")
-      (p, versions.nonEmpty || staging)
-    }
-    // A same-version index rebuild swaps the destination with two
-    // renames (move-aside, move-in): a lock-free reader listing in
-    // that instant sees neither dir and would fall back to an older
-    // base that may not exist at all. The window is two metadata ops
-    // wide — re-resolve briefly before surfacing the miss.
-    var (resolved, rebuildRacing) = once()
-    var attempts = 0
-    while (!Files.exists(resolved) && rebuildRacing && attempts < 3) {
-      Thread.sleep(5L << attempts)
-      val r = once()
-      resolved = r._1
-      rebuildRacing = r._2
-      attempts += 1
-    }
-    resolved
-  }
-
-  private def resolveIndexDataDir(dir: Path, table: String): Path =
-    resolveIndexVersioned(dir, "data", dataVersionOf(table))
-
   /** FRESH iff the index content matches the live table version. */
   def indexStatus(table: String, indexName: String, indexType: String): String = {
     val asOf = try indexAsOfVersion(table, indexName, indexType)
@@ -4125,7 +3782,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
             .distinct().limit(maxEntryKeys + 1).collect().map(r => canonKey(r.get(0)))
           if (keys.length > maxEntryKeys || keys.contains(null)) false
           else {
-            val curIdx = resolveIndexDataDir(dir, name)
+            val curIdx = IndexStack.at(dir, dataVersionOf(name)).base
             // the index range map goes through the SAME persisted
             // manifest machinery as the table's: written with every
             // index version, carried forward incrementally below —
@@ -4322,7 +3979,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
             // crash here leaves the old quadruple fully live and the
             // graph_v(cur) orphan unresolvable until data lands.
             locally {
-              val oldGraph = resolveIndexVersioned(dir, "graph", cur)
+              val oldGraph = IndexStack.at(dir, cur).latest("graph", cur)
               if (Files.exists(oldGraph)) {
                 // rebuild at the persisted degree, and carry it forward
                 val graphM = readGraphM(oldGraph)

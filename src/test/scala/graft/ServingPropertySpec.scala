@@ -10,7 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * long-, int- and string-keyed tables, ARBITRARY multi-gets and
   * range scans (including extreme, out-of-range and non-ASCII
   * bounds) must return exactly the rows the Spark path returns.
-  * The tables are built once; each trial only queries. */
+  * The tables are built once; each trial only queries. On a table
+  * with a fulltext and a bitmap index, drawn incremental merges
+  * re-update the same docs, and after each one the driver's term,
+  * prefix, phrase and bitmap reads must equal the Spark reads over
+  * the segmented views and an in-memory model. */
 class ServingPropertySpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -98,6 +102,87 @@ class ServingPropertySpec extends AnyFunSuite {
         .collect().map(_.getAs[Long]("v")).sorted.toSeq
       gotGet == wantGet && gotRange == wantRange
     }, "string keys", trials = 30)
+  }
+
+  test("fulltext and bitmap serving match the Spark views as tombstones stack up") {
+    import graft.index.{BitmapIndex, FullText}
+    val words = Seq("alpha", "beta", "gamma", "delta", "omega", "sigma")
+    val wordGen = Gen.oneOf(words)
+    val rowGen = for {
+      k <- Gen.chooseNum(0L, 13L) // 12 and 13 are not in the base
+      n <- Gen.chooseNum(2, 5)
+      ws <- Gen.listOfN(n, wordGen)
+      c <- Gen.chooseNum(0, 3)
+    } yield (k, ws.mkString(" "), c)
+    val patchGen = Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, rowGen))
+      .map(_.groupBy(_._1).values.map(_.head).toList)
+    val queryGen = for {
+      a <- wordGen; b <- wordGen
+      pre <- Gen.oneOf("al", "ga", "s", "om", "d")
+      v <- Gen.chooseNum(0, 3); lo <- Gen.chooseNum(0, 3); hi <- Gen.chooseNum(0, 3)
+    } yield (a, b, pre, v, math.min(lo, hi), math.max(lo, hi))
+    // the table is built once; every trial's merges pile onto it, and
+    // the re-drawn keys re-update the same docs merge after merge
+    val model = scala.collection.mutable.Map[Long, (String, Int)]()
+    val ftc = {
+      if (cat.tableExists("ftb")) cat.dropTable("ftb")
+      cat.createTable("ftb", StructType(Seq(
+        StructField("k", LongType, false), StructField("body", StringType, true),
+        StructField("c", IntegerType, true))), Seq("k"))
+      val base = (0L until 12L).map(k =>
+        (k, Seq(words((k % 6).toInt), words(((k + 1) % 6).toInt),
+          words(((k * 5) % 6).toInt)).mkString(" "), (k % 4).toInt))
+      base.foreach { case (k, b, c) => model(k) = (b, c) }
+      cat.bulkLoad("ftb", base.toDF("k", "body", "c"), partitions = 2)
+      cat.createIndex("ftb", "ft", "fulltext", Seq("body"))
+      cat.createIndex("ftb", "bc", "bitmap", Seq("c"))
+      cat
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getLong(0)).toSeq.sorted
+    def longs(xs: Seq[Any]): Seq[Long] = xs.map(_.asInstanceOf[Long]).sorted
+    def docsWith(p: Seq[String] => Boolean): Seq[Long] =
+      model.collect { case (k, (b, _)) if p(FullText.normTokens(b)) => k }.toSeq.sorted
+    def agrees(q: (String, String, String, Int, Int, Int)): Boolean = {
+      val (a, b, pre, v, lo, hi) = q
+      val docs = ftc.table("ftb").df
+      val post = ftc.indexData("ftb", "ft", "fulltext")
+      val bm = ftc.indexData("ftb", "bc", "bitmap")
+      def viaSpark(df: org.apache.spark.sql.DataFrame) = ids(df.select(col("k")))
+      val checks = Seq(
+        ("and", longs(ftc.driverFtSearch("ftb", "ft", Seq(a, b))),
+          viaSpark(FullText.searchAll(docs, "k", post, Seq(a, b))),
+          docsWith(t => t.contains(a) && t.contains(b))),
+        ("or", longs(ftc.driverFtSearchAny("ftb", "ft", Seq(a, b))),
+          viaSpark(FullText.searchAny(docs, "k", post, Seq(a, b))),
+          docsWith(t => t.contains(a) || t.contains(b))),
+        ("prefix", longs(ftc.driverFtPrefix("ftb", "ft", pre)),
+          viaSpark(FullText.searchPrefix(docs, "k", post, pre)),
+          docsWith(_.exists(_.startsWith(pre)))),
+        ("phrase", longs(ftc.driverFtPhrase("ftb", "ft", s"$a $b")),
+          viaSpark(FullText.searchPhrase(docs, "k",
+            ftc.indexPositional("ftb", "ft", "fulltext"), s"$a $b")),
+          docsWith(t => t.sliding(2).exists(_ == Seq(a, b)))),
+        ("bitmap", ftc.driverBitmapIds("ftb", "bc", v).sorted,
+          ids(BitmapIndex.lookupIds(bm, v)),
+          model.collect { case (k, (_, c)) if c == v => k }.toSeq.sorted),
+        ("bitmap_range", ftc.driverBitmapRangeIds("ftb", "bc", lo, hi).sorted,
+          ids(BitmapIndex.rangeIds(bm, lo, hi)),
+          model.collect { case (k, (_, c)) if c >= lo && c <= hi => k }.toSeq.sorted))
+      checks.forall { case (name, driver, sparkIds, want) =>
+        val ok = driver == sparkIds && driver == want
+        if (!ok) println(s"$name $q: driver=$driver spark=$sparkIds model=$want")
+        ok
+      }
+    }
+    check(Prop.forAllNoShrink(Gen.chooseNum(3, 5).flatMap(n =>
+        Gen.listOfN(n, Gen.zip(patchGen, queryGen)))) { merges =>
+      merges.forall { case (patch, q) =>
+        ftc.incrementalMerge("ftb", patch.toDF("k", "body", "c"))
+        patch.foreach { case (k, b, c) => model(k) = (b, c) }
+        agrees(q)
+      }
+    }, "segmented serving", trials = 3)
   }
 
   private def utf8Le(a: String, b: String): Boolean = {
