@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths, Path}
-import java.util.Comparator
 import scala.collection.JavaConverters._
 
 /** DDL + metadata catalog, the Spark-native re-expression of the
@@ -35,6 +34,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
 
   private val mapper = new ObjectMapper()
 
+  import ArtifactStage.deleteRecursively
   import ManifestCapture.canonKey
 
   /** Every write lock (bulk writers, transaction commits, DDL)
@@ -104,13 +104,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private def withList[A](dir: Path)(f: Iterator[Path] => A): A = {
     val s = Files.list(dir)
     try f(s.iterator().asScala) finally s.close()
-  }
-
-  private def deleteRecursively(dir: Path): Unit = {
-    val s = Files.walk(dir)
-    try s.sorted(Comparator.reverseOrder[Path]())
-      .iterator().asScala.foreach(Files.delete)
-    finally s.close()
   }
 
   /** Raw pointer exactly as recorded in the table's meta. ONLY for the
@@ -438,46 +431,47 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     capture.entries(dir).getOrElse(scanRanges(dir, keyCol, secondCol, Some(schema)))
   }
 
-  /** Bulk load rows (the "Bulk read/write" path): stage the next
-    * snapshot in a grant-scoped dir, then rename + swap the pointer
-    * behind the commit-point fence ([[publishVersion]]). `rows` may
-    * derive from the table's current snapshot (COW merge) — the write
-    * targets a new directory, so that lineage stays valid. */
+  /** Bulk load rows (the "Bulk read/write" path) as the next snapshot
+    * ([[commitFullRewrite]]). `rows` may derive from the table's
+    * current snapshot (COW merge) — the write targets a new directory,
+    * so that lineage stays valid. */
   def bulkLoad(name: String, rows: DataFrame, partitions: Int = 0,
-               expectedVersion: Option[Int] = None): Unit = {
+               expectedVersion: Option[Int] = None): Unit =
+    commitFullRewrite(name, partitions) { cur =>
+      checkExpected(name, cur, expectedVersion)
+      rows
+    }
+
+  /** THE full-rewrite commit: under the recovered write lock, stage
+    * `post(current version)` as the next snapshot with its manifest,
+    * rebuild the kv indexes from it, and publish both behind the
+    * commit-point fence. `post` runs under the lock, so a post-image
+    * derived from the live snapshot (an upsert) reads the version it
+    * replaces; analytic indexes go stale by the documented rule. */
+  private def commitFullRewrite(name: String, partitions: Int = 0)
+                               (post: Int => DataFrame): Unit =
     withRecoveredWriteLock(name) {
       val cur = dataVersionOf(name)
-      checkExpected(name, cur, expectedVersion)
+      val rows = post(cur)
       val next = cur + 1
-      val nextDir = tableDir(name).resolve(s"data_v$next")
       val stage = newSnapshotStaging(name)
       stageSnapshot(name, rows, stage, partitions)
       val maint = maintainIndexes(name, next, stage, pre = None, post = None)
-      publishGuardingIndexAsOf(name, next, Seq(stage -> nextDir), maint)
+      publishGuardingIndexAsOf(name, next,
+        Seq(stage -> tableDir(name).resolve(s"data_v$next")), maint)
     }
-  }
 
-  /** Grant-scoped unique staging dir for a table-snapshot write. Every
-    * write path stages its heavy data write here and lets
-    * [[publishVersion]] rename it onto the version-numbered dir AFTER
-    * the commit-point fence passes — so a lease holder that lapses
-    * MID-STAGE keeps writing only into its own dir and can never
-    * cross-write the files the NEW owner staged or published under the
-    * same version number (the HDFS/object-store "task attempt dir"
-    * recipe). The `.staging_` prefix keeps a crashed attempt inside
-    * vacuum's existing sweep; the grant epoch in the name is operator
-    * forensics, uniqueness comes from the UUID. Reads that target a
-    * staged dir (index rebuild's post-image scan, a manifest capture's
-    * fallback scanRanges) work — Spark's hidden-path filter applies
-    * to DIRECTORY CHILDREN during listing, not to an explicitly given
-    * root (verified against the DSv2 stagingPath precedent; the
-    * "All paths were ignored" DataSource log line is cosmetic). */
+  /** Grant-scoped unique staging dir for a table-snapshot write
+    * ([[ArtifactStage]]'s root naming): every write path stages its
+    * heavy data write here and lets [[publishVersion]] rename it onto
+    * the version-numbered dir after the commit-point fence passes.
+    * Reads that target a staged dir (index rebuild's post-image scan, a
+    * manifest capture's fallback scanRanges) work — Spark's hidden-path
+    * filter applies to directory children during listing, not to an
+    * explicitly given root. */
   private def newSnapshotStaging(name: String,
-                                 handle: Option[LockProvider.Handle] = None): Path = {
-    val tok = handle.orElse(heldWriteLock.value).map(_.fencingToken).getOrElse(0L)
-    tableDir(name).resolve(s".staging_grant${tok}_" +
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-  }
+                                 handle: Option[LockProvider.Handle] = None): Path =
+    ArtifactStage.stagingRoot(tableDir(name), handle.orElse(heldWriteLock.value))
 
   /** Optimistic CAS for writers whose post-image derives from a pinned
     * snapshot: if another writer published in between, committing the
@@ -565,46 +559,44 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * exposed for sinks). Returns whether a merge was committed. */
   def incrementalMergeIfNonEmpty(name: String, patch: DataFrame,
                                  maxIncrementalKeys: Int = 100000): Boolean = {
-    import org.apache.spark.sql.functions.col
     val pk = primaryKeyOf(name)
-    val keyCol = pk.head
-    // BOUNDED collect (mirrors upsertStaged): a misconfigured trigger
+    // BOUNDED collect: a misconfigured trigger
     // or a backfill replay can hand a sink a patch with millions of
     // keys, and an unbounded collect would blow up driver memory and
     // merge pruning. Past the bound the statement falls back to the
-    // full snapshot rewrite, exactly upsertStaged's bulk branch (same
-    // final content: the merge is a PK upsert either way; analytic
-    // indexes go stale under a bulk write by the documented staleness
-    // rule).
-    val keys = patch.select(keyCol).distinct()
+    // full snapshot rewrite (same final content: the merge is a PK
+    // upsert either way; analytic indexes go stale under a bulk write
+    // by the documented staleness rule).
+    val keys = patch.select(pk.head).distinct()
       .limit(maxIncrementalKeys + 1).collect().map(r => canonKey(r.get(0)))
-    // rowkeys are non-null (HBase rowkey semantics) on BOTH branches,
-    // refused before any manifest, data or lock work: the collected
-    // keys decide it under the bound; over it a null may sit past the
-    // limit, so the bounded probe upsertStaged runs checks every key
-    // column (one limit-1 job)
-    require(!keys.contains(null),
-      s"primary key $keyCol may not be null in a merge batch")
-    if (keys.length > maxIncrementalKeys &&
-        !patch.select(pk.map(col): _*)
-          .where(pk.map(col(_).isNull).reduce(_ || _)).isEmpty)
-      throw new IllegalArgumentException(
-        s"primary key (${pk.mkString(",")}) of $name may not be null in a merge batch")
-    if (keys.isEmpty) false
-    else if (keys.length <= maxIncrementalKeys) {
+    if (keys.isEmpty) return false
+    // null keys are refused before any manifest, data or lock work: the
+    // collected keys decide a single-column key under the bound; a
+    // composite key, or any key over it (a null may sit past the
+    // limit), runs the bounded all-PK probe (one limit-1 job)
+    if (keys.contains(null) ||
+        ((pk.size > 1 || keys.length > maxIncrementalKeys) && hasNullKey(patch, pk)))
+      refuseNullKey(name, pk)
+    if (keys.length <= maxIncrementalKeys)
       incrementalMerge(name, patch, precollectedKeys = Some(keys))
-      true
-    } else {
-      withRecoveredWriteLock(name) {
-        val next = dataVersionOf(name) + 1
-        val nextDir = tableDir(name).resolve(s"data_v$next")
-        val stage = newSnapshotStaging(name)
-        stageSnapshot(name, table(name).upsert(patch).df, stage)
-        val maint = maintainIndexes(name, next, stage, pre = None, post = None)
-        publishGuardingIndexAsOf(name, next, Seq(stage -> nextDir), maint)
-      }
-      true
-    }
+    else commitFullRewrite(name)(_ => table(name).upsert(patch).df)
+    true
+  }
+
+  /** Rowkeys are non-null on every primary-key column (HBase rowkey
+    * semantics): a null lead key would poison the merge's ordered key
+    * search, and a null on a later column never matches
+    * [[KvTable.upsert]]'s equi-join, so merging the same key twice
+    * would leave two rows with one primary key. */
+  private def refuseNullKey(name: String, pk: Seq[String]): Nothing =
+    throw new IllegalArgumentException(
+      s"primary key (${pk.mkString(",")}) of $name may not be null in a merge batch")
+
+  /** Whether any row of `rows` has a null primary-key column (one
+    * limit-1 job). */
+  private def hasNullKey(rows: DataFrame, pk: Seq[String]): Boolean = {
+    import org.apache.spark.sql.functions.col
+    !rows.select(pk.map(col): _*).where(pk.map(col(_).isNull).reduce(_ || _)).isEmpty
   }
 
   /** Driver-resident merge entry for PATCH-SIZED batches a sink has
@@ -620,8 +612,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   def incrementalMergeRows(name: String, rows: Array[Row]): Boolean = {
     if (rows.isEmpty) return false
     val schema = schemaOf(name)
-    val keyIdx = schema.fieldIndex(primaryKeyOf(name).head)
-    val keys = rows.map(r => canonKey(r.get(keyIdx))).distinct
+    val pk = primaryKeyOf(name)
+    val pkIdx = pk.map(schema.fieldIndex)
+    if (rows.exists(r => pkIdx.exists(r.isNullAt))) refuseNullKey(name, pk)
+    val keys = rows.map(r => canonKey(r.get(pkIdx.head))).distinct
     val local = spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema)
     incrementalMerge(name, local, precollectedKeys = Some(keys))
@@ -646,7 +640,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * (only a legacy or corrupt manifest is rebuilt, by
     * [[ensureRangeManifest]]). Patch keys are collected to the driver:
     * micro-batches are bounded by the trigger, so this is a small set
-    * by construction. */
+    * by construction. `precollectedKeys` are the patch's distinct lead
+    * keys from a caller that has already refused null keys on every
+    * primary-key column. */
   def incrementalMerge(name: String, patch: DataFrame,
                        precollectedKeys: Option[Array[Any]] = None): Unit = {
     withRecoveredWriteLock(name) {
@@ -655,10 +651,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val keyCol = pk.head
     val patchKeys = precollectedKeys.getOrElse(
       patch.select(keyCol).distinct().collect().map(r => canonKey(r.get(0))))
-    // rowkeys are non-null (HBase rowkey semantics); a null here would
-    // also poison the ordered key search below
-    require(!patchKeys.contains(null),
-      s"primary key $keyCol may not be null in a merge batch")
+    if (patchKeys.contains(null) ||
+        (precollectedKeys.isEmpty && pk.size > 1 && hasNullKey(patch, pk)))
+      refuseNullKey(name, pk)
     val cur = dataVersionOf(name)
     val curDir = tableDir(name).resolve(s"data_v$cur")
     val tableSchema = schemaOf(name)
@@ -1053,25 +1048,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         big.foreach(src => linkOrCopy(src, stage.resolve(src.getFileName.toString)))
         written.foreach(w => writeRangeManifest(stage, w ++ carried))
         // compaction changes layout, not content: every index that was
-        // fresh at cur stays valid — carry its as-of forward. An index
-        // data_v(cur+1) dir left by a CRASHED earlier writer (which
-        // never published cur+1) is orphan garbage holding
-        // never-committed content; publishing cur+1 here without
-        // clearing it would make every reader resolve it —
-        // delete orphans before the pointer bump
-        // fence BEFORE deleting "orphans": a lapsed compactor's
-        // cur+1 may be the new owner's PUBLISHED version, and these
-        // would be its live index artifacts (the
-        // maintainAnalyticIndexes preamble reasoning)
-        heldWriteLock.value.foreach { h => h.ensureValid(); h.fencedPublish(): Unit }
-        indexesOf(name).foreach { case (iname, ty, _) =>
-          // every flavor of version-(cur+1) index dir is suspect: base
-          // snapshots (kv rebuilds) AND segment/tombstone/delta dirs a
-          // crashed incrementalMerge appended for a bump that never came
-          IndexDirPrefixes.foreach { p =>
-              val orphan = indexDir(name, iname, ty).resolve(s"$p${cur + 1}")
-              if (Files.exists(orphan)) deleteRecursively(orphan)
-            }
+        // fresh at cur stays valid — carry its as-of forward, after
+        // clearing the version-(cur+1) artifacts a crashed earlier
+        // writer left (publishing cur+1 over them would make every
+        // reader resolve never-committed content)
+        val indexes = indexesOf(name)
+        clearIndexArtifactsAt(name, indexes, cur + 1)
+        indexes.foreach { case (iname, ty, _) =>
           if (indexStatus(name, iname, ty) == "FRESH")
             setIndexAsOf(name, iname, ty, cur + 1)
         }
@@ -1160,32 +1143,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     }
   }
 
-  /** Stage-then-rename writer for index artifact dirs at versions ≤
-    * the published table pointer: lock-free readers resolve those
-    * IMMEDIATELY, so a direct write would expose a half-written dir
-    * (`_temporary` only, or partial files) mid-job. The build lands in
-    * a `.staging_` dir and renames into place atomically; when the
-    * destination already exists (same-version rebuild) it is moved
-    * aside first — a reader hitting the instant between the two
-    * renames resolves an older base (stale but consistent), never
-    * partial bytes. Stranded staging dirs age out under vacuum. */
-  private def writeIndexDirAtomic(dir: Path, finalName: String)
-                                 (write: String => Unit): Unit = {
-    def fresh(prefix: String) = dir.resolve(
-      s".staging_$prefix${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val tmp = fresh("")
-    write(tmp.toString)
-    val dst = dir.resolve(finalName)
-    if (!Files.exists(dst))
-      Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    else {
-      val aside = fresh("old_")
-      Files.move(dst, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(aside)
-    }
-  }
-
   /** Carry a file into a new snapshot dir without touching data: hard
     * link where the FS supports it, copy otherwise. ONE implementation
     * — the table-merge, compaction and index-merge carry paths must
@@ -1218,6 +1175,20 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private final val IndexDirPrefixes =
     Seq("data_v", "dict_v", "pos_v", "cent_v", "vmeta_v", "graph_v",
       "norms_v", "bmx_v", "fz_v") ++ SegmentDirPrefixes
+
+  /** Fence, then delete every artifact dir at version `v` of `indexes`
+    * (base, siblings, dictionary, segments): what a crashed writer left
+    * for a version it never published. The fence comes first because
+    * "`v` is unpublished" holds only for the current grant — for a
+    * lapsed holder, `v` may be the new owner's published version and
+    * these its live artifacts. */
+  private def clearIndexArtifactsAt(name: String,
+                                    indexes: Seq[(String, String, Seq[String])],
+                                    v: Int): Unit = {
+    ArtifactStage.fence(heldWriteLock.value)
+    for ((iname, ty, _) <- indexes; p <- IndexDirPrefixes)
+      deleteRecursively(indexDir(name, iname, ty).resolve(s"$p$v"))
+  }
 
   /** Version carried by a segment/tombstone/dict-delta dir name, if any. */
   private def segmentVersion(dirName: String): Option[Int] =
@@ -1255,38 +1226,16 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     if (analytic.isEmpty) return
     val rk = primaryKeyOf(name).head
     // crashed-attempt healing: a prior merge toward this SAME `next`
-    // may have appended its segments and bumped as-of, then died
-    // before the table pointer bump. Those artifacts describe a patch
-    // that never published — without this reset the freshness gate
-    // below would skip maintenance for THIS attempt's (different)
-    // patch and the publish would serve the dead attempt's segments
-    // as FRESH. Drop the orphan dirs and restore as-of so the gate
-    // sees the truth. (as-of == next implies it was next-1 before the
-    // dead attempt: stale indexes are excluded by the gate and never
-    // bumped.)
-    // fence BEFORE the healing deletes below, not only before this
-    // attempt's own renames: the preamble's "version `next` is
-    // unpublished" premise is exactly what a LAPSED holder gets wrong
-    // — a new owner may have published `next` (live segments, asOf
-    // bumped) while we were paused, and deleting "orphans" here would
-    // destroy its LIVE index artifacts and un-fresh its registry
-    // entry. The authority compare rejects a superseded grant the
-    // moment a newer one exists, so only the rightful holder reaches
-    // the deletes. (No-op for token-less providers, whose locks
-    // cannot lapse — the premise holds there unconditionally.)
-    heldWriteLock.value.foreach { h => h.ensureValid(); h.fencedPublish(): Unit }
+    // may have appended its segments (or an auto-fold's base) and
+    // bumped as-of, then died before the table pointer bump. Those
+    // artifacts describe a patch that never published — kept, the
+    // freshness gate below would skip THIS attempt's patch and the
+    // publish would serve the dead attempt's segments as FRESH. They
+    // go unconditionally (this attempt has written nothing yet), and
+    // as-of == next is restored to next-1 (stale indexes are excluded
+    // by the gate and never bumped).
+    clearIndexArtifactsAt(name, analytic, next)
     analytic.foreach { case (iname, ty, _) =>
-      // delete version-`next` artifacts UNCONDITIONALLY, not only when
-      // the dead attempt reached its as-of bump: an attempt that died
-      // between an auto-fold's data_v(next) rename and setIndexAsOf
-      // leaves orphans with as-of still at next-1, and a retry that
-      // kept them would resolve the dead fold's base as its own.
-      // Safe under the fence above — THIS attempt has written nothing
-      // yet, and `next` is provably unpublished for a current grant.
-      IndexDirPrefixes.foreach { p =>
-        val orphan = indexDir(name, iname, ty).resolve(s"$p$next")
-        if (Files.exists(orphan)) deleteRecursively(orphan)
-      }
       if (indexAsOfVersion(name, iname, ty) == next)
         setIndexAsOf(name, iname, ty, next - 1)
     }
@@ -1299,127 +1248,117 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       indexAsOfVersion(name, iname, ty) == next - 1
     }.foreach { case (iname, ty, cols) =>
       val dir = indexDir(name, iname, ty)
-      // segment appends get the SAME grant-scoped stage→fence→rename
-      // protocol as the table snapshot: the heavy artifact writes land
-      // under a unique staging root, and the version-numbered names
-      // materialize only after the fence below passes — a holder
-      // lapsing mid-append can never cross-write the new owner's
-      // segment dirs. (Renamed HERE, not at publishVersion: the
-      // auto-fold a few lines down must see this batch's segments at
-      // their final names to fold them.)
-      val segStage = dir.resolve(".staging_seg" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      Files.createDirectories(segStage)
-      val c = cols.head
-      ty.toUpperCase match {
-        case "FULLTEXT" =>
-          // one tokenize pass over the patch: positions are the source
-          // of truth, the postings segment derives from them. The
-          // positional segment rides beside the postings segment; the
-          // shared tombstones mask both families' older rows. The
-          // segment MUST use the index's own analyzer or it would mix
-          // stemmed and unstemmed terms into one view.
-          val an = indexAnalyzer(name, iname)
-          val ts = schemaOf(name)
-          val rkType = ts(rk).dataType
-          // bounded patches (the CDC contract — unbounded writes take
-          // the bulk path) build all four artifacts ON THE DRIVER with
-          // the same static kernels the Spark expressions call
-          // (DriverSegment — the reference's synchronous per-Put
-          // maintenance shape): four tiny Spark write actions would
-          // cost ~10 scheduler round-trips for microseconds of CPU.
-          val maxDriver = spark.conf
-            .getOption("spark.graft.index.driverSegmentMaxRows")
-            .map(_.toInt).getOrElse(10000)
-          val probe: Array[Row] =
-            if (DriverSegment.supports(rkType, ts(c).dataType))
-              patchRows.select(col(rk), col(c)).limit(maxDriver + 1).collect()
-            else Array.empty
-          if (probe.nonEmpty && probe.length <= maxDriver) {
-            val pre = preRows.select(col(rk), col(c)).collect()
-            DriverSegment.writeFulltext(segStage, next, probe, pre, an, rkType)
-          } else {
-          val segPos =
-            graft.index.FullText.buildPositional(patchRows, rk, c, an).cache()
-          val segPost = graft.index.FullText.postingsFromPositional(segPos)
-          try {
-            // patch-sized frames, ONE sorted file per segment (the
-            // Lucene segment shape): an explicit single partition
-            // skips repartitionByRange's range-sampling job per write
-            KvLayout.writeSorted(segPos, Seq("term"),
-              segStage.resolve(s"posseg_v$next").toString, partitions = 1)
-            KvLayout.writeSorted(segPost, Seq("term"),
-              segStage.resolve(s"seg_v$next").toString, partitions = 1)
-            // norms delta: token count per patched doc (+ scalar meta)
-            // — the ranked serving path's per-artifact dl source
-            locally {
-              val segDl = graft.index.FullText.buildDocLens(segPost)
-              val p = segStage.resolve(s"normseg_v$next")
-              KvLayout.writeSorted(segDl, Seq("doc_id"), p.toString,
-                partitions = 1)
-              writeNormMeta(p, segDl)
+      // the segments take their names here, not at publishVersion: the
+      // auto-fold below must see this batch's segments to fold them.
+      // Version-`next` layers stay invisible to readers until the table
+      // pointer reaches `next`, so their rename order is free.
+      ArtifactStage.run(dir, heldWriteLock.value) { stage =>
+        val c = cols.head
+        ty.toUpperCase match {
+          case "FULLTEXT" =>
+            // one tokenize pass over the patch: positions are the source
+            // of truth, the postings segment derives from them. The
+            // positional segment rides beside the postings segment; the
+            // shared tombstones mask both families' older rows. The
+            // segment MUST use the index's own analyzer or it would mix
+            // stemmed and unstemmed terms into one view.
+            val an = indexAnalyzer(name, iname)
+            val ts = schemaOf(name)
+            val rkType = ts(rk).dataType
+            // bounded patches (the CDC contract — unbounded writes take
+            // the bulk path) build all the artifacts ON THE DRIVER with
+            // the same static kernels the Spark expressions call
+            // (DriverSegment — the reference's synchronous per-Put
+            // maintenance shape): tiny Spark write actions would cost
+            // ~10 scheduler round-trips for microseconds of CPU.
+            val maxDriver = spark.conf
+              .getOption("spark.graft.index.driverSegmentMaxRows")
+              .map(_.toInt).getOrElse(10000)
+            val probe: Array[Row] =
+              if (DriverSegment.supports(rkType, ts(c).dataType))
+                patchRows.select(col(rk), col(c)).limit(maxDriver + 1).collect()
+              else Array.empty
+            if (probe.nonEmpty && probe.length <= maxDriver) {
+              val pre = preRows.select(col(rk), col(c)).collect()
+              DriverSegment.writeFulltext(stage, next, probe, pre, an, rkType)
+            } else {
+            val segPos =
+              graft.index.FullText.buildPositional(patchRows, rk, c, an).cache()
+            val segPost = graft.index.FullText.postingsFromPositional(segPos)
+            try {
+              // patch-sized frames, ONE sorted file per segment (the
+              // Lucene segment shape): an explicit single partition
+              // skips repartitionByRange's range-sampling job per write
+              stage.stage(s"posseg_v$next") { p =>
+                KvLayout.writeSorted(segPos, Seq("term"), p, partitions = 1)
+              }
+              stage.stage(s"seg_v$next") { p =>
+                KvLayout.writeSorted(segPost, Seq("term"), p, partitions = 1)
+              }
+              // norms delta: token count per patched doc (+ scalar meta)
+              // — the ranked serving path's per-artifact dl source
+              stage.stage(s"normseg_v$next") { p =>
+                val segDl = graft.index.FullText.buildDocLens(segPost)
+                KvLayout.writeSorted(segDl, Seq("doc_id"), p, partitions = 1)
+                writeNormMeta(Paths.get(p), segDl)
+              }
+              stage.stage(s"tomb_v$next") { p =>
+                patchRows.select(col(rk).as("rk")).distinct().coalesce(1)
+                  .write.mode("overwrite").parquet(p)
+              }
+              // df delta: +1 per term newly in a patched doc, -1 per term
+              // that was in its pre-image — the dictionary view folds
+              // these without re-counting the corpus
+              stage.stage(s"dictdelta_v$next") { p =>
+                val add = graft.index.FullText.buildDictionary(segPost)
+                  .select(col("term"), col("df").cast("long").as("ddf"))
+                val remove = graft.index.FullText.buildDictionary(
+                    graft.index.FullText.buildPostings(preRows, rk, c, an))
+                  .select(col("term"), (-col("df")).cast("long").as("ddf"))
+                add.unionByName(remove).groupBy("term").agg(sum("ddf").as("ddf"))
+                  .filter(col("ddf") =!= 0L).coalesce(1)
+                  .write.mode("overwrite").parquet(p)
+              }
+            } finally { segPos.unpersist(); () }
             }
-            patchRows.select(col(rk).as("rk")).distinct().coalesce(1)
-              .write.mode("overwrite").parquet(segStage.resolve(s"tomb_v$next").toString)
-            // df delta: +1 per term newly in a patched doc, -1 per term
-            // that was in its pre-image — the dictionary view folds
-            // these without re-counting the corpus
-            val add = graft.index.FullText.buildDictionary(segPost)
-              .select(col("term"), col("df").cast("long").as("ddf"))
-            val remove = graft.index.FullText.buildDictionary(
-                graft.index.FullText.buildPostings(preRows, rk, c, an))
-              .select(col("term"), (-col("df")).cast("long").as("ddf"))
-            add.unionByName(remove).groupBy("term").agg(sum("ddf").as("ddf"))
-              .filter(col("ddf") =!= 0L).coalesce(1)
-              .write.mode("overwrite").parquet(segStage.resolve(s"dictdelta_v$next").toString)
-          } finally { segPos.unpersist(); () }
-          }
-        case "BITMAP" =>
-          graft.index.BitmapIndex.build(patchRows, rk, c)
-            .write.mode("overwrite").parquet(segStage.resolve(s"seg_v$next").toString)
-          // one tombstone bitmap per id-shard: clears the patched rows'
-          // bits from EVERY value's older bitmaps (their old value is
-          // whatever it was; the new value's bits live in this segment)
-          val agg = udaf(new graft.index.BitmapAgg(),
-            org.apache.spark.sql.Encoders.scalaLong)
-          patchRows.select(col(rk).cast("long").as("__rk"))
-            .groupBy(shiftrightunsigned(col("__rk"),
-              graft.index.BitmapIndex.ShardBits).as("shard"))
-            .agg(agg(col("__rk")).as("bm"))
-            .write.mode("overwrite").parquet(segStage.resolve(s"tomb_v$next").toString)
-        case "VECTOR" =>
-          // patch vectors assign to the nearest EXISTING centroid and
-          // encode against the EXISTING codebooks (cheap write-path
-          // maintenance; compact_index re-trains) — cost ∝ patch ×
-          // (|centroids| + m·k), never a corpus re-fit
-          val (cent, vmeta) = vectorArtifacts(IndexStack.at(dir, next))
-          // one file per patch segment, same bounded-patch reasoning
-          // as the fulltext branch
-          KvLayout.writeSorted(
-            graft.similarity.VectorIndex.encodeEntries(
-              patchRows, rk, c, cent, vmeta),
-            Seq("cluster"), segStage.resolve(s"seg_v$next").toString,
-            partitions = 1)
-          patchRows.select(col(rk).as("rk")).distinct().coalesce(1)
-            .write.mode("overwrite").parquet(segStage.resolve(s"tomb_v$next").toString)
-        case _ => ()
+          case "BITMAP" =>
+            stage.stage(s"seg_v$next") { p =>
+              graft.index.BitmapIndex.build(patchRows, rk, c)
+                .write.mode("overwrite").parquet(p)
+            }
+            // one tombstone bitmap per id-shard: clears the patched rows'
+            // bits from EVERY value's older bitmaps (their old value is
+            // whatever it was; the new value's bits live in this segment)
+            stage.stage(s"tomb_v$next") { p =>
+              val agg = udaf(new graft.index.BitmapAgg(),
+                org.apache.spark.sql.Encoders.scalaLong)
+              patchRows.select(col(rk).cast("long").as("__rk"))
+                .groupBy(shiftrightunsigned(col("__rk"),
+                  graft.index.BitmapIndex.ShardBits).as("shard"))
+                .agg(agg(col("__rk")).as("bm"))
+                .write.mode("overwrite").parquet(p)
+            }
+          case "VECTOR" =>
+            // patch vectors assign to the nearest EXISTING centroid and
+            // encode against the EXISTING codebooks (cheap write-path
+            // maintenance; compact_index re-trains) — cost ∝ patch ×
+            // (|centroids| + m·k), never a corpus re-fit
+            val (cent, vmeta) = vectorArtifacts(IndexStack.at(dir, next))
+            // one file per patch segment, same bounded-patch reasoning
+            // as the fulltext branch
+            stage.stage(s"seg_v$next") { p =>
+              KvLayout.writeSorted(
+                graft.similarity.VectorIndex.encodeEntries(
+                  patchRows, rk, c, cent, vmeta),
+                Seq("cluster"), p, partitions = 1)
+            }
+            stage.stage(s"tomb_v$next") { p =>
+              patchRows.select(col(rk).as("rk")).distinct().coalesce(1)
+                .write.mode("overwrite").parquet(p)
+            }
+          case _ => ()
+        }
       }
-      // post-write fence + rename: prove the grant is still ours (and
-      // still the CURRENT one at the authority) before the staged
-      // segment dirs take their version-numbered names — the same
-      // microsecond fence→rename residual class as publishVersion's.
-      // A lapsed holder throws here with its bytes still quarantined
-      // in the staging root (vacuum's `.staging_` sweep reclaims).
-      // A dst that exists is a crashed attempt's orphan the healing
-      // preamble above missed only if it appeared mid-merge — ours to
-      // replace either way (version `next` is unpublished).
-      heldWriteLock.value.foreach { h => h.ensureValid(); h.fencedPublish(): Unit }
-      withList(segStage)(_.toList).foreach { child =>
-        val dst = dir.resolve(child.getFileName.toString)
-        if (Files.exists(dst)) deleteRecursively(dst)
-        Files.move(child, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      }
-      deleteRecursively(segStage)
       // tiered-merge analog (Lucene merges segments automatically):
       // past `autoFold` live segments the stack folds into a fresh
       // base right here, still under the table write lock — read
@@ -1465,225 +1404,148 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   /** The fold body, callable under an already-held write lock with an
     * explicit version bound (`upTo` may be the version being
     * published, which the table pointer hasn't reached yet). Folds
-    * the segmented view into data_v(upTo) (+ dict/pos for fulltext,
-    * cent/vmeta for vector) through the SAME grant-scoped
-    * stage→fence→rename protocol as every other write path: the
-    * heavy artifact writes land under one `.staging_fold` root, the
-    * version-numbered names materialize only after the commit-point
-    * fence passes, and the RENAME ORDER preserves the crash contract
-    * the direct writes used to carry — dict and pos (and cent/vmeta)
-    * land strictly BEFORE data, because the folded DATA base is the
+    * the segmented view into data_v(upTo) (+ dict/fz/pos/norms/bmx for
+    * fulltext, cent/vmeta/graph for vector) through one
+    * [[ArtifactStage]], data last. The folded DATA base is the
     * effective publish point: vacuum's segment/delta retention keys
-    * off the resolved data base version and readers pair the sibling
-    * artifacts at it, so a crash (or fence loss) between any two
-    * renames leaves the OLD data base live with a consistent old
-    * view and every delta/posseg it needs still retained, while the
-    * already-renamed siblings are orphans the next fold's healing
-    * preamble deletes. IndexSpec pins the mid-fold-crash state.
-    * Returns false when there is no stack to fold. */
+    * off the resolved data base version, so an interruption before its
+    * rename leaves the old base live with every delta/posseg it needs
+    * still retained. IndexSpec pins the mid-fold-crash state. Returns
+    * false when there is no stack to fold. */
   private def foldIndexStack(table: String, indexName: String,
                              indexType: String, upTo: Int): Boolean = {
     val dir = indexDir(table, indexName, indexType)
+    if (!IndexStack.at(dir, upTo).hasDelta) return false
+    // crashed-fold healing: artifacts at upTo beside an older data
+    // base are a fold that died before its data rename. dict/fz
+    // resolve at the bound, so the views below would read them as
+    // their own base and the writes would read from their own output
+    // paths (Spark refuses, so every retry would fail and wedge CDC on
+    // this table). They go, behind the fence (the orphan premise holds
+    // only for the current grant), before the stack is listed.
+    val orphans = indexType.toUpperCase match {
+      case "FULLTEXT" => Seq("dict", "pos", "norms", "bmx", "fz")
+      case "BITMAP" => Nil
+      case _ => Seq("cent", "vmeta", "graph") // vector (kv never has a delta)
+    }
+    ArtifactStage.fence(heldWriteLock.value)
+    orphans.foreach(n => deleteRecursively(dir.resolve(s"${n}_v$upTo")))
     val st = IndexStack.at(dir, upTo)
-    if (!st.hasDelta) return false
-    // fence BEFORE the healing deletes below (the maintainAnalytic-
-    // Indexes preamble rule): their "these artifacts are orphans"
-    // premise is only provable for the CURRENT grant
-    heldWriteLock.value.foreach { h => h.ensureValid(); h.fencedPublish(): Unit }
-    // grant-scoped staging root for the WHOLE fold; `.staging_` keeps
-    // a crashed attempt inside vacuum's sweep
-    val foldStage = dir.resolve(".staging_fold" +
-      heldWriteLock.value.map(_.fencingToken).getOrElse(0L) + "_" +
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    // final names in REQUIRED rename order (appended as staged)
-    val renames = scala.collection.mutable.ListBuffer[String]()
-    def stageArtifact(finalName: String)(write: String => Unit): Unit = {
-      write(foldStage.resolve(finalName).toString)
-      renames += finalName: Unit
-    }
-    val built =
-    try indexType.toUpperCase match {
-      case "FULLTEXT" =>
-        // crashed-fold healing: a prior fold may have renamed
-        // dict_v(upTo) and died before data_v(upTo) — reaching here
-        // proves the data base is older (else segs would be empty), so
-        // that dict is an orphan. It must go, and the stack be listed
-        // again, BEFORE dictSegView runs: the view would resolve it as
-        // its own base and the write below would read from its own
-        // output path (Spark refuses, so every retry would fail and
-        // wedge CDC on this table).
-        Seq(s"dict_v$upTo", s"pos_v$upTo", s"norms_v$upTo", s"bmx_v$upTo",
-            s"fz_v$upTo")
-          .foreach { n =>
-            val orphan = dir.resolve(n)
-            if (Files.exists(orphan)) deleteRecursively(orphan)
+    ArtifactStage.run(dir, heldWriteLock.value) { stage =>
+      indexType.toUpperCase match {
+        case "FULLTEXT" =>
+          val foldedDict = dictSegView(st)
+          stage.stage(s"dict_v$upTo") { p =>
+            KvLayout.writeSorted(foldedDict, Seq("term"), p)
           }
-        val healed = IndexStack.at(dir, upTo)
-        val foldedDict = dictSegView(healed)
-        stageArtifact(s"dict_v$upTo") { p =>
-          KvLayout.writeSorted(foldedDict, Seq("term"), p)
-        }
-        // the fuzzy sidecar folds WITH the dict (same rows, (tlen,
-        // term) layout): its version number alone pairs it with the
-        // deltas still to apply, so a crash between the two renames
-        // leaves both self-consistent (driverFtFuzzy folds deltas
-        // above the fz base's OWN version)
-        stageArtifact(s"fz_v$upTo") { p =>
-          writeFtFuzzy(foldedDict, p, partitions = 0)
-        }
-        // an index built before positional support has no pos base —
-        // the fold must not throw from the CDC write path (it would
-        // wedge every subsequent merge at the auto-fold threshold);
-        // skip the family and let refresh_index backfill it. Orphaned
-        // posseg dirs below the advanced base are vacuum-reclaimed.
-        if (Files.exists(healed.paired("pos")))
-          stageArtifact(s"pos_v$upTo") { p =>
-            KvLayout.writeSorted(positionsView(healed), Seq("term"), p)
+          // the fuzzy sidecar folds WITH the dict (same rows, (tlen,
+          // term) layout); its version number alone pairs it with the
+          // deltas still to apply (driverFtFuzzy folds deltas above the
+          // fz base's OWN version)
+          stage.stage(s"fz_v$upTo") { p =>
+            writeFtFuzzy(foldedDict, p, partitions = 0)
           }
-        // the folded postings feed data + norms + block stats — cache
-        // across the three writes. Norms/bmx land BEFORE data (the
-        // dict-before-data rename contract): readers pair them at the
-        // resolved data base's version, so a crash between renames
-        // leaves the OLD quadruple live and these as healed orphans.
-        // A pre-norms index gains the ranked artifacts at its first
-        // fold (the metas derive from the folded frame, complete).
-        val foldedPost = postingsView(healed).cache()
-        try {
-          val rkT = rowkeyType(table)
-          val doclens = graft.index.FullText.buildDocLens(foldedPost).cache()
+          // an index built before positional support has no pos base —
+          // the fold must not throw from the CDC write path (it would
+          // wedge every subsequent merge at the auto-fold threshold);
+          // skip the family and let refresh_index backfill it. Orphaned
+          // posseg dirs below the advanced base are vacuum-reclaimed.
+          if (Files.exists(st.paired("pos")))
+            stage.stage(s"pos_v$upTo") { p =>
+              KvLayout.writeSorted(positionsView(st), Seq("term"), p)
+            }
+          // the folded postings feed data + norms + block stats — cache
+          // across the three writes. A pre-norms index gains the ranked
+          // artifacts at its first fold (the metas derive from the
+          // folded frame, complete).
+          val foldedPost = postingsView(st).cache()
           try {
-            val (nd, td) = aggDoclens(doclens)
-            val parts = ftRankedParts(nd)
-            stageArtifact(s"norms_v$upTo") { p =>
-              KvLayout.writeSorted(doclens, Seq("doc_id"), p,
-                partitions = parts)
-              writeNormMetaJson(Paths.get(p), nd, td)
+            val doclens = graft.index.FullText.buildDocLens(foldedPost).cache()
+            try {
+              val (nd, td) = aggDoclens(doclens)
+              val parts = ftRankedParts(nd)
+              stage.stage(s"norms_v$upTo") { p =>
+                KvLayout.writeSorted(doclens, Seq("doc_id"), p,
+                  partitions = parts)
+                writeNormMetaJson(Paths.get(p), nd, td)
+              }
+              rowkeyType(table) match {
+                case LongType | IntegerType =>
+                  stage.stage(s"bmx_v$upTo") { p =>
+                    KvLayout.writeSorted(
+                      graft.index.FullText.buildBlockStats(foldedPost, doclens),
+                      Seq("term"), p, partitions = parts)
+                  }
+                case _ => ()
+              }
+            } finally { doclens.unpersist(); () }
+            stage.stage(s"data_v$upTo") { p =>
+              KvLayout.writeSorted(foldedPost, Seq("term", "doc_id"), p)
             }
-            rkT match {
-              case LongType | IntegerType =>
-                stageArtifact(s"bmx_v$upTo") { p =>
-                  KvLayout.writeSorted(
-                    graft.index.FullText.buildBlockStats(foldedPost, doclens),
-                    Seq("term"), p, partitions = parts)
-                }
-              case _ => ()
-            }
-          } finally { doclens.unpersist(); () }
-          stageArtifact(s"data_v$upTo") { p =>
-            KvLayout.writeSorted(foldedPost, Seq("term", "doc_id"), p)
+          } finally { foldedPost.unpersist(); () }
+        case "BITMAP" =>
+          stage.stage(s"data_v$upTo") { p =>
+            bitmapSegView(st).write.mode("overwrite").parquet(p)
           }
-        } finally { foldedPost.unpersist(); () }
-        true
-      case "BITMAP" =>
-        stageArtifact(s"data_v$upTo") { p =>
-          bitmapSegView(st).write.mode("overwrite").parquet(p)
-        }
-        true
-      case "VECTOR" =>
-        // crashed-fold healing (the fulltext orphan-dict reasoning):
-        // cent_v/vmeta_v/graph_v at upTo with an OLDER data base are
-        // artifacts of a fold that died before its data rename —
-        // readers never resolved them (artifacts pair at the data
-        // base's version), but the writes below must not read their
-        // own output paths
-        Seq(s"cent_v$upTo", s"vmeta_v$upTo", s"graph_v$upTo").foreach { n =>
-          val orphan = dir.resolve(n)
-          if (Files.exists(orphan)) deleteRecursively(orphan)
-        }
-        val graphBase = st.paired("graph")
-        if (Files.exists(graphBase)) {
-          // GRAPH-ERA fold: the coarse structure is FIXED between
-          // refreshes (the DiskANN trade — re-fitting the quantizer
-          // would re-key every list and force a FULL graph rebuild;
-          // refresh_index owns the re-train), so the fold is
-          // list-bounded end to end: cent/vmeta carry forward as
-          // links, the segmented entries fold at their existing
-          // encodings, and the fresh-delta rows fold into only the
-          // TOUCHED per-list graphs (Hnsw.foldDelta — untouched lists
-          // carry over row-identical, HnswSpec pins it).
-          val folded = vectorView(st).cache()
+        case _ =>
+          val graphBase = st.paired("graph")
+          if (Files.exists(graphBase)) {
+            // GRAPH-ERA fold: the coarse structure is FIXED between
+            // refreshes (the DiskANN trade — re-fitting the quantizer
+            // would re-key every list and force a FULL graph rebuild;
+            // refresh_index owns the re-train), so the fold is
+            // list-bounded end to end: cent/vmeta carry forward as
+            // links, the segmented entries fold at their existing
+            // encodings, and the fresh-delta rows fold into only the
+            // TOUCHED per-list graphs (Hnsw.foldDelta — untouched lists
+            // carry over row-identical, HnswSpec pins it).
+            val folded = vectorView(st).cache()
+            try {
+              import org.apache.spark.sql.functions.col
+              val entries = folded.select(col("cluster"), col("rk"), col("v"))
+              // fold at the degree the graph was BUILT with (persisted
+              // beside it) — the default would mix degrees after the
+              // first fold of a non-default-m graph
+              val graphM = readGraphM(graphBase)
+              stage.stage(s"vmeta_v$upTo") { p =>
+                copyArtifactDir(st.paired("vmeta"), p)
+              }
+              stage.stage(s"cent_v$upTo") { p =>
+                copyArtifactDir(st.paired("cent"), p)
+              }
+              stage.stage(s"graph_v$upTo") { p =>
+                writeGraph(graft.similarity.Hnsw.foldDelta(
+                  spark.read.parquet(graphBase.toString), entries, graphM), graphM, p)
+              }
+              stage.stage(s"data_v$upTo") { p =>
+                KvLayout.writeSorted(folded, Seq("cluster"), p)
+              }
+            } finally folded.unpersist()
+          } else {
+          // compact RE-TRAINS: centroids drift as CDC patches accumulate
+          // (every patch assigned to backfill-time centroids), so the
+          // fold refits coarse quantizer + codebooks from the folded
+          // entries — reading ONLY index frames (the vectors live in the
+          // index), never the corpus.
+          val folded = vectorView(st).select("rk", "v").cache()
           try {
-            import org.apache.spark.sql.functions.col
-            val entries = folded.select(col("cluster"), col("rk"), col("v"))
-            // fold at the degree the graph was BUILT with (persisted
-            // beside it) — the default would mix degrees after the
-            // first fold of a non-default-m graph
-            val graphM = readGraphM(graphBase)
-            val newGraph = graft.similarity.Hnsw.foldDelta(
-              spark.read.parquet(graphBase.toString), entries, graphM)
-            stageArtifact(s"vmeta_v$upTo") { p =>
-              copyArtifactDir(st.paired("vmeta"), p)
-            }
-            stageArtifact(s"cent_v$upTo") { p =>
-              copyArtifactDir(st.paired("cent"), p)
-            }
-            stageArtifact(s"graph_v$upTo") { p =>
-              newGraph.write.mode("overwrite").parquet(p)
-              writeGraphM(p, graphM)
-            }
-            stageArtifact(s"data_v$upTo") { p =>
-              KvLayout.writeSorted(folded, Seq("cluster"), p)
-            }
+            val b = graft.similarity.VectorIndex.build(folded, "rk", "v")
+            try {
+              stage.stage(s"vmeta_v$upTo") { p =>
+                graft.similarity.VectorIndex.metaFrame(spark, b.meta)
+                  .write.mode("overwrite").parquet(p)
+              }
+              stage.stage(s"cent_v$upTo") { p =>
+                b.centroids.write.mode("overwrite").parquet(p)
+              }
+              stage.stage(s"data_v$upTo") { p =>
+                KvLayout.writeSorted(b.entries, Seq("cluster"), p)
+              }
+            } finally b.release()
           } finally folded.unpersist()
-        } else {
-        // compact RE-TRAINS: centroids drift as CDC patches accumulate
-        // (every patch assigned to backfill-time centroids), so the
-        // fold refits coarse quantizer + codebooks from the folded
-        // entries — reading ONLY index frames (the vectors live in the
-        // index), never the corpus.
-        val folded = vectorView(st).select("rk", "v").cache()
-        try {
-          val b = graft.similarity.VectorIndex.build(folded, "rk", "v")
-          try {
-            stageArtifact(s"vmeta_v$upTo") { p =>
-              graft.similarity.VectorIndex.metaFrame(spark, b.meta)
-                .write.mode("overwrite").parquet(p)
-            }
-            stageArtifact(s"cent_v$upTo") { p =>
-              b.centroids.write.mode("overwrite").parquet(p)
-            }
-            stageArtifact(s"data_v$upTo") { p =>
-              KvLayout.writeSorted(b.entries, Seq("cluster"), p)
-            }
-          } finally b.release()
-        } finally folded.unpersist()
-        }
-        true
-      case _ => false // kv indexes never write segments
-    } catch {
-      case e: Throwable =>
-        // a failed stage write leaves only the quarantined root
-        try deleteRecursively(foldStage) catch { case _: Exception => () }
-        throw e
-    }
-    if (!built) {
-      if (Files.exists(foldStage)) deleteRecursively(foldStage)
-      return false
-    }
-    // post-stage fence + ordered renames: prove the grant is still
-    // ours (and still current at the authority) before any staged
-    // artifact takes its final name — a lapsed holder throws here
-    // with its whole fold quarantined in the staging root. The rename
-    // sequence then lands dict/pos (cent/vmeta) strictly before data,
-    // so any interruption leaves the old triple live (the crash
-    // contract in the scaladoc above).
-    heldWriteLock.value.foreach { h => h.ensureValid(); h.fencedPublish(): Unit }
-    renames.foreach { n =>
-      val src = foldStage.resolve(n)
-      val dst = dir.resolve(n)
-      if (!Files.exists(dst))
-        Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      else {
-        // replace atomically for lock-free readers (the
-        // writeIndexDirAtomic move-aside dance)
-        val aside = dir.resolve(".staging_old_" +
-          java.util.UUID.randomUUID().toString.replace("-", ""))
-        Files.move(dst, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(aside)
+          }
       }
     }
-    deleteRecursively(foldStage)
     true
   }
 
@@ -2166,7 +2028,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val schema = schemaOf(table)
     val pkIdx = schema.fieldNames.indexOf(primaryKeyOf(table).head)
     val textIdx = schema.fieldNames.indexOf(indexedColumn(table, indexName, "fulltext"))
-    driverMultiGet(table, perDoc.keys.toSeq.map(Seq(_))).flatMap { row =>
+    // at the stack's version: text from a later snapshot would slice
+    // its window at positions counted in an older one
+    driverMultiGetAt(table, perDoc.keys.toSeq.map(Seq(_)), st.upTo).flatMap { row =>
       val id = row.get(pkIdx)
       perDoc.get(id).map { case (mn, c) =>
         val body = Option(row.getString(textIdx)).getOrElse("")
@@ -2717,9 +2581,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * files whose key range intersects the batch are rewritten; the
     * rest carry over as hard links); a bulk insert whose key set is too
     * large to reason about on the driver falls back to one full
-    * shuffled upsert merge — both under the table write lock, so the
-    * merge always runs against the CURRENT live snapshot and concurrent
-    * inserts serialize instead of losing each other. */
+    * shuffled upsert merge — both through [[incrementalMergeIfNonEmpty]]
+    * under the table write lock, so the merge always runs against the
+    * CURRENT live snapshot, concurrent inserts serialize instead of
+    * losing each other, and an empty batch publishes no version. */
   def upsertStaged(name: String, stagedDir: String,
                    maxIncrementalKeys: Int = 100000): Unit =
     try {
@@ -2729,13 +2594,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       val cols = fields.map(col)
       val pk = primaryKeyOf(name)
       val raw = spark.read.schema(schema).parquet(stagedDir)
-      // rowkeys are non-null, like HBase rowkeys — reject at write time
-      // with a clear error instead of NPEing in the merge's key
-      // comparator (one limit-1 job over the pk columns of the batch)
-      if (!raw.select(pk.map(col): _*)
-            .where(pk.map(col(_).isNull).reduce(_ || _)).isEmpty)
-        throw new IllegalArgumentException(
-          s"primary key (${pk.mkString(",")}) of $name may not be null")
       // within-statement duplicate PKs collapse to one row (HBase batch
       // Puts on one rowkey leave a single cell version visible). A DSv2
       // batch has no meaningful row order after parallel write, so the
@@ -2760,23 +2618,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           .agg(max(struct(others.map(col): _*)).as("__w"))
           .select(pk.map(col) ++ others.map(o => col(s"__w.$o").as(o)): _*)
           .select(cols: _*)
-      // one bounded job decides the path AND feeds the merge's file
-      // pruning — the merge never re-collects
-      val keyCol = pk.head
-      val keys = batch.select(keyCol).distinct()
-        .limit(maxIncrementalKeys + 1).collect().map(r => canonKey(r.get(0)))
-      if (keys.length <= maxIncrementalKeys)
-        incrementalMerge(name, batch, precollectedKeys = Some(keys))
-      else {
-        withRecoveredWriteLock(name) {
-        val next = dataVersionOf(name) + 1
-        val nextDir = tableDir(name).resolve(s"data_v$next")
-        val stage = newSnapshotStaging(name)
-        stageSnapshot(name, table(name).upsert(batch).df, stage)
-        val maint = maintainIndexes(name, next, stage, pre = None, post = None)
-        publishGuardingIndexAsOf(name, next, Seq(stage -> nextDir), maint)
-        }
-      }
+      // null keys, the bound and an empty batch (no version) are
+      // decided there
+      incrementalMergeIfNonEmpty(name, batch, maxIncrementalKeys): Unit
     } finally discardStaged(stagedDir)
 
   /** Stage-then-commit protocol for external (DSv2) writers: every
@@ -2800,29 +2644,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * COMPLETE post-image (replace semantics — appends go through
     * [[upsertStaged]]'s PK merge instead). */
   def publishStaged(name: String, stagedDir: String,
-                    expectedVersion: Option[Int] = None): Unit = {
-    withRecoveredWriteLock(name) {
-    val cur = dataVersionOf(name)
-    try checkExpected(name, cur, expectedVersion)
-    catch { case e: java.util.ConcurrentModificationException =>
-      // the staged post-image derives from a stale snapshot and can
-      // never be published — reclaim it before failing the statement
-      deleteRecursively(Paths.get(stagedDir))
-      throw e
-    }
-    val next = cur + 1
-    val target = tableDir(name).resolve(s"data_v$next")
-    // republish through THIS writer's own grant-scoped staging dir —
-    // a data_v(next) left by a crashed earlier writer is unpublished
-    // garbage the publish-time rename clears behind the fence
-    val staged = spark.read.schema(schemaOf(name)).parquet(stagedDir)
-    val stage = newSnapshotStaging(name)
-    stageSnapshot(name, staged, stage)
-    deleteRecursively(Paths.get(stagedDir))
-    val maint = maintainIndexes(name, next, stage, pre = None, post = None)
-    publishGuardingIndexAsOf(name, next, Seq(stage -> target), maint)
-  }
-  }
+                    expectedVersion: Option[Int] = None): Unit =
+    // a staged post-image derived from a stale snapshot can never be
+    // published — it is reclaimed whether the commit lands or fails
+    try commitFullRewrite(name) { cur =>
+      checkExpected(name, cur, expectedVersion)
+      spark.read.schema(schemaOf(name)).parquet(stagedDir)
+    } finally discardStaged(stagedDir)
 
   // ------------------------------------------------------------------
   // Multi-statement transactions — the Spark-bulk analog of the
@@ -2992,18 +2820,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
               "staged; aborting before touching any final name")
         }
       }
-      // post-fence materialization: only NOW do the staged snapshots
-      // take their version-numbered names, so every heavy write above
-      // happened inside grant-scoped dirs a lapsed holder can't aim at
-      // the new owner's files. Recovery's "staged dir exists" check
-      // keys off these dirs, so they must land BEFORE the journal —
-      // the unfenced residual shrinks to a lapse strictly between the
-      // fencedPublish above and the journal rename below (same class,
-      // documented there). dsts tracked for the pre-journal unwind.
+      // post-fence materialization ([[ArtifactStage]] staging).
+      // Recovery's "staged dir exists" check keys off these dirs, so
+      // they must land BEFORE the journal. dsts tracked for the
+      // pre-journal unwind.
       publishes.foreach { case (_, _, renames) =>
         renames.foreach { case (src, dstDir) =>
-          if (Files.exists(dstDir)) deleteRecursively(dstDir)
-          Files.move(src, dstDir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          ArtifactStage.moveIntoPlace(src, dstDir)
           renamedDsts += dstDir
         }
       }
@@ -3257,8 +3080,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           s"index column '$c' not in table $table")
       }
     }
-    val t = this.table(table)
-    val pk = primaryKeyOf(table).head
     // reference locks the table during DDL (table.sys lockStatus,
     // HBaseSchema.kt README: DDL修改时会锁定); the write lock makes the
     // meta read-modify-write atomic vs concurrent bulk writers, and
@@ -3266,114 +3087,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     setMetaAttr(table, "lockStatus", "LOCKED")
     try {
       Files.createDirectories(dir)
-      indexType.toLowerCase match {
-        case "kv" =>
-          writeKvIndex(kvEntriesOf(table, t.df, cols), cols, dir.resolve("data"))
-            .foreach(writeRangeManifest(dir.resolve("data"), _))
-        case "bitmap" =>
-          require(cols.size == 1, "bitmap indexes are single-column")
-          graft.index.BitmapIndex.build(t.df, pk, cols.head)
-            .write.mode("overwrite").parquet(dir.resolve("data").toString)
-        case "fulltext" =>
-          require(cols.size == 1, "fulltext indexes are single-column")
-          // the reference's Lucene flavor: persisted inverted index
-          // (postings term-sorted ⇒ term filters prune row groups),
-          // plus positional postings — the frame phrase queries need
-          // (Lucene stores positions per posting the same way). ONE
-          // tokenize pass carrying the per-doc token count: positions
-          // are the source of truth, and postings/dictionary/norms/
-          // block stats all derive from them with no join back.
-          val posDl = graft.index.FullText
-            .buildPositionalWithDl(t.df, pk, cols.head, analyzer).cache()
-          try {
-            val postingsDl = graft.index.FullText
-              .postingsWithDl(posDl).cache()
-            try {
-              // ONE action (the norms meta agg) sizes EVERY artifact
-              // write up front: Σdl IS the positional row count and
-              // bounds the postings rows, so no write pays
-              // repartitionByRange's range-sampling execution of its
-              // (cached but non-trivial) input plan
-              val doclens = graft.index.FullText
-                .doclensFromPostings(postingsDl).cache()
-              try {
-                val (nd, td) = aggDoclens(doclens)
-                val partsDoc = ftRankedParts(nd)
-                val partsTok = ftRankedParts(td)
-                val dict = graft.index.FullText.buildDictionary(
-                  postingsDl.select("term", "doc_id", "tf"))
-                // the six artifacts are independent frames over the
-                // SAME cached pass, and nothing is visible until the
-                // meta registration below (a failed backfill deletes
-                // the dir) — so the writes run CONCURRENTLY: each is
-                // scheduler overhead + a small job, and sequencing six
-                // of them was most of the backfill's wall time (the
-                // gate floor; on a cluster, concurrent jobs also keep
-                // executors busy instead of draining between writes).
-                // (term, doc_id) postings sort — within one term the
-                // postings stay doc-id ordered (the Lucene
-                // postings-list order), so the ranked driver path's
-                // surviving-block doc ranges prune pages through the
-                // parquet column index.
-                val writes: Seq[() => Unit] = Seq(
-                  () => KvLayout.writeSorted(
-                    posDl.select("doc_id", "term", "pos"), Seq("term"),
-                    dir.resolve("pos").toString, partitions = partsTok),
-                  () => KvLayout.writeSorted(
-                    postingsDl.select("term", "doc_id", "tf"),
-                    Seq("term", "doc_id"), dir.resolve("data").toString,
-                    partitions = partsTok),
-                  () => KvLayout.writeSorted(dict, Seq("term"),
-                    dir.resolve("dict").toString, partitions = partsDoc),
-                  () => {
-                    KvLayout.writeSorted(doclens, Seq("doc_id"),
-                      dir.resolve("norms").toString, partitions = partsDoc)
-                    writeNormMetaJson(dir.resolve("norms"), nd, td)
-                  },
-                  () => writeFtFuzzy(dict, dir.resolve("fz").toString,
-                    partsDoc)) ++
-                  (schemaOf(table)(pk).dataType match {
-                    case LongType | IntegerType => Seq(
-                      () => KvLayout.writeSorted(
-                        graft.index.FullText.buildBlockStatsWithDl(postingsDl),
-                        Seq("term"), dir.resolve("bmx").toString,
-                        partitions = partsDoc))
-                    case _ => Nil
-                  })
-                runAllBlocking(writes)
-              } finally { doclens.unpersist(); () }
-            } finally { postingsDl.unpersist(); () }
-          } finally { posDl.unpersist(); () }
-        case "vector" =>
-          require(cols.size == 1, "vector indexes are single-column")
-          val built = graft.similarity.VectorIndex.build(t.df, pk, cols.head)
-          // cluster-sorted entries: an IVF probe's per-list scan prunes
-          // row groups on the cluster column instead of reading the
-          // whole encoded corpus
-          try {
-            built.centroids.write.mode("overwrite")
-              .parquet(dir.resolve("cent").toString)
-            graft.similarity.VectorIndex.metaFrame(spark, built.meta)
-              .write.mode("overwrite").parquet(dir.resolve("vmeta").toString)
-            KvLayout.writeSorted(built.entries, Seq("cluster"),
-              dir.resolve("data").toString)
-            // graph=>true: the navigable-graph artifact lands in the
-            // SAME backfill (plain `graph`, resolved like the other
-            // unversioned creation artifacts) — the index serves
-            // graph-ANN from version 1 with an empty delta buffer.
-            // No staging needed: the index is unregistered until the
-            // meta write below, and a failed backfill deletes the dir.
-            if (graph) {
-              import org.apache.spark.sql.functions.col
-              val g = dir.resolve("graph").toString
-              graft.similarity.Hnsw.buildGraph(
-                built.entries.select(col("cluster"), col("rk"), col("v")),
-                graphM)
-                .write.mode("overwrite").parquet(g)
-              writeGraphM(g, graphM)
-            }
-          } finally built.release()
-        case other => throw new IllegalArgumentException(s"index type $other")
+      // nothing here is visible until the registration below (a failed
+      // backfill deletes the dir), so the artifacts need no stage and
+      // no order: they are independent frames over the builder's
+      // cached pass and write CONCURRENTLY — each is scheduler overhead
+      // + a small job, and sequencing them was most of the backfill's
+      // wall time. The unversioned names resolve as the base (−1).
+      withIndexArtifacts(table, indexType, cols, this.table(table).df,
+          analyzer, if (graph) Some(graphM) else None) { arts =>
+        runAllBlocking(arts.map { case (n, w) => () => w(dir.resolve(n).toString) })
       }
       val meta = readMeta(table)
       val reg = meta.withArray[ArrayNode]("indexes")
@@ -3403,10 +3125,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * races a still-running write. Used where artifact writes have no
     * ordering contract (unregistered backfill dirs). */
   private def runAllBlocking(writes: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val done = writes.map(w => Future(w()))
+    // `blocking`: each body waits on a Spark job, so the pool must not
+    // cap the writes at its core-count parallelism
+    val done = writes.map(w => Future(blocking(w())))
       .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     val failures = done.collect { case scala.util.Failure(e) => e }
     failures.headOption.foreach { first =>
@@ -3415,6 +3139,115 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       failures.tail.filter(_ ne first).foreach(first.addSuppressed)
       throw first
     }
+  }
+
+  /** An index artifact: its name prefix (unversioned for createIndex's
+    * backfill, `<prefix>_v<version>` for a refresh) and its writer,
+    * given the artifact dir's path. */
+  private type Artifact = (String, String => Unit)
+
+  /** THE full build of one index flavor over `rows`, shared by
+    * createIndex (writes the artifacts concurrently into the
+    * unregistered dir) and refreshIndex (stages them, publishes them
+    * at the live version). The artifacts come in rename order —
+    * siblings before the data base, the [[ArtifactStage]] contract —
+    * and the builder's cached intermediates live until `use` returns.
+    * `graphM` adds a vector index's navigable graph at that degree. */
+  private def withIndexArtifacts[A](table: String, indexType: String,
+                                    cols: Seq[String], rows: DataFrame,
+                                    analyzer: String, graphM: Option[Int])
+                                   (use: Seq[Artifact] => A): A = {
+    val pk = primaryKeyOf(table).head
+    indexType.toLowerCase match {
+      case "kv" =>
+        use(Seq("data" -> (p =>
+          writeKvIndex(kvEntriesOf(table, rows, cols), cols, Paths.get(p)))))
+      case "bitmap" =>
+        require(cols.size == 1, "bitmap indexes are single-column")
+        use(Seq("data" -> (p =>
+          graft.index.BitmapIndex.build(rows, pk, cols.head)
+            .write.mode("overwrite").parquet(p))))
+      case "fulltext" =>
+        require(cols.size == 1, "fulltext indexes are single-column")
+        withFulltextArtifacts(rows, pk, cols.head, analyzer, rowkeyType(table))(use)
+      case "vector" =>
+        require(cols.size == 1, "vector indexes are single-column")
+        withVectorArtifacts(rows, pk, cols.head, graphM)(use)
+      case other => throw new IllegalArgumentException(s"index type $other")
+    }
+  }
+
+  /** The fulltext artifact set — the reference's Lucene flavor:
+    * persisted inverted index (postings term-sorted ⇒ term filters
+    * prune row groups) plus positional postings, the frame phrase
+    * queries need. ONE tokenize pass carrying the per-doc token count:
+    * positions are the source of truth, and postings, dictionary
+    * (+ its fuzzy layout), norms and block stats (long/int rowkeys)
+    * all derive from them with no join back. ONE action (the norms
+    * meta agg) sizes every write up front: Σdl IS the positional row
+    * count and bounds the postings rows, so no write pays
+    * repartitionByRange's range-sampling execution of its input. */
+  private def withFulltextArtifacts[A](rows: DataFrame, pk: String, c: String,
+                                       analyzer: String, rkType: DataType)
+                                      (use: Seq[Artifact] => A): A = {
+    val ft = graft.index.FullText
+    val posDl = ft.buildPositionalWithDl(rows, pk, c, analyzer).cache()
+    try {
+      val postingsDl = ft.postingsWithDl(posDl).cache()
+      try {
+        val doclens = ft.doclensFromPostings(postingsDl).cache()
+        try {
+          val (nd, td) = aggDoclens(doclens)
+          val partsDoc = ftRankedParts(nd)
+          val partsTok = ftRankedParts(td)
+          val postings = postingsDl.select("term", "doc_id", "tf")
+          val dict = ft.buildDictionary(postings)
+          val blockStats: Seq[Artifact] = rkType match {
+            case LongType | IntegerType => Seq("bmx" -> (p =>
+              KvLayout.writeSorted(ft.buildBlockStatsWithDl(postingsDl),
+                Seq("term"), p, partitions = partsDoc)))
+            case _ => Nil
+          }
+          use(Seq[Artifact](
+            "pos" -> (p => KvLayout.writeSorted(posDl.select("doc_id", "term", "pos"),
+              Seq("term"), p, partitions = partsTok)),
+            "dict" -> (p => KvLayout.writeSorted(dict, Seq("term"), p,
+              partitions = partsDoc)),
+            "fz" -> (p => writeFtFuzzy(dict, p, partsDoc)),
+            "norms" -> { p =>
+              KvLayout.writeSorted(doclens, Seq("doc_id"), p, partitions = partsDoc)
+              writeNormMetaJson(Paths.get(p), nd, td)
+            }) ++ blockStats :+
+            // (term, doc_id) sort: within one term the postings stay
+            // doc-id ordered (the Lucene postings-list order), so the
+            // ranked driver path's surviving-block doc ranges prune
+            // pages through the parquet column index
+            ("data" -> (p => KvLayout.writeSorted(postings, Seq("term", "doc_id"), p,
+              partitions = partsTok))))
+        } finally { doclens.unpersist(); () }
+      } finally { postingsDl.unpersist(); () }
+    } finally { posDl.unpersist(); () }
+  }
+
+  /** The vector artifact set: codebook meta, IVF centroids, the
+    * optional navigable graph at degree `graphM`, and the
+    * cluster-sorted encoded entries (an IVF probe's per-list scan
+    * prunes row groups on the cluster column instead of reading the
+    * whole encoded corpus). */
+  private def withVectorArtifacts[A](rows: DataFrame, pk: String, c: String,
+                                     graphM: Option[Int])
+                                    (use: Seq[Artifact] => A): A = {
+    import org.apache.spark.sql.functions.col
+    val built = graft.similarity.VectorIndex.build(rows, pk, c)
+    try use(Seq[Artifact](
+        "vmeta" -> (p => graft.similarity.VectorIndex.metaFrame(spark, built.meta)
+          .write.mode("overwrite").parquet(p)),
+        "cent" -> (p => built.centroids.write.mode("overwrite").parquet(p))) ++
+      graphM.map(m => "graph" -> ((p: String) => writeGraph(
+        graft.similarity.Hnsw.buildGraph(
+          built.entries.select(col("cluster"), col("rk"), col("v")), m), m, p))) :+
+      ("data" -> (p => KvLayout.writeSorted(built.entries, Seq("cluster"), p))))
+    finally built.release()
   }
 
   /** The FUZZY-serving dictionary sidecar: the same rows as the term
@@ -3563,25 +3396,27 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       import org.apache.spark.sql.functions.col
       val bv = IndexStack.at(dir, dataVersionOf(table)).baseVer
       val view = indexData(table, indexName, "vector")
-      writeIndexDirAtomic(dir, s"graph_v$bv") { p =>
-        graft.similarity.Hnsw.buildGraph(
-          view.select(col("cluster"), col("rk"), col("v")), m)
-          .write.mode("overwrite").parquet(p)
-        writeGraphM(p, m)
+      ArtifactStage.run(dir, heldWriteLock.value) {
+        _.stage(s"graph_v$bv") { p =>
+          writeGraph(graft.similarity.Hnsw.buildGraph(
+            view.select(col("cluster"), col("rk"), col("v")), m), m, p)
+        }
       }
     }
 
-  /** The graph artifact's persisted build degree `m` (Hnsw.buildGraph's
-    * parameter), written beside the graph rows: compact-folds rebuild
+  /** Write a graph artifact with its build degree `m` (Hnsw.buildGraph's
+    * parameter) persisted beside the graph rows: compact-folds rebuild
     * TOUCHED lists and refresh_index re-builds the whole graph, and
     * both must do so at the degree the graph was BUILT with — folding
     * a non-default-m graph at the default would silently mix degrees
     * (touched lists at 8, untouched at the original m). Underscore
     * name keeps the file invisible to the parquet read. Pre-upgrade
     * graphs without the file read as the historical default 8. */
-  private def writeGraphM(graphDir: String, m: Int): Unit =
+  private def writeGraph(graph: DataFrame, m: Int, graphDir: String): Unit = {
+    graph.write.mode("overwrite").parquet(graphDir)
     Files.writeString(Paths.get(graphDir).resolve("_graft_graph_m"),
       m.toString): Unit
+  }
 
   private def readGraphM(graphDir: Path): Int = {
     val f = graphDir.resolve("_graft_graph_m")
@@ -3708,17 +3543,20 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     if (n == 1) Seq("ik") else (0 until n).map(i => s"ik$i")
 
   /** Persist kv-index entries over `cols` at `dir`, sorted by their
-    * index key, and return the range manifest of the lead index column
-    * folded by the same write job — None when the indexed column's type
-    * keeps no persisted manifest. */
+    * index key, with the range manifest of the lead index column folded
+    * by the same write job plus the `carried` entries of files linked
+    * in beside them — no manifest when the indexed column's type keeps
+    * none. */
   private def writeKvIndex(entries: DataFrame, cols: Seq[String], dir: Path,
-                           partitions: Int = 0): Option[Seq[FileRange]] = {
+                           partitions: Int = 0,
+                           carried: Seq[FileRange] = Nil): Unit = {
     val ikCols = ikColsOf(cols.size)
-    if (!manifestPersistable(entries.schema(ikCols.head).dataType)) {
+    if (!manifestPersistable(entries.schema(ikCols.head).dataType))
       KvLayout.writeSorted(entries, ikCols, dir.toString, partitions)
-      None
-    } else Some(writeCaptured(dir, entries.schema, ikCols.head, None)(c =>
-      KvLayout.writeSorted(entries, ikCols, dir.toString, partitions, Some(c))))
+    else writeRangeManifest(dir,
+      writeCaptured(dir, entries.schema, ikCols.head, None)(c =>
+        KvLayout.writeSorted(entries, ikCols, dir.toString, partitions, Some(c))) ++
+        carried)
   }
 
   /** FRESH iff the index content matches the live table version. */
@@ -3762,16 +3600,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val renames = kvIndexes.map { case (iname, ty, cols) =>
       val dir = indexDir(name, iname, ty)
       val ikCols = ikColsOf(cols.size)
-      // same grant-scoped stage→publish-rename protocol as the table
-      // snapshot: the version-numbered name materializes only behind
-      // publishVersion's fences, so a lapsed holder's index rebuild
-      // can't cross-write the new owner's index dir at the same
-      // version. Under the INDEX dir (same volume ⇒ atomic rename)
-      // and `.staging_`-prefixed (vacuum's index sweep reclaims
-      // crashed attempts).
-      val nextIdxDir = dir.resolve(s".staging_grant" +
-        heldWriteLock.value.map(_.fencingToken).getOrElse(0L) + "_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
+      // staged like an index artifact ([[ArtifactStage]]), renamed by
+      // the commit point with the table snapshot
+      val nextIdxDir = ArtifactStage.stagingRoot(dir, heldWriteLock.value)
       val finalIdxDir = dir.resolve(s"data_v$next")
       val incremental = (pre, post) match {
         case (Some(p), Some(q)) =>
@@ -3817,21 +3648,20 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
             // low-cardinality indexed column) split it instead of
             // growing it without bound
             val touchedBytes = touched.map(e => Files.size(curIdx.resolve(e.file))).sum
-            val newIdxEntries = writeKvIndex(patched, cols, nextIdxDir,
+            // new + carried entries — the table merge's carry-forward
+            // pattern (links after the write, which owns the dir)
+            writeKvIndex(patched, cols, nextIdxDir,
               partitions = math.max(math.max(1, touched.size),
-                math.ceil(touchedBytes.toDouble / mergeTargetFileBytes).toInt))
-            // record new + carried entries — the table merge's
-            // carry-forward pattern
+                math.ceil(touchedBytes.toDouble / mergeTargetFileBytes).toInt),
+              carried = untouched)
             untouched.foreach(e =>
               linkOrCopy(curIdx.resolve(e.file), nextIdxDir.resolve(e.file)))
-            newIdxEntries.foreach(e => writeRangeManifest(nextIdxDir, e ++ untouched))
             true
           }
         case _ => false
       }
       if (!incremental)
         writeKvIndex(kvEntriesOf(name, fullPost, cols), cols, nextIdxDir)
-          .foreach(writeRangeManifest(nextIdxDir, _))
       setIndexAsOf(name, iname, ty, next)
       nextIdxDir -> finalIdxDir
     }
@@ -3882,122 +3712,23 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           s"$table $indexName $indexType not registered"))
       val dir = indexDir(table, indexName, indexType)
       val cur = dataVersionOf(table)
-      val t = this.table(table).df
-      val pk = primaryKeyOf(table).head
-      // refresh rebuilds AT the live version — a dir readers resolve
-      // the moment it appears, so every write stages + renames
-      ty.toUpperCase match {
-        case "KV" =>
-          writeIndexDirAtomic(dir, s"data_v$cur") { p =>
-            writeKvIndex(kvEntriesOf(table, t, cols), cols, Paths.get(p))
-              .foreach(writeRangeManifest(Paths.get(p), _))
-          }
-        case "BITMAP" =>
-          writeIndexDirAtomic(dir, s"data_v$cur") { p =>
-            graft.index.BitmapIndex.build(t, pk, cols.head)
-              .write.mode("overwrite").parquet(p)
-          }
-        case "FULLTEXT" =>
-          // one tokenize pass carrying per-doc dl (positions →
-          // postings → dictionary → norms/bmx/fz, no join back);
-          // pos BEFORE data: readers pair the positional base at the
-          // resolved data base's version, so a crash here must leave
-          // the old (data, pos) pair live together. Rebuild with the
-          // index's own analyzer.
-          val posDl =
-            graft.index.FullText.buildPositionalWithDl(t, pk, cols.head,
-              indexAnalyzer(table, indexName)).cache()
-          try {
-            val postingsDl = graft.index.FullText
-              .postingsWithDl(posDl).cache()
-            try {
-              // ONE action sizes every write (the createIndex recipe)
-              val doclens = graft.index.FullText
-                .doclensFromPostings(postingsDl).cache()
-              try {
-                val (nd, td) = aggDoclens(doclens)
-                val partsDoc = ftRankedParts(nd)
-                val partsTok = ftRankedParts(td)
-                writeIndexDirAtomic(dir, s"pos_v$cur") { p =>
-                  KvLayout.writeSorted(posDl.select("doc_id", "term", "pos"),
-                    Seq("term"), p, partitions = partsTok)
-                }
-                // norms + block stats + fuzzy sidecar BEFORE data, like
-                // pos/dict — they pair at the resolved data base's version
-                val dict = graft.index.FullText.buildDictionary(
-                  postingsDl.select("term", "doc_id", "tf"))
-                writeIndexDirAtomic(dir, s"norms_v$cur") { p =>
-                  KvLayout.writeSorted(doclens, Seq("doc_id"), p,
-                    partitions = partsDoc)
-                  writeNormMetaJson(Paths.get(p), nd, td)
-                }
-                writeIndexDirAtomic(dir, s"fz_v$cur") { p =>
-                  writeFtFuzzy(dict, p, partsDoc)
-                }
-                schemaOf(table)(pk).dataType match {
-                  case LongType | IntegerType =>
-                    writeIndexDirAtomic(dir, s"bmx_v$cur") { p =>
-                      KvLayout.writeSorted(
-                        graft.index.FullText.buildBlockStatsWithDl(
-                          postingsDl),
-                        Seq("term"), p, partitions = partsDoc)
-                    }
-                  case _ => ()
-                }
-                writeIndexDirAtomic(dir, s"data_v$cur") { p =>
-                  KvLayout.writeSorted(postingsDl.select("term", "doc_id", "tf"),
-                    Seq("term", "doc_id"), p, partitions = partsTok)
-                }
-                // dict is versioned like the postings — rewriting a
-                // shared dict/ in place would clobber the snapshot a
-                // concurrent reader resolved
-                writeIndexDirAtomic(dir, s"dict_v$cur") { p =>
-                  KvLayout.writeSorted(dict, Seq("term"), p,
-                    partitions = partsDoc)
-                }
-              } finally { doclens.unpersist(); () }
-            } finally { postingsDl.unpersist(); () }
-          } finally { posDl.unpersist(); () }
-        case "VECTOR" =>
-          // full corpus re-train at the live version; cent/vmeta land
-          // before data for the same crash reasoning as the fold
-          val built = graft.similarity.VectorIndex.build(t, pk, cols.head)
-          try {
-            writeIndexDirAtomic(dir, s"vmeta_v$cur") { p =>
-              graft.similarity.VectorIndex.metaFrame(spark, built.meta)
-                .write.mode("overwrite").parquet(p)
-            }
-            writeIndexDirAtomic(dir, s"cent_v$cur") { p =>
-              built.centroids.write.mode("overwrite").parquet(p)
-            }
-            // an index serving graph-ANN rebuilds its graph with the
-            // NEW coarse structure (a stale graph would key its lists
-            // by the pre-refresh cluster ids, silently mismatching
-            // every probe against the refreshed centroids). BEFORE
-            // data, like cent/vmeta: readers pair the graph at the
-            // resolved DATA base's version (vectorGraphView), so a
-            // crash here leaves the old quadruple fully live and the
-            // graph_v(cur) orphan unresolvable until data lands.
-            locally {
-              val oldGraph = IndexStack.at(dir, cur).latest("graph", cur)
-              if (Files.exists(oldGraph)) {
-                // rebuild at the persisted degree, and carry it forward
-                val graphM = readGraphM(oldGraph)
-                writeIndexDirAtomic(dir, s"graph_v$cur") { p =>
-                  import org.apache.spark.sql.functions.col
-                  graft.similarity.Hnsw.buildGraph(
-                    built.entries.select(col("cluster"), col("rk"), col("v")),
-                    graphM)
-                    .write.mode("overwrite").parquet(p)
-                  writeGraphM(p, graphM)
-                }
-              }
-            }
-            writeIndexDirAtomic(dir, s"data_v$cur") { p =>
-              KvLayout.writeSorted(built.entries, Seq("cluster"), p)
-            }
-          } finally built.release()
-        case other => throw new IllegalArgumentException(s"index type $other")
+      // an index serving graph-ANN rebuilds its graph with the NEW
+      // coarse structure (a stale graph would key its lists by the
+      // pre-refresh cluster ids), at the degree it was built with
+      val oldGraph = IndexStack.at(dir, cur).latest("graph", cur)
+      val graphM =
+        if (ty.equalsIgnoreCase("vector") && Files.exists(oldGraph))
+          Some(readGraphM(oldGraph))
+        else None
+      // the rebuild lands AT the live version, which readers resolve
+      // the moment a dir appears: the whole set stages, then publishes
+      // behind the fence with the data base last. Rebuilt with the
+      // index's own analyzer.
+      ArtifactStage.run(dir, heldWriteLock.value) { stage =>
+        withIndexArtifacts(table, ty, cols, this.table(table).df,
+            indexAnalyzer(table, indexName), graphM) {
+          _.foreach { case (n, w) => stage.stage(s"${n}_v$cur")(w) }
+        }
       }
       setIndexAsOf(table, indexName, indexType, cur)
     }
@@ -4079,23 +3810,18 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // can't be split by a pause); still open for token-less /
     // file-lock providers, where the lock itself cannot lapse so the
     // compare runs under real exclusion anyway; (b) the staged data
-    // write preceding this swap — CLOSED: every write path stages in
-    // a grant-scoped unique dir ([[newSnapshotStaging]]) and the
-    // version-numbered names materialize only below, AFTER the fences
-    // pass, so a lapse mid-stage keeps the lapsed holder's bytes
-    // inside its own dir; (c) the old fence→rename lapse window —
+    // write preceding this swap — CLOSED by grant-scoped staging
+    // ([[ArtifactStage]]): the final names materialize only below,
+    // after the fences; (c) the old fence→rename lapse window —
     // CLOSED for authority providers by the conditional swap: the
     // version number is claimed atomically with the fence, so a
     // post-swap lapse can't be overtaken onto the SAME number, and
     // the pre-writeMeta re-swap below re-proves the grant after the
     // renames. What remains is a lapse strictly between that re-proof
     // and the one writeMeta file op — a pure write with no
-    // read→compare gap, the conditional-write-only floor. Analytic
-    // SEGMENT appends run the same protocol inside
-    // maintainAnalyticIndexes (stage root → fence → rename, before
-    // the auto-fold consumes them), and the in-maintenance auto-fold
-    // rides foldIndexStack's own stage→fence→rename with its
-    // dict-before-data rename ordering preserved.
+    // read→compare gap, the conditional-write-only floor. Index
+    // artifacts renamed outside this commit point (segments, folds,
+    // refreshes) take ArtifactStage's fence instead.
     val tok = h.map(_.fencingToken).getOrElse(0L)
     var epochAdvanced = false
     if (tok > 0L) {
@@ -4156,17 +3882,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         s"fencing: authority commit pointer for $table has advanced past " +
         s"$version while the durable meta is behind — a newer grant's " +
         "commit is in flight; aborting instead of materializing over it")
-    // post-fence materialization: the staged dirs take their
-    // version-numbered names only now, behind every fence above — a
-    // holder that lapsed mid-stage never got here, so it never wrote
-    // a byte outside its own grant-scoped dir. A dst that already
-    // exists is unpublished garbage from a CRASHED earlier writer
-    // (the pointer below is still < version, so no reader ever
-    // resolved it) — clear it so the rename lands.
-    staged.foreach { case (src, dst) =>
-      if (Files.exists(dst)) deleteRecursively(dst)
-      Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    }
+    // post-fence materialization, behind every fence above. A dst
+    // that already exists is unpublished garbage from a CRASHED
+    // earlier writer (the pointer is still < version, so no reader
+    // ever resolved it) — replaced by the rename.
+    staged.foreach { case (src, dst) => ArtifactStage.moveIntoPlace(src, dst) }
     // re-prove the swap immediately before the durable pointer mirror:
     // idempotent at the authority (same grant, same `version`), and it
     // atomically re-verifies the grant is STILL the current one after

@@ -11,7 +11,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 /** Driver-side CDC segment maintenance for the fulltext flavor — the
   * write-path counterpart of the millisecond serving path (DriverRead),
@@ -74,20 +74,26 @@ private[kv] object DriverSegment {
     Types.optional(PrimitiveTypeName.BINARY)
       .as(LogicalTypeAnnotation.stringType())
 
-  private def writeFile(dir: Path, schema: MessageType)
-                       (fill: (MessageType, SimpleGroup => Unit) => Unit): Unit = {
-    Files.createDirectories(dir)
-    val conf = new Configuration(false)
-    val w: ParquetWriter[org.apache.parquet.example.data.Group] =
-      ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(
-          dir.resolve("part-00000.parquet").toUri.toString))
-        .withConf(conf)
-        .withType(schema)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-    try fill(schema, g => w.write(g)) finally w.close()
-  }
+  /** Stage one single-file parquet artifact named `name`; `after`
+    * adds sidecar files to its dir. */
+  private def writeFile(stage: ArtifactStage, name: String, schema: MessageType,
+                        after: Path => Unit = _ => ())
+                       (fill: (MessageType, SimpleGroup => Unit) => Unit): Unit =
+    stage.stage(name) { p =>
+      val dir = Paths.get(p)
+      Files.createDirectories(dir)
+      val conf = new Configuration(false)
+      val w: ParquetWriter[org.apache.parquet.example.data.Group] =
+        ExampleParquetWriter
+          .builder(new org.apache.hadoop.fs.Path(
+            dir.resolve("part-00000.parquet").toUri.toString))
+          .withConf(conf)
+          .withType(schema)
+          .withCompressionCodec(CompressionCodecName.SNAPPY)
+          .build()
+      try fill(schema, g => w.write(g)) finally w.close()
+      after(dir)
+    }
 
   private def addRk(g: SimpleGroup, field: String, rk: Any): Unit = rk match {
     case l: java.lang.Long => g.add(field, l.longValue())
@@ -97,12 +103,12 @@ private[kv] object DriverSegment {
       s"unsupported rowkey value $other")
   }
 
-  /** Build and write all four fulltext segment artifacts for one CDC
-    * merge. `patch` and `pre` are (rowkey, text) pairs — the patch
+  /** Build the fulltext segment artifacts for one CDC merge into
+    * `stage`. `patch` and `pre` are (rowkey, text) pairs — the patch
     * rows and the pre-image of the patched keys. Terms are sorted
     * before writing (the row-group pruning contract KvLayout's
     * term-sorted layout gives Spark-written segments). */
-  def writeFulltext(indexDir: Path, next: Int,
+  def writeFulltext(stage: ArtifactStage, next: Int,
                     patch: Array[Row], pre: Array[Row],
                     analyzer: String, rkType: DataType): Unit = {
     val english = analyzer == "english"
@@ -113,7 +119,7 @@ private[kv] object DriverSegment {
         .map { case (t, p) => (rk, t, p) }
     }
     val sortedPos = positional.sortBy(_._2)
-    writeFile(indexDir.resolve(s"posseg_v$next"),
+    writeFile(stage, s"posseg_v$next",
       Types.buildMessage()
         .addField(rkField(rkType).named("doc_id"))
         .addField(termField.named("term"))
@@ -129,7 +135,7 @@ private[kv] object DriverSegment {
     val postings = positional.groupBy(r => (r._2, r._1))
       .map { case ((t, rk), rows) => (t, rk, rows.length.toLong) }
       .toArray.sortBy(_._1)
-    writeFile(indexDir.resolve(s"seg_v$next"),
+    writeFile(stage, s"seg_v$next",
       Types.buildMessage()
         .addField(termField.named("term"))
         .addField(rkField(rkType).named("doc_id"))
@@ -147,24 +153,24 @@ private[kv] object DriverSegment {
     val norms = positional.groupBy(_._1)
       .map { case (rk, rows) => (rk, rows.length.toLong) }
       .toArray.sortBy(_._1.toString)
-    val normDir = indexDir.resolve(s"normseg_v$next")
-    writeFile(normDir,
+    writeFile(stage, s"normseg_v$next",
       Types.buildMessage()
         .addField(rkField(rkType).named("doc_id"))
         .addField(Types.optional(PrimitiveTypeName.INT64).named("dl"))
-        .named("spark_schema")) { (schema, write) =>
+        .named("spark_schema"),
+      after = dir => Files.writeString(dir.resolve("_graft_norm_meta.json"),
+        s"""{"n":${norms.length},"total":${norms.map(_._2).sum}}"""): Unit) {
+      (schema, write) =>
       norms.foreach { case (rk, dl) =>
         val g = new SimpleGroup(schema)
         addRk(g, "doc_id", rk); g.add("dl", dl)
         write(g)
       }
     }
-    Files.writeString(normDir.resolve("_graft_norm_meta.json"),
-      s"""{"n":${norms.length},"total":${norms.map(_._2).sum}}"""): Unit
 
     // tombstones: distinct patched rowkeys
     val tombs = patch.map(_.get(0)).distinct
-    writeFile(indexDir.resolve(s"tomb_v$next"),
+    writeFile(stage, s"tomb_v$next",
       Types.buildMessage()
         .addField(rkField(rkType).named("rk"))
         .named("spark_schema")) { (schema, write) =>
@@ -187,7 +193,7 @@ private[kv] object DriverSegment {
       val d = add.getOrElse(t, 0L) - remove.getOrElse(t, 0L)
       if (d == 0L) None else Some((t, d))
     }
-    writeFile(indexDir.resolve(s"dictdelta_v$next"),
+    writeFile(stage, s"dictdelta_v$next",
       Types.buildMessage()
         .addField(termField.named("term"))
         .addField(Types.optional(PrimitiveTypeName.INT64).named("ddf"))

@@ -726,6 +726,74 @@ class ConcurrencySpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("fencing: a lapsed refresh never touches the new owner's live index artifacts") {
+    // refreshIndex rebuilds AT the live version, whose dirs readers
+    // resolve the moment they appear: a holder whose lease lapsed
+    // while a new owner committed must die at the fence, before any
+    // staged artifact takes its final name and before the as-of reset.
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val server = new graft.kv.LeaseLockServer().start()
+    try {
+      val real = new graft.kv.LeaseLockProvider(
+        "127.0.0.1", server.boundPort, leaseMs = 60000)
+      // A pauses right after its grant (a GC pause past the lease)
+      val pausing = new graft.kv.LockProvider {
+        override def acquire(r: String, t: Long): graft.kv.LockProvider.Handle = {
+          val h = real.acquire(r, t)
+          FenceGate.started.countDown()
+          FenceGate.proceed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          h
+        }
+      }
+      val wh = Files.createTempDirectory("graft_refreshfence_wh").toString
+      val catA = new Catalog(spark, wh, lockProviderOpt = Some(pausing))
+      val catB = new Catalog(spark, wh, lockProviderOpt = Some(real))
+      catB.createTable("t", StructType(Seq(
+        StructField("k", LongType, false),
+        StructField("body", StringType, true))), Seq("k"))
+      catB.bulkLoad("t", graft.Tables.documents(spark, sf)
+        .filter(org.apache.spark.sql.functions.col("doc_id") < 100)
+        .select(org.apache.spark.sql.functions.col("doc_id").as("k"),
+          org.apache.spark.sql.functions.col("text").as("body")),
+        partitions = 2)
+      catB.createIndex("t", "ft", "fulltext", Seq("body"))
+      FenceGate.reset()
+      var failure: Option[Throwable] = None
+      val t1 = new Thread(() => {
+        try catA.refreshIndex("t", "ft", "fulltext")
+        catch { case e: Throwable => failure = Some(e) }
+      })
+      t1.start()
+      assert(FenceGate.started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      server.expireNow("t")
+      catB.incrementalMerge("t",
+        Seq(7L -> "graft owner body").toDF("k", "body")) // publishes v2 + seg_v2
+      def idxFp(): Map[String, String] = {
+        val d = Paths.get(wh, "t.fulltext.ft")
+        val s = Files.walk(d)
+        try s.iterator().asScala
+          .filter(p => Files.isRegularFile(p) &&
+            !p.toString.contains(".staging_"))
+          .map { p =>
+            val md = java.security.MessageDigest.getInstance("MD5")
+            p.toString ->
+              md.digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
+          }.toMap
+        finally s.close()
+      }
+      val before = idxFp()
+      assert(catB.indexStatus("t", "ft", "fulltext") == "FRESH")
+      FenceGate.proceed.countDown()
+      t1.join(120000)
+      assert(failure.exists(_.isInstanceOf[IllegalStateException]),
+        s"lapsed refresh was not fenced: $failure")
+      assert(idxFp() == before,
+        "the lapsed refresh touched the new owner's live index artifacts")
+      assert(new Catalog(spark, wh).indexStatus("t", "ft", "fulltext") == "FRESH")
+    } finally server.stop()
+  }
+
   test("lease: authority-side compare-and-publish fences a lapsed holder BEFORE the new owner commits") {
     // The meta-stamp fence is read→compare→write: it only rejects a
     // lapsed holder once the new owner HAS published a higher epoch.

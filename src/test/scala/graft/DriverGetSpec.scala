@@ -833,10 +833,14 @@ class DriverGetSpec extends AnyFunSuite {
     // guard that nothing else accidentally matches the probe
     assert(!driverFuzzy("qwxzs", 1).contains(7L))
     // banded seek is REAL: a long probe term reads only its [len−1,
-    // len+1] sidecar bands, a small fraction of the vocabulary
+    // len+1] sidecar bands, a small fraction of the vocabulary. The
+    // probe's band must hold rows ('customer', 8 letters), or a band
+    // that reads nothing would pass the bound vacuously
     val vocab = cat.indexDictionary("ftz", "ft", "fulltext").count()
-    val (_, bandRows) = cat.driverFtFuzzyStats("ftz", "ft",
-      "streamings", 1, 100000)
+    val (bandHits, bandRows) = cat.driverFtFuzzyStats("ftz", "ft",
+      "customers", 1, 100000)
+    assert(bandRows > 0 && bandHits.nonEmpty,
+      s"the probe's band read $bandRows rows and matched $bandHits")
     assert(bandRows.toLong * 3 < vocab,
       s"band seek read $bandRows of $vocab dictionary rows")
     // zero Spark jobs on the warm fuzzy path

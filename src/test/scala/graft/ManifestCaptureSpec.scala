@@ -286,6 +286,33 @@ class ManifestCaptureSpec extends AnyFunSuite {
     assert(cat.table("np").df.count() == 100L)
   }
 
+  test("a merge batch with a null on a later primary-key column is refused; the version stays") {
+    // KvTable.upsert's equi-join never matches a null second key: an
+    // accepted (1, null) merged twice would leave two rows with one key
+    val cat = freshCat("nullpk2")
+    val schema = StructType(Seq(
+      StructField("a", LongType, true), StructField("b", StringType, true),
+      StructField("v", StringType, true)))
+    cat.createTable("np2", schema, Seq("a", "b"))
+    def rows(rs: Seq[Row]): DataFrame = spark.createDataFrame(rs.asJava, schema)
+    cat.bulkLoad("np2", rows((0L until 50L).map(a => Row(a, s"b$a", "x"))))
+    val v = cat.dataVersionOf("np2")
+    def refused(what: String)(merge: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](merge)
+      assert(e.getMessage.contains("may not be null"), s"$what: ${e.getMessage}")
+      assert(cat.dataVersionOf("np2") == v, s"a refused $what moved the version")
+    }
+    refused("incrementalMerge")(cat.incrementalMerge("np2", rows(Seq(Row(1L, null, "a")))))
+    refused("incrementalMergeRows")(
+      cat.incrementalMergeRows("np2", Array(Row(2L, "b2", "y"), Row(1L, null, "b"))))
+    refused("under-bound merge")(cat.incrementalMergeIfNonEmpty("np2",
+      rows(Seq(Row(2L, "b2", "y"), Row(1L, null, "a")))))
+    refused("over-bound merge")(cat.incrementalMergeIfNonEmpty("np2",
+      rows((100L until 120L).map(a => Row(a, "k", "p")) :+ Row(1L, null, "b")),
+      maxIncrementalKeys = 8))
+    assert(cat.table("np2").df.count() == 50L)
+  }
+
   test("a driver multi-get of 20k keys serves without overflowing the filter tree") {
     val cat = freshCat("bigget")
     cat.createTable("bg", keyed(LongType, 1).schema, Seq("k"))
