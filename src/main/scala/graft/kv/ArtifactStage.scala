@@ -8,8 +8,8 @@ import scala.collection.JavaConverters._
   * [[IndexStack]]. Every writer of a version-numbered index artifact
   * (refresh, fold, CDC segment appends, graph builds) stages and
   * publishes through here; kv-index maintenance and table snapshots
-  * stage under the same roots and are renamed by the commit point
-  * ([[Catalog.publishVersion]], `commitTxn`) with [[moveIntoPlace]].
+  * stage under the same roots and are renamed by the one commit point
+  * ([[Commit]]) with [[moveIntoPlace]].
   *
   * The contract:
   *   - Grant-scoped staging. Artifacts are written under a fresh

@@ -51,7 +51,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * sharing one lease authority and a same-named table shared one
     * lease AND one authority-held commit pointer — the lower-versioned
     * warehouse's commitSwap then returned STALE with its durable meta
-    * behind, which publishVersion/commitTxn read as "a newer grant's
+    * behind, which the commit point read as "a newer grant's
     * commit in flight" and aborted permanently. Qualifying the
     * resource with the canonical warehouse path's digest gives each
     * warehouse its own lease + pointer namespace at any shared
@@ -78,7 +78,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * (never overwriting its own input), and old snapshots remain
     * readable until vacuumed. */
   private def dataDir(name: String): String =
-    tableDir(name).resolve(s"data_v${dataVersionOf(name)}").toString
+    snapshotDir(name, dataVersionOf(name)).toString
+
+  private def snapshotDir(name: String, version: Int): Path =
+    tableDir(name).resolve(s"data_v$version")
 
   private def readMeta(name: String): ObjectNode =
     mapper.readTree(Files.readString(metaFile(name))).asInstanceOf[ObjectNode]
@@ -106,136 +109,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     try f(s.iterator().asScala) finally s.close()
   }
 
-  /** Raw pointer exactly as recorded in the table's meta. ONLY for the
-    * recovery/heal paths, which must see the unoverlaid value to know
-    * whether a journaled bump still needs applying — resolving through
-    * [[dataVersionOf]] there would make the overlaid version look
-    * already-bumped and skip (then delete) the journal, reverting the
-    * table. */
-  private def metaVersionOf(name: String): Int =
-    readMeta(name).path("dataVersion").asInt(0)
-
   /** Live version as READERS must see it: the meta pointer overlaid
-    * with any committed-transaction journal entry for this table.
-    *
-    * The journal is the transaction's atomically-published commit
-    * record (written complete, via atomic rename, only after every
-    * snapshot is staged and CAS-checked; deleted only after every
-    * pointer bump landed). Resolving through it means ALL tables of a
-    * multi-table transaction become visible at the single instant the
-    * journal appears — a lock-free reader can never see table A at the
-    * post-image and table B at the pre-image because it caught the
-    * committer between two pointer bumps (reference semantics:
-    * KVTransactionalIndexTable.kt:14-52 — Tephra's transaction manager
-    * makes base+index+multi-table mutations visible atomically).
-    *
-    * Order matters: journals are scanned BEFORE the meta read. A
-    * commit deletes its journal only after every bump, so "no journal"
-    * observed first guarantees the meta read that follows sees the
-    * bump; the reverse order could catch table B's meta pre-bump and
-    * then miss the just-deleted journal — reviving the mixed window. */
-  def dataVersionOf(name: String): Int = {
-    val journaled = committedJournalVersions(name)
-    val base = metaVersionOf(name)
-    if (journaled.contains(base + 1) &&
-        Files.exists(tableDir(name).resolve(s"data_v${base + 1}")))
-      base + 1
-    else base
-  }
+    * with a committed transaction's pending journal entry
+    * ([[Commit.liveVersion]]). */
+  def dataVersionOf(name: String): Int = commits.liveVersion(name)
 
-  /** Journals live in a dedicated subdirectory so the hot-path
-    * overlay probe is O(1): [[dataVersionOf]] runs on every lock-free
-    * version resolution, and listing the whole warehouse root (one
-    * entry per table) there would make a point read pay O(tables)
-    * dirents. This directory is absent or empty except in the
-    * instants a commit is in flight or a committer crashed. Journals
-    * written at the warehouse ROOT by pre-subdir builds are still
-    * healed and recovered (those paths sweep both locations) — only
-    * the read overlay skips them, degrading a legacy pending journal
-    * to pre-overlay visibility until recovery runs. */
-  private def txnDir: Path = Paths.get(warehouse, "_graft_txn")
-
-  /** `next` versions journaled for `name` by committed transactions. */
-  private def committedJournalVersions(name: String): Set[Int] =
-    (pendingJournals(txnDir) ++ legacyRootJournals()).flatMap {
-      case (_, Some(entries)) =>
-        entries.collect { case (t, v) if t == name => v }
-      case _ => Nil // corrupt: recoverTransactions quarantines
-    }.toSet
-
-  /** Pre-subdir builds wrote journals at the warehouse ROOT. The root
-    * is scanned on the FIRST overlay resolution per Catalog instance
-    * and stays in the scan set only while legacy journals remain — a
-    * crashed pre-upgrade multi-table commit keeps atomic visibility
-    * through the overlay without every resolution paying an O(tables)
-    * root listing. Once observed clean it stays clean: new journals
-    * are only ever written under [[txnDir]]. */
-  @volatile private var legacyRootMayHaveJournals = true
-  private def legacyRootJournals(): Seq[(Path, Option[Seq[(String, Int)]])] =
-    if (!legacyRootMayHaveJournals) Nil
-    else {
-      val js = pendingJournals(Paths.get(warehouse))
-      // A parse-corrupt legacy journal (entries None) contributes
-      // nothing to the overlay — committedJournalVersions skips it and
-      // only recoverTransactions (which scans the root itself, not via
-      // this flag) quarantines it. Keeping the flag up for corrupt-only
-      // residue would re-list the root and re-read/re-parse the corrupt
-      // file on EVERY lock-free version resolution until recovery runs.
-      if (js.forall(_._2.isEmpty)) { legacyRootMayHaveJournals = false; Nil }
-      else js
-    }
-
-  /** Pending transaction journals under `dir`, as
-    * (path, parsed-publishes or None-if-corrupt).
-    *
-    * Shared by the read overlay, the in-lock heal, and full recovery —
-    * ONE error policy for all three:
-    *   - absent dir → no journals;
-    *   - NoSuchFileException on read → the journal drained between
-    *     the listing and the read, so its bumps are already applied —
-    *     treated as absent (the delete-after-bump commit order makes
-    *     this safe);
-    *   - any OTHER IOException (EACCES/EMFILE/EIO) is retried briefly
-    *     and then THROWN: a caller that proceeded as if no journal
-    *     existed would overwrite a committed transaction's staged
-    *     snapshot (writers) or un-see a committed transaction
-    *     (readers) — failing the operation is the only safe answer;
-    *   - content read successfully but unparseable → entries None
-    *     (genuinely corrupt); recoverTransactions quarantines those,
-    *     every other caller skips them. */
-  private def pendingJournals(dir: Path): Seq[(Path, Option[Seq[(String, Int)]])] = {
-    if (!Files.exists(dir)) return Nil
-    val journals = withList(dir) { it =>
-      // .json suffix required: quarantined corrupt journals are renamed
-      // to .json.corrupt and must not be re-listed forever
-      it.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("_graft_txn_") && n.endsWith(".json")
-      }.toList
-    }
-    journals.flatMap { j =>
-      def read(attempt: Int): Option[String] =
-        try Some(Files.readString(j))
-        catch {
-          case _: java.nio.file.NoSuchFileException => None
-          case e: java.io.IOException =>
-            if (attempt >= 3)
-              throw new IllegalStateException(
-                s"transaction journal $j unreadable after ${attempt + 1} " +
-                "attempts — refusing to proceed as if the committed " +
-                "transaction did not exist", e)
-            Thread.sleep(10L << attempt)
-            read(attempt + 1)
-        }
-      read(0).map { text =>
-        val node = try mapper.readTree(text) catch { case _: Exception => null }
-        if (node == null) (j, None)
-        else (j, Some(node.path("publishes").elements().asScala.map { e =>
-          (e.path("table").asText(), e.path("next").asInt())
-        }.toList))
-      }
-    }
-  }
+  /** The commit point and the transaction journal ([[Commit]]); the
+    * meta I/O stays here. */
+  private val commits =
+    new Commit(Paths.get(warehouse), snapshotDir, readMeta, writeMeta)
 
   /** Reference: column names may not be `id` (reserved for the
     * implicit uuid primary key) — HBaseSchema.kt:112-117. */
@@ -444,34 +326,41 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
 
   /** THE full-rewrite commit: under the recovered write lock, stage
     * `post(current version)` as the next snapshot with its manifest,
-    * rebuild the kv indexes from it, and publish both behind the
-    * commit-point fence. `post` runs under the lock, so a post-image
-    * derived from the live snapshot (an upsert) reads the version it
-    * replaces; analytic indexes go stale by the documented rule. */
+    * rebuild the kv indexes from it, and publish both through the
+    * commit point. `post` runs under the lock, so a post-image derived
+    * from the live snapshot (an upsert) reads the version it replaces;
+    * analytic indexes go stale by the documented rule. */
   private def commitFullRewrite(name: String, partitions: Int = 0)
                                (post: Int => DataFrame): Unit =
-    withRecoveredWriteLock(name) {
+    withRecoveredWriteLocks(name) {
       val cur = dataVersionOf(name)
-      val rows = post(cur)
-      val next = cur + 1
-      val stage = newSnapshotStaging(name)
-      stageSnapshot(name, rows, stage, partitions)
-      val maint = maintainIndexes(name, next, stage, pre = None, post = None)
-      publishGuardingIndexAsOf(name, next,
-        Seq(stage -> tableDir(name).resolve(s"data_v$next")), maint)
+      commit(stageRewrite(name, cur + 1, post(cur), partitions))
     }
+
+  /** Stage `rows` as version `next` of `name` with its range manifest
+    * and its kv indexes rebuilt from it: one table's share of a full
+    * rewrite or of a transaction. */
+  private def stageRewrite(name: String, next: Int, rows: DataFrame,
+                           partitions: Int = 0): Commit.Publish = {
+    val stage = newSnapshotStaging(name)
+    stageSnapshot(name, rows, stage, partitions)
+    maintainIndexes(name, next, stage, pre = None, post = None)
+  }
 
   /** Grant-scoped unique staging dir for a table-snapshot write
     * ([[ArtifactStage]]'s root naming): every write path stages its
-    * heavy data write here and lets [[publishVersion]] rename it onto
-    * the version-numbered dir after the commit-point fence passes.
+    * heavy data write here and lets the commit point ([[Commit]])
+    * rename it onto the version-numbered dir after the fence passes.
     * Reads that target a staged dir (index rebuild's post-image scan, a
     * manifest capture's fallback scanRanges) work — Spark's hidden-path
     * filter applies to directory children during listing, not to an
     * explicitly given root. */
-  private def newSnapshotStaging(name: String,
-                                 handle: Option[LockProvider.Handle] = None): Path =
-    ArtifactStage.stagingRoot(tableDir(name), handle.orElse(heldWriteLock.value))
+  private def newSnapshotStaging(name: String): Path =
+    ArtifactStage.stagingRoot(tableDir(name), held(name))
+
+  /** Publish staged tables through the commit point, each under the
+    * write lock this thread holds for it. */
+  private def commit(ps: Commit.Publish*): Unit = commits.run(ps, held)
 
   /** Optimistic CAS for writers whose post-image derives from a pinned
     * snapshot: if another writer published in between, committing the
@@ -496,39 +385,45 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * can clobber the other's data_vN directory or lose the other's
     * bump. Readers never take the lock (snapshots are immutable once
     * published). */
-  private def withWriteLock[A](name: String, timeoutMs: Long = 600000L)(f: => A): A = {
-    val lock = acquireWriteLock(name, timeoutMs)
-    try heldWriteLock.withValue(Some(lock))(f) finally lock.release()
+  private def withWriteLock[A](name: String)(f: => A): A = {
+    val lock = lockProvider.acquire(lockResource(name), 600000L)
+    try heldWriteLocks.withValue(heldWriteLocks.value + (name -> lock))(f)
+    finally lock.release()
   }
 
-  /** The write lock the current thread's write path holds, visible to
-    * [[publishVersion]] so the commit point can fence on
-    * [[LockProvider.Handle.ensureValid]] — a lease-based lock lost to
-    * a pause (new owner writing concurrently) must fail the publish
-    * loudly, not swap the pointer over the new owner's work.
-    * Thread-bound like the lock itself; commitTxn fences its several
-    * handles explicitly before journaling instead. */
-  private val heldWriteLock =
-    new scala.util.DynamicVariable[Option[LockProvider.Handle]](None)
+  /** The write locks the current thread's write path holds, by table,
+    * so the commit point and every artifact stage fence on the handle
+    * of the table they write ([[held]]) — a lease lost to a pause (a
+    * new owner writing concurrently) must fail the write loudly, not
+    * publish over the new owner's work — and stage under that grant's
+    * roots. Thread-bound like the locks themselves. */
+  private val heldWriteLocks =
+    new scala.util.DynamicVariable[Map[String, LockProvider.Handle]](Map.empty)
 
-  /** THE single-table write-path preamble, expressed once: heal
-    * pending txn journals before taking the lock (a crashed
-    * post-journal commit is committed-by-design, and writing
+  private def held(name: String): Option[LockProvider.Handle] =
+    heldWriteLocks.value.get(name)
+
+  /** THE write-path lock scope, for one table or a transaction's
+    * several: heal pending txn journals before taking any lock (a
+    * crashed post-journal commit is committed-by-design, and writing
     * data_v(cur+1) would overwrite its staged snapshot and consume its
-    * version number), then RE-heal under the lock (a journal written
-    * while we waited on the lock owns data_v(cur+1) — without the
-    * re-heal, breaking a dead committer's lock would overwrite its
-    * committed staged snapshot). Every single-table write path
-    * (bulkLoad, incrementalMerge, compact, vacuum, upsertStaged's bulk
-    * branch, publishStaged) runs through here so a future fix to the
-    * heal ordering lands in one place; commitTxn holds several locks
-    * at once and keeps its own explicitly-ordered sequence. */
-  private def withRecoveredWriteLock[A](name: String)(f: => A): A = {
+    * version number), take the locks in sorted table order (two
+    * transactions can never deadlock), then RE-heal each table under
+    * its lock (a journal written while we waited owns data_v(cur+1) —
+    * without the re-heal, breaking a dead committer's lock would
+    * overwrite its committed staged snapshot, and a transaction's own
+    * journal could coexist with a pending one, which the one-step read
+    * overlay cannot bridge). Every write path that publishes a version
+    * runs `f` in here, and `f` ends in the commit point. */
+  private def withRecoveredWriteLocks[A](names: String*)(f: => A): A = {
     recoverTransactions()
-    withWriteLock(name) {
-      healPendingForLocked(name)
-      f
+    def lockAll(rest: List[String]): A = rest match {
+      case n :: tail => withWriteLock(n)(lockAll(tail))
+      case Nil =>
+        names.foreach(n => commits.heal(n, held(n)))
+        f
     }
+    lockAll(names.distinct.sorted.toList)
   }
 
   /** Target rows per output file for the incremental-merge rewrite's
@@ -541,14 +436,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   /** Target bytes per output file when a merge rewrites kv-index files
     * — the same 128 MB as [[compact]]'s default. */
   private val mergeTargetFileBytes: Long = 128L * 1024 * 1024
-
-  /** Bare acquire — for [[commitTxn]], which holds locks on SEVERAL
-    * tables at once (always acquired in sorted table order, so two
-    * concurrent transactions can't deadlock). Everything else uses the
-    * scoped [[withWriteLock]]. */
-  private def acquireWriteLock(name: String,
-                               timeoutMs: Long = 600000L): LockProvider.Handle =
-    lockProvider.acquire(lockResource(name), timeoutMs)
 
   /** Streaming-sink merge entry: ONE bounded job collects the patch's
     * distinct keys, decides emptiness (an empty patch commits NOTHING
@@ -645,7 +532,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * primary-key column. */
   def incrementalMerge(name: String, patch: DataFrame,
                        precollectedKeys: Option[Array[Any]] = None): Unit = {
-    withRecoveredWriteLock(name) {
+    withRecoveredWriteLocks(name) {
     import org.apache.spark.sql.functions.col
     val pk = primaryKeyOf(name)
     val keyCol = pk.head
@@ -655,13 +542,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         (precollectedKeys.isEmpty && pk.size > 1 && hasNullKey(patch, pk)))
       refuseNullKey(name, pk)
     val cur = dataVersionOf(name)
-    val curDir = tableDir(name).resolve(s"data_v$cur")
+    val curDir = snapshotDir(name, cur)
     val tableSchema = schemaOf(name)
     val keys = manifestKeys(name)
     val manifest = ensureRangeManifest(curDir, keyCol, keys.isDefined,
       keys.flatMap(_._2), schema = Some(tableSchema))
     val (touched, untouched) = splitByKeyIntersect(manifest, patchKeys)
-    val nextDir = tableDir(name).resolve(s"data_v${cur + 1}")
     val stage = newSnapshotStaging(name)
     val tableCols = tableSchema.fieldNames.toSeq
     val touchedDf =
@@ -711,14 +597,14 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // every base Put deletes the stale index row and writes the new
     // one): incremental when the touched entry set is bounded, else a
     // rebuild from the complete next snapshot
-    val maint = maintainIndexes(name, cur + 1, stage, pre = Some(kvPre), post = Some(kvPost))
+    val kv = maintainIndexes(name, cur + 1, stage, pre = Some(kvPre), post = Some(kvPost))
     // analytic flavors (fulltext/bitmap) stay fresh through CDC via
     // patch-sized segments + tombstones — the Lucene segment model
     // (reference index/lucene/LuceneIndexTable.kt: the Lucene writer
     // appends segments per commit; HBaseDirectory.kt persists them) —
     // never re-reading untouched corpus files
-    maintainAnalyticIndexes(name, cur + 1, post, pre)
-    publishGuardingIndexAsOf(name, cur + 1, Seq(stage -> nextDir), maint)
+    val analytic = maintainAnalyticIndexes(name, cur + 1, post, pre)
+    commit(kv.copy(asOf = kv.asOf ++ analytic))
   }
   }
 
@@ -1021,15 +907,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * Row set and per-file sort order are unchanged — only layout.
     * No-op when fewer than two small files exist. */
   def compact(name: String, targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    withRecoveredWriteLock(name) {
+    withRecoveredWriteLocks(name) {
       val cur = dataVersionOf(name)
-      val curDir = tableDir(name).resolve(s"data_v$cur")
+      val curDir = snapshotDir(name, cur)
       val files = withList(curDir) { it =>
         it.filter(_.getFileName.toString.startsWith("part-")).toList
       }
       val (big, small) = files.partition(f => Files.size(f) >= targetFileBytes)
       if (small.size > 1) {
-        val nextDir = tableDir(name).resolve(s"data_v${cur + 1}")
+        val nextDir = snapshotDir(name, cur + 1)
         val stage = newSnapshotStaging(name)
         val totalBytes = small.map(Files.size(_)).sum
         val parts = math.max(1,
@@ -1048,17 +934,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         big.foreach(src => linkOrCopy(src, stage.resolve(src.getFileName.toString)))
         written.foreach(w => writeRangeManifest(stage, w ++ carried))
         // compaction changes layout, not content: every index that was
-        // fresh at cur stays valid — carry its as-of forward, after
-        // clearing the version-(cur+1) artifacts a crashed earlier
+        // fresh at cur stays valid — its as-of moves with the pointer,
+        // after clearing the version-(cur+1) artifacts a crashed earlier
         // writer left (publishing cur+1 over them would make every
         // reader resolve never-committed content)
         val indexes = indexesOf(name)
         clearIndexArtifactsAt(name, indexes, cur + 1)
-        indexes.foreach { case (iname, ty, _) =>
-          if (indexStatus(name, iname, ty) == "FRESH")
-            setIndexAsOf(name, iname, ty, cur + 1)
-        }
-        publishVersion(name, cur + 1, staged = Seq(stage -> nextDir))
+        commit(Commit.Publish(name, cur + 1, Seq(stage -> nextDir),
+          indexes.collect { case (iname, ty, _)
+            if indexStatus(name, iname, ty) == "FRESH" => (iname, ty) }))
       }
     }
   }
@@ -1077,8 +961,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // not yet live — rolling them forward makes them live; skipping
     // this would let the sweep below reclaim dirs a journal still
     // needs, turning a recoverable transaction into a partial one
-    // (withRecoveredWriteLock's recover step does exactly that).
-    withRecoveredWriteLock(name) {
+    // (withRecoveredWriteLocks' recover step does exactly that).
+    withRecoveredWriteLocks(name) {
     val liveV = dataVersionOf(name) // one meta read for the whole sweep
     val live = s"data_v$liveV"
     val now = System.currentTimeMillis()
@@ -1185,7 +1069,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private def clearIndexArtifactsAt(name: String,
                                     indexes: Seq[(String, String, Seq[String])],
                                     v: Int): Unit = {
-    ArtifactStage.fence(heldWriteLock.value)
+    ArtifactStage.fence(held(name))
     for ((iname, ty, _) <- indexes; p <- IndexDirPrefixes)
       deleteRecursively(indexDir(name, iname, ty).resolve(s"$p$v"))
   }
@@ -1215,44 +1099,40 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * `patchRows` is the post-image of the patched keys (upsert
     * semantics: the patch row IS the new row); `preRows` the
     * pre-image of those keys from the touched files (already being
-    * read by the merge — no extra corpus I/O). */
+    * read by the merge — no extra corpus I/O). Returns the indexes
+    * whose as-of the commit moves to `next`. */
   private def maintainAnalyticIndexes(name: String, next: Int,
                                       patchRows: DataFrame,
-                                      preRows: DataFrame): Unit = {
+                                      preRows: DataFrame): Seq[(String, String)] = {
     import org.apache.spark.sql.functions._
     val analytic = indexesOf(name).filter(i =>
       i._2.equalsIgnoreCase("fulltext") || i._2.equalsIgnoreCase("bitmap") ||
         i._2.equalsIgnoreCase("vector"))
-    if (analytic.isEmpty) return
+    if (analytic.isEmpty) return Nil
     val rk = primaryKeyOf(name).head
     // crashed-attempt healing: a prior merge toward this SAME `next`
-    // may have appended its segments (or an auto-fold's base) and
-    // bumped as-of, then died before the table pointer bump. Those
-    // artifacts describe a patch that never published — kept, the
-    // freshness gate below would skip THIS attempt's patch and the
-    // publish would serve the dead attempt's segments as FRESH. They
-    // go unconditionally (this attempt has written nothing yet), and
-    // as-of == next is restored to next-1 (stale indexes are excluded
-    // by the gate and never bumped).
+    // may have appended its segments (or an auto-fold's base), then
+    // died before the commit. Those artifacts describe a patch that
+    // never published — kept, the publish would serve the dead
+    // attempt's segments beside this one's. They go unconditionally
+    // (this attempt has written nothing yet).
     clearIndexArtifactsAt(name, analytic, next)
-    analytic.foreach { case (iname, ty, _) =>
-      if (indexAsOfVersion(name, iname, ty) == next)
-        setIndexAsOf(name, iname, ty, next - 1)
-    }
     // a segment only extends an index that was CURRENT before this
     // merge: an index already stale (it missed a bulk write, which
     // has no bounded patch) must stay stale at its old as-of —
     // appending this patch and freshening would silently hide the
-    // missed content until someone noticed wrong search results
+    // missed content until someone noticed wrong search results. An
+    // as-of above next-1 is a dead attempt's bump from a build that
+    // persisted it ahead of the pointer: current at next-1 as well.
     analytic.filter { case (iname, ty, _) =>
-      indexAsOfVersion(name, iname, ty) == next - 1
-    }.foreach { case (iname, ty, cols) =>
+      indexAsOfVersion(name, iname, ty) >= next - 1
+    }.map { case (iname, ty, cols) =>
       val dir = indexDir(name, iname, ty)
-      // the segments take their names here, not at publishVersion: the
+      // the segments take their names here, not at the commit: the
       // auto-fold below must see this batch's segments to fold them.
       // Version-`next` layers stay invisible to readers until the table
       // pointer reaches `next`, so their rename order is free.
-      ArtifactStage.run(dir, heldWriteLock.value) { stage =>
+      ArtifactStage.run(dir, held(name)) { stage =>
         val c = cols.head
         ty.toUpperCase match {
           case "FULLTEXT" =>
@@ -1369,7 +1249,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         .map(_.toInt).getOrElse(8)
       if (IndexStack.at(dir, next).segments("seg_v").size >= autoFold)
         foldIndexStack(name, iname, ty, next): Unit
-      setIndexAsOf(name, iname, ty, next)
+      (iname, ty)
     }
   }
 
@@ -1428,10 +1308,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       case "BITMAP" => Nil
       case _ => Seq("cent", "vmeta", "graph") // vector (kv never has a delta)
     }
-    ArtifactStage.fence(heldWriteLock.value)
+    ArtifactStage.fence(held(table))
     orphans.foreach(n => deleteRecursively(dir.resolve(s"${n}_v$upTo")))
     val st = IndexStack.at(dir, upTo)
-    ArtifactStage.run(dir, heldWriteLock.value) { stage =>
+    ArtifactStage.run(dir, held(table)) { stage =>
       indexType.toUpperCase match {
         case "FULLTEXT" =>
           val foldedDict = dictSegView(st)
@@ -1570,7 +1450,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
 
   /** Read a specific historical snapshot (time travel). */
   def tableAt(name: String, version: Int): KvTable =
-    KvTable(spark.read.parquet(tableDir(name).resolve(s"data_v$version").toString),
+    KvTable(spark.read.parquet(snapshotDir(name, version).toString),
       primaryKeyOf(name))
 
   def table(name: String): KvTable =
@@ -1637,7 +1517,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * a pre-merge index with a post-merge base). */
   private def driverMultiGetAt(name: String, keys: Seq[Seq[Any]],
                                version: Int): Seq[Row] = {
-    val dir = tableDir(name).resolve(s"data_v$version")
+    val dir = snapshotDir(name, version)
     val mf = readManifestJson(dir).getOrElse(Nil)
     val ranges = mf.map(r => (r.file, r.lo, r.hi))
     // per-file rowkey blooms (when the manifest carries them): a miss
@@ -1674,7 +1554,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         (if (layout == "zorder" && pk.size == 2)
           s" or the z-ordered second key '${pk(1)}'" else "") +
         s" — not '$c'; use the Spark scan path (table(\"$name\").df)")
-    val dir = tableDir(name).resolve(s"data_v${dataVersionOf(name)}")
+    val dir = snapshotDir(name, dataVersionOf(name))
     // both z dimensions serve from the ONE manifest read: leading
     // bounds for pk.head, the recorded second-key bounds for the
     // z-second column (written by the merge path at no extra pass).
@@ -2536,7 +2416,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * version it was loaded at, so one SQL statement reads one
     * consistent snapshot even while writers publish new ones). */
   def dataPathAt(name: String, version: Int): String =
-    tableDir(name).resolve(s"data_v$version").toString
+    snapshotDir(name, version).toString
 
   /** Newest still-present snapshot version whose recorded publish time
     * is at or before `cutoffMs`, capped at the published pointer — the
@@ -2662,21 +2542,19 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   //     snapshot at first touch (repeatable reads, no locks held);
   //   - writes buffer as derived post-images (read-your-writes within
   //     the transaction, nothing visible outside it);
-  //   - COMMIT takes the write locks of all written tables in sorted
-  //     name order (no deadlocks), CAS-checks every written table is
-  //     still at its pinned version (write-write conflict → the whole
-  //     transaction fails, nothing published), stages every post-image
-  //     snapshot + its kv-index maintenance, then writes one intent
-  //     journal and flips all version pointers.
-  // The journal is what makes the multi-table pointer flip crash-safe:
-  // everything heavy happens BEFORE the journal (a crash there leaves
-  // only unpublished garbage directories — vacuum reclaims them), and
-  // after the journal only metadata bumps remain, which
-  // [[recoverTransactions]] rolls FORWARD (each bump CAS-guarded, so
-  // replay is idempotent). Readers between partial bumps can observe
-  // table A committed while table B isn't yet — the same window
-  // Tephra closes with a central transaction manager; the journal
-  // bounds it to a crash + recovery, never silent loss.
+  //   - COMMIT takes the write locks of all written tables in the one
+  //     lock scope every write path uses (sorted, healed), CAS-checks
+  //     every written table is still at its pinned version (write-write
+  //     conflict → the whole transaction fails, nothing published),
+  //     stages every post-image snapshot + its kv-index maintenance,
+  //     and publishes all of them in ONE commit ([[Commit]]).
+  // With more than one table the commit writes a journal after the
+  // fence pass and the renames, then moves each pointer (with its
+  // as-of bumps) through a freshly fenced one-table publish. Readers overlay the journal ([[dataVersionOf]]), so
+  // every table turns visible at the instant it appears; everything
+  // heavy happens before it (a crash there leaves only unpublished
+  // garbage that vacuum reclaims), and a crash after it is rolled
+  // FORWARD by [[recoverTransactions]] and the in-lock heal.
   // ------------------------------------------------------------------
 
   /** Run `f` as one multi-statement transaction and commit its writes
@@ -2713,275 +2591,29 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Commit body: locks (sorted) → CAS all → stage all → journal →
-    * bump all. Package-private for [[Txn]]. */
-  private[kv] def commitTxn(writes: Seq[(String, DataFrame, Int)]): Unit = {
-    if (writes.isEmpty) return
-    val ordered = writes.sortBy(_._1)
-    val locks = scala.collection.mutable.ListBuffer[LockProvider.Handle]()
-    val lockFor = scala.collection.mutable.Map[String, LockProvider.Handle]()
-    val stagedDirs = scala.collection.mutable.ListBuffer[Path]()
-    val renamedDsts = scala.collection.mutable.ListBuffer[Path]()
-    val indexRollbacks = scala.collection.mutable.ListBuffer[() => Unit]()
-    var journal: Option[Path] = None
-    try {
-      ordered.foreach { case (t, _, _) =>
-        val h = acquireWriteLock(t); locks += h; lockFor(t) = h
-      }
-      // In-lock heal BEFORE the CAS (like every other write path): a
-      // crashed committer's pending journal (next = base+1) must be
-      // rolled forward now, or this commit's own journal (next = base+2)
-      // would coexist with it — and the one-step read overlay in
-      // dataVersionOf can only bridge a single pending bump, so readers
-      // would resolve this table at the new txn's pre-image while its
-      // other tables already show the post-image. Healing here
-      // guarantees at most one pending journal per table ever exists.
-      ordered.foreach { case (t, _, _) => healPendingForLocked(t, lockFor.get(t)) }
-      // conflict-check EVERY table before staging ANY write: a failed
-      // CAS must leave all tables untouched. Post-heal, dataVersionOf
-      // has no overlay left to apply for these tables, so the CAS runs
-      // against the converged on-disk version.
-      ordered.foreach { case (t, _, pinned) =>
-        checkExpected(t, dataVersionOf(t), Some(pinned))
-      }
-      val publishes = ordered.map { case (t, post, pinned) =>
-        val next = pinned + 1
-        val dst = tableDir(t).resolve(s"data_v$next")
-        val stage = newSnapshotStaging(t, lockFor.get(t))
-        stageSnapshot(t, post, stage)
-        stagedDirs += stage
-        // index maintenance stages index data_v(next) dirs AND persists
-        // asOfVersion=next — both must unwind on a pre-journal abort,
-        // or a later compact() publishing the same version number would
-        // serve index content from this never-committed transaction.
-        // Registered BEFORE maintenance so a mid-maintenance failure
-        // (some indexes done, some not) also rolls back.
-        val prevAsOf = indexesOf(t).filter(_._2.equalsIgnoreCase("kv"))
-          .map { case (iname, ty, _) =>
-            (iname, ty, indexAsOfVersion(t, iname, ty)) }
-        indexRollbacks += { () =>
-          prevAsOf.foreach { case (iname, ty, v) =>
-            val d = indexDir(t, iname, ty).resolve(s"data_v$next")
-            if (Files.exists(d)) deleteRecursively(d)
-            setIndexAsOf(t, iname, ty, v)
-          }
-        }
-        // the tuple's prevAsOf is unused here: the txn path registered
-        // its own indexRollbacks above (they also delete renamed dirs)
-        val idxRenames = maintainIndexes(t, next, stage,
-          pre = None, post = None).renames
-        stagedDirs ++= idxRenames.map(_._1)
-        (t, next, (stage -> dst) +: idxRenames)
-      }
-      // the journal is THE txn commit point (recovery rolls forward
-      // from it, so a journal written by a lapsed holder would be
-      // replayed over the new owner's work even though publishVersion
-      // fences): fence every held lease HERE, and at the AUTHORITY —
-      // commitSwap atomically proves each grant is still the
-      // resource's current one inside the authority's serialization
-      // AND claims each table's next version number at the
-      // authority-held commit pointer, rejecting this committer the
-      // moment a newer grant exists and preventing any newer grant
-      // from ever allocating ONTO these numbers. ensureValid alone is
-      // check-then-act; the conditional swap shrinks the residual to
-      // a lapse strictly between this line and the journal rename
-      // (closable only by conditional writes on the journal store
-      // itself). Superseded (pointer already past `next` with the
-      // durable meta behind — a newer commit in flight) aborts
-      // pre-journal, unwinding cleanly through the catch below.
-      locks.foreach(_.ensureValid())
-      publishes.foreach { case (t, next, _) =>
-        lockFor(t).commitSwap(next.toLong) match {
-          case LockProvider.Superseded(cur) =>
-            throw new IllegalStateException(
-              s"fencing: authority commit pointer for $t is already at $cur, " +
-              s"past this transaction's $next — a newer grant committed; " +
-              "aborting before the journal")
-          case _ => ()
-        }
-      }
-      // pre-rename epoch guard — publishVersion's fenceEpoch compare,
-      // hoisted to BEFORE any final name is touched: a committer that
-      // paused past its lease between the swaps above and here (the
-      // authority re-affirms the number to the NEW current grant, which
-      // then commits and stamps its higher epoch into the meta) must
-      // abort with every byte still in grant-scoped staging — renaming
-      // first would replace the new owner's published snapshot before
-      // the re-affirm below could reject this holder. Token-less
-      // grants (epoch 0) skip, as everywhere.
-      publishes.foreach { case (t, _, _) =>
-        val tok = lockFor(t).fencingToken
-        if (tok > 0L) {
-          val seen = readMeta(t).path("fenceEpoch").asLong(0L)
-          if (tok < seen)
-            throw new IllegalStateException(
-              s"fencing: grant epoch $tok for $t is behind published epoch " +
-              s"$seen — a newer writer committed while this transaction " +
-              "staged; aborting before touching any final name")
-        }
-      }
-      // post-fence materialization ([[ArtifactStage]] staging).
-      // Recovery's "staged dir exists" check keys off these dirs, so
-      // they must land BEFORE the journal. dsts tracked for the
-      // pre-journal unwind.
-      publishes.foreach { case (_, _, renames) =>
-        renames.foreach { case (src, dstDir) =>
-          ArtifactStage.moveIntoPlace(src, dstDir)
-          renamedDsts += dstDir
-        }
-      }
-      // JOURNAL-SWAP fence: the journal is the cross-table atomic
-      // visibility point (recovery rolls it forward), so the same
-      // conditioned-commit rule publishVersion applies one level down
-      // must hold here one level up — a holder that lapsed anywhere
-      // between the per-table commitSwaps above and this line must
-      // LOSE before the journal takes its final name, or its journal
-      // would be replayed over a newer grant's committed work.
-      // Re-affirming each table's claimed number at the authority is
-      // the idempotent same-number swap (the grant check inside the
-      // authority's monitor is the fence; Superseded means a newer
-      // commit passed our claim — abort pre-journal, unwinding through
-      // the catch below). The residual shrinks to a lapse strictly
-      // between this loop and the journal rename — the same
-      // microsecond class as publishVersion's swap→meta window,
-      // closable only by conditional writes on the journal store
-      // itself. ConcurrencySpec pins the paused-committer race.
-      publishes.foreach { case (t, next, _) =>
-        lockFor(t).commitSwap(next.toLong) match {
-          case LockProvider.Superseded(cur) =>
-            throw new IllegalStateException(
-              s"fencing: authority commit pointer for $t moved to $cur past " +
-              s"this transaction's $next while it staged — a newer grant " +
-              "committed; aborting before the journal")
-          case _ => ()
-        }
-      }
-      journal = Some(writeTxnJournal(publishes.map { case (t, n, _) => (t, n) }))
-      publishes.foreach { case (t, next, _) => publishVersion(t, next, lockFor.get(t)) }
-      // best-effort: once every pointer is bumped the transaction IS
-      // committed — a failed unlink must not surface as a commit
-      // failure. The orphan journal is harmless (recovery re-reads it,
-      // every bump CAS-skips, then deletes it).
-      journal.foreach { j =>
-        try Files.deleteIfExists(j): Unit
-        catch { case _: java.io.IOException => () }
-      }
-    } catch {
-      case e: Throwable =>
-        // pre-journal failure: the transaction never happened — reclaim
-        // the staged snapshots and restore index state. Post-journal
-        // failure: leave everything for recoverTransactions to roll
-        // forward.
-        if (journal.isEmpty) {
-          indexRollbacks.foreach { r =>
-            try r() catch { case _: Exception => () }
-          }
-          (stagedDirs ++ renamedDsts).foreach { d =>
-            try deleteRecursively(d)
-            catch { case _: java.io.IOException => () }
-          }
-        }
-        throw e
-    } finally locks.foreach(_.release())
-  }
-
-  private def writeTxnJournal(publishes: Seq[(String, Int)]): Path = {
-    val id = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val node = mapper.createObjectNode()
-    val arr = mapper.createArrayNode()
-    publishes.foreach { case (t, v) =>
-      val e = mapper.createObjectNode()
-      e.put("table", t); e.put("next", v)
-      arr.add(e): Unit
-    }
-    node.set[JsonNode]("publishes", arr): Unit
-    // temp + atomic rename: a journal is either fully present or absent
-    Files.createDirectories(txnDir)
-    val tmp = txnDir.resolve(s".txn_$id.tmp")
-    val fin = txnDir.resolve(s"_graft_txn_$id.json")
-    Files.writeString(tmp, mapper.writeValueAsString(node))
-    Files.move(tmp, fin, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    fin
-  }
-
-  /** In-lock journal heal: roll forward any journaled pointer bump for
-    * ONE table whose write lock the caller ALREADY HOLDS. This closes
-    * the gap the entry-point `recoverTransactions()` can't: a writer
-    * heals, then BLOCKS on the table lock; while it waits, a
-    * transaction journals its commit and dies mid-bump; the writer
-    * then breaks the stale lock — without this re-check it would read
-    * the pre-bump version and overwrite the committed transaction's
-    * staged snapshot. Journals are left in place (other tables' bumps
-    * may still be pending); the next full recovery CAS-skips the bump
-    * done here and deletes them. */
-  private def healPendingForLocked(
-      name: String, handle: Option[LockProvider.Handle] = None): Unit =
-    // both locations: a legacy pending journal at the warehouse root
-    // also owns data_v(next) and must not be overwritten
-    (pendingJournals(txnDir) ++ pendingJournals(Paths.get(warehouse))).foreach {
-      case (_, Some(entries)) => entries.foreach { case (t, next) =>
-        // RAW meta version: dataVersionOf overlays this very journal,
-        // which would make the bump look already applied
-        if (t == name && metaVersionOf(name) == next - 1 &&
-            Files.exists(tableDir(name).resolve(s"data_v$next")))
-          publishVersion(name, next, handle)
-      }
-      case _ => () // corrupt: full recovery quarantines
+  /** Commit body: lock scope → CAS all → stage all → one commit.
+    * Post-heal, dataVersionOf has no overlay left to apply for these
+    * tables, so the CAS runs against the converged on-disk version, and
+    * it runs for EVERY table before ANY write is staged. Package-private
+    * for [[Txn]]. */
+  private[kv] def commitTxn(writes: Seq[(String, DataFrame, Int)]): Unit =
+    if (writes.nonEmpty) withRecoveredWriteLocks(writes.map(_._1): _*) {
+      writes.foreach { case (t, _, pinned) =>
+        checkExpected(t, dataVersionOf(t), Some(pinned)) }
+      commit(writes.sortBy(_._1).map { case (t, post, pinned) =>
+        stageRewrite(t, pinned + 1, post) }: _*)
     }
 
-  /** Roll forward any transaction that crashed between its intent
-    * journal and its last pointer bump. Idempotent and concurrent-safe:
-    * each bump re-checks, under the table's write lock, that the table
-    * is exactly one version behind the journal entry AND the staged
-    * snapshot directory exists — anything else (already bumped, or a
-    * writer advanced past after breaking the dead owner's lock) is
-    * skipped. Runs automatically at the start of every
-    * [[transaction]]. */
-  def recoverTransactions(): Unit = {
-    val wh = Paths.get(warehouse)
-    if (!Files.exists(wh)) return
-    // both locations: the journal subdir plus the warehouse root for
-    // journals written by pre-subdir builds. Error policy (incl. the
-    // transient-IOException retry-then-throw stance) lives in
-    // pendingJournals — a journal this recovery cannot read must fail
-    // the caller, not be treated as drained.
-    (pendingJournals(txnDir) ++ pendingJournals(wh)).foreach {
-      case (j, None) =>
-        // corrupt content: quarantine so every future transaction and
-        // vacuum doesn't re-read and re-parse it forever (the .corrupt
-        // suffix drops it from the listing)
-        try Files.move(j, j.resolveSibling(j.getFileName.toString + ".corrupt"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        catch { case _: java.io.IOException => () }
-      case (j, Some(entries)) =>
-        entries.foreach { case (t, next) =>
-          if (tableExists(t)) withWriteLock(t) {
-            // RAW meta version (see healPendingForLocked): the
-            // overlay would hide that this bump is still pending
-            if (metaVersionOf(t) == next - 1 &&
-                Files.exists(tableDir(t).resolve(s"data_v$next")))
-              publishVersion(t, next)
-          }
-        }
-        Files.deleteIfExists(j): Unit
-    }
-    // age out journal residue nothing will ever read again: .tmp files
-    // orphaned by a crash between writeString and the atomic move, and
-    // quarantined .corrupt journals (kept a week as operator evidence)
-    val now = System.currentTimeMillis()
-    Seq(txnDir, wh).filter(Files.exists(_)).flatMap { d =>
-      withList(d) { it =>
-        it.filter { p =>
-          val n = p.getFileName.toString
-          val age = now - (try Files.getLastModifiedTime(p).toMillis
-            catch { case _: java.io.IOException => now })
-          (n.startsWith(".txn_") && n.endsWith(".tmp") && age > 3600000L) ||
-            (n.startsWith("_graft_txn_") && n.endsWith(".corrupt") &&
-              age > 7L * 24 * 3600000L)
-        }.toList
-      }
-    }.foreach(p => Files.deleteIfExists(p): Unit)
-  }
+  /** Roll any transaction that crashed between its journal and its
+    * last pointer move forward ([[Commit.recover]]). Idempotent and
+    * concurrent-safe: each entry re-checks under its table's write
+    * lock that it is still pending. Runs at the start of every write
+    * path and [[transaction]]. */
+  def recoverTransactions(): Unit =
+    commits.recover(p =>
+      if (tableExists(p.table)) withWriteLock(p.table) {
+        commits.rollForward(p, held(p.table))
+      })
 
   def schemaOf(name: String): StructType = {
     val cols = readMeta(name).path("columns").asInstanceOf[ArrayNode]
@@ -3396,7 +3028,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       import org.apache.spark.sql.functions.col
       val bv = IndexStack.at(dir, dataVersionOf(table)).baseVer
       val view = indexData(table, indexName, "vector")
-      ArtifactStage.run(dir, heldWriteLock.value) {
+      ArtifactStage.run(dir, held(table)) {
         _.stage(s"graph_v$bv") { p =>
           writeGraph(graft.similarity.Hnsw.buildGraph(
             view.select(col("cluster"), col("rk"), col("v")), m), m, p)
@@ -3576,7 +3208,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     writeMeta(table, meta)
   }
 
-  /** Bring every registered kv index to `next`. With a bounded
+  /** The publish of the staged snapshot `nextDataDir` as `next`, with
+    * every registered kv index brought to it: the snapshot's and each
+    * index's rename, and the kv as-of bumps. With a bounded
     * pre/post image of the touched rows the index patch is itself
     * file-granular (stale entries anti-joined out of intersecting
     * index files by exact (ik..., rk) tuple, untouched index files
@@ -3586,23 +3220,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * table-sized. Analytic flavors are left stale on purpose. */
   private def maintainIndexes(name: String, next: Int, nextDataDir: Path,
                               pre: Option[DataFrame], post: Option[DataFrame],
-                              maxEntryKeys: Int = 100000): IndexMaintenance = {
+                              maxEntryKeys: Int = 100000): Commit.Publish = {
     val kvIndexes = indexesOf(name).filter(_._2.equalsIgnoreCase("kv"))
-    if (kvIndexes.isEmpty) return IndexMaintenance(Nil, Nil)
-    // pre-bump as-of snapshot, so a publish that is FENCED OUT can
-    // restore the registry: the bump below persists asOfVersion=next
-    // before publishVersion's fence/rename, and a holder that never
-    // materializes data_v(next) must not leave the registry claiming
-    // freshness at a version a later compact() could re-mint
-    val prevAsOf = kvIndexes.map { case (iname, ty, _) =>
-      (iname, ty, indexAsOfVersion(name, iname, ty)) }
     lazy val fullPost = spark.read.schema(schemaOf(name)).parquet(nextDataDir.toString)
     val renames = kvIndexes.map { case (iname, ty, cols) =>
       val dir = indexDir(name, iname, ty)
       val ikCols = ikColsOf(cols.size)
       // staged like an index artifact ([[ArtifactStage]]), renamed by
       // the commit point with the table snapshot
-      val nextIdxDir = ArtifactStage.stagingRoot(dir, heldWriteLock.value)
+      val nextIdxDir = ArtifactStage.stagingRoot(dir, held(name))
       val finalIdxDir = dir.resolve(s"data_v$next")
       val incremental = (pre, post) match {
         case (Some(p), Some(q)) =>
@@ -3662,43 +3288,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       }
       if (!incremental)
         writeKvIndex(kvEntriesOf(name, fullPost, cols), cols, nextIdxDir)
-      setIndexAsOf(name, iname, ty, next)
       nextIdxDir -> finalIdxDir
     }
-    IndexMaintenance(renames, prevAsOf)
+    Commit.Publish(name, next,
+      (nextDataDir -> snapshotDir(name, next)) +: renames,
+      kvIndexes.map { case (iname, ty, _) => (iname, ty) })
   }
-
-  /** Output of [[maintainIndexes]]: the grant-scoped staged-dir →
-    * final-name renames for [[publishVersion]], plus the pre-bump
-    * as-of registry values for [[publishGuardingIndexAsOf]]'s
-    * fence-failure rollback. */
-  private case class IndexMaintenance(renames: Seq[(Path, Path)],
-                                      prevAsOf: Seq[(String, String, Int)])
-
-  /** Publish `next` with the kv-index as-of bumps UNWOUND on a throw
-    * (the single-table analog of commitTxn's indexRollbacks): a
-    * holder fenced out at publish would otherwise leave
-    * asOfVersion=next with no data_v(next) index artifact ever
-    * materialized — a later compact() publishing the same version
-    * number would then make the registry claim freshness at `next`
-    * while resolution silently falls back to the older dir. The
-    * restore is guarded: only while the durable table version is
-    * still BEHIND `next` and the registry still carries this
-    * attempt's bump — if a new owner published `next` in the
-    * meantime, the claim is its own (correct) maintenance, not ours
-    * to unwind. */
-  private def publishGuardingIndexAsOf(name: String, next: Int,
-      staged: Seq[(Path, Path)], maint: IndexMaintenance): Unit =
-    try publishVersion(name, next, staged = staged ++ maint.renames)
-    catch {
-      case e: Throwable =>
-        try maint.prevAsOf.foreach { case (iname, ty, v) =>
-          if (metaVersionOf(name) < next &&
-              indexAsOfVersion(name, iname, ty) == next)
-            setIndexAsOf(name, iname, ty, v)
-        } catch { case _: Exception => () } // best-effort under a lost grant
-        throw e
-    }
 
   /** Rebuild one index at the live version (any flavor) — the SQL
     * surface is `CALL <cat>.system.refresh_index(...)`. The analytic
@@ -3724,7 +3319,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       // the moment a dir appears: the whole set stages, then publishes
       // behind the fence with the data base last. Rebuilt with the
       // index's own analyzer.
-      ArtifactStage.run(dir, heldWriteLock.value) { stage =>
+      ArtifactStage.run(dir, held(table)) { stage =>
         withIndexArtifacts(table, ty, cols, this.table(table).df,
             indexAnalyzer(table, indexName), graphM) {
           _.foreach { case (n, w) => stage.stage(s"${n}_v$cur")(w) }
@@ -3745,177 +3340,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   private def indexDir(table: String, indexName: String, indexType: String): Path =
     Paths.get(warehouse, s"$table.${indexType.toLowerCase}.$indexName")
 
-  /** Flip the version pointer AND record the publish wall-clock in the
-    * same meta write. `TIMESTAMP AS OF` resolves from this map, not
-    * directory mtimes.
-    *
-    * Invariant: a table snapshot or kv-index version is published
-    * together with its range manifest (`_graft_ranges.json`, written
-    * into the staged dir by the write job's capture before this
-    * rename) and nothing writes into it after publish — except the
-    * heal path ([[ensureRangeManifest]] rebuilding a legacy or corrupt
-    * manifest), whose mtime bump the recorded publish time keeps from
-    * shifting the snapshot's apparent publish time. */
+  /** Publish `version` of `table` with nothing staged: the
+    * single-table roll-forward entry into the commit point
+    * ([[Commit.run]]), under `handle` or the write lock this thread
+    * holds. A version at or below the pointer is a replay. */
   private[graft] def publishVersion(table: String, version: Int,
-                                    handle: Option[LockProvider.Handle] = None,
-                                    staged: Seq[(Path, Path)] = Nil): Unit = {
-    val h = handle.orElse(heldWriteLock.value)
-    // commit-point fence: prove the lock is still ours BEFORE the
-    // pointer swap (no-op for providers whose locks can't lapse)
-    h.foreach(_.ensureValid())
-    // CONDITIONAL COMMIT SWAP at the authority (the CommitStore seam,
-    // throws when this grant is superseded): in one serialized
-    // authority action the grant is fenced AND the authority-held
-    // commit pointer advances to `version` — the fence and the
-    // pointer move can no longer be split by a holder pause, so a
-    // holder that lapses after this line has already serialized its
-    // claim on the version number: any newer grant's swap lands
-    // STRICTLY after it in the authority's monitor and allocates past
-    // it, never onto it. Superseded (pointer already above `version`)
-    // is not thrown — with the durable meta also at/above `version`
-    // it is the legitimate replay (graceful skip below); with the
-    // meta behind, a newer grant's commit is in flight and this
-    // holder aborts before touching any final name. Providers without
-    // an authority (file locks, in-process) return NoAuthority and
-    // rely on the meta compare alone — for them the lock itself
-    // cannot lapse, so the compare is already race-free under it.
-    val swapRes = h.map(_.commitSwap(version.toLong))
-    val authoritySuperseded = swapRes.exists {
-      case LockProvider.Superseded(_) => true
-      case _ => false
-    }
-    // true iff the authority says WE claimed this version number first
-    // (pointer advanced from below it) — used to tell a legitimate
-    // replay from a number stolen while this holder paused post-claim
-    val claimedFirst = swapRes.exists {
-      case LockProvider.Committed(prev) => prev < version.toLong
-      case _ => false
-    }
-    val meta = readMeta(table)
-    // fencing token at the swap ITSELF (ensureValid is check-then-act
-    // — a lease can lapse between the check and this write): the meta
-    // records the highest grant epoch that ever published; a holder
-    // whose grant is OLDER than that has provably lost the lock to a
-    // newer writer, and aborts here even when the validity check was
-    // bypassed or raced. Token-less grants (epoch 0: file locks,
-    // in-process semaphores — locks that cannot lapse while the
-    // process lives) skip the compare, so a warehouse can move
-    // between providers. Ordered BEFORE the monotonic skip below: a
-    // lapsed lease-holder replaying a version the new owner already
-    // published must fail loudly, not report silent success.
-    // Residuals: (a) this read→compare→write is itself unfenced on
-    // storage without conditional writes — CLOSED for providers with
-    // a central authority by the commitSwap above (the authority
-    // serializes the compare WITH the pointer move, so fence and swap
-    // can't be split by a pause); still open for token-less /
-    // file-lock providers, where the lock itself cannot lapse so the
-    // compare runs under real exclusion anyway; (b) the staged data
-    // write preceding this swap — CLOSED by grant-scoped staging
-    // ([[ArtifactStage]]): the final names materialize only below,
-    // after the fences; (c) the old fence→rename lapse window —
-    // CLOSED for authority providers by the conditional swap: the
-    // version number is claimed atomically with the fence, so a
-    // post-swap lapse can't be overtaken onto the SAME number, and
-    // the pre-writeMeta re-swap below re-proves the grant after the
-    // renames. What remains is a lapse strictly between that re-proof
-    // and the one writeMeta file op — a pure write with no
-    // read→compare gap, the conditional-write-only floor. Index
-    // artifacts renamed outside this commit point (segments, folds,
-    // refreshes) take ArtifactStage's fence instead.
-    val tok = h.map(_.fencingToken).getOrElse(0L)
-    var epochAdvanced = false
-    if (tok > 0L) {
-      val seen = meta.path("fenceEpoch").asLong(0L)
-      if (tok < seen)
-        throw new IllegalStateException(
-          s"fencing: grant epoch $tok for $table is behind published epoch " +
-          s"$seen — this holder's lease lapsed and a newer writer has " +
-          "committed; aborting instead of swapping the pointer over its work")
-      if (tok > seen) { meta.put("fenceEpoch", tok): Unit; epochAdvanced = true }
-    }
-    // monotonic: every caller publishes forward (bulk writes, merges,
-    // txn bumps, recovery roll-forward). The only path that could ask
-    // to regress is a commit whose lock was wrongly broken mid-bump
-    // (the documented residual double-break window, breakIfStale):
-    // the breaker healed this txn's journal — publishing the SAME
-    // version — and may have published its own write on top; replaying
-    // the stale bump must not roll the newer snapshot back.
-    if (meta.path("dataVersion").asInt() >= version) {
-      // the authority tells a REPLAY from a STOLEN number: a holder
-      // whose swap advanced the pointer from BELOW `version` was the
-      // first (and, at the authority, only) claimant of this number —
-      // finding the durable meta already at/above it means a newer
-      // grant took the number over while this holder paused after its
-      // claim. Its staged content was superseded, not replayed;
-      // reporting silent success would drop a caller's write on the
-      // floor. (A legitimate replay — journal roll-forward, a
-      // breaker's heal — re-swaps a pointer already AT the version,
-      // or runs on a provider with no authority, and keeps the
-      // graceful skip.)
-      if (claimedFirst)
-        throw new IllegalStateException(
-          s"fencing: this grant claimed version $version of $table first " +
-          "at the authority, but a newer grant has published it while " +
-          "this holder paused — the staged write was superseded, not " +
-          "replayed; aborting instead of reporting success")
-      // a replayed publish by the highest-epoch holder still has to
-      // PERSIST its advanced epoch before this skip returns —
-      // otherwise the fence compares against a stale on-disk value
-      // and a lapsed holder with an intermediate epoch passes it
-      if (epochAdvanced) writeMeta(table, meta)
-      // replayed publish: the content is already live under its final
-      // name (the breaker's heal renamed and bumped) — any staging
-      // dirs THIS caller still holds are stale duplicates, never the
-      // published bytes. Reclaim instead of leaving them for vacuum.
-      staged.foreach { case (src, _) =>
-        if (Files.exists(src)) deleteRecursively(src)
-      }
-      return
-    }
-    // authority pointer above `version` while the durable meta is
-    // still behind it: a NEWER grant committed past this version and
-    // its publish is in flight — materializing final names here could
-    // interleave with that writer's renames. Abort with this holder's
-    // bytes still quarantined in their grant-scoped staging dirs.
-    if (authoritySuperseded)
-      throw new IllegalStateException(
-        s"fencing: authority commit pointer for $table has advanced past " +
-        s"$version while the durable meta is behind — a newer grant's " +
-        "commit is in flight; aborting instead of materializing over it")
-    // post-fence materialization, behind every fence above. A dst
-    // that already exists is unpublished garbage from a CRASHED
-    // earlier writer (the pointer is still < version, so no reader
-    // ever resolved it) — replaced by the rename.
-    staged.foreach { case (src, dst) => ArtifactStage.moveIntoPlace(src, dst) }
-    // re-prove the swap immediately before the durable pointer mirror:
-    // idempotent at the authority (same grant, same `version`), and it
-    // atomically re-verifies the grant is STILL the current one after
-    // the renames above — a holder that lapsed mid-rename throws here
-    // with the meta untouched (its renamed dirs are unpublished
-    // orphans at final names; the next writer's rename clears them).
-    // What remains is a lapse strictly between this re-proof and the
-    // single writeMeta file op below — a pure-write residual with no
-    // read→compare gap left to pause inside, closable only by a store
-    // whose pointer write is itself conditional.
-    h.foreach(_.commitSwap(version.toLong) match {
-      case LockProvider.Superseded(cur) =>
-        throw new IllegalStateException(
-          s"fencing: authority commit pointer for $table advanced to $cur " +
-          s"during materialization of $version — a newer grant committed; " +
-          "aborting before the pointer mirror")
-      case _ => ()
-    })
-    meta.put("dataVersion", version): Unit
-    val times = meta.get("publishTimes") match {
-      case o: ObjectNode => o
-      case _ =>
-        val o = mapper.createObjectNode()
-        meta.set[JsonNode]("publishTimes", o): Unit
-        o
-    }
-    times.put(version.toString, System.currentTimeMillis()): Unit
-    writeMeta(table, meta)
-  }
+                                    handle: Option[LockProvider.Handle] = None): Unit =
+    commits.run(Seq(Commit.Publish(table, version)), _ => handle.orElse(held(table)))
 
   private def setMetaAttr(table: String, attr: String, value: Any): Unit = {
     val meta = readMeta(table)

@@ -1192,4 +1192,99 @@ class ConcurrencySpec extends AnyFunSuite {
         "the dead transaction's write surfaced on b")
     } finally server.stop()
   }
+
+  test("lease: a txn committer lapsing after its journal never rolls the new owner's version back") {
+    // Past the journal the transaction is committed by design: a new
+    // owner's recovery rolls it forward. Transaction A journals, claims
+    // table "a" once more for its meta write, then pauses. Its leases
+    // lapse; B recovers (publishing A's transaction at version 2 on
+    // both tables) and commits "a" at 3. A resumes holding the meta it
+    // would have written; it must fail loudly and leave B's version 3,
+    // its publish time and its fencing epoch in place.
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    import scala.jdk.CollectionConverters._
+    val server = new graft.kv.LeaseLockServer().start()
+    try {
+      val real = new graft.kv.LeaseLockProvider(
+        "127.0.0.1", server.boundPort, leaseMs = 60000)
+      val wh = Files.createTempDirectory("graft_txnpostjournal_wh")
+      def journaled: Boolean = {
+        val d = wh.resolve("_graft_txn")
+        Files.exists(d) && {
+          val s = Files.list(d)
+          try s.iterator().asScala.exists { p =>
+            val n = p.getFileName.toString
+            n.startsWith("_graft_txn_") && n.endsWith(".json")
+          } finally s.close()
+        }
+      }
+      // pause after the first commit swap made once a journal exists
+      val gate = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val pausing = new graft.kv.LockProvider {
+        override def acquire(r: String, t: Long): graft.kv.LockProvider.Handle = {
+          val h = real.acquire(r, t)
+          new graft.kv.LockProvider.Handle {
+            override def release(): Unit = h.release()
+            override def fencingToken: Long = h.fencingToken
+            override def ensureValid(): Unit = h.ensureValid()
+            override def fencedPublish(): Boolean = h.fencedPublish()
+            override def commitSwap(next: Long): graft.kv.LockProvider.SwapResult = {
+              val res = h.commitSwap(next)
+              if (journaled && gate.compareAndSet(true, false)) {
+                FenceGate.started.countDown()
+                FenceGate.proceed.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+              }
+              res
+            }
+          }
+        }
+      }
+      val catA = new Catalog(spark, wh.toString, lockProviderOpt = Some(pausing))
+      val catB = new Catalog(spark, wh.toString, lockProviderOpt = Some(real))
+      catA.createTable("a", kv, Seq("k"))
+      catA.createTable("b", kv, Seq("k"))
+      load(catB, "a", Seq(1L -> "pre"))
+      load(catB, "b", Seq(1L -> "pre"))
+      FenceGate.reset()
+      var failure: Option[Throwable] = None
+      val t1 = new Thread(() => {
+        try catA.transaction { txn =>
+          txn.updateWhere("a", col("k") === 1L, "v", lit("txn"))
+          txn.updateWhere("b", col("k") === 1L, "v", lit("txn"))
+        } catch { case e: Throwable => failure = Some(e) }
+      })
+      t1.start()
+      assert(FenceGate.started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the transaction never reached a commit swap past its journal")
+      server.expireNow("a")
+      server.expireNow("b")
+      load(catB, "a", Seq(1L -> "owner")) // recovers A's journal, then commits 3
+      def metaOf(t: String) = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Files.readString(wh.resolve(t).resolve("_graft_meta.json")))
+      val ownerMeta = metaOf("a")
+      assert(ownerMeta.path("dataVersion").asInt() == 3)
+      FenceGate.proceed.countDown()
+      t1.join(60000)
+      assert(failure.exists(_.isInstanceOf[IllegalStateException]) &&
+        failure.exists(e => e.getMessage.contains("fencing") ||
+          e.getMessage.contains("taken over") ||
+          e.getMessage.contains("lease")),
+        s"lapsed post-journal committer did not fail loudly: $failure")
+      val after = metaOf("a")
+      assert(after.path("dataVersion").asInt() == 3, "B's committed version was rolled back")
+      assert(after.path("fenceEpoch") == ownerMeta.path("fenceEpoch"),
+        "the lapsed committer lowered the published fencing epoch")
+      assert(after.path("publishTimes") == ownerMeta.path("publishTimes"),
+        "B's publish time was dropped")
+      val catR = new Catalog(spark, wh.toString)
+      catR.recoverTransactions()
+      assert(catR.dataVersionOf("a") == 3)
+      assert(catR.table("a").pointGet(1L).head().getAs[String]("v") == "owner")
+      // A's transaction itself committed whole through B's recovery
+      assert(catR.tableAt("a", 2).pointGet(1L).head().getAs[String]("v") == "txn")
+      assert(catR.dataVersionOf("b") == 2)
+      assert(catR.table("b").pointGet(1L).head().getAs[String]("v") == "txn")
+    } finally server.stop()
+  }
 }
