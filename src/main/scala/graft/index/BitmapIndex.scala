@@ -65,12 +65,10 @@ object Bitmap {
     */
   private final val SparseMax = 4096
 
-  /** Format marker. Legacy streams (written before the marker existed)
-    * begin with a non-negative chunk count, so a negative magic int is
-    * unambiguous; [[deserialize]] keeps decoding both legacy layouts
-    * (pre-sparse dense-only, and the unversioned sparse/dense form)
-    * rather than misparsing persisted index bytes as the current
-    * format. */
+  /** Format header: a magic int then the format version. Every stream
+    * [[serialize]] writes starts with both; [[deserialize]] rejects a
+    * stream without them rather than guessing at its layout. An index
+    * written in another layout is rebuilt by `refresh_index`. */
   private final val Magic = 0xB17AC0DE // negative as Int
   private final val FormatVersion = 2
 
@@ -108,91 +106,11 @@ object Bitmap {
 
   def deserialize(bytes: Array[Byte]): Chunks = {
     val buf = ByteBuffer.wrap(bytes)
-    if (bytes.length >= 4 && buf.getInt(0) == Magic) {
-      buf.getInt // magic
-      val ver = buf.getInt
-      require(ver == FormatVersion, s"unsupported bitmap format version $ver")
-      readSparseDense(buf, buf.getInt)
-    } else {
-      // legacy, headerless. Two layouts shipped: dense-only
-      // ([n][chunk][1024 words]*) and the first sparse/dense form
-      // ([n][chunk][card][payload]*). A pure length test is NOT enough
-      // to tell them apart: a sparse/dense stream whose payloads sum to
-      // 8188·n bytes (e.g. one chunk of cardinality 4094) has exactly
-      // the dense-only length. Instead, attempt a STRICTLY-validated
-      // sparse/dense parse first — it checks every invariant the
-      // writer guaranteed (ascending chunk ids, card in range,
-      // strictly-ascending sparse offsets, dense popcount == card,
-      // exact buffer consumption); a dense-only stream essentially
-      // cannot satisfy all of them by accident. On failure, require
-      // the exact dense length and parse dense.
-      val n = buf.getInt
-      tryReadSparseDenseStrict(bytes, n).getOrElse {
-        if (bytes.length == 4 + n * (4 + 8 * WordsPerChunk)) {
-          val chunks = new Chunks()
-          (0 until n).foreach { _ =>
-            val c = buf.getInt
-            val w = new Array[Long](WordsPerChunk)
-            (0 until WordsPerChunk).foreach(i => w(i) = buf.getLong)
-            chunks.update(c, w)
-          }
-          chunks
-        } else
-          // last resort: lenient sparse/dense parse, exactly what the
-          // pre-header reader did — a legacy stream that fails some
-          // strict invariant the old reader never checked must still
-          // decode rather than making persisted index bytes unreadable
-          readSparseDense(buf, n)
-      }
-    }
-  }
-
-  /** Strict parse of the headerless sparse/dense legacy layout:
-    * returns None on ANY violation of the writer's invariants instead
-    * of garbage. Used only to disambiguate legacy streams. */
-  private def tryReadSparseDenseStrict(bytes: Array[Byte], n: Int): Option[Chunks] = {
-    if (n < 0) return None
-    val buf = ByteBuffer.wrap(bytes); buf.getInt // skip n
-    val chunks = new Chunks()
-    // ascending-chunk check must admit a negative FIRST chunk id
-    // (negative rowkeys produce negative chunk keys — a legacy stream
-    // starting there is valid and must not fall through to the
-    // dense-only misparse)
-    var prevChunk = 0
-    var first = true
-    var i = 0
-    while (i < n) {
-      if (buf.remaining() < 8) return None
-      val c = buf.getInt
-      val card = buf.getInt
-      if ((!first && c <= prevChunk) || card < 0 || card > (1 << ChunkBits)) return None
-      first = false
-      prevChunk = c
-      val w = new Array[Long](WordsPerChunk)
-      if (card <= SparseMax) {
-        if (buf.remaining() < 2 * card) return None
-        var prevOff = -1
-        var j = 0
-        while (j < card) {
-          val off = buf.getShort & 0xFFFF
-          if (off <= prevOff) return None // writer emits strictly ascending
-          prevOff = off
-          w(off >> 6) |= (1L << (off & 63))
-          j += 1
-        }
-      } else {
-        if (buf.remaining() < 8 * WordsPerChunk) return None
-        var pop = 0
-        var j = 0
-        while (j < WordsPerChunk) {
-          w(j) = buf.getLong; pop += java.lang.Long.bitCount(w(j)); j += 1
-        }
-        if (pop != card) return None // writer stored card = popcount
-      }
-      chunks.update(c, w)
-      i += 1
-    }
-    if (buf.remaining() != 0) None else Some(chunks)
+    require(bytes.length >= 12 && buf.getInt == Magic,
+      "not a graft bitmap: missing format header")
+    val ver = buf.getInt
+    require(ver == FormatVersion, s"unsupported bitmap format version $ver")
+    readSparseDense(buf, buf.getInt)
   }
 
   private def readSparseDense(buf: ByteBuffer, n: Int): Chunks = {

@@ -31,9 +31,7 @@ package graft.kv
   * false-positive rate, and the task result shipped to the driver
   * carries only the folded filter — never the 1 MiB cap per file; at
   * the cap (≥ ~800k rows/file) the FPR degrades gracefully instead of
-  * the filter growing unboundedly. Setting the legacy flat knob
-  * `spark.graft.manifest.bloomBits` overrides all of this with a
-  * fixed per-file size.
+  * the filter growing unboundedly.
   *
   * Persistence: small tables inline the bitsets as base64 in the
   * manifest JSON; past `spark.graft.manifest.bloomSidecarBytes`
@@ -123,19 +121,14 @@ private[graft] object BloomBits {
   * nextPow2(rows × bitsPerKey), floored at 2^10 and capped at
   * `maxBits` — EXECUTOR-SIDE, before the bitset leaves the task, so
   * the task result and the manifest carry the small folded filter,
-  * never the cap. `bitsPerKey` None (the legacy flat knob
-  * `spark.graft.manifest.bloomBits`) keeps the raw `maxBits` bitset. */
-private[kv] final case class BloomSizing(maxBits: Int, bitsPerKey: Option[Int]) {
-  require(maxBits >= 8 && (maxBits & 7) == 0, s"maxBits must be a multiple of 8: $maxBits")
+  * never the cap. */
+private[kv] final case class BloomSizing(maxBits: Int, bitsPerKey: Int) {
+  require(maxBits >= 1024 && Integer.bitCount(maxBits) == 1,
+    s"spark.graft.manifest.bloomMaxBits must be a power of two >= 1024: $maxBits")
 
   def finish(rows: Long, bits: Array[Byte]): Array[Byte] =
-    bitsPerKey match {
-      case Some(bpk) =>
-        val target = math.min(maxBits.toLong,
-          math.max(1L << 10, BloomBits.nextPow2(rows * bpk)))
-        BloomBits.foldTo(bits, target.toInt)
-      case None => bits
-    }
+    BloomBits.foldTo(bits, math.min(maxBits.toLong,
+      math.max(1L << 10, BloomBits.nextPow2(rows * bitsPerKey))).toInt)
 }
 
 private[kv] object BloomSizing {
@@ -156,18 +149,11 @@ private[kv] object BloomSizing {
     if (bloomable(keyType)) Some(fromConf(spark)) else None
 
   def fromConf(spark: org.apache.spark.sql.SparkSession): BloomSizing = {
-    val flatBits = spark.conf.getOption("spark.graft.manifest.bloomBits")
-      .map(_.toInt)
     val bitsPerKey = spark.conf
       .getOption("spark.graft.manifest.bloomBitsPerKey")
       .map(_.toInt).getOrElse(10)
-    val maxBits = flatBits.getOrElse {
-      val m = spark.conf.getOption("spark.graft.manifest.bloomMaxBits")
-        .map(_.toInt).getOrElse(1 << 23)
-      require(m >= 1024 && Integer.bitCount(m) == 1,
-        s"spark.graft.manifest.bloomMaxBits must be a power of two >= 1024: $m")
-      m
-    }
-    BloomSizing(maxBits, if (flatBits.isDefined) None else Some(bitsPerKey))
+    val maxBits = spark.conf.getOption("spark.graft.manifest.bloomMaxBits")
+      .map(_.toInt).getOrElse(1 << 23)
+    BloomSizing(maxBits, bitsPerKey)
   }
 }

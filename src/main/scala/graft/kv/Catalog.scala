@@ -205,8 +205,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     meta.put("createdAt", System.currentTimeMillis())
     meta.set[JsonNode]("indexes", mapper.createArrayNode()): Unit
     // v0 (the empty snapshot below) publishes now — seeds the
-    // TIMESTAMP AS OF map so even version 0 resolves from recorded
-    // publish time, not directory mtime
+    // TIMESTAMP AS OF map, so version 0 resolves from a recorded
+    // publish time like every later version
     val publishTimes = mapper.createObjectNode()
     publishTimes.put("0", System.currentTimeMillis()): Unit
     meta.set[JsonNode]("publishTimes", publishTimes): Unit
@@ -524,7 +524,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * rewrite job folds the new files' entries as it writes them
     * ([[ManifestCapture]]) and the untouched files' entries carry over
     * unchanged, so a merge reads one JSON and schedules no key scan
-    * (only a legacy or corrupt manifest is rebuilt, by
+    * (a manifest that is corrupt or no longer covers the snapshot's
+    * files — a SQL INSERT appends one — is rebuilt by
     * [[ensureRangeManifest]]). Patch keys are collected to the driver:
     * micro-batches are bounded by the trigger, so this is a small set
     * by construction. `precollectedKeys` are the patch's distinct lead
@@ -690,10 +691,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * JSON, no Spark.
     *
     * A corrupt manifest reads as ABSENT, never as an error: a damaged
-    * or truncated file (disk trouble, a legacy writer without the
-    * atomic rename) makes both consumers fall back to re-deriving
-    * ranges (scanRanges here, footer statistics on the driver-get
-    * path) and the next merge heals the file. Failing instead would
+    * or truncated file (disk trouble) makes both consumers fall back
+    * to re-deriving ranges (scanRanges here, footer statistics on the
+    * driver-get path) and the next merge heals the file. Failing instead would
     * wedge every subsequent merge of the table on a scrap of
     * bookkeeping. */
   private[kv] def readManifestJson(dir: Path): Option[Seq[FileRange]] =
@@ -753,9 +753,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   /** The range manifest of a PUBLISHED dir. Every write path publishes
     * a snapshot (and a kv-index version) together with its manifest, so
     * this is a JSON read; the scan below is the HEAL path only — a
-    * legacy dir from before write-time manifests, a corrupt file, or a
-    * manifest that no longer covers the dir's files — and the one place
-    * that writes into an already-published dir. */
+    * corrupt or missing file, or a manifest that no longer covers the
+    * dir's files (a SQL INSERT appends a file without an entry) — and
+    * the one place that writes into an already-published dir. Key
+    * types that keep no manifest (`persistable` false) always scan. */
   private def ensureRangeManifest(dir: Path, keyCol: String,
                                   persistable: Boolean,
                                   secondCol: Option[String] = None,
@@ -767,12 +768,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // DROP the uncovered files from the next snapshot
     val present = ManifestCapture.partFiles(dir).toSet
     cached match {
-      case Some(entries) if entries.map(_.file).toSet == present &&
-          // a z table needs SECOND-key bounds on every data-bearing
-          // entry; a manifest from before the upgrade rescans once
-          (secondCol.isEmpty ||
-            entries.forall(e => e.second.isDefined || e.lo == null)) =>
-        entries
+      case Some(entries) if entries.map(_.file).toSet == present => entries
       case _ =>
         val entries = scanRanges(dir, keyCol, secondCol, schema)
         writeRangeManifest(dir, entries)
@@ -1325,19 +1321,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
           stage.stage(s"fz_v$upTo") { p =>
             writeFtFuzzy(foldedDict, p, partitions = 0)
           }
-          // an index built before positional support has no pos base —
-          // the fold must not throw from the CDC write path (it would
-          // wedge every subsequent merge at the auto-fold threshold);
-          // skip the family and let refresh_index backfill it. Orphaned
-          // posseg dirs below the advanced base are vacuum-reclaimed.
-          if (Files.exists(st.paired("pos")))
-            stage.stage(s"pos_v$upTo") { p =>
-              KvLayout.writeSorted(positionsView(st), Seq("term"), p)
-            }
+          stage.stage(s"pos_v$upTo") { p =>
+            KvLayout.writeSorted(positionsView(st), Seq("term"), p)
+          }
           // the folded postings feed data + norms + block stats — cache
-          // across the three writes. A pre-norms index gains the ranked
-          // artifacts at its first fold (the metas derive from the
-          // folded frame, complete).
+          // across the three writes (the metas derive from the folded
+          // frame, complete).
           val foldedPost = postingsView(st).cache()
           try {
             val doclens = graft.index.FullText.buildDocLens(foldedPost).cache()
@@ -1558,10 +1547,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // both z dimensions serve from the ONE manifest read: leading
     // bounds for pk.head, the recorded second-key bounds for the
     // z-second column (written by the merge path at no extra pass).
-    // An entry without second bounds (pre-upgrade manifest) passes
-    // null bounds — never pruned, parquet footer stats stand in for
-    // just that file, which the z layout keeps narrow in both
-    // dimensions (ZOrderSpec pins the claim). No manifest at all →
+    // A table whose second key type keeps no manifest bounds
+    // ([[manifestKeys]]) passes null bounds — never pruned, parquet
+    // footer stats stand in for each file, which the z layout keeps
+    // narrow in both dimensions (ZOrderSpec pins the claim). No manifest at all →
     // footer path for every file, as before.
     val ranges =
       if (c == pk.head) manifestRanges(dir)
@@ -1793,8 +1782,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val q = toks.head
     val (fzBase, deltas) = st.folded("fz")
     require(Files.exists(fzBase),
-      s"no fuzzy dictionary sidecar under ${st.dir} — the index predates " +
-        "fuzzy serving; CALL system.refresh_index to rebuild")
+      s"no fuzzy dictionary sidecar under ${st.dir} — the index is " +
+        "damaged; CALL system.refresh_index to rebuild")
     val fzSchema = StructType(Seq(
       StructField("tlen", IntegerType, nullable = true),
       StructField("term", StringType, nullable = true),
@@ -2230,8 +2219,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val (base, baseVer) = (st.base, st.baseVer)
     val normBase = st.paired("norms")
     require(Files.exists(normBase),
-      s"no norms artifact under ${st.dir} — the index predates ranked " +
-        "serving; CALL system.refresh_index to rebuild")
+      s"no norms artifact under ${st.dir} — the index is damaged; " +
+        "CALL system.refresh_index to rebuild")
     val normStack: Seq[(Int, Path)] = (baseVer, normBase) +: st.segments("normseg_v")
     val rkType = rowkeyType(table)
     val mask = st.driverMask(rkType, maxPostings)
@@ -2322,11 +2311,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       seekDl(acc.keys.toSeq)
       acc.iterator.map { case (id, tfs) =>
         // an unmasked posting without a norms row can only mean a
-        // segment written before ranked-serving support — fail loudly
-        // (silently unranking the doc would be a wrong answer)
+        // damaged segment — fail loudly (silently unranking the doc
+        // would be a wrong answer)
         val dl = dlCache.getOrElse(id, throw new IllegalStateException(
-          s"doc $id has postings but no norms row — a segment predates " +
-            "ranked serving; CALL system.refresh_index to rebuild"))
+          s"doc $id has postings but no norms row — the index is " +
+            "damaged; CALL system.refresh_index to rebuild"))
         id -> round4(tfs.iterator.map { case (t, tf) =>
           idf(t) * impact(tf.toDouble, dl.toDouble) }.sum)
       }.toSeq
@@ -2342,9 +2331,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     val integral = rkType == LongType || rkType == IntegerType
     var blocksTotal = 0
     var blocksRead = 0
-    if (!integral || !Files.exists(bmxPath)) {
-      // no block space (string rowkeys) / pre-upgrade index: exact
-      // scoring of every matching base posting — correct, unpruned
+    if (!integral) {
+      // no block space (string rowkeys): exact scoring of every
+      // matching base posting — correct, unpruned
       ingest(baseVer, DriverRead.get(base, postSchema, Seq("term"),
         analyzed.map(t => Seq(t: Any)), manifestRanges(base)))
     } else {
@@ -2421,11 +2410,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
   /** Newest still-present snapshot version whose recorded publish time
     * is at or before `cutoffMs`, capped at the published pointer — the
     * `TIMESTAMP AS OF` resolution. Publish times come from the meta's
-    * `publishTimes` map (written atomically with each pointer bump);
-    * directory mtime is only the fallback for pre-upgrade snapshots
-    * with no recorded entry — mtimes shift when lazy bookkeeping (the
-    * range manifest) lands in an old snapshot dir, recorded times
-    * don't. */
+    * `publishTimes` map (`createTable` records v0, and every commit
+    * records its version in the same meta write as the pointer); a
+    * snapshot dir with no recorded time was never published. */
   def snapshotAtOrBefore(name: String, cutoffMs: Long): Option[Int] = {
     val live = dataVersionOf(name)
     val times = readMeta(name).path("publishTimes")
@@ -2436,10 +2423,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
         else scala.util.Try(n.stripPrefix("data_v").toInt).toOption
           .filter { v =>
             val rec = times.path(v.toString)
-            val publishedMs =
-              if (rec.isNumber) rec.asLong()
-              else Files.getLastModifiedTime(p).toMillis
-            v <= live && publishedMs <= cutoffMs
+            v <= live && rec.isNumber && rec.asLong() <= cutoffMs
           }
       }.toList
     }.sorted.lastOption
@@ -3042,19 +3026,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * both must do so at the degree the graph was BUILT with — folding
     * a non-default-m graph at the default would silently mix degrees
     * (touched lists at 8, untouched at the original m). Underscore
-    * name keeps the file invisible to the parquet read. Pre-upgrade
-    * graphs without the file read as the historical default 8. */
+    * name keeps the file invisible to the parquet read. */
   private def writeGraph(graph: DataFrame, m: Int, graphDir: String): Unit = {
     graph.write.mode("overwrite").parquet(graphDir)
     Files.writeString(Paths.get(graphDir).resolve("_graft_graph_m"),
       m.toString): Unit
   }
 
-  private def readGraphM(graphDir: Path): Int = {
-    val f = graphDir.resolve("_graft_graph_m")
-    if (!Files.exists(f)) 8
-    else scala.util.Try(Files.readString(f).trim.toInt).getOrElse(8)
-  }
+  private def readGraphM(graphDir: Path): Int =
+    Files.readString(graphDir.resolve("_graft_graph_m")).trim.toInt
 
   /** The graph-ANN serving pair: (graph, delta). The graph is the
     * persisted `graph_v` base; the DELTA BUFFER is derived
@@ -3371,11 +3351,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       m.path("charset").asText("UTF-8"),
       m.path("layout").asText("sorted"),
       m.path("comment").asText(""),
-      // pre-upgrade tables lack createdAt: fall back to the recorded
-      // v0 publish time (same instant for tables created since the
-      // publishTimes map exists), else 0
-      if (m.hasNonNull("createdAt")) m.path("createdAt").asLong()
-      else m.path("publishTimes").path("0").asLong(0L),
+      m.path("createdAt").asLong(),
       m.path("dataVersion").asInt(),
       m.withArray[ArrayNode]("indexes").size())
     spark.createDataFrame(
@@ -3462,13 +3438,13 @@ object Catalog {
 /** One manifest entry: per-file bounds of the LEADING key, plus —
   * for z-ordered tables — the SECOND key's bounds (`second`), so a
   * driver range scan on either z dimension prunes from the one
-  * manifest read instead of opening O(files) footers cold. None =
-  * written before the second-key upgrade or not a z table; such an
+  * manifest read instead of opening O(files) footers cold. None = not
+  * a z table, or a second key whose type keeps no bounds; such an
   * entry is never pruned on the second key (footers stand in).
   * `bloom` is the per-file rowkey Bloom bitset (the HBase StoreFile
   * BloomFilter ROW analog — see [[BloomBits]]): a driver point Get
   * whose keys all miss it skips the file BEFORE any footer read.
-  * None (pre-upgrade entries, unsupported key types) never vetoes. */
+  * None (unsupported key types, an unreadable bloom) never vetoes. */
 private[graft] case class FileRange(file: String, lo: Any, hi: Any,
                                     second: Option[(Any, Any)] = None,
                                     bloom: Option[Array[Byte]] = None)

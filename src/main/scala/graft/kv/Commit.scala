@@ -170,15 +170,11 @@ private[kv] final class Commit(warehouse: Path,
   /** Journals live in a dedicated subdirectory so the read overlay
     * ([[liveVersion]], on every lock-free version resolution) costs
     * one probe of a directory that is absent or empty except while a
-    * commit is in flight or after a committer crashed. Journals
-    * written at the warehouse ROOT by pre-subdir builds are still
-    * healed and recovered; the overlay reads them only while any
-    * remain ([[legacyRootJournals]]). */
+    * commit is in flight or after a committer crashed. */
   private val txnDir: Path = warehouse.resolve("_graft_txn")
 
   /** `{"publishes":[{"table":t,"next":n,"asOf":[{"name":i,"type":ty}]}]}`
-    * written whole by an atomic rename. `asOf` is absent in journals of
-    * builds that persisted as-of bumps before the journal; those roll
+    * written whole by an atomic rename. An entry without `asOf` rolls
     * forward without bumps. */
   private def writeJournal(ps: Seq[Publish]): Path = {
     val node = mapper.createObjectNode()
@@ -216,7 +212,7 @@ private[kv] final class Commit(warehouse: Path,
     * reverse order could read one table's meta before its write and
     * then miss the just-deleted journal. */
   def liveVersion(table: String): Int = {
-    val journaled = (pending(txnDir) ++ legacyRootJournals()).flatMap {
+    val journaled = pending().flatMap {
       case (_, Some(ps)) => ps.filter(_.table == table)
       case _ => Nil // corrupt: recover quarantines
     }
@@ -232,24 +228,9 @@ private[kv] final class Commit(warehouse: Path,
   private def pendingEntry(p: Publish, base: Int): Boolean =
     base == p.next - 1 && Files.exists(snapshotDir(p.table, p.next))
 
-  /** Pre-subdir builds wrote journals at the warehouse ROOT. The root
-    * is scanned on the first overlay resolution and stays in the scan
-    * set only while parseable legacy journals remain (a corrupt one
-    * contributes nothing and only [[recover]], which scans the root
-    * itself, quarantines it). New journals are only ever written under
-    * [[txnDir]]. */
-  @volatile private var legacyRootMayHaveJournals = true
-  private def legacyRootJournals(): Seq[(Path, Option[Seq[Publish]])] =
-    if (!legacyRootMayHaveJournals) Nil
-    else {
-      val js = pending(warehouse)
-      if (js.forall(_._2.isEmpty)) { legacyRootMayHaveJournals = false; Nil }
-      else js
-    }
-
-  /** Pending journals under `dir`, as (path, entries or None if
-    * corrupt). One error policy for the overlay, the heal and recovery:
-    *   - absent dir → no journals;
+  /** Pending journals, as (path, entries or None if corrupt). One
+    * error policy for the overlay, the heal and recovery:
+    *   - absent [[txnDir]] → no journals;
     *   - NoSuchFileException on read → drained between the listing and
     *     the read, so its pointers already moved — treated as absent;
     *   - any OTHER IOException is retried briefly and then THROWN: a
@@ -258,10 +239,10 @@ private[kv] final class Commit(warehouse: Path,
     *     a committed transaction (readers);
     *   - content read but unparseable → None; [[recover]] quarantines
     *     it, every other caller skips it. */
-  private def pending(dir: Path): Seq[(Path, Option[Seq[Publish]])] = {
-    if (!Files.exists(dir)) return Nil
+  private def pending(): Seq[(Path, Option[Seq[Publish]])] = {
+    if (!Files.exists(txnDir)) return Nil
     // .json suffix required: quarantined journals end in .json.corrupt
-    val journals = list(dir).filter { p =>
+    val journals = list(txnDir).filter { p =>
       val n = p.getFileName.toString
       n.startsWith("_graft_txn_") && n.endsWith(".json")
     }
@@ -304,7 +285,7 @@ private[kv] final class Commit(warehouse: Path,
     * writer would otherwise overwrite. Journals stay (other tables may
     * still be pending); [[recover]] drops them. */
   def heal(table: String, h: Option[LockProvider.Handle]): Unit =
-    (pending(txnDir) ++ pending(warehouse)).foreach {
+    pending().foreach {
       case (_, Some(ps)) => ps.filter(_.table == table).foreach(rollForward(_, h))
       case _ => ()
     }
@@ -315,8 +296,8 @@ private[kv] final class Commit(warehouse: Path,
     * again: `.tmp` files of a crash before the journal's rename (after
     * an hour) and quarantined journals (kept a week as evidence). */
   def recover(locked: Publish => Unit): Unit = {
-    if (!Files.exists(warehouse)) return
-    (pending(txnDir) ++ pending(warehouse)).foreach {
+    if (!Files.exists(txnDir)) return
+    pending().foreach {
       case (j, None) =>
         try Files.move(j, j.resolveSibling(j.getFileName.toString + ".corrupt"),
           StandardCopyOption.REPLACE_EXISTING): Unit
@@ -326,7 +307,7 @@ private[kv] final class Commit(warehouse: Path,
         Files.deleteIfExists(j): Unit
     }
     val now = System.currentTimeMillis()
-    Seq(txnDir, warehouse).filter(Files.exists(_)).flatMap(list).filter { p =>
+    list(txnDir).filter { p =>
       val n = p.getFileName.toString
       val age = now - (try Files.getLastModifiedTime(p).toMillis
         catch { case _: java.io.IOException => now })

@@ -52,7 +52,8 @@ private[kv] final class IndexStack private (val dir: Path, val upTo: Int) {
   lazy val baseVer: Int = IndexStack.versionOf("data", base.getFileName.toString)
 
   /** A base sibling (pos, norms, bmx, cent, vmeta, graph) at the data
-    * base's version; may not exist (a pre-upgrade index). */
+    * base's version; may not exist (bmx on string rowkeys, graph on a
+    * vector index built without one). */
   def paired(prefix: String): Path = latest(prefix, baseVer)
 
   /** `<prefix><v>` layers with baseVer < v ≤ upTo, ascending. */
@@ -67,8 +68,8 @@ private[kv] final class IndexStack private (val dir: Path, val upTo: Int) {
   def posLayers: Seq[(Int, Path)] = {
     val pos = paired("pos")
     require(Files.exists(pos),
-      s"no positional postings under $dir — the index predates " +
-        "positional support; CALL system.refresh_index to rebuild")
+      s"no positional postings under $dir — the index is damaged; " +
+        "CALL system.refresh_index to rebuild")
     (baseVer, pos) +: segments("posseg_v")
   }
 

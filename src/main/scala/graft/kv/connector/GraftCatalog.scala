@@ -54,9 +54,9 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     util.EnumSet.of(TableCatalogCapability.SUPPORT_COLUMN_DEFAULT_VALUE)
 
   // one Catalog per catalog-plugin instance (Spark instantiates the
-  // plugin per session): a fresh Catalog per loadTable would reset the
-  // legacyRootMayHaveJournals amortization and re-list the warehouse
-  // root — O(tables) dirents — on EVERY statement's version resolution
+  // plugin per session): every statement of the session resolves
+  // versions and takes write locks through the same lock provider,
+  // instead of building a Catalog (and its provider) per loadTable
   private lazy val cat: Catalog = new Catalog(SparkSession.active, warehouse)
 
   private def tableName(ident: Identifier): String = {

@@ -40,6 +40,12 @@ class BitmapPropertySpec extends AnyFunSuite {
       Bitmap.ids(bitmapOf(ids.toSeq)).toSet == ids &&
         Bitmap.cardinality(bitmapOf(ids.toSeq)) == ids.size.toLong
     }, "roundtrip")
+    // negative rowkeys produce negative chunk keys, which sort first
+    val neg = Seq(-70000L, -1L, 5L, 70000L)
+    assert(Bitmap.ids(bitmapOf(neg)).toSet == neg.toSet)
+    // a stream without the 8-byte format header is rejected, never
+    // decoded by guessing its layout
+    intercept[IllegalArgumentException](Bitmap.ids(bitmapOf(neg).drop(8)))
   }
 
   test("and/or/andNot agree with Set intersect/union/diff") {
@@ -72,61 +78,6 @@ class BitmapPropertySpec extends AnyFunSuite {
       }.toSet
       got == expect
     }, "foldVersions")
-  }
-
-  /** The two headerless legacy layouts that shipped before the format
-    * marker: dense-only ([n][chunk][1024 words]*) and the first
-    * sparse/dense form ([n][chunk][card][payload]*). */
-  private def legacyDense(ids: Seq[Long]): Array[Byte] = {
-    val c = new Bitmap.Chunks(); ids.foreach(Bitmap.set(c, _))
-    val entries = c.toSeq.sortBy(_._1)
-    val buf = java.nio.ByteBuffer.allocate(4 + entries.size * (4 + 8 * 1024))
-    buf.putInt(entries.size)
-    entries.foreach { case (ch, w) => buf.putInt(ch); w.foreach(buf.putLong) }
-    buf.array()
-  }
-
-  private def legacySparseDense(ids: Seq[Long]): Array[Byte] = {
-    // strip the 8-byte magic+version header from the current encoding
-    Bitmap.serialize({ val c = new Bitmap.Chunks(); ids.foreach(Bitmap.set(c, _)); c })
-      .drop(8)
-  }
-
-  test("legacy headerless index bytes decode identically (no silent misparse)") {
-    check(Prop.forAll(idSet) { ids =>
-      Bitmap.ids(legacyDense(ids.toSeq)).toSet == ids &&
-        Bitmap.ids(legacySparseDense(ids.toSeq)).toSet == ids
-    }, "legacy-decode")
-    // and legacy bytes interoperate with current bytes in set ops
-    val a = (0L until 5000L).toSet; val b = (2500L until 9000L).toSet
-    assert(Bitmap.ids(Bitmap.and(legacyDense(a.toSeq),
-      legacySparseDense(b.toSeq))).toSet == (a intersect b))
-  }
-
-  test("legacy length-collision streams decode by invariants, not length") {
-    // a headerless sparse/dense stream whose payloads sum to 8188·n
-    // bytes has EXACTLY the dense-only length — a pure length test
-    // misparses it as dense. One chunk of cardinality 4094:
-    // 4+4+4+2·4094 = 8200 = 4 + 1·(4+8192).
-    val ids1 = (0 until 4094).map(i => i.toLong * 16L)
-    assert(legacySparseDense(ids1).length == 4 + 1 * (4 + 8 * 1024))
-    assert(Bitmap.ids(legacySparseDense(ids1)).toSet == ids1.toSet)
-    // two chunks (cards 4096 + 4092 → sparse payloads sum to 2·8188)
-    val ids2 = (0 until 4096).map(_.toLong * 16L) ++
-      (0 until 4092).map(i => 65536L + i * 16L)
-    assert(legacySparseDense(ids2).length == 4 + 2 * (4 + 8 * 1024))
-    assert(Bitmap.ids(legacySparseDense(ids2)).toSet == ids2.toSet)
-  }
-
-  test("legacy streams with negative chunk ids decode (negative rowkeys)") {
-    // negative rowkeys produce negative chunk keys, which sort FIRST —
-    // the strict legacy parse must admit them or length-colliding
-    // streams fall through to the dense-only misparse
-    val ids = Seq(-70000L, -1L, 5L, 70000L)
-    assert(Bitmap.ids(legacySparseDense(ids)).toSet == ids.toSet)
-    assert(Bitmap.ids(legacyDense(ids)).toSet == ids.toSet)
-    // current-format round-trip too
-    assert(Bitmap.ids(bitmapOf(ids)).toSet == ids.toSet)
   }
 
   test("row ids beyond the 2^47 id space fail loudly instead of aliasing") {

@@ -874,7 +874,7 @@ class DriverGetSpec extends AnyFunSuite {
     assert(driverFuzzy("vvqps", 1) == Seq(8L),
       "a post-fold dictdelta-born term did not match")
     assert(driverFuzzy("vvqps", 1) == sparkFuzzy("vvqps", 1))
-    // an index whose fz sidecar predates fuzzy serving fails loudly
+    // an index that lost its fz sidecar fails loudly
     // and refresh_index heals it
     val fzDir = Paths.get(cat.warehouse, "ftz.fulltext.ft")
     val fzDirs = java.nio.file.Files.list(fzDir).iterator()

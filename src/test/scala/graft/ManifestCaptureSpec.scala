@@ -121,7 +121,7 @@ class ManifestCaptureSpec extends AnyFunSuite {
       m.filter(_.bloom.isDefined).foreach { e =>
         val bits = new Array[Byte](4096 / 8)
         hashes(e.file).foreach(r => BloomBits.set(bits, r.getLong(1)))
-        assert(e.bloom.get.toSeq == BloomSizing(4096, Some(12)).finish(hashes(e.file).length, bits).toSeq)
+        assert(e.bloom.get.toSeq == BloomSizing(4096, 12).finish(hashes(e.file).length, bits).toSeq)
       }
     }
     // a write the capture cannot attribute (several files per task)
@@ -184,8 +184,8 @@ class ManifestCaptureSpec extends AnyFunSuite {
       phase("afterSqlMerge")(merge(30L))
       phase("txn")(cat.transaction(_.upsert("pin", Seq((40L, 8L, "t")).toDF("k", "c", "v"))))
       phase("afterTxn")(merge(50L))
-      // the detector sees a real heal: a legacy snapshot (no manifest)
-      // and a legacy index version are scanned once each, then healed
+      // the detector sees a real heal: a snapshot and an index version
+      // whose manifest is missing are scanned once each, then healed
       Files.delete(liveDir(cat, "pin").resolve("_graft_ranges.json"))
       Files.delete(kvIndexDir(cat, "pin", "byc").resolve("_graft_ranges.json"))
       phase("heal")(merge(60L))
@@ -201,7 +201,7 @@ class ManifestCaptureSpec extends AnyFunSuite {
     phases.filter(_ != "heal").foreach { p =>
       assert(scans(p) == 0, s"phase $p scheduled ${scans(p)} range-scan job(s)")
     }
-    // a legacy table snapshot and a legacy index version: two scans
+    // a table snapshot and an index version without manifests: two scans
     assert(byPhase("heal").map(_._2).toSet.count(scanExecs.contains) >= 2,
       s"the range-scan detector saw no heal: $scanExecs")
     // every published snapshot and index version carries its manifest

@@ -642,43 +642,6 @@ class SegmentedIndexSpec extends AnyFunSuite {
       sortedRows(FullText.buildPositional(cat.table("t").df, "k", "body")))
   }
 
-  test("a pre-positional fulltext index folds and refreshes without wedging CDC") {
-    import spark.implicits._
-    // upgrade path: an index built before positional support has no
-    // pos base. The fold (explicit or auto, inside incrementalMerge's
-    // write path) must SKIP the family, not throw and wedge every
-    // subsequent merge; refresh_index backfills it.
-    val (cat, wh) = freshCat("legacypos")
-    cat.createTable("t", schema, Seq("k"))
-    cat.bulkLoad("t",
-      (0L until 300L).map(i => (i, "s", s"alpha doc$i")).toDF("k", "seg", "body"))
-    cat.createIndex("t", "ft", "fulltext", Seq("body"))
-    val idxDir = Paths.get(wh, "t.fulltext.ft")
-    // simulate the legacy layout
-    def rmrf(p: java.nio.file.Path): Unit = {
-      val w = Files.walk(p)
-      try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => { Files.deleteIfExists(x); () })
-      finally w.close()
-    }
-    rmrf(idxDir.resolve("pos"))
-    cat.incrementalMerge("t", Seq((5L, "s", "bravo")).toDF("k", "seg", "body"))
-    cat.compactIndex("t", "ft", "fulltext") // must not throw
-    assert(cat.indexStatus("t", "ft", "fulltext") == "FRESH")
-    // postings view intact through the fold; positional absent with a
-    // clear diagnostic until a refresh backfills it
-    assert(sortedRows(cat.indexData("t", "ft", "fulltext")) ==
-      sortedRows(rebuildPostings(cat, "t")))
-    val e = intercept[IllegalArgumentException] {
-      cat.indexPositional("t", "ft", "fulltext").count()
-    }
-    assert(e.getMessage.contains("refresh_index"))
-    cat.refreshIndex("t", "ft", "fulltext")
-    assert(FullText.searchPhrase(cat.table("t").df, "k",
-        cat.indexPositional("t", "ft", "fulltext"), "alpha doc7")
-      .select("k").collect().map(_.getLong(0)).toSet == Set(7L))
-  }
-
   test("createIndex on a typo'd column fails clean; the corrected retry succeeds") {
     import spark.implicits._
     val (cat, wh) = freshCat("idxretry")

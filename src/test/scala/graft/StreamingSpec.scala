@@ -451,7 +451,16 @@ class StreamingSpec extends AnyFunSuite {
     val (catA, _) = freshTable()
     val (catB, whB) = freshTable()
     apply(catA, Seq(0, 1, 2))
-    apply(catB, Seq(2, 1, 0)) // reversed batch order
+    // reversed batch order, through the over-bound distributed merge:
+    // a driver-patch bound of 1 row sends every batch of two or more
+    // winners (the first, on an empty table, has one per user) there,
+    // so the assertions below also check both branches agree
+    val boundKey = "spark.graft.merge.driverPatchMaxRows"
+    assert(ev.filter($"event_id" % 3 === 2).select("user_id").distinct().count() > 1)
+    val prevBound = spark.conf.getOption(boundKey)
+    spark.conf.set(boundKey, "1")
+    try apply(catB, Seq(2, 1, 0))
+    finally prevBound.fold(spark.conf.unset(boundKey))(spark.conf.set(boundKey, _))
     val a = catA.table("user_state").df
     val b = catB.table("user_state").df
     assert(a.except(b).isEmpty && b.except(a).isEmpty,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.JavaConverters._
 
 /** Multi-statement transactions (reference
   * KVTransactionalIndexTable.kt: several statements + their base/index
@@ -24,6 +25,20 @@ class TxnSpec extends AnyFunSuite {
 
   private def freshCat(tag: String): Catalog =
     new Catalog(spark, Files.createTempDirectory(s"graft_${tag}_wh").toString)
+
+  /** Where commits write their journals: `_graft_txn/` under the
+    * warehouse. */
+  private def txnDir(wh: String) = Paths.get(wh, "_graft_txn")
+
+  private def writeJournal(wh: String, name: String, body: String): Unit = {
+    Files.createDirectories(txnDir(wh))
+    Files.writeString(txnDir(wh).resolve(name), body): Unit
+  }
+
+  private def journalDirNames(wh: String): Set[String] = {
+    val s = Files.list(txnDir(wh))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
 
   private def setup(cat: Catalog): Unit = {
     import spark.implicits._
@@ -52,10 +67,9 @@ class TxnSpec extends AnyFunSuite {
     assert(cat.table("acct").pointGet(2L).head().getDouble(1) == 900.0)
     assert(cat.table("acct").pointGet(3L).head().getDouble(1) == 1000.0)
     assert(cat.table("log").df.count() == 2)
-    // no journal left behind
-    assert(!Files.list(Paths.get(cat.warehouse)).iterator().hasNext ||
-      Files.list(Paths.get(cat.warehouse)).toArray.map(_.toString)
-        .forall(p => !p.contains("_graft_txn_")))
+    // the two-table commit journaled, and left no journal behind
+    assert(Files.isDirectory(txnDir(cat.warehouse)))
+    assert(!journalDirNames(cat.warehouse).exists(_.startsWith("_graft_txn_")))
   }
 
   test("an exception in the body rolls back: nothing published") {
@@ -131,11 +145,11 @@ class TxnSpec extends AnyFunSuite {
     // as a copy of the live snapshot for both tables + write the journal
     stageCopy(cat, "acct", vA + 1)
     stageCopy(cat, "log", vL + 1)
-    Files.writeString(Paths.get(cat.warehouse, "_graft_txn_test1.json"),
+    writeJournal(cat.warehouse, "_graft_txn_test1.json",
       s"""{"publishes":[{"table":"acct","next":${vA + 1}},{"table":"log","next":${vL + 1}}]}""")
     // a second journal whose staged dir is missing must be skipped, not
     // blow up or mis-bump
-    Files.writeString(Paths.get(cat.warehouse, "_graft_txn_test2.json"),
+    writeJournal(cat.warehouse, "_graft_txn_test2.json",
       """{"publishes":[{"table":"acct","next":9}]}""")
 
     val cat2 = new Catalog(spark, cat.warehouse)
@@ -143,8 +157,7 @@ class TxnSpec extends AnyFunSuite {
     assert(cat2.dataVersionOf("acct") == vA + 1)
     assert(cat2.dataVersionOf("log") == vL + 1)
     // both journals consumed; re-running recovery is a no-op
-    assert(Files.list(Paths.get(cat.warehouse)).toArray.map(_.toString)
-      .forall(p => !p.contains("_graft_txn_")))
+    assert(journalDirNames(cat.warehouse).isEmpty)
     cat2.recoverTransactions()
     assert(cat2.dataVersionOf("acct") == vA + 1)
     // rolled-forward snapshots read correctly
@@ -163,7 +176,7 @@ class TxnSpec extends AnyFunSuite {
     cat.bulkLoad("acct", (1L to 3L).map(i => (i, 1.0)).toDF("k", "bal"))
     val vA = cat.dataVersionOf("acct")
     stageCopy(cat, "acct", vA + 1)
-    Files.writeString(Paths.get(wh, "_graft_txn_sql.json"),
+    writeJournal(wh, "_graft_txn_sql.json",
       s"""{"publishes":[{"table":"acct","next":${vA + 1}}]}""")
     spark.sql("CALL gtxnp.system.recover_txns()")
     assert(cat.dataVersionOf("acct") == vA + 1)
@@ -176,7 +189,7 @@ class TxnSpec extends AnyFunSuite {
     val vA = cat.dataVersionOf("acct")
     // staged post-image + journal from a commit that crashed pre-bump
     stageCopy(cat, "acct", vA + 1)
-    Files.writeString(Paths.get(cat.warehouse, "_graft_txn_vac.json"),
+    writeJournal(cat.warehouse, "_graft_txn_vac.json",
       s"""{"publishes":[{"table":"acct","next":${vA + 1}}]}""")
     // zero grace would reclaim data_v(next) as an orphan if vacuum ran
     // before recovery — instead the journal must roll forward first
@@ -248,18 +261,14 @@ class TxnSpec extends AnyFunSuite {
   test("a corrupt journal is quarantined, not re-parsed forever") {
     val cat = freshCat("txn10")
     setup(cat)
-    Files.writeString(Paths.get(cat.warehouse, "_graft_txn_bad.json"),
-      "{not json at all")
+    writeJournal(cat.warehouse, "_graft_txn_bad.json", "{not json at all")
     cat.recoverTransactions() // must not throw
-    val names = Files.list(Paths.get(cat.warehouse)).toArray
-      .map(_.toString.split("/").last).toSet
+    val names = journalDirNames(cat.warehouse)
     assert(!names.contains("_graft_txn_bad.json"))
     assert(names.contains("_graft_txn_bad.json.corrupt"))
     // and the quarantined file is not picked up again
     cat.recoverTransactions()
-    assert(Files.list(Paths.get(cat.warehouse)).toArray
-      .map(_.toString.split("/").last).toSet
-      .contains("_graft_txn_bad.json.corrupt"))
+    assert(journalDirNames(cat.warehouse).contains("_graft_txn_bad.json.corrupt"))
   }
 
   test("concurrent transactions: no deadlock under opposite statement order, " +

@@ -18,12 +18,11 @@ import os
 import sys
 
 
-def code_lines(lines):
-    """Code-only line count: lines left non-blank once comments go."""
-    n = 0
+def code_text(lines):
+    """Each line with its comments removed (string literals kept)."""
     in_block = False
     for line in lines:
-        code = False
+        out = []
         i = 0
         in_str = False
         while i < len(line):
@@ -38,10 +37,12 @@ def code_lines(lines):
                 continue
             if in_str:
                 if c == "\\":
+                    out.append(two)
                     i += 2
                     continue
                 if c == '"':
                     in_str = False
+                out.append(c)
                 i += 1
                 continue
             if two == "//":
@@ -52,13 +53,14 @@ def code_lines(lines):
                 continue
             if c == '"':
                 in_str = True
-                code = True
-            elif not c.isspace():
-                code = True
+            out.append(c)
             i += 1
-        if code:
-            n += 1
-    return n
+        yield "".join(out)
+
+
+def code_lines(lines):
+    """Code-only line count: lines left non-blank once comments go."""
+    return sum(1 for t in code_text(lines) if t.strip())
 
 
 def count(path):
