@@ -15,7 +15,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentHashMap
 import scala.collection.JavaConverters._
 
 /** Millisecond point reads WITHOUT a Spark job — the analog of the
@@ -57,18 +56,13 @@ import scala.collection.JavaConverters._
   */
 private[kv] object DriverRead {
 
-  /** (path, size, mtimeMs) → per-row-group (min,max) of the leading
-    * key column. Size+mtime key: COW snapshots never rewrite a file
-    * in place, but the same part-file NAME can recur across
-    * snapshots — identity must come from content coordinates. */
-  private case class FooterKey(path: String, size: Long, mtime: Long,
-                               keyCol: String)
-  private val footerRanges = new ConcurrentHashMap[FooterKey, Seq[(Any, Any)]]()
-  // COW churn strands entries for vacuumed snapshots; a serving
-  // process that lives for weeks must not leak them. Entries are tiny
-  // (~100 B) so the cap is generous, and a rare full reset only costs
-  // re-reading footers the next Gets touch anyway.
-  private val FooterCacheCap = 65536
+  /** Per-row-group (min,max) of a key column, by the file's identity
+    * and the column ([[FileCache]]): COW snapshots never rewrite a file
+    * in place, but the same part-file NAME can recur across snapshots.
+    * Entries are tiny (~100 B), so the cap is generous; COW churn
+    * strands entries for vacuumed snapshots, which age out of the LRU
+    * in a serving process that lives for weeks. */
+  private val footerRanges = new FileCache[String, Seq[(Any, Any)]](65536)
 
   /** Cold footer opens, counted for the scale pin (DriverGetSpec):
     * a manifest-served range scan must not fall back to O(files)
@@ -100,16 +94,11 @@ private[kv] object DriverRead {
     }
   }
 
-  private def footerKey(p: Path, keyCol: String): FooterKey =
-    FooterKey(p.toAbsolutePath.toString, Files.size(p),
-      Files.getLastModifiedTime(p).toMillis, keyCol)
-
   /** Leading-key (min,max) per row group from the file footer,
     * canonicalized to Long/Double/String like the manifest's bounds.
     * Null bounds (no stats / all-null pages) mean "cannot exclude". */
   private def rowGroupRanges(file: Path, keyCol: String): Seq[(Any, Any)] = {
-    if (footerRanges.size() > FooterCacheCap) footerRanges.clear()
-    footerRanges.computeIfAbsent(footerKey(file, keyCol), { _ =>
+    footerRanges.get(file, keyCol) {
       footerReadCount.incrementAndGet()
       val in = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file.toUri), new Configuration())
@@ -125,7 +114,7 @@ private[kv] object DriverRead {
             }.getOrElse((null, null))
         }
       } finally reader.close()
-    })
+    }
   }
 
   private def canonStat(x: Any): Any = x match {
@@ -142,7 +131,7 @@ private[kv] object DriverRead {
     * a key whose runtime class merely widens (Long literal against a
     * DoubleType column) lands in the same class as the manifest/footer
     * bounds (Long/Double/String — the same canonical set
-    * Catalog.canonKey emits when writing the manifest; the manifest's
+    * ManifestCapture.canonKey emits when writing the manifest; the manifest's
     * JSON round-trip preserves integral-vs-floating, so both sides
     * stay aligned per column type). Mismatched kinds fail loudly
     * instead of class-cast-crashing inside a comparison. */
@@ -277,7 +266,7 @@ private[kv] object DriverRead {
     * throws rather than silently truncating. */
   def range(snapshotDir: Path, schema: StructType, keyCol: String,
             lo: Any, hi: Any, maxRows: Int,
-            fileRanges: Seq[(String, Any, Any)]): Seq[Row] = {
+            fileRanges: Seq[FileRange]): Seq[Row] = {
     require(lo != null && hi != null, "range bounds may not be null")
     val dt = schema(keyCol).dataType
     val (cLo, cHi) = (canon(dt, lo), canon(dt, hi))
@@ -286,13 +275,7 @@ private[kv] object DriverRead {
     def overlaps(flo: Any, fhi: Any): Boolean =
       flo == null || fhi == null ||
         (cmpPrep(pLo, fhi) <= 0 && cmpPrep(pHi, flo) >= 0)
-    val parts = listParts(snapshotDir)
-    val files: Seq[Path] =
-      if (fileRanges.nonEmpty &&
-          fileRanges.map(_._1).toSet == parts.map(_.getFileName.toString).toSet)
-        fileRanges.filter(r => overlaps(r._2, r._3))
-          .map(r => snapshotDir.resolve(r._1))
-      else parts
+    val files = pruned(snapshotDir, fileRanges)(r => overlaps(r.lo, r.hi))
     val filter = FilterCompat.get(rangePredicate(schema, keyCol, lo, hi))
     val out = Seq.newBuilder[Row]
     var n = 0
@@ -374,15 +357,25 @@ private[kv] object DriverRead {
     }
   }
 
+  /** The files of `dir` a read must open: the manifest entries `keep`
+    * admits when `fileRanges` covers exactly the dir's part files, else
+    * every part file (footer statistics then stand in). */
+  private def pruned(dir: Path, fileRanges: Seq[FileRange])
+                    (keep: FileRange => Boolean): Seq[Path] = {
+    val parts = ManifestCapture.partFiles(dir)
+    if (fileRanges.nonEmpty && fileRanges.map(_.file).toSet == parts.toSet)
+      fileRanges.filter(keep).map(r => dir.resolve(r.file))
+    else parts.map(dir.resolve)
+  }
+
   /** Point/multi-get over one snapshot directory. `fileRanges` is the
-    * manifest view of the snapshot when available ((file, lo, hi) on
-    * the leading key, canonicalized); pass Nil to fall back to footer
-    * statistics for every file. Returns rows in table-schema order,
-    * unordered across keys (callers sort). */
+    * snapshot's manifest ([[Manifest.read]]: leading-key bounds,
+    * canonicalized, and per-file blooms); pass Nil to fall back to
+    * footer statistics for every file. Returns rows in table-schema
+    * order, unordered across keys (callers sort). */
   def get(snapshotDir: Path, schema: StructType, pk: Seq[String],
           keys: Seq[Seq[Any]],
-          fileRanges: Seq[(String, Any, Any)],
-          blooms: Map[String, Array[Byte]] = Map.empty): Seq[Row] = {
+          fileRanges: Seq[FileRange]): Seq[Row] = {
     require(keys.nonEmpty && keys.forall(_.length == pk.length),
       s"each get key must bind the full primary key ${pk.mkString(",")}")
     // a key value outside its int-family column's range can never
@@ -394,22 +387,16 @@ private[kv] object DriverRead {
     if (usable.isEmpty) return Nil
     val leadKeys = usable.map(k =>
       prepare(canon(schema(pk.head).dataType, k.head)))
-    // base hashes for the manifest-bloom probe (HBase's StoreFile-
-    // bloom miss path): computed once per get, only when the manifest
-    // carries blooms at all
+    // per-file rowkey blooms and the keys' base hashes for their
+    // probe (HBase's StoreFile-bloom miss path): hashed once per get,
+    // only when the manifest carries blooms at all
+    val blooms = fileRanges.iterator.flatMap(r => r.bloom.map(r.file -> _)).toMap
     val leadHashes: Seq[Long] =
       if (blooms.isEmpty) Nil
       else usable.map(k => bloomBaseHash(schema(pk.head).dataType, k.head))
-    val parts = listParts(snapshotDir)
-    val byManifest: Seq[Path] =
-      if (fileRanges.nonEmpty &&
-          fileRanges.map(_._1).toSet == parts.map(_.getFileName.toString).toSet)
-        fileRanges.filter(r => anyKeyIn(r._2, r._3, leadKeys))
-          .map(r => snapshotDir.resolve(r._1))
-      else parts
-    val pred = keyPredicate(schema, pk, usable)
-    val filter = FilterCompat.get(pred)
-    byManifest.flatMap { file =>
+    val files = pruned(snapshotDir, fileRanges)(r => anyKeyIn(r.lo, r.hi, leadKeys))
+    val filter = FilterCompat.get(keyPredicate(schema, pk, usable))
+    files.flatMap { file =>
       // per-file bloom veto BEFORE the footer: a key set that misses
       // the file's bloom cannot match any stored row — zero I/O on
       // the file, not even its footer (a false positive only costs
@@ -429,7 +416,7 @@ private[kv] object DriverRead {
   }
 
   /** Term seek RESTRICTED to doc-id ranges — the block-max WAND read
-    * shape (Catalog.driverFtTopK): `term IN terms AND doc_id ∈ one of
+    * shape (Serving.driverFtTopK): `term IN terms AND doc_id ∈ one of
     * ranges`, handed to parquet-hadoop whole. On postings sorted
     * (term, doc_id) the term predicate prunes row groups like [[get]]
     * and the doc ranges prune PAGES through the column index — the
@@ -439,7 +426,7 @@ private[kv] object DriverRead {
     * like [[range]]. */
   def getTermsInDocRanges(snapshotDir: Path, schema: StructType,
                           terms: Seq[String], ranges: Seq[(Long, Long)],
-                          fileRanges: Seq[(String, Any, Any)]): Seq[Row] = {
+                          fileRanges: Seq[FileRange]): Seq[Row] = {
     require(terms.nonEmpty, "empty term list")
     val termPred = orAll(terms.toIndexedSeq.map(t =>
       FilterApi.eq(FilterApi.binaryColumn("term"),
@@ -451,65 +438,24 @@ private[kv] object DriverRead {
           rangePredicate(schema, "doc_id", lo, hi) }))
     val filter = FilterCompat.get(pred)
     val leadKeys = terms.map(t => prepare(t))
-    val parts = listParts(snapshotDir)
-    val files: Seq[Path] =
-      if (fileRanges.nonEmpty &&
-          fileRanges.map(_._1).toSet == parts.map(_.getFileName.toString).toSet)
-        fileRanges.filter(r => anyKeyIn(r._2, r._3, leadKeys))
-          .map(r => snapshotDir.resolve(r._1))
-      else parts
-    files.flatMap { file =>
+    pruned(snapshotDir, fileRanges)(r => anyKeyIn(r.lo, r.hi, leadKeys)).flatMap { file =>
       if (!rowGroupRanges(file, "term").exists(r => anyKeyIn(r._1, r._2, leadKeys))) Nil
       else readMatching(file, schema, filter)
     }
   }
 
-  /** Decoded-rows cache for WHOLE-FILE artifact reads — the
-    * ManifestCache recipe one layer down (the serving-process analog
-    * of HBase's block cache): a serving loop between compactions
-    * re-reads the same COW artifact files (CDC segments, tombstone
-    * sets, dictionary deltas, centroid tables) on every call, and the
-    * decode — parquet-mr Group assembly — is the dominant per-call
-    * cost. Keyed (path, size, mtime, schema): COW snapshots never
-    * rewrite a file in place, so the coordinates identify content and
-    * a compaction/vacuum naturally invalidates by changing them.
-    * Access-ordered LRU bounded by TOTAL CACHED ROWS (entries are
-    * patch-sized by the readAll contract, so the row bound is the
-    * memory bound); only NOOP-filtered whole-file reads cache —
-    * predicate reads ([[get]]/[[range]]) are genuinely selective and
-    * stay uncached. */
-  private case class FileKey(path: String, size: Long, mtime: Long,
-                             schema: StructType)
-  private val fileRowsLock = new Object
+  /** Decoded rows of WHOLE-FILE artifact reads by the file's identity
+    * and read schema ([[FileCache]] — the serving-process analog of
+    * HBase's block cache): a serving loop between compactions re-reads
+    * the same COW artifact files (CDC segments, tombstone sets,
+    * dictionary deltas, centroid tables) on every call, and the decode
+    * — parquet-mr Group assembly — is the dominant per-call cost.
+    * Bounded by TOTAL CACHED ROWS (entries are patch-sized by the
+    * readAll contract, so the row bound is the memory bound); only
+    * NOOP-filtered whole-file reads cache — predicate reads
+    * ([[get]]/[[range]]) are genuinely selective and stay uncached. */
   private val fileRows =
-    new java.util.LinkedHashMap[FileKey, Seq[Row]](64, 0.75f, true)
-  private var fileRowsCached = 0L
-  private val FileRowsCapRows = 2L * 1024 * 1024
-
-  private def readWholeCached(file: Path, schema: StructType): Seq[Row] = {
-    val key = FileKey(file.toAbsolutePath.toString, Files.size(file),
-      Files.getLastModifiedTime(file).toMillis, schema)
-    fileRowsLock.synchronized {
-      val hit = fileRows.get(key)
-      if (hit != null) return hit
-    }
-    val rows = readMatching(file, schema, FilterCompat.NOOP)
-    fileRowsLock.synchronized {
-      if (!fileRows.containsKey(key)) {
-        fileRows.put(key, rows)
-        fileRowsCached += rows.length
-        val it = fileRows.entrySet().iterator()
-        while (fileRowsCached > FileRowsCapRows && it.hasNext) {
-          val eldest = it.next()
-          if (!eldest.getKey.equals(key)) {
-            fileRowsCached -= eldest.getValue.length
-            it.remove()
-          }
-        }
-      }
-    }
-    rows
-  }
+    new FileCache[StructType, Seq[Row]](2L * 1024 * 1024, _.length.toLong)
 
   /** Unfiltered read of a PATCH-SIZED artifact dir (tombstone rk
     * sets, dictionary deltas — frames bounded by the CDC trigger, not
@@ -519,8 +465,8 @@ private[kv] object DriverRead {
   def readAll(snapshotDir: Path, schema: StructType, maxRows: Int): Seq[Row] = {
     val out = Seq.newBuilder[Row]
     var n = 0
-    listParts(snapshotDir).foreach { file =>
-      val rows = readWholeCached(file, schema)
+    ManifestCapture.partFiles(snapshotDir).map(snapshotDir.resolve).foreach { file =>
+      val rows = fileRows.get(file, schema)(readMatching(file, schema, FilterCompat.NOOP))
       n += rows.length
       require(n <= maxRows,
         s"artifact dir $snapshotDir holds more than $maxRows rows — " +
@@ -528,12 +474,6 @@ private[kv] object DriverRead {
       out ++= rows
     }
     out.result()
-  }
-
-  private def listParts(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
-    finally s.close()
   }
 
   private def readMatching(file: Path, schema: StructType,
@@ -700,4 +640,66 @@ private[kv] object DriverRead {
     }
     out.toSeq
   }
+}
+
+/** THE driver-side cache of values derived from one file's bytes —
+  * parsed range manifests ([[Manifest]]), footer row-group ranges and
+  * decoded artifact rows ([[DriverRead]]). Keyed by the file's identity
+  * (absolute path, size, mtime) plus `D`, what the value was derived
+  * under (a key column, a read schema): COW dirs never rewrite a file
+  * in place, so a rewrite or a vacuum changes the identity and the old
+  * entry is simply never hit again. Access-ordered LRU bounded by the
+  * total `weight` of the cached values (one per entry by default); the
+  * entry just loaded is never evicted by its own insert. A load runs
+  * outside the lock, so a slow read never blocks another file's hit,
+  * and a None load is returned but never cached: absence must not be
+  * pinned until the identity changes. */
+private[kv] final class FileCache[D, V <: AnyRef](cap: Long,
+                                                  weight: V => Long = (_: V) => 1L) {
+  private case class Key(path: String, size: Long, mtime: Long, derivedUnder: D)
+  private val lru = new java.util.LinkedHashMap[Key, V](64, 0.75f, true)
+  private var total = 0L
+
+  def get(f: Path, d: D)(load: => V): V = getOpt(f, d)(Some(load)).get
+
+  def getOpt(f: Path, d: D)(load: => Option[V]): Option[V] = {
+    val key = Key(f.toAbsolutePath.toString, Files.size(f),
+      Files.getLastModifiedTime(f).toMillis, d)
+    val hit = synchronized(lru.get(key))
+    if (hit != null) Some(hit)
+    else {
+      val v = load
+      v.foreach(put(key, _))
+      v
+    }
+  }
+
+  private def put(key: Key, v: V): Unit = synchronized {
+    if (!lru.containsKey(key)) {
+      lru.put(key, v)
+      total += weight(v)
+      val it = lru.entrySet().iterator()
+      while (total > cap && it.hasNext) {
+        val eldest = it.next()
+        if (eldest.getKey != key) {
+          total -= weight(eldest.getValue)
+          it.remove()
+        }
+      }
+    }
+  }
+
+  /** Drop every cached value of this path — a writer's explicit hook
+    * for a rewrite that may keep the path's size and mtime. */
+  def invalidate(f: Path): Unit = synchronized {
+    val p = f.toAbsolutePath.toString
+    val it = lru.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey.path == p) { total -= weight(e.getValue); it.remove() }
+    }
+  }
+
+  /** Cached entries, for the eviction pin. */
+  private[kv] def size: Int = synchronized(lru.size)
 }

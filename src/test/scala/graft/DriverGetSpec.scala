@@ -118,16 +118,16 @@ class DriverGetSpec extends AnyFunSuite {
     assert(parts.size > 1)
     // a manifest that excludes key 42 from EVERY file must hide the
     // row — proof the file-level pruning actually consumes the ranges
-    val excluding = parts.map(f => (f, 1000000L: Any, 2000000L: Any))
+    val excluding = parts.map(f => FileRange(f, 1000000L, 2000000L))
     assert(DriverRead.get(dir, schema, Seq("o_orderkey"),
       Seq(Seq(42L)), excluding).isEmpty)
     // a STALE manifest (wrong file set) must be ignored, not trusted:
     // the row comes back via footer statistics
-    val stale = Seq(("part-nonexistent.parquet", 1000000L: Any, 2000000L: Any))
+    val stale = Seq(FileRange("part-nonexistent.parquet", 1000000L, 2000000L))
     assert(DriverRead.get(dir, schema, Seq("o_orderkey"),
       Seq(Seq(42L)), stale).nonEmpty)
     // covering manifest with true ranges also finds it
-    val wide = parts.map(f => (f, 0L: Any, java.lang.Long.MAX_VALUE: Any))
+    val wide = parts.map(f => FileRange(f, 0L, java.lang.Long.MAX_VALUE))
     assert(DriverRead.get(dir, schema, Seq("o_orderkey"),
       Seq(Seq(42L)), wide).nonEmpty)
   }

@@ -2,47 +2,62 @@ package graft
 
 import graft.kv.Catalog
 import graft.operators.Skew
-import graft.streaming.MutationIngest
+import graft.streaming.Streams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class IngestSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("streaming mutation ingest merges last-writer-wins into the catalog table") {
-    import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_ingest_wh").toString
-    val cat = new Catalog(spark, wh)
-    cat.createTable("user_state",
-      StructType(Seq(
-        StructField("user_id", LongType, false),
-        StructField("event_type", StringType, true),
-        StructField("value", DoubleType, true))),
-      primaryKey = Seq("user_id"))
+  /** A mutation stream merged into `table` by the streaming-upsert
+    * sink: each micro-batch goes through [[Streams.upsertLatestBatch]]
+    * (last writer wins on (tsCol, seqCol), file-granular merge). */
+  private def upsertStream(stream: DataFrame, cat: Catalog, table: String,
+                           keyCol: String, tsCol: String, seqCol: String): StreamingQuery =
+    stream.writeStream.outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        Streams.upsertLatestBatch(cat, table, batch, keyCol, tsCol, seqCol)
+      }
+      .start()
 
-    // mutations = the events table streamed in; key user_id,
-    // order by ts (tie event_id)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_src")
+  /** The events table as a file-source stream, `ts` as a timestamp. */
+  private def eventsStream(prefix: String): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val raw = spark.readStream
       .schema(Tables.load(spark, sf, "events").schema)
       .parquet(dir.toString)
-    val stream =
-      if (raw.schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
+    if (raw.schema("ts").dataType == LongType)
+      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else raw
+  }
 
-    val q = MutationIngest.start(spark, stream, cat, "user_state",
-      keyCol = "user_id", orderCol = "ts", tieCol = "event_id")
+  /** The mutable state a user-keyed upsert keeps, ordering columns
+    * included (the sink compares a batch's rows against them). */
+  private val stateCols = Seq("user_id", "event_type", "value", "ts", "event_id")
+
+  test("streaming mutation ingest merges last-writer-wins into the catalog table") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_ingest_wh").toString
+    val cat = new Catalog(spark, wh)
+    // mutations = the events table streamed in; key user_id,
+    // order by ts (tie event_id)
+    val stream = eventsStream("graft_ingest_src")
+    cat.createTable("user_state", stream.select(stateCols.map(col): _*).schema,
+      primaryKey = Seq("user_id"))
+
+    val q = upsertStream(stream, cat, "user_state", "user_id", "ts", "event_id")
     try q.processAllAvailable() finally q.stop()
 
     // expected: latest event per user from the batch table
-    val expected = MutationIngest.latestPerKey(
-        Tables.events(spark, sf), "user_id", "ts", "event_id")
-      .select("user_id", "event_type", "value")
+    val expected = Tables.events(spark, sf).groupBy("user_id")
+      .agg(max_by(struct($"event_type", $"value"), struct($"ts", $"event_id")).as("w"))
+      .select($"user_id", $"w.event_type", $"w.value")
       .collect().map(_.toSeq).toSet
     val got = cat.table("user_state").df
       .select("user_id", "event_type", "value")
@@ -190,28 +205,16 @@ class IngestSpec extends AnyFunSuite {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft_cdcidx_wh").toString
     val cat = new Catalog(spark, wh)
-    cat.createTable("st",
-      StructType(Seq(
-        StructField("user_id", LongType, false),
-        StructField("event_type", StringType, true),
-        StructField("value", DoubleType, true))),
-      primaryKey = Seq("user_id"))
-    cat.bulkLoad("st", Seq((1L, "seed", 0.0)).toDF("user_id", "event_type", "value"))
+    val stream = eventsStream("graft_cdcidx_src")
+    val schema = stream.select(stateCols.map(col): _*).schema
+    cat.createTable("st", schema, primaryKey = Seq("user_id"))
+    // a seed row older than every event
+    cat.bulkLoad("st", Seq((1L, "seed", 0.0)).toDF("user_id", "event_type", "value")
+      .withColumn("ts", to_timestamp(lit("1970-01-01 00:00:00")).cast(schema("ts").dataType))
+      .withColumn("event_id", lit(0L)))
     cat.createIndex("st", "by_type", "kv", Seq("event_type"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdcidx_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      dir.resolve("events.parquet"))
-    val raw = spark.readStream
-      .schema(Tables.load(spark, sf, "events").schema)
-      .parquet(dir.toString)
-    val stream =
-      if (raw.schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val q = MutationIngest.start(spark, stream, cat, "st",
-      keyCol = "user_id", orderCol = "ts", tieCol = "event_id")
+    val q = upsertStream(stream, cat, "st", "user_id", "ts", "event_id")
     try q.processAllAvailable() finally q.stop()
 
     // index followed the micro-batch merges: FRESH, one entry per row,
@@ -260,8 +263,7 @@ class IngestSpec extends AnyFunSuite {
       .withColumn("vec_id", $"vec_id" + 1000000L), "d1.parquet")
     val stream = spark.readStream.schema(embs.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    val q = MutationIngest.start(spark, stream, cat, "vec",
-      keyCol = "vec_id", orderCol = "label", tieCol = "vec_id")
+    val q = upsertStream(stream, cat, "vec", "vec_id", "label", "vec_id")
     try q.processAllAvailable() finally q.stop()
 
     assert(cat.indexStatus("vec", "ann", "vector") == "FRESH")

@@ -129,6 +129,21 @@ class KvSpec extends AnyFunSuite {
     assert(cat.listTables().isEmpty)
   }
 
+  test("a table meta missing a field createTable always writes fails loudly") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_strict_meta_wh").toString
+    val cat = new Catalog(spark, wh)
+    cat.createTable("m", StructType(Seq(StructField("k", LongType, false))), Seq("k"))
+    val mf = java.nio.file.Paths.get(wh, "m", "_graft_meta.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val meta = mapper.readTree(java.nio.file.Files.readString(mf))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    meta.remove("layout")
+    java.nio.file.Files.writeString(mf, mapper.writeValueAsString(meta))
+    val e = intercept[IllegalStateException](cat.layoutOf("m"))
+    assert(e.getMessage.contains("layout"))
+    intercept[IllegalStateException](cat.tableInfo("m"))
+  }
+
   test("primary key declared in a different case than the schema works end-to-end") {
     val wh = java.nio.file.Files.createTempDirectory("graft_pkcase_wh").toString
     val cat = new Catalog(spark, wh)

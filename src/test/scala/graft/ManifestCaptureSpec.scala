@@ -51,8 +51,8 @@ class ManifestCaptureSpec extends AnyFunSuite {
     * Spark's own aggregates. Returns the manifest. */
   private def assertMatchesScan(cat: Catalog, dir: Path, keyCol: String,
                                 second: Option[String]): Seq[FileRange] = {
-    val written = cat.readManifestJson(dir).getOrElse(fail(s"no manifest in $dir"))
-    val scanned = cat.scanRanges(dir, keyCol, second)
+    val written = Manifest.read(dir).getOrElse(fail(s"no manifest in $dir"))
+    val scanned = Manifest.scanRanges(spark, dir, keyCol, second)
     assert(view(written) == view(scanned), s"write-time manifest of $dir != scan")
     assert(written.map(_.file).toSet == ManifestCapture.partFiles(dir).toSet)
     val agg = spark.read.parquet(dir.toString)
@@ -322,5 +322,46 @@ class ManifestCaptureSpec extends AnyFunSuite {
     val exp = cat.table("bg").df.select("k").collect().map(_.getLong(0))
       .filter(k => (k + 1000L) % 3 == 0 && ((k + 1000L) / 3) % 2 == 0).toSet
     assert(got == exp && got.nonEmpty)
+  }
+
+  test("a manifest rewritten with the same size and mtime is never served stale") {
+    val dir = Files.createTempDirectory("graft_mcache")
+    val f = dir.resolve("_graft_ranges.json")
+    val a = Seq(FileRange("part-0", 1L, 5L))
+    val b = Seq(FileRange("part-0", 2L, 6L))
+    Manifest.write(spark, dir, a)
+    val (size, mtime) = (Files.size(f), Files.getLastModifiedTime(f))
+    assert(Manifest.read(dir).map(view) == Some(view(a))) // now cached
+    Manifest.write(spark, dir, b)
+    Files.setLastModifiedTime(f, mtime)
+    assert(Files.size(f) == size && Files.getLastModifiedTime(f) == mtime)
+    assert(Manifest.read(dir).map(view) == Some(view(b)),
+      "a same-identity rewrite served the cached parse of the old manifest")
+  }
+
+  test("the driver file cache evicts at its cap and reloads correct rows; a None load is not cached") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_fcache")
+    val dirs = (0 until 3).map { i =>
+      val d = root.resolve(s"d$i")
+      Seq(10L * i, 10L * i + 1).toDF("k").coalesce(1).write.parquet(d.toString)
+      d
+    }
+    def part(d: Path): Path = d.resolve(ManifestCapture.partFiles(d).head)
+    var loads = 0
+    // weighted by rows, capped at two files' worth
+    val cache = new FileCache[Unit, Seq[Row]](4, _.length.toLong)
+    def read(d: Path): Seq[Row] = cache.get(part(d), ()) {
+      loads += 1
+      spark.read.parquet(d.toString).collect().toSeq
+    }
+    val first = dirs.map(read)
+    assert(loads == 3 && cache.size == 2) // d0 evicted by d2's insert
+    assert(read(dirs(1)) == first(1) && loads == 3) // a hit
+    assert(read(dirs(0)) == first(0) && loads == 4) // reloaded after eviction
+    assert(first(0).map(_.getLong(0)) == Seq(0L, 1L))
+    val f = part(dirs(2))
+    assert(cache.getOpt(f, ())(None).isEmpty)
+    assert(cache.getOpt(f, ())(Some(Seq.empty[Row])).contains(Seq.empty[Row]))
   }
 }

@@ -1,22 +1,16 @@
 package graft
 
-import graft.kv.Catalog
+import graft.kv.Manifest
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Randomized equivalence proof for the manifest pruning kernel:
-  * `Catalog.splitByKeyIntersect` (sorted keys + one binary search per
+  * `Manifest.splitByKeyIntersect` (sorted keys + one binary search per
   * file range, O((F+K)·log K)) must agree EXACTLY with the naive
   * nested scan (O(F×K)) it replaced on the CDC hot path — for any
   * manifest, any key set, any key type, including boundary hits at
   * lo/hi and null-bounded zero-row entries. */
 class ManifestSplitSpec extends AnyFunSuite {
-  import TestSpark._
-
-  private lazy val cat =
-    new Catalog(spark, Files.createTempDirectory("graft_split_wh").toString)
-
   private def check(p: Prop, name: String): Unit = {
     val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), p)
     assert(r.passed, s"$name: $r")
@@ -29,7 +23,7 @@ class ManifestSplitSpec extends AnyFunSuite {
   private def naiveSplit(entries: Seq[kv.FileRange], keys: Array[Any])
       : (Seq[kv.FileRange], Seq[kv.FileRange]) =
     entries.partition(e => e.lo == null || e.hi == null ||
-      keys.exists(k => cat.keyCmp(k, e.lo) >= 0 && cat.keyCmp(k, e.hi) <= 0))
+      keys.exists(k => Manifest.keyCmp(k, e.lo) >= 0 && Manifest.keyCmp(k, e.hi) <= 0))
 
   /** Entries from a bounded value pool so lo/hi boundary collisions
     * with keys are common, not vanishing-probability. */
@@ -45,7 +39,7 @@ class ManifestSplitSpec extends AnyFunSuite {
         if (nullEvery > 0 && i % (nullEvery + 2) == nullEvery)
           kv.FileRange(s"part-$i", null, null)
         else {
-          val (lo, hi) = if (cat.keyCmp(a, b) <= 0) (a, b) else (b, a)
+          val (lo, hi) = if (Manifest.keyCmp(a, b) <= 0) (a, b) else (b, a)
           kv.FileRange(s"part-$i", lo, hi)
         }
       }
@@ -54,7 +48,7 @@ class ManifestSplitSpec extends AnyFunSuite {
 
   private def prop[A](pool: Gen[A], name: String): Unit =
     check(Prop.forAll(cases(pool)) { case (entries, keys) =>
-      val fast = cat.splitByKeyIntersect(entries, keys)
+      val fast = Manifest.splitByKeyIntersect(entries, keys)
       val slow = naiveSplit(entries, keys)
       fast._1.map(_.file) == slow._1.map(_.file) &&
         fast._2.map(_.file) == slow._2.map(_.file)
@@ -86,7 +80,7 @@ class ManifestSplitSpec extends AnyFunSuite {
 
   test("empty key set leaves only null-bounded entries touched") {
     val entries = Seq(kv.FileRange("a", 1L, 5L), kv.FileRange("b", null, null))
-    val (t, u) = cat.splitByKeyIntersect(entries, Array.empty[Any])
+    val (t, u) = Manifest.splitByKeyIntersect(entries, Array.empty[Any])
     assert(t.map(_.file) == Seq("b") && u.map(_.file) == Seq("a"))
   }
 
@@ -96,7 +90,7 @@ class ManifestSplitSpec extends AnyFunSuite {
       kv.FileRange("hi-hit", 0L, 10L),
       kv.FileRange("miss-below", 11L, 20L),
       kv.FileRange("miss-above", 0L, 9L))
-    val (t, u) = cat.splitByKeyIntersect(entries, Array[Any](java.lang.Long.valueOf(10L)))
+    val (t, u) = Manifest.splitByKeyIntersect(entries, Array[Any](java.lang.Long.valueOf(10L)))
     assert(t.map(_.file).toSet == Set("lo-hit", "hi-hit"))
     assert(u.map(_.file).toSet == Set("miss-below", "miss-above"))
   }
