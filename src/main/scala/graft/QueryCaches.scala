@@ -2,51 +2,60 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.function.Function
 
-/** Per-directory memoization of derived index frames shared by several
-  * queries (full-text postings, dedup pair sets). An index is built
-  * once and consulted many times — rebuilding it per query would
-  * misrepresent both the design and the benchmark. Entries are
-  * Spark-cached; the cache is per-JVM and keyed by (kind, dir).
+/** Per-directory memoization of the query surface's fixtures: derived
+  * index frames shared by several queries (full-text postings, dedup
+  * pair sets), persisted index tables, staged stream landing zones and
+  * corpus scalars. An index is built once and consulted many times —
+  * rebuilding it per query would misrepresent both the design and the
+  * benchmark. The memo is per-JVM and keyed by (kind, dir).
   *
-  * The full-text and bitmap frames are not ad-hoc builds: they come
-  * out of a CATALOG-PERSISTED index (a pid+dir-scoped warehouse whose
-  * `docs`/`orders` tables carry real `fulltext`/`bitmap` indexes —
-  * the reference persists every index as its own table, and the
-  * standalone search queries here consume the same on-disk artifacts
-  * the CDC-maintained path serves). The memo layer then Spark-caches
-  * the persisted frames, so repeated searches read memory while the
-  * artifact of record lives on disk through the production DDL path.
+  * Every build-once fixture TABLE lives in one catalog per (JVM, dir)
+  * ([[fixture]]) — a pid+dir-scoped warehouse whose tables carry real
+  * `fulltext`/`bitmap`/`kv`/`vector` indexes built through the
+  * production DDL path (the reference persists every index as its own
+  * table). The memo then Spark-caches the frames read from them, so
+  * repeated searches read memory while the artifact of record lives on
+  * disk.
+  *
+  * The memo holds handles, not bytes: Spark's block manager bounds,
+  * spills and evicts the `.cache()`d frames, and the decoded bytes the
+  * driver serving path reads go through the bounded `kv.FileCache`.
   */
 object QueryCaches {
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
+  /** A build-once holder. The lazy val's lock is the holder's own, so a
+    * build runs outside the map's `computeIfAbsent` and may itself call
+    * [[once]] for other keys; a build that throws leaves it unset. */
+  private final class Once(build: () => Any) { lazy val value: Any = build() }
 
-  /** Memoize an arbitrary derived frame (public: query modules share
+  private val memo = new ConcurrentHashMap[String, Once]()
+
+  /** The value of `build`, run at most once per key and JVM while it
+    * succeeds: concurrent callers of one key wait for the one build,
+    * and a build that throws is dropped so the next call rebuilds. */
+  def once[T](key: String)(build: => T): T = {
+    val h = memo.computeIfAbsent(key, (_: String) => new Once(() => build))
+    try h.value.asInstanceOf[T]
+    catch { case e: Throwable => memo.remove(key, h); throw e }
+  }
+
+  /** Memoize a derived frame, Spark-cached (public: query modules share
     * pair sets / index frames through this). */
-  def frame(key: String)(build: => DataFrame): DataFrame = memo(key)(build)
+  def frame(key: String)(build: => DataFrame): DataFrame = once(key)(build.cache())
 
-  private def memo(key: String)(build: => DataFrame): DataFrame =
-    cache.computeIfAbsent(key, new Function[String, DataFrame] {
-      override def apply(k: String): DataFrame = build.cache()
-    })
-
-  // Memoization layers each get their OWN map, and every builder
-  // resolves its dependencies BEFORE entering computeIfAbsent:
-  // ConcurrentHashMap forbids re-entrant updates of the map a mapping
-  // function is running under ("Recursive update"), and the violation
-  // is bin-collision-dependent — it must be impossible by structure,
-  // not by luck of the key hashes.
-  private val cats = new ConcurrentHashMap[String, graft.kv.Catalog]()
-  private val builtKinds = new ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** The pid+dir-scoped warehouse catalog backing the persisted index
-    * artifacts below. Tables/indexes are created lazily per kind. */
-  private def warehouse(s: SparkSession, d: String): graft.kv.Catalog =
-    cats.computeIfAbsent(d, new Function[String, graft.kv.Catalog] {
-      override def apply(k: String): graft.kv.Catalog =
-        new graft.kv.Catalog(s, TempWarehouses.scoped("qc", d))
-    })
+  /** Build the fixture `table` once per (JVM, dir) in the one
+    * fixture warehouse of that dir, where every build-once fixture
+    * table lives under its own name: `build` creates and fills it (a
+    * copy left by a failed earlier build is dropped first) and returns
+    * what its callers share. */
+  def fixture[T](s: SparkSession, d: String, table: String)
+                (build: graft.kv.Catalog => T): T =
+    once(s"fixture:$table:$d") {
+      val cat = once(s"fixtures:$d")(
+        new graft.kv.Catalog(s, TempWarehouses.scoped("fixtures", d)))
+      if (cat.tableExists(table)) cat.dropTable(table)
+      build(cat)
+    }
 
   /** One persisted full-text index build over the documents table —
     * build is DDL (once per JVM+dir+analyzer); searches serve from
@@ -55,130 +64,80 @@ object QueryCaches {
     * position holes + stems, the Lucene EnglishAnalyzer contract)
     * the analyzed-phrase gate serves from. */
   private def ftIndexFor(s: SparkSession, d: String, table: String,
-                         analyzer: String): graft.kv.Catalog = {
-    val cat = warehouse(s, d)
-    builtKinds.computeIfAbsent(s"ft:$analyzer:$d",
-      new Function[String, java.lang.Boolean] {
-        override def apply(k: String): java.lang.Boolean = {
-          val docs = Tables.documents(s, d)
-          if (cat.tableExists(table)) cat.dropTable(table)
-          cat.createTable(table, docs.schema, Seq("doc_id"))
-          cat.bulkLoad(table, docs, partitions = 2)
-          cat.createIndex(table, "ft", "fulltext", Seq("text"),
-            analyzer = analyzer)
-          true
-        }
-      })
-    cat
-  }
+                         analyzer: String): graft.kv.Catalog =
+    fixture(s, d, table) { cat =>
+      val docs = Tables.documents(s, d)
+      cat.createTable(table, docs.schema, Seq("doc_id"))
+      cat.bulkLoad(table, docs, partitions = 2)
+      cat.createIndex(table, "ft", "fulltext", Seq("text"), analyzer = analyzer)
+      cat
+    }
 
   private def ftIndex(s: SparkSession, d: String): graft.kv.Catalog =
     ftIndexFor(s, d, "docs", "standard")
 
-  private def ftIndexEn(s: SparkSession, d: String): graft.kv.Catalog =
-    ftIndexFor(s, d, "docs_en", "english")
+  def positionalEnglish(s: SparkSession, d: String): DataFrame =
+    frame(s"positional_en:$d")(
+      ftIndexFor(s, d, "docs_en", "english").indexPositional("docs_en", "ft", "fulltext"))
 
-  def positionalEnglish(s: SparkSession, d: String): DataFrame = {
-    val cat = ftIndexEn(s, d)
-    memo(s"positional_en:$d")(cat.indexPositional("docs_en", "ft", "fulltext"))
-  }
+  def postings(s: SparkSession, d: String): DataFrame =
+    frame(s"postings:$d")(ftIndex(s, d).indexData("docs", "ft", "fulltext"))
 
-  def postings(s: SparkSession, d: String): DataFrame = {
-    val cat = ftIndex(s, d)
-    memo(s"postings:$d")(cat.indexData("docs", "ft", "fulltext"))
-  }
+  def positional(s: SparkSession, d: String): DataFrame =
+    frame(s"positional:$d")(ftIndex(s, d).indexPositional("docs", "ft", "fulltext"))
 
-  def positional(s: SparkSession, d: String): DataFrame = {
-    val cat = ftIndex(s, d)
-    memo(s"positional:$d")(cat.indexPositional("docs", "ft", "fulltext"))
-  }
-
-  def dictionary(s: SparkSession, d: String): DataFrame = {
-    val cat = ftIndex(s, d)
-    memo(s"dictionary:$d")(cat.indexDictionary("docs", "ft", "fulltext"))
-  }
+  def dictionary(s: SparkSession, d: String): DataFrame =
+    frame(s"dictionary:$d")(ftIndex(s, d).indexDictionary("docs", "ft", "fulltext"))
 
   /** Per-document token counts (BM25 norms), derived from the postings. */
-  def doclens(s: SparkSession, d: String): DataFrame = {
-    val p = postings(s, d)
-    memo(s"doclens:$d")(index.FullText.buildDocLens(p))
-  }
+  def doclens(s: SparkSession, d: String): DataFrame =
+    frame(s"doclens:$d")(index.FullText.buildDocLens(postings(s, d)))
 
   /** The block-max summary for WAND-pruned ranked top-k, derived once
     * from the persisted postings/norms/dictionary frames (the Lucene
     * 8+ impact structure beside each postings list; a production
     * index persists it next to the doclens norms, same as
     * buildDocLens's contract). */
-  def blockmax(s: SparkSession, d: String): DataFrame = {
-    val p = postings(s, d); val dl = doclens(s, d)
-    val dict = dictionary(s, d)
-    val n = corpusSize(s, d); val ad = avgDocLen(s, d)
-    memo(s"blockmax:$d")(
-      index.FullText.buildBlockMax(p, dl, dict, n, ad))
-  }
+  def blockmax(s: SparkSession, d: String): DataFrame =
+    frame(s"blockmax:$d")(index.FullText.buildBlockMax(postings(s, d),
+      doclens(s, d), dictionary(s, d), corpusSize(s, d), avgDocLen(s, d)))
 
   /** Average document length for BM25, computed as exact-integer
     * totalTokens / N so every engine derives the identical double
     * (a floating AVG would be summation-order-dependent). */
   def avgDocLen(s: SparkSession, d: String): Double = {
-    val total = counts.computeIfAbsent(s"toktotal:$d",
-      new Function[String, java.lang.Long] {
-        override def apply(k: String): java.lang.Long = {
-          val r = doclens(s, d).agg(org.apache.spark.sql.functions.sum("dl")).head
-          // sum over zero rows is NULL — fail with the real cause, not
-          // an opaque NPE inside the cache builder
-          require(!r.isNullAt(0),
-            s"avgDocLen: no tokenized documents under $d — BM25 needs a non-empty corpus")
-          r.getLong(0)
-        }
-      })
+    val total = once(s"toktotal:$d") {
+      val r = doclens(s, d).agg(org.apache.spark.sql.functions.sum("dl")).head
+      // sum over zero rows is NULL — fail with the real cause, not
+      // an opaque NPE inside the cache builder
+      require(!r.isNullAt(0),
+        s"avgDocLen: no tokenized documents under $d — BM25 needs a non-empty corpus")
+      r.getLong(0)
+    }
     total.toDouble / corpusSize(s, d)
   }
 
   /** Bitmap index over an orders column — a catalog-persisted `bitmap`
-    * index on the warehouse's orders table, built once per (column,
-    * dir) and consulted by every bitmap query. */
-  def ordersBitmap(s: SparkSession, d: String, valueCol: String): DataFrame = {
-    val cat = warehouse(s, d)
-    builtKinds.computeIfAbsent(s"orders:$d", new Function[String, java.lang.Boolean] {
-      override def apply(k: String): java.lang.Boolean = {
+    * index on the fixture warehouse's orders table, built once per
+    * (column, dir) and consulted by every bitmap query. */
+  def ordersBitmap(s: SparkSession, d: String, valueCol: String): DataFrame =
+    frame(s"bitmap:$valueCol:$d") {
+      val cat = fixture(s, d, "orders") { cat =>
         val orders = Tables.orders(s, d)
-        if (cat.tableExists("orders")) cat.dropTable("orders")
         cat.createTable("orders", orders.schema, Seq("o_orderkey"))
         cat.bulkLoad("orders", orders, partitions = 2)
-        true
+        cat
       }
-    })
-    builtKinds.computeIfAbsent(s"bm:$valueCol:$d", new Function[String, java.lang.Boolean] {
-      override def apply(k: String): java.lang.Boolean = {
-        cat.createIndex("orders", s"bm_$valueCol", "bitmap", Seq(valueCol))
-        true
-      }
-    })
-    memo(s"bitmap:$valueCol:$d")(
-      cat.indexData("orders", s"bm_$valueCol", "bitmap"))
-  }
-
-  private val objs = new ConcurrentHashMap[String, AnyRef]()
-
-  /** Memoize an arbitrary derived index artifact that isn't a single
-    * DataFrame (e.g. an IVF index = assigned lists + centroids). The
-    * builder is responsible for caching its member frames. */
-  def obj[T <: AnyRef](key: String)(build: => T): T =
-    objs.computeIfAbsent(key, new Function[String, AnyRef] {
-      override def apply(k: String): AnyRef = build
-    }).asInstanceOf[T]
-
-  private val counts = new ConcurrentHashMap[String, java.lang.Long]()
+      cat.createIndex("orders", s"bm_$valueCol", "bitmap", Seq(valueCol))
+      cat.indexData("orders", s"bm_$valueCol", "bitmap")
+    }
 
   /** Corpus document count, computed once per directory and stored with
     * the index frames — tf-idf needs N on every query, and a real
     * deployment persists N alongside the dictionary rather than
     * re-scanning the corpus per search. */
   def corpusSize(s: SparkSession, d: String): Long =
-    counts.computeIfAbsent(s"ndocs:$d", new Function[String, java.lang.Long] {
-      override def apply(k: String): java.lang.Long = Tables.documents(s, d).count()
-    })
+    once(s"ndocs:$d")(Tables.documents(s, d).count())
 
   /** A base table's scan split count — the cheap proxy the
     * conditional map fan-outs compare against mapFanout
@@ -191,28 +150,23 @@ object QueryCaches {
     * split conf): a session with another split conf reads its own
     * width. No job runs — partition enumeration is driver-side. */
   def scanParallelism(s: SparkSession, d: String, table: String): Int =
-    counts.computeIfAbsent(Seq("scanparts", table, d,
+    once(Seq("scanparts", table, d,
         s.conf.get("spark.sql.files.maxPartitionBytes"),
         s.conf.get("spark.sql.files.openCostInBytes"),
-        s.sparkContext.defaultParallelism).mkString(":"),
-      new Function[String, java.lang.Long] {
-        override def apply(k: String): java.lang.Long =
-          Tables.load(s, d, table).rdd.getNumPartitions.toLong
-      }).toInt
+        s.sparkContext.defaultParallelism).mkString(":"))(
+      Tables.load(s, d, table).rdd.getNumPartitions)
 }
 
-/** Shutdown-hook reclamation for pid-scoped warehouse dirs (one hook
-  * per JVM reclaiming EVERY registered path). */
+/** Shutdown-hook reclamation for temp warehouse and staging dirs (one
+  * hook per JVM reclaiming EVERY registered path). */
 object TempWarehouses {
-  private val paths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val paths = ConcurrentHashMap.newKeySet[String]()
   private val registered = new java.util.concurrent.atomic.AtomicBoolean(false)
   /** A pid+dir-scoped warehouse path, registered for shutdown
     * reclamation. The dir token is sanitized text PLUS the hash hex:
     * lossy sanitization alone could alias distinct dirs, and the
     * 32-bit hash alone has constructible collisions — aliasing needs
-    * BOTH to collide (the scheme KvQueries' z-order warehouse
-    * established). */
+    * BOTH to collide. */
   def scoped(prefix: String, d: String): String = {
     // cap the readable segment: a deep dataset path must not push the
     // dir NAME past the filesystem's 255-byte component limit — the

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -55,7 +56,7 @@ object Tables {
     // source ingests a DIRECTORY of drops. Stage the events once per
     // (JVM, dir) into a temp landing zone split into several files so
     // the stream genuinely advances state across micro-batches.
-    val st = stageOnce(stagedEventDirs, d, "graft_events_stream") { dir =>
+    val st = staged(d, "graft_events_stream") { dir =>
       val raw = load(s, d, "events")
       raw.repartition(4).write.mode("overwrite").parquet(dir.toString)
       raw.schema
@@ -64,8 +65,6 @@ object Tables {
       s.readStream.schema(st.schema).option("maxFilesPerTrigger", 1)
         .parquet(st.dir))
   }
-  private val stagedEventDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   /** The documents table as a STREAMING ingest drop (doc_id, text,
     * synthetic arrival ts), with exact copies of doc_id<10 planted at
@@ -79,7 +78,7 @@ object Tables {
     * original in one file and make the cross-batch claim vacuous. */
   private[graft] def documentsStream(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val st = stageOnce(stagedDocDirs, d, "graft_docs_stream") { dir =>
+    val st = staged(d, "graft_docs_stream") { dir =>
       val docs = load(s, d, "documents")
         .select(col("doc_id"), col("text"))
         .withColumn("ts",
@@ -90,36 +89,14 @@ object Tables {
         .withColumn("ts",
           (lit(1700000000L) + (col("doc_id") % PlantedIdBase) + 3600L)
             .cast("timestamp"))
-      val tmp = dir.resolve("tmp")
-      def moveParts(prefixIdx: Int => String): Unit = {
-        val w = java.nio.file.Files.list(tmp)
-        val arr = new java.util.ArrayList[java.nio.file.Path]()
-        try w.filter(p => p.getFileName.toString.startsWith("part-"))
-          .sorted().forEach(p => { arr.add(p); () })
-        finally w.close()
-        val base = System.currentTimeMillis() - 120000L
-        var i = 0
-        while (i < arr.size()) {
-          val name = prefixIdx(i)
-          val dst = dir.resolve(name)
-          java.nio.file.Files.move(arr.get(i), dst)
-          val off = if (name.startsWith("batch-999")) 60000L else i * 2000L
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + off))
-          i += 1
-        }
-      }
-      docs.repartition(3).write.mode("overwrite").parquet(tmp.toString)
-      moveParts(i => f"batch-$i%03d.parquet")
-      planted.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      moveParts(_ => "batch-999.parquet")
+      val base = System.currentTimeMillis() - 120000L
+      land(docs.repartition(3), dir, base)(i => (f"batch-$i%03d.parquet", i * 2000L))
+      land(planted.coalesce(1), dir, base)(_ => ("batch-999.parquet", 60000L))
       docs.schema
     }
     s.readStream.schema(st.schema).option("maxFilesPerTrigger", 1)
       .parquet(st.dir)
   }
-  private val stagedDocDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   /** One event type's slice of the events table as its own file
     * stream. The stream-stream join reads views and purchases as two
@@ -130,8 +107,7 @@ object Tables {
     * pre-split staging is the production shape, not a bench trick. */
   private[graft] def eventsStreamByType(s: SparkSession, d: String,
                                         eventType: String): DataFrame = {
-    val st = stageOnce(typedEventDirs, s"$d#$eventType",
-        s"graft_events_${eventType}_stream") { dir =>
+    val st = staged(d, s"graft_events_${eventType}_stream") { dir =>
       val slice = events(s, d)
         .filter(org.apache.spark.sql.functions.col("event_type") === eventType)
       slice.repartition(4).write.mode("overwrite").parquet(dir.toString)
@@ -142,8 +118,6 @@ object Tables {
     s.readStream.schema(st.schema).option("maxFilesPerTrigger", 1)
       .parquet(st.dir)
   }
-  private val typedEventDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   /** A staged stream landing zone: the dir plus the stream schema
     * captured at staging time — callers on the cached path must not
@@ -152,30 +126,48 @@ object Tables {
   private[graft] final case class Staged(
       dir: String, schema: org.apache.spark.sql.types.StructType)
 
-  /** Stage into a fresh temp dir once per (JVM, key). The build
-    * callback fills the dir and returns the schema to stream with.
-    * createTempDirectory does not auto-clean; the shutdown hook keeps
-    * every Verify/Bench process from leaking a full events copy in
-    * /tmp. Registered BEFORE the build so a mid-build crash still
-    * reclaims the partial staging. */
-  private def stageOnce(cache: java.util.concurrent.ConcurrentHashMap[String, Staged],
-                        key: String, prefix: String)
-                       (build: java.nio.file.Path => org.apache.spark.sql.types.StructType): Staged =
-    cache.computeIfAbsent(key,
-      new java.util.function.Function[String, Staged] {
-        override def apply(k: String): Staged = {
-          val dir = java.nio.file.Files.createTempDirectory(prefix)
-          Runtime.getRuntime.addShutdownHook(new Thread(new Runnable {
-            override def run(): Unit = try {
-              val w = java.nio.file.Files.walk(dir)
-              try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-              finally w.close()
-            } catch { case _: Throwable => }
-          }))
-          Staged(dir.toString, build(dir))
-        }
-      })
+  /** Stage into a fresh temp dir once per (JVM, dir, prefix). The
+    * build callback fills the dir and returns the schema to stream
+    * with. The dir is registered for shutdown reclamation BEFORE the
+    * build, so a mid-build crash still reclaims the partial staging
+    * and no Verify/Bench process leaks an events copy in /tmp. */
+  private def staged(d: String, prefix: String)
+                    (build: java.nio.file.Path => org.apache.spark.sql.types.StructType): Staged =
+    QueryCaches.once(s"$prefix:$d") {
+      val dir = java.nio.file.Files.createTempDirectory(prefix)
+      TempWarehouses.register(dir.toString)
+      Staged(dir.toString, build(dir))
+    }
+
+  /** Land `df` in a staged dir as named drops: write it to `dir/tmp`,
+    * move its part files (in name order; the i-th is `slot(i)` =
+    * (file name, mtime offset from `base` in ms)) into `dir`, then
+    * clear `tmp` so the stream only ever sees the renamed drops. The
+    * file source takes oldest-(modTime, path) first, so names and
+    * mtimes together fix the micro-batch order. */
+  private def land(df: DataFrame, dir: java.nio.file.Path, base: Long)
+                  (slot: Int => (String, Long)): Unit = {
+    import java.nio.file.Files
+    val tmp = dir.resolve("tmp")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val parts = {
+      val w = Files.list(tmp)
+      try w.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .toSeq.sorted
+      finally w.close()
+    }
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val (name, offset) = slot(i)
+      val dst = dir.resolve(name)
+      Files.move(p, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(base + offset))
+    }
+    val leftovers = Files.list(tmp)
+    try leftovers.forEach(p => { Files.deleteIfExists(p); () })
+    finally leftovers.close()
+    Files.deleteIfExists(tmp): Unit
+  }
 
   /** Events as a file stream whose FILE ORDER IS EVENT-TIME ORDER,
     * plus a trailing per-user sentinel drop ("__flush", 2 h past the
@@ -191,31 +183,13 @@ object Tables {
     * across five micro-batches. */
   private[graft] def eventsStreamOrdered(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val st = stageOnce(orderedEventDirs, d, "graft_events_ordered") { dir =>
+    val st = staged(d, "graft_events_ordered") { dir =>
       val ev = events(s, d)
-      val tmp = dir.resolve("tmp")
-      // range partition 0 holds the earliest ts range, ascending
-      ev.repartitionByRange(4, col("ts"), col("event_id"))
-        .sortWithinPartitions(col("ts"), col("event_id"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val parts = {
-        val w = java.nio.file.Files.list(tmp)
-        try {
-          val arr = new java.util.ArrayList[java.nio.file.Path]()
-          w.filter(p => p.getFileName.toString.startsWith("part-"))
-            .sorted().forEach(p => { arr.add(p); () })
-          arr
-        } finally w.close()
-      }
       val base = System.currentTimeMillis() - 120000L
-      var i = 0
-      while (i < parts.size()) {
-        val dst = dir.resolve(f"batch-$i%03d.parquet")
-        java.nio.file.Files.move(parts.get(i), dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        i += 1
-      }
+      // range partition 0 holds the earliest ts range, ascending
+      land(ev.repartitionByRange(4, col("ts"), col("event_id"))
+          .sortWithinPartitions(col("ts"), col("event_id")), dir, base)(
+        i => (f"batch-$i%03d.parquet", i * 2000L))
       // per-user flush sentinel, STRICTLY after every real file in
       // both sort keys (name "batch-999…" > "batch-004…", mtime
       // base+60 s) and in event time (max ts + 2 h ≫ the 30-min
@@ -227,28 +201,12 @@ object Tables {
       require(!mxRow.isNullAt(0),
         s"eventsStreamOrdered: events table at $d is empty — nothing to stage")
       val flushTs = new java.sql.Timestamp(mxRow.getTimestamp(0).getTime + 2L * 3600 * 1000)
-      ev.select(col("user_id")).distinct()
-        .select((lit(-1L) - col("user_id")).as("event_id"),
-          lit(flushTs).as("ts"), col("user_id"),
-          lit("__flush").as("event_type"), lit(0.0).as("value"),
-          lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val sparts = java.nio.file.Files.list(tmp)
-      try sparts.filter(p => p.getFileName.toString.startsWith("part-"))
-        .forEach { p =>
-          val dst = dir.resolve("batch-999.parquet")
-          java.nio.file.Files.move(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + 60000L))
-          ()
-        }
-      finally sparts.close()
-      // drop the tmp dir (and its _SUCCESS markers) so the stream
-      // only ever sees the renamed batch files
-      val leftovers = java.nio.file.Files.list(tmp)
-      try leftovers.forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally leftovers.close()
-      java.nio.file.Files.deleteIfExists(tmp)
+      land(ev.select(col("user_id")).distinct()
+          .select((lit(-1L) - col("user_id")).as("event_id"),
+            lit(flushTs).as("ts"), col("user_id"),
+            lit("__flush").as("event_type"), lit(0.0).as("value"),
+            lit(null).cast("string").as("props"))
+          .coalesce(1), dir, base)(_ => ("batch-999.parquet", 60000L))
       // the staged files carry ev's already-normalized TimestampType
       ev.schema
     }
@@ -256,8 +214,6 @@ object Tables {
       s.readStream.schema(st.schema)
         .option("maxFilesPerTrigger", 1).parquet(st.dir))
   }
-  private val orderedEventDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   /** Events staged for the BOUNDED-watermark expiry gate
     * (st_stream_expire): drop 0 carries every real event; drop 1 is a
@@ -279,27 +235,11 @@ object Tables {
     * trailing no-data batch instead would race processAllAvailable. */
   private[graft] def eventsStreamExpiry(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val st = stageOnce(expiryEventDirs, d, "graft_events_expiry") { dir =>
+    val st = staged(d, "graft_events_expiry") { dir =>
       val ev = events(s, d)
-      val tmp = dir.resolve("tmp")
       val base = System.currentTimeMillis() - 120000L
-      def stageDrop(df: DataFrame, name: String, slot: Int): Unit = {
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val parts = java.nio.file.Files.list(tmp)
-        try parts.filter(p => p.getFileName.toString.startsWith("part-"))
-          .forEach { p =>
-            val dst = dir.resolve(name)
-            java.nio.file.Files.move(p, dst)
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(base + slot * 2000L))
-            ()
-          }
-        finally parts.close()
-        val leftovers = java.nio.file.Files.list(tmp)
-        try leftovers.forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally leftovers.close()
-        java.nio.file.Files.deleteIfExists(tmp): Unit
-      }
+      def stageDrop(df: DataFrame, slot: Int): Unit =
+        land(df.coalesce(1), dir, base)(_ => (f"batch-$slot%03d.parquet", slot * 2000L))
       val bounds = ev.agg(min(col("ts")), max(col("ts"))).head
       require(!bounds.isNullAt(0),
         s"eventsStreamExpiry: events table at $d is empty — nothing to stage")
@@ -315,22 +255,19 @@ object Tables {
           lit("__flush").as("event_type"), lit(0.0).as("value"),
           lit(null).cast("string").as("props"))
       }
-      stageDrop(ev, "batch-000.parquet", 0)
-      stageDrop(sentinel(0L), "batch-001.parquet", 1)
+      stageDrop(ev, 0)
+      stageDrop(sentinel(0L), 1)
       stageDrop(ev.filter(col("ts") <
           lit(new java.sql.Timestamp(minTs.getTime + 2L * 3600 * 1000)))
-        .withColumn("event_id", col("event_id") + 10000000L),
-        "batch-002.parquet", 2)
-      stageDrop(sentinel(3L), "batch-003.parquet", 3)
-      stageDrop(sentinel(4L), "batch-004.parquet", 4)
+        .withColumn("event_id", col("event_id") + 10000000L), 2)
+      stageDrop(sentinel(3L), 3)
+      stageDrop(sentinel(4L), 4)
       ev.schema
     }
     normalizeEventTs(
       s.readStream.schema(st.schema)
         .option("maxFilesPerTrigger", 1).parquet(st.dir))
   }
-  private val expiryEventDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   private[graft] def normalizeEventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {

@@ -178,74 +178,58 @@ object DedupQueries {
        |  WHERE CAST(len(list_filter(range(1, 17),
        |      i -> sa.sig[CAST(i AS INT)] = sb.sig[CAST(i AS INT)])) AS DOUBLE) / 16 >= 0.5)""".stripMargin
 
-  /** The PERSISTED vector index serving every IVF/PQ/IVF×PQ search: a
-    * pid-scoped warehouse holds an `emb` catalog table backfilled from
-    * the real embeddings corpus, indexed with the catalog's `vector`
-    * flavor (Catalog.createIndex — centroids + codebooks + cluster-
-    * sorted encoded entries on disk, the reference's persisted-index
-    * contract), then CDC-merged with the planted exact copies. The
-    * merge keeps the index FRESH by appending an encoded segment
-    * (Catalog.maintainAnalyticIndexes), so the planted-pair recall
-    * gates below run THROUGH the segmented read view — the production
-    * maintenance path, not a per-process rebuild. Memoized per
-    * (JVM, dir): build is DDL, the timed queries measure SEARCH. */
-  private[graft] def vecIndex(s: SparkSession, d: String):
-      (DataFrame, DataFrame, graft.similarity.VectorIndex.VMeta) =
-    graft.QueryCaches.obj(s"veccat:$d") {
-      // warehouse path carries the DATA DIR token like every other
-      // QueryCaches artifact key: a second sfDir in the same JVM gets
-      // its own warehouse instead of dropping and rebuilding 'emb'
-      // out from under the first dir's cached index frames
-      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("vec", d))
+  /** The PERSISTED vector index serving every ANN search: an `emb`
+    * fixture table backfilled from the real embeddings corpus, indexed
+    * with the catalog's `vector` flavor (Catalog.createIndex —
+    * centroids + codebooks + cluster-sorted encoded entries on disk,
+    * the reference's persisted-index contract), its navigable graph
+    * built at the PRE-merge base, then CDC-merged with the planted
+    * exact copies. The merge keeps the index FRESH by appending an
+    * encoded segment (Catalog.maintainAnalyticIndexes) and leaves the
+    * graph alone, so the planted-pair recall gates below run THROUGH
+    * the segmented read view and the merged rows are exactly the
+    * graph's fresh delta — the production maintenance path, not a
+    * per-process rebuild. Built once per (JVM, dir): build is DDL, the
+    * timed queries measure SEARCH. Returns (catalog, view, centroids,
+    * meta), the frames Spark-cached. */
+  private def vecFixture(s: SparkSession, d: String): (graft.kv.Catalog,
+      DataFrame, DataFrame, graft.similarity.VectorIndex.VMeta) =
+    graft.QueryCaches.fixture(s, d, "emb") { cat =>
       val e = Tables.embeddings(s, d)
-      if (cat.tableExists("emb")) cat.dropTable("emb")
-      cat.createTable("emb", e.schema, Seq("vec_id"))
-      cat.bulkLoad("emb", e, partitions = 2)
-      cat.createIndex("emb", "ann", "vector", Seq("embedding"))
-      cat.incrementalMerge("emb", e.filter(col("vec_id") < 5)
-        .withColumn("vec_id", col("vec_id") + Tables.PlantedIdBase))
-      val (view, cent, meta) = cat.vectorIndexView("emb", "ann")
-      (view.cache(), cent.cache(), meta)
-    }
-
-  /** The sharded navigable-graph index (graph, centroids, delta) over
-    * the SAME persisted vector index every other ANN flavor serves
-    * from — now through the CATALOG-PERSISTED `graph_v` artifact
-    * (Catalog.buildVectorGraph / vectorGraphView): the graph is built
-    * at the PRE-merge base (DDL, like the centroid fit — see
-    * vecIndexWithGraph), the CDC-merged segment rows surface through
-    * the structural DELTA BUFFER (view ∖ graph, the DiskANN
-    * fresh-buffer recipe), and `CALL system.compact_index` folds the
-    * delta into only the TOUCHED per-list graphs
-    * (Catalog.foldIndexStack's graph-era branch) so the buffer stays
-    * patch-sized under continuous CDC. The recall gates genuinely run
-    * through the CDC merge. */
-  private def hnswParts(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val (cat, cent) = vecIndexWithGraph(s, d)
-    val (graph, delta) = cat.vectorGraphView("emb", "ann")
-    (graft.QueryCaches.frame(s"hnsw_graph:$d")(graph),
-      cent,
-      delta.select(col("rk"), col("v")))
-  }
-
-  /** The vecIndex catalog with its navigable graph built BEFORE the
-    * CDC merge (so the merged rows are exactly the fresh delta) —
-    * memoized beside vecIndex; the graph build is DDL. */
-  private def vecIndexWithGraph(s: SparkSession, d: String):
-      (graft.kv.Catalog, DataFrame) =
-    graft.QueryCaches.obj(s"veccatgraph:$d") {
-      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("vecg", d))
-      val e = Tables.embeddings(s, d)
-      if (cat.tableExists("emb")) cat.dropTable("emb")
       cat.createTable("emb", e.schema, Seq("vec_id"))
       cat.bulkLoad("emb", e, partitions = 2)
       cat.createIndex("emb", "ann", "vector", Seq("embedding"))
       cat.buildVectorGraph("emb", "ann")
       cat.incrementalMerge("emb", e.filter(col("vec_id") < 5)
         .withColumn("vec_id", col("vec_id") + Tables.PlantedIdBase))
-      val (_, cent, _) = cat.vectorIndexView("emb", "ann")
-      (cat, cent.cache())
+      val (view, cent, meta) = cat.vectorIndexView("emb", "ann")
+      (cat, view.cache(), cent.cache(), meta)
     }
+
+  /** The vector fixture's (view, centroids, meta). */
+  private[graft] def vecIndex(s: SparkSession, d: String):
+      (DataFrame, DataFrame, graft.similarity.VectorIndex.VMeta) = {
+    val (_, view, cent, meta) = vecFixture(s, d)
+    (view, cent, meta)
+  }
+
+  /** The sharded navigable-graph index (graph, centroids, delta) over
+    * the SAME persisted vector index every other ANN flavor serves
+    * from — through the CATALOG-PERSISTED `graph_v` artifact
+    * (Catalog.buildVectorGraph / vectorGraphView): the CDC-merged
+    * segment rows surface through the structural DELTA BUFFER
+    * (view ∖ graph, the DiskANN fresh-buffer recipe), and
+    * `CALL system.compact_index` folds the delta into only the TOUCHED
+    * per-list graphs (Catalog.foldIndexStack's graph-era branch) so the
+    * buffer stays patch-sized under continuous CDC. The recall gates
+    * genuinely run through the CDC merge. */
+  private def hnswParts(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    val (cat, _, cent, _) = vecFixture(s, d)
+    val (graph, delta) = cat.vectorGraphView("emb", "ann")
+    (graft.QueryCaches.frame(s"hnsw_graph:$d")(graph),
+      cent,
+      delta.select(col("rk"), col("v")))
+  }
 
   private def ivfIdx(s: SparkSession, d: String): Ann.IvfIndex = {
     val (view, cent, _) = vecIndex(s, d)
@@ -1101,8 +1085,7 @@ object DedupQueries {
       // freshness — each query's merge-inserted exact copy surfaces
       // at score 1.0 — and entries-rows-read << corpus). k-means
       // lists → rows-only, like every IVF-served key.
-      vecIndex(s, d) // ensure the persisted index exists (DDL, memoized)
-      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("vec", d))
+      val cat = vecFixture(s, d)._1
       val qs = Tables.embeddings(s, d).filter($"vec_id" < 5)
         .select($"vec_id", $"embedding").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))

@@ -38,10 +38,14 @@ object Mixture {
 
   /** Greedy sequence packing: assign documents to packs so each pack's
     * token total stays ≤ `budget` (a document alone over budget gets
-    * its own pack). Documents are range-partitioned and sorted by id,
-    * then packed with a per-partition sequential scan — deterministic
-    * pack membership, no driver involvement, parallelism = partition
-    * count. Pack ids are (partition << 32 | seq) so they're globally
+    * its own pack). Documents are cut into `partitions` equal-width id
+    * ranges over [min id, max id], then packed in id order with a
+    * per-range sequential scan — parallelism up to the range count,
+    * no driver work beyond the one bounds aggregate. Pack membership
+    * is a function of the rows and `partitions` only: the ranges come
+    * from the exact id bounds, not from Spark's range partitioner,
+    * whose sampled bounds move with the RDD id once the input outgrows
+    * the sample. Pack ids are (range << 32 | seq) so they're globally
     * unique without coordination. */
   def packGreedy(docs: DataFrame, idCol: String, tokensCol: String,
                  budget: Int, partitions: Int = 0): DataFrame = {
@@ -50,27 +54,36 @@ object Mixture {
     import spark.implicits._
     val slim = docs.select(col(idCol).cast("long").as("doc_id"),
       col(tokensCol).cast("int").as("n_tokens"))
-    val ranged =
-      if (partitions > 0) slim.repartitionByRange(partitions, col("doc_id"))
-      else slim.repartitionByRange(col("doc_id"))
-    ranged.sortWithinPartitions(col("doc_id"))
+    val n = if (partitions > 0) partitions
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val bounds = slim.agg(min(col("doc_id")), max(col("doc_id"))).head
+    // every id null (or no rows): nothing to pack, any range will do
+    val lo = if (bounds.isNullAt(0)) 0.0 else bounds.getLong(0).toDouble
+    val width = if (bounds.isNullAt(0)) 1.0 else bounds.getLong(1).toDouble - lo + 1.0
+    // double arithmetic: a span near 2^63 must not overflow, and the
+    // cut stays monotone in the id so every range is contiguous
+    val range = least(floor((col("doc_id").cast("double") - lit(lo)) / lit(width) * lit(n)),
+      lit(n - 1)).cast("long")
+    slim.withColumn("range", range)
+      .repartition(n, col("range"))
+      .sortWithinPartitions(col("range"), col("doc_id"))
       .mapPartitions { rows =>
-        val pid = org.apache.spark.TaskContext.getPartitionId().toLong
+        var cur = -1L
         var seq = 0L
         var used = 0L
-        var started = false
+        // a null id cannot be packed (no identity to emit) — skip the
+        // row rather than NPE the job, same one-bad-document stance
+        // as the null token-count guard below
         rows.filter(!_.isNullAt(0)).map { r =>
-          // a null id cannot be packed (no identity to emit) — skip the
-          // row rather than NPE the job, same one-bad-document stance
-          // as the null token-count guard below
           val id = r.getLong(0)
           // null token counts (e.g. null text) pack as 0 instead of
           // killing the job — one bad document must not fail a run
-          val n = if (r.isNullAt(1)) 0 else r.getInt(1)
-          if (!started) { started = true; used = n.toLong }
-          else if (used + n > budget) { seq += 1; used = n.toLong }
-          else used += n
-          (id, n, (pid << 32) | seq)
+          val tokens = if (r.isNullAt(1)) 0 else r.getInt(1)
+          val rg = r.getLong(2)
+          if (rg != cur) { cur = rg; seq = 0L; used = tokens.toLong }
+          else if (used + tokens > budget) { seq += 1; used = tokens.toLong }
+          else used += tokens
+          (id, tokens, (rg << 32) | seq)
         }
       }.toDF("doc_id", "n_tokens", "pack_id")
   }

@@ -110,34 +110,14 @@ object IndexQueries {
 
     "idx_segment_ft" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       // segmented fulltext maintenance end-to-end: backfill an index,
       // CDC-merge a patch (one doc rewritten, one new), then search
       // through the base+segment−tombstone read view — doc 5's OLD
       // postings must be masked, the new docs' terms visible, with NO
       // index rebuild (Catalog.maintainAnalyticIndexes appends
       // patch-sized seg_v/tomb_v/dictdelta_v dirs)
-      val wh = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        // pid-scoped: two harness processes on one machine must not
-        // race each other's dropTable/createTable on a shared path
-        s"graft_warehouse_segft_${ProcessHandle.current().pid()}").toString
-      // one cleanup hook per JVM: without it every Verify/Bench process
-      // leaves a full warehouse (base table + index segments) in /tmp
-      // forever — same reclamation contract as Tables.stageOnce
-      graft.TempWarehouses.register(wh)
-      val cat = new graft.kv.Catalog(s, wh)
-      if (cat.tableExists("segdocs")) cat.dropTable("segdocs")
-      cat.createTable("segdocs", StructType(Seq(
-        StructField("k", LongType, false),
-        StructField("body", StringType, true))), Seq("k"))
-      cat.bulkLoad("segdocs",
-        Tables.documents(s, d).filter($"doc_id" < 300)
-          .select($"doc_id".as("k"), $"text".as("body")), partitions = 4)
-      cat.createIndex("segdocs", "ft", "fulltext", Seq("body"))
-      cat.incrementalMerge("segdocs", Seq(
-        (5L, "graft segment merge engine"),
-        (900001L, "graft posting engine")).toDF("k", "body"))
+      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("segft", d))
+      ftSegmented(s, d, cat, "segdocs", "ft", "standard", segPatch)
       val view = cat.indexData("segdocs", "ft", "fulltext")
       val base = cat.table("segdocs").df
       Seq("graft", "spark").map { t =>
@@ -148,7 +128,6 @@ object IndexQueries {
 
     "ft_search_stem" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.types._
       // Analyzed fulltext (the Lucene EnglishAnalyzer analog): a
       // catalog index created WITH analyzer='english' (stopword
       // removal + the bounded suffix stemmer), kept CDC-fresh through
@@ -158,23 +137,10 @@ object IndexQueries {
       // Stopword query terms ("the") impose no constraint. The
       // stemmer is a bounded ordered rule set, so the DuckDB oracle
       // replicates the whole chain term-for-term in SQL.
-      val wh = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_warehouse_ftstem_${ProcessHandle.current().pid()}").toString
-      graft.TempWarehouses.register(wh)
-      val cat = new graft.kv.Catalog(s, wh)
-      if (cat.tableExists("adocs")) cat.dropTable("adocs")
-      cat.createTable("adocs", StructType(Seq(
-        StructField("k", LongType, false),
-        StructField("body", StringType, true))), Seq("k"))
-      cat.bulkLoad("adocs",
-        Tables.documents(s, d).filter($"doc_id" < 300)
-          .select($"doc_id".as("k"), $"text".as("body")), partitions = 4)
-      cat.createIndex("adocs", "aft", "fulltext", Seq("body"),
-        analyzer = "english")
-      cat.incrementalMerge("adocs", Seq(
+      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("ftstem", d))
+      ftSegmented(s, d, cat, "adocs", "aft", "english", Seq(
         (5L, "the sparks joined the engines"),
-        (900002L, "sparking joins for the reader")).toDF("k", "body"))
+        (900002L, "sparking joins for the reader")))
       val view = cat.indexData("adocs", "aft", "fulltext")
       val base = cat.table("adocs").df
       FullText.searchAllAnalyzed(base, "k", view,
@@ -585,31 +551,40 @@ object IndexQueries {
     },
   )
 
-  /** The driver-side full-text serving table, built ONCE per (JVM,
-    * sf-dir) — the msGetCatalog recipe with a FULLTEXT index: docs
-    * < 300 bulk-loaded, the index backfilled, then one CDC merge
-    * rewriting doc 5 and inserting 900001 so the timed query serves
-    * lookups through a REAL base+segment−tombstone stack. */
-  private def ftMsCatalog(s: SparkSession, d: String): graft.kv.Catalog = {
+  /** The segmented-fulltext recipe: docs < 300 as (k, body)
+    * bulk-loaded into `table` across 4 files, a fulltext index `index`
+    * backfilled with `analyzer`, then one CDC merge of `patch` (one doc
+    * rewritten, one new) — so reads go through a REAL
+    * base+segment−tombstone stack. */
+  private def ftSegmented(s: SparkSession, d: String, cat: graft.kv.Catalog,
+                          table: String, index: String, analyzer: String,
+                          patch: Seq[(Long, String)]): Unit = {
     import s.implicits._
     import org.apache.spark.sql.types._
-    val wh = graft.QueryCaches.obj(s"ftms_wh:$d") {
-      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("ftms", d))
-      if (cat.tableExists("ftdocs")) cat.dropTable("ftdocs")
-      cat.createTable("ftdocs", StructType(Seq(
-        StructField("k", LongType, false),
-        StructField("body", StringType, true))), Seq("k"))
-      cat.bulkLoad("ftdocs",
-        Tables.documents(s, d).filter($"doc_id" < 300)
-          .select($"doc_id".as("k"), $"text".as("body")), partitions = 4)
-      cat.createIndex("ftdocs", "ft", "fulltext", Seq("body"))
-      cat.incrementalMerge("ftdocs", Seq(
-        (5L, "graft segment merge engine"),
-        (900001L, "graft posting engine")).toDF("k", "body"))
-      cat.warehouse
-    }
-    new graft.kv.Catalog(s, wh)
+    if (cat.tableExists(table)) cat.dropTable(table)
+    cat.createTable(table, StructType(Seq(
+      StructField("k", LongType, false),
+      StructField("body", StringType, true))), Seq("k"))
+    cat.bulkLoad(table,
+      Tables.documents(s, d).filter($"doc_id" < 300)
+        .select($"doc_id".as("k"), $"text".as("body")), partitions = 4)
+    cat.createIndex(table, index, "fulltext", Seq("body"), analyzer = analyzer)
+    cat.incrementalMerge(table, patch.toDF("k", "body"))
   }
+
+  /** The standard-analyzer patch: doc 5 rewritten, 900001 inserted. */
+  private val segPatch = Seq(
+    (5L, "graft segment merge engine"),
+    (900001L, "graft posting engine"))
+
+  /** The driver-side full-text serving table, built ONCE per (JVM,
+    * sf-dir) by the idx_segment_ft recipe, so the timed query serves
+    * lookups through the same segmented stack. */
+  private def ftMsCatalog(s: SparkSession, d: String): graft.kv.Catalog =
+    graft.QueryCaches.fixture(s, d, "ftdocs") { cat =>
+      ftSegmented(s, d, cat, "ftdocs", "ft", "standard", segPatch)
+      cat
+    }
 
   /** The driver-side bitmap serving table, built ONCE per (JVM,
     * sf-dir): an orders slice with a bitmap index on o_orderstatus,
@@ -618,9 +593,7 @@ object IndexQueries {
     * segment bitmaps under the tombstone mask. */
   private def msBmCatalog(s: SparkSession, d: String): graft.kv.Catalog = {
     import s.implicits._
-    val wh = graft.QueryCaches.obj(s"msbm_wh:$d") {
-      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("msbm", d))
-      if (cat.tableExists("bmords")) cat.dropTable("bmords")
+    graft.QueryCaches.fixture(s, d, "bmords") { cat =>
       val slice = Tables.orders(s, d).filter(col("o_orderkey") < 3000)
         .select(col("o_orderkey"), col("o_orderstatus"))
       cat.createTable("bmords", slice.schema, Seq("o_orderkey"))
@@ -630,9 +603,8 @@ object IndexQueries {
       cat.incrementalMerge("bmords", Seq(
         (minKey, "G"),
         (9000001L, "G")).toDF("o_orderkey", "o_orderstatus"))
-      cat.warehouse
+      cat
     }
-    new graft.kv.Catalog(s, wh)
   }
 
   /** The shared lexical arm of the hybrid queries: tf-idf top-50 with

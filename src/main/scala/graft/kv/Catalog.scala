@@ -692,14 +692,30 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     }
   }
 
+  /** The registry entry of index `indexName` of type `indexType` in a
+    * table meta. One name may be registered under several types
+    * (createIndex's guard checks both), so every lookup matches both. */
+  private[kv] def indexEntry(meta: ObjectNode, indexName: String,
+                             indexType: String): Option[ObjectNode] =
+    meta.withArray[ArrayNode]("indexes").elements().asScala.collectFirst {
+      case e: ObjectNode if e.path("name").asText() == indexName &&
+        e.path("type").asText().equalsIgnoreCase(indexType) => e
+    }
+
+  /** [[indexEntry]] in the table's current meta, which must hold it. */
+  private[kv] def registeredIndex(table: String, indexName: String,
+                                  indexType: String): ObjectNode =
+    indexEntry(readMeta(table), indexName, indexType).getOrElse(
+      throw new IllegalArgumentException(
+        s"$table $indexName $indexType not registered"))
+
+  private[kv] def indexCols(table: String, indexName: String,
+                            indexType: String): Seq[String] =
+    registeredIndex(table, indexName, indexType).path("cols").asText().split(",").toSeq
+
   private[kv] def indexAsOfVersion(table: String, indexName: String,
                                    indexType: String): Int =
-    readMeta(table).withArray[ArrayNode]("indexes").elements().asScala
-      .find(e => e.path("name").asText() == indexName &&
-        e.path("type").asText().equalsIgnoreCase(indexType))
-      .map(_.path("asOfVersion").asInt(-1)).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table $indexName $indexType not registered"))
+    registeredIndex(table, indexName, indexType).path("asOfVersion").asInt(-1)
 
   /** Read a specific historical snapshot (time travel). */
   def tableAt(name: String, version: Int): KvTable =
@@ -976,9 +992,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     * CDC segment, refresh) must consult this, or a segment built with
     * the wrong chain would silently mix stemmed and unstemmed terms
     * in one postings view. */
-  def indexAnalyzer(table: String, indexName: String): String =
-    readMeta(table).withArray[ArrayNode]("indexes").elements().asScala
-      .find(e => e.path("name").asText() == indexName)
+  def indexAnalyzer(table: String, indexName: String, indexType: String): String =
+    indexEntry(readMeta(table), indexName, indexType)
       .map(_.path("analyzer").asText("standard"))
       .getOrElse("standard")
 

@@ -1,7 +1,7 @@
 package graft.kv
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ArrayNode
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths, Path}
@@ -19,10 +19,10 @@ private[kv] final class IndexBuild(cat: Catalog) {
   import ArtifactStage.deleteRecursively
   import ManifestCapture.canonKey
   import IndexBuild.{ikColsOf, readNormMeta, writeNormMetaJson}
-  import cat.{dataVersionOf, held, indexAnalyzer, indexAsOfVersion, indexDir,
-    indexesOf, liveStack, mapper, mergeTargetRowsPerFile, primaryKeyOf, readMeta, rowkeyType,
-    schemaOf, setMetaAttr, snapshotDir, spark, tableExists, withList, withWriteLock,
-    writeMeta}
+  import cat.{dataVersionOf, held, indexAnalyzer, indexAsOfVersion, indexCols, indexDir,
+    indexEntry, indexesOf, liveStack, mapper, mergeTargetRowsPerFile, primaryKeyOf, readMeta,
+    rowkeyType, schemaOf, setMetaAttr, snapshotDir, spark, tableExists, withList,
+    withWriteLock, writeMeta}
 
   /** Target bytes per output file when a merge rewrites kv-index files
     * — the same 128 MB as [[Catalog.compact]]'s default. */
@@ -169,7 +169,7 @@ private[kv] final class IndexBuild(cat: Catalog) {
             // shared tombstones mask both families' older rows. The
             // segment MUST use the index's own analyzer or it would mix
             // stemmed and unstemmed terms into one view.
-            val an = indexAnalyzer(name, iname)
+            val an = indexAnalyzer(name, iname, ty)
             val ts = schemaOf(name)
             val rkType = ts(rk).dataType
             // bounded patches (the CDC contract — unbounded writes take
@@ -476,8 +476,7 @@ private[kv] final class IndexBuild(cat: Catalog) {
     // backfill / double-register (TOCTOU)
     require(!Files.exists(dir),
       s"$table $indexName $indexType exists when create index") // IndexExistsException
-    require(!indexesOf(table).exists { case (n, ty, _) =>
-      n == indexName && ty.equalsIgnoreCase(indexType) },
+    require(indexEntry(readMeta(table), indexName, indexType).isEmpty,
       s"$table $indexName $indexType already registered")
     // validate index columns BEFORE the dir exists: a typo'd column
     // failing mid-backfill would strand a half-built dir that makes
@@ -730,11 +729,9 @@ private[kv] final class IndexBuild(cat: Catalog) {
     deleteRecursively(dir)
     val meta = readMeta(table)
     val reg = meta.withArray[ArrayNode]("indexes")
-    val keep = reg.elements().asScala.filterNot(e =>
-      e.path("name").asText() == indexName &&
-        e.path("type").asText().equalsIgnoreCase(indexType)).toList
-    reg.removeAll()
-    keep.foreach(reg.add)
+    indexEntry(meta, indexName, indexType).foreach { e =>
+      reg.remove(reg.elements().asScala.indexWhere(_ eq e))
+    }
     writeMeta(table, meta)
   }
 
@@ -925,10 +922,7 @@ private[kv] final class IndexBuild(cat: Catalog) {
   private def setIndexAsOf(table: String, indexName: String, indexType: String,
                            version: Int): Unit = {
     val meta = readMeta(table)
-    meta.withArray[ArrayNode]("indexes").elements().asScala
-      .find(e => e.path("name").asText() == indexName &&
-        e.path("type").asText().equalsIgnoreCase(indexType))
-      .foreach(_.asInstanceOf[ObjectNode].put("asOfVersion", version))
+    indexEntry(meta, indexName, indexType).foreach(_.put("asOfVersion", version))
     writeMeta(table, meta)
   }
 
@@ -1019,10 +1013,7 @@ private[kv] final class IndexBuild(cat: Catalog) {
     * reference's out-of-band Lucene writer commit. */
   def refreshIndex(table: String, indexName: String, indexType: String): Unit =
     withWriteLock(table) {
-      val (_, ty, cols) = indexesOf(table)
-        .find(i => i._1 == indexName && i._2.equalsIgnoreCase(indexType))
-        .getOrElse(throw new IllegalArgumentException(
-          s"$table $indexName $indexType not registered"))
+      val cols = indexCols(table, indexName, indexType)
       val dir = indexDir(table, indexName, indexType)
       val cur = dataVersionOf(table)
       // an index serving graph-ANN rebuilds its graph with the NEW
@@ -1030,7 +1021,7 @@ private[kv] final class IndexBuild(cat: Catalog) {
       // pre-refresh cluster ids), at the degree it was built with
       val oldGraph = IndexStack.at(dir, cur).latest("graph", cur)
       val graphM =
-        if (ty.equalsIgnoreCase("vector") && Files.exists(oldGraph))
+        if (indexType.equalsIgnoreCase("vector") && Files.exists(oldGraph))
           Some(readGraphM(oldGraph))
         else None
       // the rebuild lands AT the live version, which readers resolve
@@ -1038,8 +1029,8 @@ private[kv] final class IndexBuild(cat: Catalog) {
       // behind the fence with the data base last. Rebuilt with the
       // index's own analyzer.
       ArtifactStage.run(dir, held(table)) { stage =>
-        withIndexArtifacts(table, ty, cols, cat.table(table).df,
-          indexAnalyzer(table, indexName), graphM)(stageAll(stage, cur))
+        withIndexArtifacts(table, indexType, cols, cat.table(table).df,
+          indexAnalyzer(table, indexName, indexType), graphM)(stageAll(stage, cur))
       }
       setIndexAsOf(table, indexName, indexType, cur)
     }

@@ -119,13 +119,13 @@ object KvQueries {
         .orderBy($"o_orderkey")
     },
 
-    "sql_ddl_dml" -> { (s, _) =>
+    "sql_ddl_dml" -> { (s, d) =>
       // the reference's Calcite-server role: DDL + DML arriving as SQL
       // text (HBaseSchema.kt:107-259, HBaseModifiableTable.kt:126-240),
       // served here by the graft V2 TableCatalog
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.kv.connector.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", Files.tempWarehouse("sql"))
+      s.conf.set("spark.sql.catalog.graft.warehouse", graft.TempWarehouses.scoped("sql", d))
       s.sql("DROP TABLE IF EXISTS graft.sqldemo")
       s.sql("CREATE TABLE graft.sqldemo (k BIGINT NOT NULL, v STRING, score DOUBLE) " +
         "TBLPROPERTIES ('primaryKey'='k')")
@@ -173,8 +173,7 @@ object KvQueries {
       // matching ledger entries as ONE atomic unit — both tables flip
       // to their post-image together, or neither does. The read after
       // the transaction sees the committed joint state.
-      val wh = Files.tempWarehouse("txn")
-      val cat = new Catalog(s, wh)
+      val cat = new Catalog(s, graft.TempWarehouses.scoped("txn", d))
       if (cat.tableExists("acct")) cat.dropTable("acct")
       if (cat.tableExists("ledger")) cat.dropTable("ledger")
       cat.createTable("acct", StructType(Seq(
@@ -259,8 +258,7 @@ object KvQueries {
 
     "ddl_catalog" -> { (s, d) =>
       import s.implicits._
-      val wh = Files.tempWarehouse()
-      val cat = new Catalog(s, wh)
+      val cat = new Catalog(s, graft.TempWarehouses.scoped("ddl", d))
       if (cat.tableExists("kv_demo")) cat.dropTable("kv_demo")
       // TIME is feature-flagged in Spark 4.1 and the flag is a
       // runtime SQL conf — set it here so the query works under any
@@ -307,19 +305,6 @@ object KvQueries {
     },
   )
 
-  private object Files {
-    def tempWarehouse(suffix: String = ""): String = {
-      val wh = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        // pid-scoped (see IndexQueries): no cross-process collisions
-        s"graft_warehouse_${ProcessHandle.current().pid()}$suffix").toString
-      // shutdown reclamation like every other pid-scoped warehouse —
-      // without it each Verify/Bench process strands these in /tmp
-      graft.TempWarehouses.register(wh)
-      wh
-    }
-  }
-
   /** Bench warmup hook: build (or reuse) the driver-get table so the
     * timed reps measure the serving-path Get, not the DDL. */
   def warmMsGet(s: SparkSession, d: String): Unit = {
@@ -359,9 +344,7 @@ object KvQueries {
     * gate the day this builder gains a second version bump. */
   private def msGetState(s: SparkSession, d: String): (Catalog, Int) = {
     import s.implicits._
-    val (wh, preVer) = graft.QueryCaches.obj(s"msget_wh:$d") {
-      val cat = new Catalog(s, graft.TempWarehouses.scoped("msget", d))
-      if (cat.tableExists("ords")) cat.dropTable("ords")
+    graft.QueryCaches.fixture(s, d, "ords") { cat =>
       cat.createTable("ords", msGetSchema, primaryKey = Seq("o_orderkey"))
       cat.bulkLoad("ords", Tables.orders(s, d)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice"),
@@ -375,9 +358,8 @@ object KvQueries {
         .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       val pre = cat.dataVersionOf("ords")
       cat.incrementalMerge("ords", upd.unionByName(ins))
-      (cat.warehouse, pre)
+      (cat, pre)
     }
-    (new Catalog(s, wh), preVer)
   }
 
   /** The z-clustered two-key lineitem slice, built ONCE per (JVM,
@@ -391,14 +373,7 @@ object KvQueries {
     * self-contained under Verify. */
   private def zorderedLineitem(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the warehouse path must be unique per sf-dir like the cache key:
-    // a shared path would let a second sf-dir's build replace the
-    // first's data while the first's cache entry still points at it
-    // (TempWarehouses.scoped: sanitized+hashed dir tag, shutdown
-    // reclamation — the one naming scheme for every pid+dir warehouse)
-    val wh = graft.QueryCaches.obj(s"zorder_wh:$d") {
-      val cat = new Catalog(s, graft.TempWarehouses.scoped("zorder", d))
-      if (cat.tableExists("zli")) cat.dropTable("zli")
+    graft.QueryCaches.fixture(s, d, "zli") { cat =>
       cat.createTable("zli",
         StructType(Seq(
           StructField("l_orderkey", LongType, false),
@@ -408,9 +383,8 @@ object KvQueries {
       cat.bulkLoad("zli", Tables.lineitem(s, d)
         .filter($"l_orderkey" < 2000)
         .select($"l_orderkey", $"l_linenumber", $"l_quantity"), partitions = 8)
-      cat.warehouse
-    }
-    new Catalog(s, wh).table("zli").df
+      cat
+    }.table("zli").df
   }
 
   def oracles: Map[String, String] = Map(

@@ -14,7 +14,7 @@ import java.nio.file.{Files, Path}
   * footers, pushed predicates). Reached through the one-line forwards
   * on [[Catalog]]; nothing here writes. */
 private[kv] final class Serving(cat: Catalog) {
-  import cat.{dataVersionOf, indexAnalyzer, indexDir, indexesOf, layoutOf,
+  import cat.{dataVersionOf, indexAnalyzer, indexCols, indexDir, indexesOf, layoutOf,
     liveStack, primaryKeyOf, rowkeyType, schemaOf, snapshotDir}
 
   /** The (nullable) columns a driver read decodes an artifact into. */
@@ -24,10 +24,7 @@ private[kv] final class Serving(cat: Catalog) {
   /** The one column a fulltext, bitmap or vector index covers. */
   private def indexedColumn(table: String, indexName: String,
                             indexType: String): String =
-    indexesOf(table)
-      .find(i => i._1 == indexName && i._2.equalsIgnoreCase(indexType))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table $indexName $indexType not registered"))._3.head
+    indexCols(table, indexName, indexType).head
 
   /** Millisecond point read served on the calling thread — NO Spark
     * job (the reference's HBase `Get` path: HBaseEnumerator.kt reads
@@ -116,11 +113,7 @@ private[kv] final class Serving(cat: Catalog) {
     * on the Spark lookup path (KvIndex.lookup), which AQE-joins. */
   def driverIndexGet(table: String, indexName: String,
                      values: Seq[Any]): Seq[Row] = {
-    val cols = indexesOf(table)
-      .collectFirst { case (n, ty, cs)
-        if n == indexName && ty.equalsIgnoreCase("kv") => cs }
-      .getOrElse(throw new IllegalArgumentException(
-        s"no kv index '$indexName' on $table"))
+    val cols = indexCols(table, indexName, "kv")
     require(values.nonEmpty && values.length <= cols.length,
       s"lookup binds 1..${cols.length} leading columns of ${cols.mkString(",")}")
     val pk = primaryKeyOf(table)
@@ -180,7 +173,7 @@ private[kv] final class Serving(cat: Catalog) {
                               maxPostings: Int): Seq[Any] = {
     val st = liveStack(table, indexName, "fulltext")
     val analyzed = graft.index.FullText
-      .analyzeTerms(terms, indexAnalyzer(table, indexName)).distinct
+      .analyzeTerms(terms, indexAnalyzer(table, indexName, "fulltext")).distinct
     require(analyzed.nonEmpty,
       "every query term is a stopword under this analyzer")
     val perDoc = driverFtPerDoc(table, st, analyzed, maxPostings)
@@ -351,7 +344,7 @@ private[kv] final class Serving(cat: Catalog) {
   def driverFtPhrase(table: String, indexName: String, phrase: String,
                      maxPostings: Int): Seq[Any] = {
     val st = liveStack(table, indexName, "fulltext")
-    val an = indexAnalyzer(table, indexName)
+    val an = indexAnalyzer(table, indexName, "fulltext")
     val raw = graft.index.FullText.normTokens(phrase)
     require(raw.nonEmpty, "empty phrase")
     val terms: Seq[(String, Int)] =
@@ -690,7 +683,7 @@ private[kv] final class Serving(cat: Catalog) {
     require(k > 0, "k must be positive")
     val st = liveStack(table, indexName, "fulltext")
     val analyzed = graft.index.FullText
-      .analyzeTerms(terms, indexAnalyzer(table, indexName)).distinct
+      .analyzeTerms(terms, indexAnalyzer(table, indexName, "fulltext")).distinct
     require(analyzed.nonEmpty,
       "every query term is a stopword under this analyzer")
     val (base, baseVer) = (st.base, st.baseVer)

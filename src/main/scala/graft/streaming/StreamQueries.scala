@@ -265,10 +265,8 @@ object StreamQueries {
       // the standard idempotent-foreachBatch exactly-once recipe. At
       // 100 TB each micro-batch rewrites only the files its keys
       // touch (patch-sized incremental merge), not the table.
-      val seq = sinkSeq.incrementAndGet()
-      val wh = java.nio.file.Files
-        .createTempDirectory(s"graft_stream_upsert_$seq").toString
-      val cat = new graft.kv.Catalog(s, wh)
+      val cat = new graft.kv.Catalog(s, graft.TempWarehouses.scoped("upsert", d))
+      if (cat.tableExists("user_state")) cat.dropTable("user_state")
       val stateCols = Seq("user_id", "event_id", "ts", "event_type", "value")
       val evSchema = Tables.events(s, d).select(stateCols.map(col): _*).schema
       cat.createTable("user_state", evSchema, Seq("user_id"))

@@ -131,6 +131,21 @@ class DedupSpec extends AnyFunSuite {
     assert(again == rows.map(r => (r.getLong(0), r.getLong(2))).toSet)
   }
 
+  test("greedy packing is a function of the rows past the range-sampling size") {
+    import graft.dedup.Mixture
+    // 5,000 rows in ONE input split: more than the ~1,200 rows a range
+    // partitioner samples per split for 4 partitions, so sampled bounds
+    // would move with the RDD id from one execution to the next
+    val big = spark.range(0, 5000, 1, 1).select(col("id").as("doc_id"),
+      (col("id") % 97 + 1).cast("int").as("n_tokens"))
+    def packs(): Set[(Long, Long)] =
+      Mixture.packGreedy(big, "doc_id", "n_tokens", budget = 512, partitions = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val first = packs()
+    assert(first.size == 5000)
+    assert(packs() == first)
+  }
+
   test("greedy packing under a REAL BPE subword budget") {
     import graft.dedup.Mixture
     import graft.functions.TextFunctions

@@ -107,6 +107,30 @@ class SegmentedIndexSpec extends AnyFunSuite {
     assert(sortedRows(dictView) == sortedRows(dictRebuild))
   }
 
+  test("a fulltext index named like a kv index keeps its own analyzer") {
+    import spark.implicits._
+    val (cat, _) = freshCat("samename")
+    cat.createTable("t", schema, Seq("k"))
+    cat.bulkLoad("t",
+      (0L until 50L).map(i => (i, s"s${i % 3}", s"the readers joined group$i"))
+        .toDF("k", "seg", "body"), partitions = 2)
+    // one name under two types: the kv entry comes first in the registry
+    cat.createIndex("t", "x", "kv", Seq("seg"))
+    cat.createIndex("t", "x", "fulltext", Seq("body"), analyzer = "english")
+    assert(cat.indexAnalyzer("t", "x", "fulltext") == "english")
+    // the CDC segment and the driver query both take the english chain,
+    // so a stemmed variant finds the merged doc
+    cat.incrementalMerge("t", Seq((9001L, "sX", "sparks fly")).toDF("k", "seg", "body"))
+    assert(cat.indexStatus("t", "x", "fulltext") == "FRESH")
+    assert(cat.driverFtSearch("t", "x", Seq("sparking")) == Seq(9001L))
+    cat.refreshIndex("t", "x", "fulltext")
+    assert(cat.driverFtSearch("t", "x", Seq("sparking")) == Seq(9001L))
+    // dropping one type leaves the other's entry
+    cat.dropIndex("t", "x", "kv")
+    assert(cat.indexesOf("t").map(i => (i._1, i._2)) == Seq(("x", "FULLTEXT")))
+    assert(cat.driverFtSearch("t", "x", Seq("sparking")) == Seq(9001L))
+  }
+
   test("english-analyzed fulltext stays CDC-fresh: segments use the index's analyzer") {
     import spark.implicits._
     val (cat, _) = freshCat("anseg")
@@ -115,7 +139,7 @@ class SegmentedIndexSpec extends AnyFunSuite {
       (0L until 500L).map(i => (i, s"s${i % 3}", s"the readers joined group$i"))
         .toDF("k", "seg", "body"), partitions = 4)
     cat.createIndex("t", "aft", "fulltext", Seq("body"), analyzer = "english")
-    assert(cat.indexAnalyzer("t", "aft") == "english")
+    assert(cat.indexAnalyzer("t", "aft", "fulltext") == "english")
 
     // base build: stopwords absent, suffixes stemmed
     val view0 = cat.indexData("t", "aft", "fulltext")
