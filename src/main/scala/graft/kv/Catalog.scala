@@ -446,8 +446,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     // full snapshot rewrite (same final content: the merge is a PK
     // upsert either way; analytic indexes go stale under a bulk write
     // by the documented staleness rule).
-    val keys = patch.select(pk.head).distinct()
-      .limit(maxIncrementalKeys + 1).collect().map(r => canonKey(r.get(0)))
+    val keys = leadKeys(patch, pk.head, maxIncrementalKeys + 1)
     if (keys.isEmpty) return false
     // null keys are refused before any manifest, data or lock work: the
     // collected keys decide a single-column key under the bound; a
@@ -460,6 +459,20 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
       incrementalMerge(name, patch, precollectedKeys = Some(keys))
     else commitFullRewrite(name)(_ => table(name).upsert(patch).df)
     true
+  }
+
+  /** Up to `limit` distinct values of `patch`'s column `keyCol`. A
+    * patch built from driver rows (a LocalRelation once optimized) is
+    * read without a Spark job and deduplicated here; any other patch
+    * runs one bounded distinct job. */
+  private def leadKeys(patch: DataFrame, keyCol: String, limit: Int): Array[Any] = {
+    val keyRows = patch.select(keyCol)
+    keyRows.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        keyRows.collect().iterator.map(r => canonKey(r.get(0))).distinct.take(limit).toArray
+      case _ =>
+        keyRows.distinct().limit(limit).collect().map(r => canonKey(r.get(0)))
+    }
   }
 
   /** Rowkeys are non-null on every primary-key column (HBase rowkey
@@ -566,8 +579,14 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
     }
     // the pre-image of exactly the patched keys, read from the touched
     // files the rewrite reads anyway: with the patch as post-image,
-    // index maintenance is patch-sized, never touched-file-sized
-    val pre = touchedDf.join(patch.select(pk.map(col): _*).distinct(), pk, "left_semi")
+    // index maintenance is patch-sized, never touched-file-sized. A
+    // single integral or string key filters by the collected key set
+    // (pushed into the scan, no join against the patch's lineage)
+    val pre = tableSchema(keyCol).dataType match {
+      case LongType | IntegerType | ShortType | ByteType | StringType if pk.size == 1 =>
+        touchedDf.where(col(keyCol).isInCollection(patchKeys))
+      case _ => touchedDf.join(patch.select(pk.map(col): _*).distinct(), pk, "left_semi")
+    }
     // a kv-index entry is (ik..., rk = LEADING key): on a composite key,
     // rows sharing the lead key and the indexed value share one entry
     // tuple, and removing a patched row's entry removes its siblings'
@@ -717,9 +736,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String,
                                    indexType: String): Int =
     registeredIndex(table, indexName, indexType).path("asOfVersion").asInt(-1)
 
-  /** Read a specific historical snapshot (time travel). */
+  /** Read a specific historical snapshot (time travel), with the
+    * meta's schema like [[table]]: a table's schema never changes
+    * (the catalog refuses ALTER TABLE), and inferring it runs a Spark
+    * job per read. */
   def tableAt(name: String, version: Int): KvTable =
-    KvTable(spark.read.parquet(snapshotDir(name, version).toString),
+    KvTable(spark.read.schema(schemaOf(name)).parquet(snapshotDir(name, version).toString),
       primaryKeyOf(name))
 
   def table(name: String): KvTable =

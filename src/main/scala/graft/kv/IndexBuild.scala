@@ -940,7 +940,7 @@ private[kv] final class IndexBuild(cat: Catalog) {
     * leaves them stale. */
   private[kv] def maintainIndexes(name: String, next: Int, nextDataDir: Path,
                                   pre: Option[DataFrame], post: Option[DataFrame],
-                                  maxEntryKeys: Int = 100000): Commit.Publish = {
+                                  maxEntries: Int = 100000): Commit.Publish = {
     val kvIndexes = indexesOf(name).filter(_._2.equalsIgnoreCase("kv"))
     lazy val fullPost = spark.read.schema(schemaOf(name)).parquet(nextDataDir.toString)
     val renames = kvIndexes.map { case (iname, ty, cols) =>
@@ -952,13 +952,24 @@ private[kv] final class IndexBuild(cat: Catalog) {
       val finalIdxDir = dir.resolve(s"data_v$next")
       val incremental = (pre, post) match {
         case (Some(p), Some(q)) =>
-          val remove = kvEntriesOf(name, p, cols)
-          val add = kvEntriesOf(name, q, cols)
+          // both entry images collected once (patch-sized by the CDC
+          // contract, bounded here): as driver rows, neither the key set
+          // below nor the rewrite re-runs the pre-image's scan of the
+          // touched data files
+          def entries(rows: DataFrame): (Array[Row], StructType) = {
+            val e = kvEntriesOf(name, rows, cols)
+            (e.limit(maxEntries + 1).collect(), e.schema)
+          }
+          val (removes, idxSchema) = entries(p)
+          val (adds, _) = entries(q)
           val lead = ikCols.head
-          val keys = remove.select(lead).unionByName(add.select(lead))
-            .distinct().limit(maxEntryKeys + 1).collect().map(r => canonKey(r.get(0)))
-          if (keys.length > maxEntryKeys || keys.contains(null)) false
+          val keys = (removes ++ adds).map(r => canonKey(r.getAs[Any](lead))).distinct
+          if (removes.length + adds.length > maxEntries || keys.contains(null)) false
           else {
+            def local(rs: Array[Row]): DataFrame =
+              spark.createDataFrame(rs.toSeq.asJava, idxSchema)
+            val remove = local(removes)
+            val add = local(adds)
             val curIdx = IndexStack.at(dir, dataVersionOf(name)).base
             // the index range map goes through the SAME persisted
             // manifest machinery as the table's: written with every
@@ -969,7 +980,6 @@ private[kv] final class IndexBuild(cat: Catalog) {
             // Persistability follows the indexed column's type (ik1 =
             // first indexed column). The entry frame's own schema IS
             // the index files' schema — no footer read to learn it.
-            val idxSchema = remove.schema
             val ranges = Manifest.ensure(spark, curIdx, lead,
               Manifest.persistable(schemaOf(name).apply(cols.head).dataType),
               schema = Some(idxSchema))

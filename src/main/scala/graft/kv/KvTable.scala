@@ -2,6 +2,7 @@ package graft.kv
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Rowkey-addressed table semantics, Spark-native.
   *
@@ -180,12 +181,35 @@ object KvLayout {
   def writeSorted(df: DataFrame, keyCols: Seq[String], path: String, partitions: Int = 0,
                   capture: Option[ManifestCapture] = None): Unit = {
     val cols = keyCols.map(col)
-    val ranged =
-      if (partitions > 0) df.repartitionByRange(partitions, cols: _*)
-      else df.repartitionByRange(cols: _*)
-    val sorted = ranged.sortWithinPartitions(cols: _*)
+    val sorted = ranged(df, partitions, cols).sortWithinPartitions(cols: _*)
     capture.fold(sorted)(_.instrument(sorted))
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** `df` split into `partitions` key ranges (0: as many as AQE
+    * coalesces the session's shuffle partitions into). A frame bound
+    * for one file is written straight from a single task: a range
+    * exchange would add a shuffle stage and, unless one partition was
+    * asked for, a sampling pass that re-runs the whole input plan to
+    * pick bounds one file does not need.
+    * One file is bound when asked for, or when AQE would coalesce the
+    * frame into one partition anyway: Catalyst's size estimate (an
+    * upper bound without CBO, as filters and joins keep their inputs'
+    * sizes) is within the partition size AQE coalesces to. A larger
+    * frame keeps the exchange, so its input is still read in
+    * parallel. */
+  private def ranged(df: DataFrame, partitions: Int, cols: Seq[Column]): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    lazy val coalescedSize = BigInt(
+      if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val oneFile = partitions <= 1 && conf.adaptiveExecutionEnabled &&
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED) &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= coalescedSize
+    if (oneFile) df.coalesce(1)
+    else if (partitions > 0) df.repartitionByRange(partitions, cols: _*)
+    else df.repartitionByRange(cols: _*)
   }
 
   /** Z-order layout over TWO numeric key columns: rows cluster by the
@@ -230,10 +254,8 @@ object KvLayout {
         .bitwiseOR(shiftleft(shiftright(b16, i).bitwiseAND(lit(1L)), 2 * i))
     }.reduce(_.bitwiseOR(_))
     val withZ = df.withColumn("__graft_z", z)
-    val ranged =
-      if (partitions > 0) withZ.repartitionByRange(partitions, col("__graft_z"))
-      else withZ.repartitionByRange(col("__graft_z"))
-    val sorted = ranged.sortWithinPartitions(col("__graft_z")).drop("__graft_z")
+    val sorted = ranged(withZ, partitions, Seq(col("__graft_z")))
+      .sortWithinPartitions(col("__graft_z")).drop("__graft_z")
     capture.fold(sorted)(_.instrument(sorted))
       .write.mode("overwrite").parquet(path)
   }

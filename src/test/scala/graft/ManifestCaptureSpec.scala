@@ -364,4 +364,61 @@ class ManifestCaptureSpec extends AnyFunSuite {
     assert(cache.getOpt(f, ())(None).isEmpty)
     assert(cache.getOpt(f, ())(Some(Seq.empty[Row])).contains(Seq.empty[Row]))
   }
+
+  /** Spark jobs `f` schedules under its own job group (adaptive
+    * execution's worker threads inherit it), counted once the listener
+    * bus has drained. */
+  private def jobsIn(group: String)(f: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (s.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try f finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.TestListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("a full rewrite that fits one partition writes one sorted file and its kv index, one job each") {
+    val cat = freshCat("onefile")
+    cat.createTable("of", StructType(Seq(
+      StructField("k", LongType, false), StructField("c", LongType, true),
+      StructField("v", StringType, true))), Seq("k"))
+    cat.createIndex("of", "byc", "kv", Seq("c"))
+    import spark.implicits._
+    val rows = new scala.util.Random(7).shuffle((0L until 3000L).toList)
+      .map(k => (k, k % 97, s"v$k")).toDF("k", "c", "v")
+    // a range exchange costs three jobs per artifact: the sampling
+    // pass, the shuffle stage and the write
+    assert(jobsIn("onefile")(cat.bulkLoad("of", rows)) == 2)
+    val data = liveDir(cat, "of")
+    assert(ManifestCapture.partFiles(data).size == 1)
+    assert(spark.read.parquet(data.toString).select("k").as[Long].collect().toSeq ==
+      (0L until 3000L))
+    assertMatchesScan(cat, data, "k", None)
+    assertMatchesScan(cat, kvIndexDir(cat, "of", "byc"), "ik", None)
+    assert(cat.driverIndexGet("of", "byc", Seq(5L)).map(_.getLong(0)).sorted ==
+      (5L until 3000L by 97L))
+  }
+
+  test("a merge patch built from driver rows is keyed, and a null key refused, with no Spark job") {
+    val cat = freshCat("localkeys")
+    val schema = StructType(Seq(
+      StructField("k", LongType, true), StructField("v", StringType, true)))
+    cat.createTable("lk", schema, Seq("k"))
+    cat.bulkLoad("lk", spark.createDataFrame((0L until 100L).map(k => Row(k, s"v$k")).asJava, schema))
+    val v = cat.dataVersionOf("lk")
+    val patch = spark.createDataFrame(
+      Seq(Row(5L, "p"), Row(5L, "q"), Row(null, "bad")).asJava, schema)
+    val jobs = jobsIn("localkeys") {
+      val e = intercept[IllegalArgumentException](cat.incrementalMergeIfNonEmpty("lk", patch))
+      assert(e.getMessage.contains("may not be null"), e.getMessage)
+    }
+    assert(jobs == 0, s"keying a driver-built patch ran $jobs Spark job(s)")
+    assert(cat.dataVersionOf("lk") == v)
+  }
 }
